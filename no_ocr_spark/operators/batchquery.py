@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.operators.retrieval import _cosine
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
 QUERY_IDS = [0, 1, 2, 3]   # the batch: embeddings rows serving as queries
@@ -34,11 +35,6 @@ def q_batch_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),
     )
-    from no_ocr_spark.plans.partitioning import fan_out_for_cpu
-
-    # fan the corpus side out (r6, guide §2.5): the bench embeddings
-    # table is a single row group, so the Q x corpus cosine folds
-    # otherwise ran in one scan task
     corpus = fan_out_for_cpu(
         emb.filter(~F.col("vec_id").isin(QUERY_IDS)), spark)
     scored = corpus.crossJoin(F.broadcast(queries)).select(

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
 QUERY_TERMS = ["window", "merge", "key"]
@@ -59,12 +60,12 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds BOTH the stats aggregate and the scoring join, so the plan
     evaluated the split+filter chain over the whole text column twice
     (and on the single-row-group bench table, on one core).
-    Repartitioning the raw rows first fans the text pass out, and a
+    Fanning the raw rows out first spreads the text pass, and a
     localCheckpoint of the 40-byte-per-doc tf frame makes the corpus
     text pass run ONCE — stats and scores both read the checkpoint."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    ).repartition(spark.sparkContext.defaultParallelism).select(
+    docs = fan_out_for_cpu(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"), spark
+    ).select(
         "doc_id",
         F.expr(_len("spark")).alias("dl"),
         *[F.expr(_tf("spark", t)).alias(f"tf{i}")

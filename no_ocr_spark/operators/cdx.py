@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.functions import textexpr as tx
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
 HOSTS = 23  # capture-url synthesis shares linkgraph's host universe
@@ -90,8 +91,6 @@ _TS_DUCK = """
 
 
 def q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from no_ocr_spark.plans.partitioning import fan_out_for_cpu
-
     docs = fan_out_for_cpu(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         spark,

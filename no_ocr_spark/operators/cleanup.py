@@ -68,7 +68,6 @@ def near_dup_losers(docs: DataFrame) -> DataFrame:
 
 
 def clean_corpus(extracted: DataFrame, min_tokens: int = MIN_TOKENS,
-                 scrub_pii: bool = True,
                  ppl_max_bits: float | None = None) -> tuple[DataFrame, dict]:
     """extracted(url, text, ...) -> (clean DataFrame, stage stats).
 
@@ -160,21 +159,20 @@ def clean_corpus(extracted: DataFrame, min_tokens: int = MIN_TOKENS,
     losers = near_dup_losers(exact.select("url", "text"))
     clean = exact.join(losers, "url", "left_anti")
     clean = clean.observe(obs_clean, F.count(F.lit(1)).alias("n"))
-    if scrub_pii:
-        clean = clean.withColumn("text", F.expr(pii_scrub_expr("text")))
-        if "spans" in clean.columns:
-            # the nested span texts carry the same content — scrubbing
-            # only the top-level column would ship the PII anyway
-            clean = clean.withColumn(
-                "spans",
-                F.expr(
-                    "transform(spans, s -> named_struct("
-                    "'page', s.page, "
-                    f"'text', {pii_scrub_expr('s.text')}, "
-                    "'x0', s.x0, 'y0', s.y0, 'x1', s.x1, 'y1', s.y1, "
-                    "'block', s.block, 'line', s.line))"
-                ),
-            )
+    clean = clean.withColumn("text", F.expr(pii_scrub_expr("text")))
+    if "spans" in clean.columns:
+        # the nested span texts carry the same content — scrubbing
+        # only the top-level column would ship the PII anyway
+        clean = clean.withColumn(
+            "spans",
+            F.expr(
+                "transform(spans, s -> named_struct("
+                "'page', s.page, "
+                f"'text', {pii_scrub_expr('s.text')}, "
+                "'x0', s.x0, 'y0', s.y0, 'x1', s.x1, 'y1', s.y1, "
+                "'block', s.block, 'line', s.line))"
+            ),
+        )
     stats = {
         "n_in": n_in,
         "n_after_quality": n_quality,

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.functions import textexpr as tx
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
 _K = 5  # gram length: long enough to be rare, short enough to occur
@@ -44,8 +45,8 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: doc_id, n_overlap_grams (distinct benchmark k-grams present in
     the doc), is_contaminated."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    docs = fan_out_for_cpu(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"), spark)
 
     bench = (
         docs.filter(F.col("doc_id") % 13 == 0)

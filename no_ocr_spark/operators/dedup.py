@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.functions import textexpr as tx
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
 # 3-word shingles: the driver corpus's vocabulary is tiny, so the 2-word
@@ -42,8 +43,7 @@ _AUG_SQL = f"""
 """
 
 
-def _augmented(spark: SparkSession, sf_dir: str,
-               fan_out: bool = True) -> DataFrame:
+def _augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "n_chars"
     )
@@ -53,21 +53,7 @@ def _augmented(spark: SparkSession, sf_dir: str,
         "lang",
         "n_chars",
     )
-    aug = docs.unionByName(mutated)
-    if not fan_out:
-        # exact dedup's per-row work is ONE xxhash64 — scan parallelism is
-        # plenty, and the fan-out shuffle would move the full text for
-        # nothing (measured: it dominated the query's shuffle volume)
-        return aug
-    # The documents table is a single small parquet file => a handful of
-    # scan splits. The OTHER dedup queries put CPU-heavy hash expressions
-    # directly above (and — via Catalyst's inferred size(sh)>0 constraint —
-    # even *inside*) this scan, so without an explicit fan-out the hashing
-    # runs at the scan's parallelism while the rest of the cluster idles
-    # (measured 4/32 cores busy, 5x wall). Shuffling the RAW text rows is
-    # cheap; shuffling computed hash arrays would not be — repartition
-    # BEFORE the expensive map, exactly the rule used for extraction.
-    return aug.repartition(spark.sparkContext.defaultParallelism)
+    return docs.unionByName(mutated)
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -89,7 +75,9 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic corpus's short ~250-char docs; on KB-scale real pages the
     ratio is the text/16-byte ratio, two orders of magnitude.
     """
-    aug = _augmented(spark, sf_dir, fan_out=False).withColumn(
+    # no fan-out: the per-row work is ONE xxhash64, and a fan-out would
+    # shuffle the full text for nothing
+    aug = _augmented(spark, sf_dir).withColumn(
         "h", F.xxhash64("text")
     )
     by_hash = aug.groupBy("h").agg(
@@ -151,7 +139,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AND both verify sides, so the (expensive) shingle fold ran three
     # times through lineage
     d = (
-        _augmented(spark, sf_dir)
+        fan_out_for_cpu(_augmented(spark, sf_dir), spark)
         .withColumn("word_hashes", F.expr(wh))
         .select("doc_id", "lang", "n_chars", F.expr(shx).alias("sh"))
         .localCheckpoint()
@@ -252,7 +240,7 @@ def _with_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = tx.shingle_hashes_from_word_hashes("spark", "word_hashes")
     sig = tx.minhash_signature_from_hashes("spark", "shingle_hashes")
     return (
-        _augmented(spark, sf_dir)
+        fan_out_for_cpu(_augmented(spark, sf_dir), spark)
         .withColumn("word_hashes", F.expr(wh))
         .withColumn("shingle_hashes", F.expr(sh))
         .select("doc_id", F.expr(sig).alias("sig"))
@@ -400,7 +388,7 @@ def _simhash_expr(n_bits: int) -> str:
 
 
 def _with_simhash(spark: SparkSession, sf_dir: str, n_bits: int) -> DataFrame:
-    return _augmented(spark, sf_dir).select(
+    return fan_out_for_cpu(_augmented(spark, sf_dir), spark).select(
         "doc_id", F.expr(_simhash_expr(n_bits)).alias("simhash")
     )
 

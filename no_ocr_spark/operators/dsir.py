@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from no_ocr_spark.functions import textexpr as tx
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
 B = 64               # hashed feature buckets (paper: 10k; a knob, not structure)
@@ -142,8 +143,6 @@ def dsir_weights(docs: DataFrame) -> DataFrame:
 
 
 def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from no_ocr_spark.plans.partitioning import fan_out_for_cpu
-
     return dsir_weights(fan_out_for_cpu(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         spark,

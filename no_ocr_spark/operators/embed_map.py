@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.operators.retrieval import _cosine
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
 EMBED_DIM = 16
@@ -129,10 +130,7 @@ def q_embed_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stub arithmetic in SQL, proving text bytes, batching, and vectors
     survive the JVM->Arrow->pandas->Arrow round trip exactly.
     """
-    # single-row-group input: fan out so the embed batches hit every
-    # core (r6, guide §2.5)
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism)
+    docs = fan_out_for_cpu(load_table(spark, sf_dir, "documents"), spark)
     emb = embed_map(docs)
     return emb.select(
         "doc_id",
@@ -147,8 +145,7 @@ def q_search_flow_embedded(spark: SparkSession, sf_dir: str) -> DataFrame:
     embed the query (doc_id=0's text), exact cosine top-3, lookup join back
     to content. Integer vector components keep every dot product exact, so
     the JVM fold and the DuckDB fold produce bit-identical doubles."""
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism)
+    docs = fan_out_for_cpu(load_table(spark, sf_dir, "documents"), spark)
     emb = embed_map(docs)
     # embed ONLY doc 0 for the query vector (r6, guide §1.2): the stub
     # embedding is a pure per-row function (the oracle recomputes it

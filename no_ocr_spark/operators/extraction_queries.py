@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from no_ocr_spark.operators.extract_udf import extract, extracted_table
 from no_ocr_spark.plans.partitioning import (
+    fan_out_for_cpu,
     heavy_host_flags,
     host_of,
     salt_by_heavy_flags,
@@ -53,16 +54,9 @@ def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     BASELINE.json input shape (url, warc_ts, html, text, lang): each doc's
     text becomes the <main> article of a templated page with nav/footer
     boilerplate. Pure function of the row -> reproducible anywhere.
-
-    Fans out BEFORE the synthesis mapInPandas (r6, guide §2.5 — the
-    pages_with_links precedent): the bench documents table is a single
-    row group, so without the repartition page synthesis AND every
-    downstream Python stage (WARC sinks, archive parsers) inherited one
-    scan task on one core. The shuffle moves the raw rows once, before
-    any expensive column exists; at production scale (thousands of
-    input files) the same repartition is a near-no-op."""
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism)
+    Fans out before the synthesis mapInPandas, so page synthesis and every
+    downstream Python stage (WARC sinks, archive parsers) use every core."""
+    docs = fan_out_for_cpu(load_table(spark, sf_dir, "documents"), spark)
 
     def to_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import datetime as dt

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.operators.bm25 import B, K1, QUERY_TERMS, TOP_K
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
 _Q = 1_000_000_000  # contribution quantum (nanos)
@@ -56,9 +57,8 @@ def build_postings(docs: DataFrame) -> DataFrame:
 
 def q_bm25_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-path BM25 top-12 for QUERY_TERMS: (doc_id, score)."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    ).repartition(spark.sparkContext.defaultParallelism)
+    docs = fan_out_for_cpu(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"), spark)
     post = build_postings(docs)
     # r6 (guide §1.2): the probed postings feed BOTH the df aggregation
     # and the scoring leg — without the barrier each consumer re-ran the

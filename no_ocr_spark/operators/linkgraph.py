@@ -54,6 +54,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
 HOSTS = 23          # synthesis constant: number of hosts in the corpus
@@ -91,18 +92,12 @@ def _page_html(doc_id: int, text: str) -> bytes:
 def pages_with_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> (url, html) pages whose bodies carry real anchor tags.
 
-    Fans out BEFORE the synthesis mapInPandas (r5 verdict #8 / guide §2.5):
-    the bench table is a single row group, so without the repartition the
-    page synthesis AND every downstream DOM stage (link extraction, WAT
-    metadata, the WAT sink) ran inside one scan task on one core —
-    measured 9.8s for the sf=1 DOM pass, ~0.6s fanned out. The shuffle
-    moves the raw (doc_id, text) rows once, before any expensive column
-    exists (the unconditional-repartition form, like dedup._augmented:
-    plan-builders stay job-free at compose time, which fan_out_for_cpu's
-    split probe is not under AQE)."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    ).repartition(spark.sparkContext.defaultParallelism)
+    Fans out before the synthesis mapInPandas, so page synthesis and every
+    downstream DOM stage (link extraction, WAT metadata, the WAT sink) use
+    every core — measured 9.8s for the sf=1 DOM pass in one scan task,
+    ~0.6s fanned out."""
+    docs = fan_out_for_cpu(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"), spark)
 
     def to_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -301,10 +296,6 @@ def q_anchor_text_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from no_ocr_spark.plans.partitioning import fan_out_for_cpu
-
-    # pages_with_links fans out itself (r6); the old fan_out_for_cpu
-    # wrapper's split probe would EXECUTE the repartition at compose time
     pages = pages_with_links(spark, sf_dir)
     counts = (
         extract_anchor_texts(pages)
@@ -321,10 +312,6 @@ def q_anchor_text_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_host_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from no_ocr_spark.plans.partitioning import fan_out_for_cpu
-
-    # pages_with_links fans out itself (r6; the old fan_out_for_cpu
-    # wrapper's split probe would EXECUTE the repartition at compose time)
     pages = pages_with_links(spark, sf_dir)
     # cache-mark the edge table here too: Spark's CacheManager keys on the
     # canonical plan, so q_host_pagerank's identical edges subtree reuses

@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
 _META_SCHEMA = (
@@ -139,8 +140,6 @@ def q_image_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
     width/height and the thumbnail pixel sum in closed form (pixels are
     arithmetic in (doc_id, x, y, c); nearest-neighbor uses floor index
     mapping, integer arithmetic only)."""
-    from no_ocr_spark.plans.partitioning import fan_out_for_cpu
-
     docs = fan_out_for_cpu(
         load_table(spark, sf_dir, "documents").select("doc_id"), spark)
     payloads = docs.mapInPandas(
@@ -197,8 +196,6 @@ def q_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     JPEG is exactly checkable precisely because the fixture keeps every
     AC coefficient zero; gradient/chroma accuracy is covered by bounded-
     error tests in tests/test_jpeg_codec.py."""
-    from no_ocr_spark.plans.partitioning import fan_out_for_cpu
-
     docs = fan_out_for_cpu(
         load_table(spark, sf_dir, "documents").select("doc_id"), spark)
     payloads = docs.mapInPandas(

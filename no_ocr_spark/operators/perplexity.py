@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.functions import textexpr as tx
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
 REF_MOD = 10  # reference slice: doc_id % REF_MOD == 0
@@ -122,8 +123,6 @@ def score_perplexity(docs: DataFrame, id_col: str = "doc_id",
 
 
 def q_perplexity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from no_ocr_spark.plans.partitioning import fan_out_for_cpu
-
     return score_perplexity(fan_out_for_cpu(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         spark,

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.operators.retrieval import _cosine, _quant
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
 DIM = 64
@@ -117,8 +118,6 @@ def sq8_dequant_direct_expr(qv: str, minqs: str, spans: str) -> str:
 def sq8_encode(emb: DataFrame) -> DataFrame:
     """(vec_id, label, embedding) -> + qv, codes, minqs, spans columns.
     Stats are a one-row broadcast (no driver collect)."""
-    from no_ocr_spark.plans.partitioning import fan_out_for_cpu
-
     q = fan_out_for_cpu(emb, emb.sparkSession).select(
         "vec_id", "label", F.expr(_quant("spark", "embedding")).alias("qv")
     )

@@ -33,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
 _SCHEMA = ("doc_id bigint, page int, width int, height int, "
@@ -61,8 +62,6 @@ def _raster_line_batches(
 
 
 def q_page_rasters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from no_ocr_spark.plans.partitioning import fan_out_for_cpu
-
     # r6 (guide §1.2 "don't compute things you throw away"): the page
     # raster is a pure function of the cleaned 24-char line, and the
     # corpus repeats lines heavily (50k docs -> 4.7k distinct lines at
@@ -73,9 +72,9 @@ def q_page_rasters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # key is total (rasterizing '' is the oracle's COALESCE(ink,0) row).
     # Per-doc output rows are unchanged. At corpus scale the distinct
     # prefix table is bounded by the alphabet, not the corpus.
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    ).repartition(spark.sparkContext.defaultParallelism).select(
+    docs = fan_out_for_cpu(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"), spark
+    ).select(
         "doc_id",
         F.coalesce(
             F.substring(

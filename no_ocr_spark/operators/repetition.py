@@ -11,9 +11,9 @@ the rest of the training-data family):
   so Spark/DuckDB parity is bit-trivial. The operator itself is map-only —
   no grouping, no join — which is the shape you want for a per-doc signal
   at 100 TB: it pipelines directly over the scan. (The one Exchange in the
-  sandbox plan is the thin-row repartition working around the 4-split
-  small-file scan documented in dedup._augmented; a real corpus has enough
-  splits that it disappears.)
+  sandbox plan is plans/partitioning.fan_out_for_cpu's fan-out of the
+  single-row-group bench table; a real corpus has enough row groups that
+  it disappears.)
 
 * ``line_dedup`` — cross-document duplicate-line removal in the style of
   CCNet (Wenzek et al. 2020): each line is kept only at its FIRST corpus
@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.functions import textexpr as tx
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
 _CHUNK = 10  # words per pseudo-line for line_dedup
@@ -65,13 +66,13 @@ def _augmented_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents + planted repetition: every 7th doc re-appends its first
     12 words, so top-gram / duplicate-word signals have real positives."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.withColumn(
+    return fan_out_for_cpu(docs.withColumn(
         "text",
         F.when(
             F.col("doc_id") % 7 == 0,
             F.expr("concat(text, ' ', array_join(slice(split(text, ' '), 1, 12), ' '))"),
         ).otherwise(F.col("text")),
-    ).repartition(spark.sparkContext.defaultParallelism)
+    ), spark)
 
 
 _REP_AUG_SQL = """

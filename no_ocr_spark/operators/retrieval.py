@@ -84,9 +84,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    # fan the scored side out (r6, guide §2.5): the bench embeddings
-    # table is a single row group, so the per-row cosine fold otherwise
-    # ran in ONE scan task; the 1-row query branch stays a plain scan
+    # only the scored side fans out; the 1-row query branch stays a scan
     scored = (
         fan_out_for_cpu(emb.filter(F.col("vec_id") != 0), spark)
         .crossJoin(F.broadcast(q))
@@ -461,8 +459,7 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str,
     whose cardinality is n_centroids x dim — tiny. The oracle replays the
     identical iterations in DuckDB SQL; integer math makes them bit-equal.
     """
-    # Fan out the RAW scan (quant is CPU-heavy per row and the bench
-    # table is a single row group), quantize on every core, then
+    # Fan out the RAW scan (quant is CPU-heavy per row), then
     # localCheckpoint the slim (vec_id, qv) frame: the k-means build
     # reads it once per Lloyd round + once for the probe scan, and the
     # checkpoint (a) truncates lineage exactly like graph.py's iterative

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.functions import textexpr as tx
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
 K_GRAM = 8  # words per gram (the paper's 50 BPE tokens, scaled to the
@@ -137,8 +138,6 @@ def remove_repeated_substrings(docs: DataFrame) -> DataFrame:
 
 
 def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from no_ocr_spark.plans.partitioning import fan_out_for_cpu
-
     return remove_repeated_substrings(fan_out_for_cpu(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         spark,

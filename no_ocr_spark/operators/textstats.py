@@ -133,9 +133,7 @@ def q_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies = base.filter(F.col("doc_id") % 5 == 0).select(
         (F.col("doc_id") + 100000).alias("doc_id"), "text"
     )
-    docs = base.unionByName(copies).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = fan_out_for_cpu(base.unionByName(copies), spark)
     stop_hits = " + ".join(
         tx.count_substr("spark", _padded("spark"), f" {w} ") for w in _STOP
     )
@@ -177,11 +175,10 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    # no fan-out here: the term explode feeds a hash aggregation whose
-    # exchange already redistributes, and fanning the raw text first
-    # measured SLOWER (an extra full-text shuffle for nothing)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    # the split/explode and the map-side partial tf aggregation run below
+    # the first exchange, i.e. at scan parallelism unless fanned out
+    docs = fan_out_for_cpu(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"), spark)
     terms = docs.select(
         "doc_id", F.explode(F.expr("split(text, ' ')")).alias("term")
     ).filter(F.col("term") != "")

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.operators.extraction_queries import pages_from_documents
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 from no_ocr_spark.sources.warc import pages_from_warc, pages_to_warc
 
@@ -79,11 +80,9 @@ def q_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = os.path.join(tempfile.gettempdir(), "no_ocr_wet_gate",
                        os.path.basename(sf_dir.rstrip("/")))
-    # fan the sink input out (r6, guide §2.5): the single-row-group bench
-    # table otherwise makes one task gzip every record into one part —
-    # and the read-back leg then parses that one file serially too
-    texts_to_wet(docs.repartition(
-        spark.sparkContext.defaultParallelism), out, compress=True)
+    # fan the sink input out: one task per part file, so the gzip and the
+    # read-back parse both run on every core
+    texts_to_wet(fan_out_for_cpu(docs, spark), out, compress=True)
     back = texts_from_wet(spark, out).select(
         "url",
         F.col("warc_ts").alias("ts_back"),
@@ -186,9 +185,7 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents_as_jsonl_rows(spark, sf_dir)
     out = os.path.join(tempfile.gettempdir(), "no_ocr_jsonl_gate",
                        os.path.basename(sf_dir.rstrip("/")))
-    # same single-row-group fan-out rationale as q_wet_roundtrip
-    docs_to_jsonl(docs.repartition(
-        spark.sparkContext.defaultParallelism), out, compress=True)
+    docs_to_jsonl(fan_out_for_cpu(docs, spark), out, compress=True)
     back = docs_from_jsonl(spark, out).select(
         "id",
         F.md5(F.encode(F.col("text"), "UTF-8")).alias("text_md5"),

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.functions import textexpr as tx
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
 _QUOTA = 15    # max docs per domain
@@ -55,8 +56,8 @@ def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic ~10% sample, reported per language stratum:
     (lang, n_total, n_sampled). Membership = poly_hash(text) mod 100 <
     10 — identical on every engine/run/cluster size."""
-    docs = load_table(spark, sf_dir, "documents").select("lang", "text")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    docs = fan_out_for_cpu(
+        load_table(spark, sf_dir, "documents").select("lang", "text"), spark)
     in_sample = F.expr(
         f"pmod({tx.poly_hash('spark', 'text')}, 100) < {_RATE}"
     )
@@ -127,11 +128,9 @@ def _canon_chain(dialect: str, expr: str) -> str:
 
 
 def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-row-group input: fan out so the regex chain runs on every
-    # core (r6, guide §2.5 — the pii_scrub fix, same rationale)
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source"
-    ).repartition(spark.sparkContext.defaultParallelism)
+    docs = fan_out_for_cpu(
+        load_table(spark, sf_dir, "documents").select("doc_id", "source"),
+        spark)
     return docs.select(
         "doc_id",
         F.expr(_messy_url("spark")).alias("url"),
@@ -180,12 +179,8 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     typed placeholders. Map-only codegen regex chain; counts emitted so
     the redaction is auditable. The scrubbed text itself is value-compared
     against the oracle (not just counts)."""
-    # fan out before the regex chain (r6, guide §2.5): the bench table is
-    # a single row group, so the heavy map stage otherwise runs in one
-    # scan task on one core
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    ).repartition(spark.sparkContext.defaultParallelism)
+    docs = fan_out_for_cpu(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"), spark)
     planted = _pii_text2("spark", _pii_text("spark"))
     spark_email = _EMAIL_RE.replace("\\", "\\\\")
     spark_ip = _IP_RE.replace("\\", "\\\\")

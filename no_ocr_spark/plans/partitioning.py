@@ -1,6 +1,7 @@
-"""Explicit partitioning + skew salting (SURVEY.md §4, deliberate item 1).
+"""Explicit partitioning, skew salting and the fan-out rule (SURVEY.md §4,
+deliberate item 1).
 
-Two distinct concerns at 100 TB:
+Three distinct concerns at 100 TB:
 
 1. **Work distribution / resume units** — `with_bucket`: a STABLE partition
    key `bucket = pmod(xxhash64(url), n_buckets)`. url is unique, so buckets
@@ -8,12 +9,18 @@ Two distinct concerns at 100 TB:
    `spark_partition_id()`) is what makes per-bucket lineage + resume sound.
 
 2. **Skewed-key aggregation** — a Common-Crawl-ish corpus has Zipf hosts
-   (host0000 holds ~7% of all docs in the synthetic corpus). Any
-   `groupBy(host)` therefore has a hot key. `salted_host_counts` implements
-   the canonical two-stage salted aggregation: partial agg on
-   (host, salt=pmod(xxhash64(url), S)) — S-way fan-out of the hot key —
-   then final agg on host over the S partials. Map-side partial aggregation
-   makes stage 1 cheap; stage 2 shuffles at most S rows per host.
+   (host0000 holds ~7% of all docs in the synthetic corpus), so any
+   `groupBy(host)` has a hot key. `heavy_host_flags` detects the heavy
+   hosts lazily, in the consuming DAG, and `salt_by_heavy_flags` fans out
+   only those keys over `n_salts` partials. `salted_host_counts` (uniform
+   two-stage salting) and `detect_heavy_hosts` (eager detection) are the
+   reference formulations the lazy path is tested against.
+
+3. **Fan-out before a CPU-heavy map** — `fan_out_for_cpu` is the engine's
+   one place that decides whether to shuffle unkeyed raw rows to full
+   parallelism before expensive per-row work. Keyed repartitions (which
+   decide WHERE rows go, e.g. by bucket) are a different concern and stay
+   with their operators.
 
 Reference analogue: none — the reference is single-node (SURVEY.md §4);
 this is mandated by the north rule ("partitioning / shuffle / skew handled
@@ -68,46 +75,6 @@ def detect_heavy_hosts(pages: DataFrame, min_share: float = 0.01) -> DataFrame:
     )
 
 
-def salt_heavy_keys(df: DataFrame, heavy_keys: list[str], n_salts: int = 16,
-                    key_col: str = "host", salt_source: str = "url") -> DataFrame:
-    """Attach a `salt` column that fans out ONLY the detected heavy keys:
-    heavy keys get pmod(xxhash64(salt_source), n_salts) (n_salts-way
-    spread), everything else salt 0 (exactly one partial per key — no
-    needless fan-out of the long tail). heavy_keys is driver-side but
-    bounded: at min_share=0.01 there are at most 100 of them, broadcast as
-    a literal isin list regardless of corpus size."""
-    is_heavy = F.col(key_col).isin(heavy_keys) if heavy_keys else F.lit(False)
-    return df.withColumn(
-        "salt",
-        F.when(is_heavy, F.pmod(F.xxhash64(F.col(salt_source)), F.lit(n_salts)))
-        .otherwise(F.lit(0)).cast("int"),
-    )
-
-
-def targeted_salted_host_counts(pages: DataFrame, n_salts: int = 16,
-                                min_share: float = 0.01) -> DataFrame:
-    """Detection -> TARGETED salting -> two-stage aggregation: the
-    detect_heavy_hosts output actually drives the salt (SURVEY §4 item 1),
-    unlike salted_host_counts which fans out every key uniformly.
-
-    Stage 1 groups on (host, salt): each heavy host's rows spread over
-    n_salts reducers; tail hosts keep one partial each. Stage 2 reduces at
-    most n_salts rows per host. Same result as groupBy(host) by
-    construction. Detection is LAZY (heavy_host_flags + broadcast join) —
-    composing this fires no Spark job."""
-    salted = salt_by_heavy_flags(
-        pages.select(host_of("url").alias("host"), "url",
-                     F.length("html").alias("n_bytes")),
-        heavy_host_flags(pages, min_share), n_salts,
-    )
-    partial = salted.groupBy("host", "salt").agg(
-        F.count("*").alias("c"), F.sum("n_bytes").alias("b")
-    )
-    return partial.groupBy("host").agg(
-        F.sum("c").alias("n_docs"), F.sum("b").alias("n_bytes")
-    )
-
-
 def heavy_host_flags(pages: DataFrame, min_share: float = 0.01) -> DataFrame:
     """LAZY heavy-host detection — the in-DAG replacement for
     detect_heavy_hosts().collect() (round-3 verdict: a plan BUILDER must
@@ -147,7 +114,7 @@ def salt_by_heavy_flags(df: DataFrame, heavy: DataFrame, n_salts: int = 16,
                         salt_source: str = "url") -> DataFrame:
     """Targeted salting driven by a LAZY heavy-key DataFrame: broadcast
     left join of the <= 1/min_share heavy rows onto df (no shuffle of df),
-    then the same salt rule as salt_heavy_keys — detected keys fan over
+    then the targeted salt rule — detected keys fan over
     n_salts partials, the tail keeps salt 0. Composing this fires no job;
     detection executes as the broadcast build side of the consuming DAG."""
     flagged = df.join(
@@ -163,18 +130,56 @@ def salt_by_heavy_flags(df: DataFrame, heavy: DataFrame, n_salts: int = 16,
 
 
 def fan_out_for_cpu(df: DataFrame, spark) -> DataFrame:
-    """Repartition to full parallelism BEFORE a CPU-heavy per-row stage —
-    but ONLY when the scan itself can't feed the cluster (fewer splits
-    than cores: single-file / single-ROW-GROUP inputs, like the bench
-    tables — a parquet file never splits finer than its row groups, so
-    maxPartitionBytes alone can't help there). At 100 TB a table is
-    thousands of files and this is a NO-OP with zero shuffle; on a
-    starved scan it is exactly the _augmented/extraction fan-out rule:
-    shuffle the raw rows once so the expensive expressions run on every
-    core. Split count comes from the FileScanRDD driver-side (plan
-    build + file listing — composing fires no Spark job; asserted in
-    tests/test_partitioning.py)."""
+    """Shuffle `df`'s raw rows to full parallelism before a CPU-heavy
+    per-row stage, unless the input already feeds every core.
+
+    The one rule: return `df` unchanged when at least `defaultParallelism`
+    scan tasks will receive rows, else `repartition(defaultParallelism)`.
+    Tasks that receive rows are counted without running a Spark job:
+
+    * parquet inputs: min(scan splits, row groups). A split only reads
+      the row groups whose midpoint it holds, so a single-row-group file
+      cut into many splits still runs in one task. Row groups come from
+      the footers of `df.inputFiles()`; once the file count alone reaches
+      the target no footer is read.
+    * other exchange-free inputs (ranges, checkpoints, non-parquet files):
+      the RDD partition count.
+    * inputs with an exchange or a subquery below them: AQE fixes their
+      partition count only at run time, and reading it would run a job,
+      so they always fan out.
+
+    At production scale a table is thousands of files and this is a no-op
+    with zero shuffle; on a starved scan (the single-row-group bench
+    tables) the raw rows move once, before any expensive column exists.
+    """
     par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= par:
+    if _scan_tasks(df, par) >= par:
         return df
     return df.repartition(par)
+
+
+def _scan_tasks(df: DataFrame, target: int) -> int:
+    """Scan tasks of `df` that will receive rows (see fan_out_for_cpu);
+    0 when the count is only known at run time. Counting stops at
+    `target`."""
+    qe = df._jdf.queryExecution()
+    # get_spark() turns AQE on, and AQE roots every plan with an exchange
+    # or a subquery (cached ones included) in an AdaptiveSparkPlan
+    if qe.executedPlan().nodeName() == "AdaptiveSparkPlan":
+        return 0
+    tasks = qe.toRdd().getNumPartitions()
+    files = df.inputFiles()
+    if (tasks < target or not 0 < len(files) < target
+            or not all(f.endswith(".parquet") for f in files)):
+        return tasks
+    import pyarrow.parquet as pq
+    from pyarrow import fs
+
+    row_groups = 0
+    for uri in files:
+        filesystem, path = fs.FileSystem.from_uri(uri)
+        row_groups += pq.read_metadata(path, filesystem=filesystem).num_row_groups
+        if row_groups >= target:
+            break
+    return min(tasks, row_groups)
+

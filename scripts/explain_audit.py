@@ -106,10 +106,11 @@ CHECKS = {
     # real-codec multimodal family (round 4): two chained Arrow stages
     # (encode -> binary column -> decode), zero row-Python; the payload
     # column rides the narrow pipeline between the two UDFs. ONE
-    # RoundRobin Exchange may appear BELOW the first UDF: the round-5
-    # conditional fan-out (plans/partitioning.fan_out_for_cpu) engages on
-    # single-row-group bench files so the CPU-heavy stage feeds every
-    # core, and is a no-op (no Exchange) on real multi-split inputs.
+    # RoundRobin Exchange may appear BELOW the first UDF: the fan-out rule
+    # (plans/partitioning.fan_out_for_cpu) shuffles to defaultParallelism
+    # unless at least that many scan tasks receive rows (min(splits, row
+    # groups) for parquet), so it engages on the single-row-group bench
+    # files and is a no-op (no Exchange) on inputs of many row groups.
     "image_thumbnails": ["MapInPandas", "!BatchEvalPython",
                          "!Exchange hashpartitioning"],
     "jpeg_roundtrip": ["MapInPandas", "!BatchEvalPython",

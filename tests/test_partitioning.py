@@ -48,53 +48,6 @@ def test_bucket_stability_and_uniformity(spark):
     assert max(counts.values()) < 3 * min(counts.values())  # roughly uniform
 
 
-def test_targeted_salting_fans_out_only_heavy_keys(spark):
-    from no_ocr_spark.plans.partitioning import (
-        salt_heavy_keys,
-        targeted_salted_host_counts,
-    )
-
-    # corpus where one host holds ~30% of rows
-    hot = spark.range(300).selectExpr(
-        "concat('https://hot.example.org/p', id) AS url",
-        "cast(repeat('x', 100) as binary) AS html",
-    )
-    tail = spark.range(700).selectExpr(
-        "concat('https://t', id % 70, '.example.org/p', id) AS url",
-        "cast(repeat('y', 50) as binary) AS html",
-    )
-    pages = hot.unionByName(tail).cache()
-
-    heavy = [r.host for r in detect_heavy_hosts(pages, min_share=0.1).collect()]
-    assert heavy == ["hot.example.org"]
-
-    # the hot key fans out to n_salts partials; tail keys keep exactly one
-    salted = salt_heavy_keys(
-        pages.select(host_of("url").alias("host"), "url"), heavy, n_salts=8
-    )
-    partials = (
-        salted.groupBy("host", "salt").count()
-        .groupBy("host").count().withColumnRenamed("count", "n_partials")
-    )
-    n_partials = {r.host: r.n_partials for r in partials.collect()}
-    assert n_partials["hot.example.org"] == 8
-    assert all(v == 1 for h, v in n_partials.items() if h != "hot.example.org")
-
-    # end-to-end: targeted pipeline equals the naive groupBy
-    got = {r.host: (r.n_docs, r.n_bytes)
-           for r in targeted_salted_host_counts(pages, n_salts=8,
-                                                min_share=0.1).collect()}
-    naive = {
-        r.host: (r.n_docs, r.n_bytes)
-        for r in pages.select(host_of("url").alias("host"),
-                              F.length("html").alias("b"))
-        .groupBy("host")
-        .agg(F.count("*").alias("n_docs"), F.sum("b").alias("n_bytes"))
-        .collect()
-    }
-    assert got == naive
-
-
 def _n_spark_jobs(spark) -> int:
     # DAGScheduler.numTotalJobs = every job ever submitted on this context
     return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
@@ -120,7 +73,6 @@ def test_compose_fires_no_spark_job(spark):
     from no_ocr_spark.plans.partitioning import (
         heavy_host_flags,
         salt_by_heavy_flags,
-        targeted_salted_host_counts,
     )
     from no_ocr_spark.sources.tables import load_table
 
@@ -143,7 +95,6 @@ def test_compose_fires_no_spark_job(spark):
     # the pure planning primitives fire NOTHING on an in-memory frame
     pages = pages_df(spark, 50)
     before = _n_spark_jobs(spark)
-    _ = targeted_salted_host_counts(pages, n_salts=4, min_share=0.1)
     _ = salt_by_heavy_flags(
         pages.select(host_of("url").alias("host"), "url"),
         heavy_host_flags(pages),
@@ -168,6 +119,10 @@ def test_salt_by_heavy_flags_fans_out_only_heavy_keys(spark):
         "cast(repeat('y', 50) as binary) AS html",
     )
     pages = hot.unionByName(tail).cache()
+
+    heavy = [r.host for r in detect_heavy_hosts(pages, min_share=0.1).collect()]
+    assert heavy == ["hot.example.org"]
+
     salted = salt_by_heavy_flags(
         pages.select(host_of("url").alias("host"), "url"),
         heavy_host_flags(pages, min_share=0.1), n_salts=8,
@@ -201,3 +156,100 @@ def test_fan_out_for_cpu_conditional_and_jobless(spark):
     # already-parallel input: returned unchanged, no Exchange added
     wide = spark.range(0, 1000, 1, par * 2)
     assert fan_out_for_cpu(wide, spark) is wide
+
+
+def test_fan_out_for_cpu_fans_out_single_row_group_splits(spark, sf_dir,
+                                                          tmp_path):
+    """A single-row-group file cut into >= defaultParallelism scan splits
+    still runs in ONE scan task (a split reads only the row groups whose
+    midpoint it holds), so the helper must fan it out: the shape of a
+    generated sf1 documents table. Deciding fires no Spark job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from no_ocr_spark.plans.partitioning import fan_out_for_cpu
+
+    par = spark.sparkContext.defaultParallelism
+    docs = pq.read_table(f"{sf_dir}/documents.parquet")
+    big = pa.concat_tables([docs] * 40)
+    path = str(tmp_path / "documents.parquet")
+    # uncompressed, so the file is big enough (MBs) to split per core
+    pq.write_table(big, path, row_group_size=big.num_rows + 1,
+                   compression="none", use_dictionary=False)
+    assert pq.ParquetFile(path).num_row_groups == 1
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() >= par  # the split count alone says "fed"
+
+    n0 = _n_spark_jobs(spark)
+    fanned = fan_out_for_cpu(df, spark)
+    assert _n_spark_jobs(spark) == n0
+    # returned unchanged, all rows would run in the one task that holds
+    # the row group's midpoint
+    assert fanned is not df
+    assert fanned.rdd.getNumPartitions() == par
+
+
+def test_fan_out_for_cpu_adds_no_job_to_any_registered_query(spark, sf_dir,
+                                                             monkeypatch):
+    """Compose every registered query with the helper wrapped: the helper
+    itself adds zero Spark jobs, including on inputs whose partitioning
+    AQE fixes only at run time (page_rasters' distinct)."""
+    import sys
+
+    import __spark_entry__ as entry
+    from no_ocr_spark.plans import partitioning
+
+    real = partitioning.fan_out_for_cpu
+    jobs: dict[str, int] = {}
+    current = [""]
+
+    def counted(df, spark_):
+        n0 = _n_spark_jobs(spark_)
+        out = real(df, spark_)
+        jobs[current[0]] = jobs.get(current[0], 0) + _n_spark_jobs(spark_) - n0
+        return out
+
+    registry = {**entry.queries(), **entry.extra_queries()}
+    for name, mod in list(sys.modules.items()):
+        if (name.startswith("no_ocr_spark")
+                and getattr(mod, "fan_out_for_cpu", None) is real):
+            monkeypatch.setattr(mod, "fan_out_for_cpu", counted)
+    for name, query in registry.items():
+        current[0] = name
+        query(spark, sf_dir)
+    spark.catalog.clearCache()
+
+    assert "page_rasters" in jobs and len(jobs) > 20  # the wrapper is live
+    assert {n: j for n, j in jobs.items() if j} == {}
+
+
+def test_no_inline_default_parallelism_repartition():
+    """fan_out_for_cpu is the only place that decides an unkeyed fan-out:
+    no other engine module may call repartition(defaultParallelism),
+    directly or through a local name bound to it."""
+    import ast
+    import pathlib
+
+    def mentions_par(node):
+        return any(isinstance(n, ast.Attribute) and n.attr == "defaultParallelism"
+                   for n in ast.walk(node))
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "no_ocr_spark"
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "plans/partitioning.py":
+            continue
+        tree = ast.parse(path.read_text(), rel)
+        par_names = {t.id for n in ast.walk(tree) if isinstance(n, ast.Assign)
+                     and mentions_par(n.value)
+                     for t in n.targets if isinstance(t, ast.Name)}
+        for n in ast.walk(tree):
+            if (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "repartition"
+                    and len(n.args) + len(n.keywords) == 1 and n.args
+                    and (mentions_par(n.args[0])
+                         or getattr(n.args[0], "id", None) in par_names)):
+                offenders.append(f"{rel}:{n.lineno}")
+    assert offenders == [], (
+        "unkeyed fan-out outside plans/partitioning.fan_out_for_cpu")
