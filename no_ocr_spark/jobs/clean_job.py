@@ -50,9 +50,12 @@ import time
 def _write_clean(clean, n_buckets: int, path: str) -> None:
     from no_ocr_spark.plans.partitioning import with_bucket
 
+    # keyed on the bucket alone: each bucket lands in one task (one file
+    # per bucket dir), and the session's shuffle partitioning sets the
+    # task count
     (
         with_bucket(clean, n_buckets)
-        .repartition(n_buckets, "bucket")
+        .repartition("bucket")
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(path)
     )

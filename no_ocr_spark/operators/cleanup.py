@@ -18,7 +18,16 @@ Scale shapes (the reason each stage looks the way it does):
     LARGER side of a verified near-dup pair is dropped. One pass, no
     iteration; transitive chains collapse toward their smallest member
     (a connected-components pass is the exact variant; greedy is the
-    standard corpus-dedup choice and deterministic).
+    standard corpus-dedup choice and deterministic);
+  * every per-row hash runs once per document, in the one persisted
+    stage: the cached rows carry the repetition flag `is_repetitive` and
+    the MinHash `sig`, both derived from one word-hash array. The gate
+    filters the cached relation, and the LSH self-join reads `sig` from
+    it instead of re-hashing `text` in each of its branches;
+  * the PII scrub is a map transform on the rows entering the exact-dedup
+    semi-join, before its shuffle (the dedup key is taken from the
+    unscrubbed text), not a pass after the final anti-join, where AQE
+    coalesced it into a single task.
 """
 
 from __future__ import annotations
@@ -29,26 +38,35 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from no_ocr_spark.functions import textexpr as tx
+from no_ocr_spark.operators.repetition import (
+    with_repetition_flag_from_hashes,
+    with_word_hashes,
+)
 
 MIN_TOKENS = 10
 
 
+def _add_sig(docs: DataFrame) -> DataFrame:
+    """Append the 8-slot MinHash `sig` from the `_wh` word-hash column
+    (repetition.with_word_hashes)."""
+    sh = tx.shingle_hashes_from_word_hashes("spark", "_wh")
+    sig = tx.minhash_signature_from_hashes("spark", "_sh")
+    # `_sh` is a column because all 8 slots read it: inlined, the shingle
+    # pass would run once per slot
+    return docs.withColumn("_sh", F.expr(sh)).withColumn(
+        "sig", F.expr(sig)
+    ).drop("_sh")
+
+
 def _with_sig(docs: DataFrame) -> DataFrame:
-    wh = tx.word_hashes("spark", tx.words("spark", "text"))
-    sh = tx.shingle_hashes_from_word_hashes("spark", "word_hashes")
-    sig = tx.minhash_signature_from_hashes("spark", "shingle_hashes")
-    return (
-        docs.withColumn("word_hashes", F.expr(wh))
-        .withColumn("shingle_hashes", F.expr(sh))
-        .select("url", F.expr(sig).alias("sig"))
-    )
+    """(url, text) -> (url, sig)."""
+    return _add_sig(with_word_hashes(docs)).select("url", "sig")
 
 
-def near_dup_losers(docs: DataFrame) -> DataFrame:
-    """urls to DROP: the larger url of every verified MinHash near-dup pair
-    (2 bands x 4 rows candidates, >= 6/8 slot agreement)."""
-    d = _with_sig(docs)
-    bands = d.select(
+def _sig_losers(sigs: DataFrame) -> DataFrame:
+    """(url, sig) -> urls to DROP: the larger url of every verified near-dup
+    pair, from a banded self-join over the signatures."""
+    bands = sigs.select(
         "url", "sig",
         F.explode(F.expr(
             "transform(sequence(0, 1), j -> struct(j as band_id, "
@@ -67,14 +85,42 @@ def near_dup_losers(docs: DataFrame) -> DataFrame:
     )
 
 
+def near_dup_losers(docs: DataFrame) -> DataFrame:
+    """urls to DROP: the larger url of every verified MinHash near-dup pair
+    (2 bands x 4 rows candidates, >= 6/8 slot agreement)."""
+    return _sig_losers(_with_sig(docs))
+
+
+def _scrub_pii(docs: DataFrame) -> DataFrame:
+    """Redact PII in `text` and, when present, in the nested span texts."""
+    from no_ocr_spark.operators.webops import pii_scrub_expr
+
+    docs = docs.withColumn("text", F.expr(pii_scrub_expr("text")))
+    if "spans" in docs.columns:
+        # the nested span texts carry the same content — scrubbing
+        # only the top-level column would ship the PII anyway
+        docs = docs.withColumn(
+            "spans",
+            F.expr(
+                "transform(spans, s -> named_struct("
+                "'page', s.page, "
+                f"'text', {pii_scrub_expr('s.text')}, "
+                "'x0', s.x0, 'y0', s.y0, 'x1', s.x1, 'y1', s.y1, "
+                "'block', s.block, 'line', s.line))"
+            ),
+        )
+    return docs
+
+
 def clean_corpus(extracted: DataFrame, min_tokens: int = MIN_TOKENS,
                  ppl_max_bits: float | None = None) -> tuple[DataFrame, dict]:
     """extracted(url, text, ...) -> (clean DataFrame, stage stats).
 
     Stages: quality gates -> Gopher repetition gate -> [optional CCNet
-    perplexity gate] -> exact dedup -> MinHash-LSH near-dup removal ->
-    PII scrub (a map transform on the survivors, so it costs nothing
-    extra in shuffles).
+    perplexity gate] -> exact dedup -> MinHash-LSH near-dup removal, with
+    the PII scrub applied map-side to the rows entering the exact-dedup
+    join (after the dedup keys are taken from the unscrubbed text, so it
+    changes no dedup decision and costs no extra shuffle).
 
     ppl_max_bits, when set, drops documents whose mean bits-per-bigram
     under the corpus-slice bigram LM (operators/perplexity.py; reference
@@ -83,40 +129,43 @@ def clean_corpus(extracted: DataFrame, min_tokens: int = MIN_TOKENS,
     repetition stage, so the extra scoring branch rereads cached rows,
     not the extraction input; sub-2-token docs score NULL and are kept
     (the token-length gate already ruled on them)."""
-    from no_ocr_spark.operators.repetition import with_repetition_flag
-    from no_ocr_spark.operators.webops import pii_scrub_expr
-
     q_ok = (
         F.col("error").isNull()
         & (F.expr("size(split(text, ' '))") >= min_tokens)
     )
-    # ONE aggregation yields both pre-persist audit numbers (n_in,
-    # n_after_quality) — round 3 ran a separate full count() scan for
-    # each, two extra passes over the extraction input at scale for two
-    # integers. The quality predicate is cheap map work, so folding it
-    # into an agg-of-flags costs nothing beyond the single scan.
-    pre = extracted.agg(
-        F.count("*").alias("n_in"),
+    # Audit counts ride actions the cascade runs anyway, as plan
+    # observations (names must be session-unique): n_in/n_quality the
+    # persist's materializing count below, the exact-dedup and clean
+    # counts the CALLER'S final action — the anti-join streams every
+    # `exact` row through its probe side, so observing that node counts
+    # the exact-dedup survivors without a separate action. One action per
+    # materialized stage boundary, none for the counts alone.
+    run_id = uuid.uuid4().hex[:8]
+    obs_quality = Observation(f"quality_{run_id}")
+    obs_exact = Observation(f"exact_dedup_{run_id}")
+    obs_clean = Observation(f"clean_{run_id}")
+    quality = extracted.observe(
+        obs_quality,
+        F.count(F.lit(1)).alias("n_in"),
         F.count_if(q_ok).alias("n_quality"),
-    ).first()
-    n_in, n_quality = pre["n_in"], pre["n_quality"]
+    ).filter(q_ok)
 
-    quality = extracted.filter(q_ok)
-
-    # Gopher-style within-doc repetition gate (map-only). Persisted: four
-    # downstream consumers (dedup keepers, the semi-join probe side, the
-    # near-dup self-join's two branches) would otherwise each recompute
-    # the gate's hash pipeline — measured 5x job wall without the persist.
-    # At 100 TB the equivalent boundary is a staging-table write, exactly
+    # The one persisted stage: every per-row expression of the cascade —
+    # the word hashes, the Gopher repetition flag and the MinHash
+    # signature, both derived from the SAME `_wh` array — runs here once
+    # per document. The cache keeps `is_repetitive` and `sig`, and the
+    # gate filters the CACHED relation: the cache is a plan barrier, so
+    # the filter cannot be pushed down into the gate's projections (which
+    # would re-inline the hash pipeline into the predicate). Downstream
+    # consumers (dedup keepers, the semi-join probe side, the near-dup
+    # self-join's two branches) read cached rows and never re-hash. At
+    # 100 TB the equivalent boundary is a staging-table write, exactly
     # like run_with_lineage's extracted table.
-    rep = (
-        with_repetition_flag(quality)
-        .filter(~F.col("is_repetitive"))
-        .drop("is_repetitive")
-    ).persist()
+    gated = _add_sig(with_repetition_flag_from_hashes(
+        with_word_hashes(quality))).drop("_w", "_wh").persist()
+    rep = gated.filter(~F.col("is_repetitive")).drop("is_repetitive")
     n_rep = rep.count()
-    rep_cache = rep  # the persisted node — finalize() unpersists THIS,
-    # not whatever `rep` is rebound to by the optional gate below
+    n_q = obs_quality.get
 
     stats_ppl: dict = {}
     if ppl_max_bits is not None:
@@ -137,45 +186,23 @@ def clean_corpus(extracted: DataFrame, min_tokens: int = MIN_TOKENS,
         # eager count on the persisted stage boundary (same rule as n_rep)
         stats_ppl["n_after_perplexity"] = rep.count()
 
-    # exact dedup on the 8-byte text hash; keep the smallest url
+    # exact dedup on the 8-byte hash of the UNSCRUBBED text; keep the
+    # smallest url. The scrub runs in the probe side's map tasks, before
+    # the first shuffle, where every cached partition is its own task.
     keepers = (
         rep.groupBy(F.xxhash64("text").alias("th"))
         .agg(F.min("url").alias("url"))
         .select("url")
     )
-    exact = rep.join(keepers, "url", "left_semi")
-    # Audit counts for the two non-materialized stages ride the CALLER'S
-    # final action as plan observations (VERDICT r4 #7) — the anti-join
-    # streams every `exact` row through its probe side, so observing that
-    # node counts the exact-dedup survivors without a separate action;
-    # same for the clean node. n_in/n_quality share one pre-scan agg and
-    # n_rep is the persist's materializing action — so the cascade now
-    # runs exactly one action per materialized stage boundary.
-    run_id = uuid.uuid4().hex[:8]  # names must be session-unique
-    obs_exact = Observation(f"exact_dedup_{run_id}")
-    obs_clean = Observation(f"clean_{run_id}")
+    exact = _scrub_pii(rep).join(keepers, "url", "left_semi")
     exact = exact.observe(obs_exact, F.count(F.lit(1)).alias("n"))
 
-    losers = near_dup_losers(exact.select("url", "text"))
+    losers = _sig_losers(exact.select("url", "sig"))
     clean = exact.join(losers, "url", "left_anti")
-    clean = clean.observe(obs_clean, F.count(F.lit(1)).alias("n"))
-    clean = clean.withColumn("text", F.expr(pii_scrub_expr("text")))
-    if "spans" in clean.columns:
-        # the nested span texts carry the same content — scrubbing
-        # only the top-level column would ship the PII anyway
-        clean = clean.withColumn(
-            "spans",
-            F.expr(
-                "transform(spans, s -> named_struct("
-                "'page', s.page, "
-                f"'text', {pii_scrub_expr('s.text')}, "
-                "'x0', s.x0, 'y0', s.y0, 'x1', s.x1, 'y1', s.y1, "
-                "'block', s.block, 'line', s.line))"
-            ),
-        )
+    clean = clean.observe(obs_clean, F.count(F.lit(1)).alias("n")).drop("sig")
     stats = {
-        "n_in": n_in,
-        "n_after_quality": n_quality,
+        "n_in": int(n_q["n_in"]),
+        "n_after_quality": int(n_q["n_quality"]),
         "n_after_repetition": n_rep,
         **stats_ppl,
     }
@@ -187,7 +214,7 @@ def clean_corpus(extracted: DataFrame, min_tokens: int = MIN_TOKENS,
         memory for the session lifetime). Returns the completed stats."""
         stats["n_after_exact_dedup"] = int(obs_exact.get["n"])
         stats["n_clean"] = int(obs_clean.get["n"])
-        rep_cache.unpersist()
+        gated.unpersist()
         return stats
 
     stats["_finalize"] = finalize

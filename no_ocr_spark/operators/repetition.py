@@ -267,19 +267,18 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def with_repetition_flag(docs: DataFrame) -> DataFrame:
-    """Append `is_repetitive` (the Gopher top-2-gram gate: most frequent
-    word 2-gram accounts for >20% of words) to a DataFrame with a `text`
-    column — the composable form the cleanup cascade uses.
+def with_word_hashes(docs: DataFrame) -> DataFrame:
+    """Append `_w` (the words of `text`) and `_wh` (their hashes, one
+    char-level hash lambda per word) — the input both the repetition gate
+    and the cleanup cascade's MinHash signature derive from."""
+    return docs.withColumn("_w", F.expr(tx.words("spark", "text"))).withColumn(
+        "_wh", F.expr(tx.word_hashes("spark", "_w"))
+    )
 
-    Unlike q_repetition_stats' per-distinct-gram scan (O(L^2), fine on
-    the short driver docs and oracle-mirrored), this runs on real
-    extracted text (hundreds of words, recomputed across cascade
-    branches), so the top-gram count is O(L log L): sort the gram array
-    and fold the longest equal-adjacent run — pure codegen, measured
-    ~100x faster on the extraction corpus (the O(L^2) form burned
-    minutes at sf0.01)."""
-    docs = docs.withColumn("_w", F.expr("split(text, ' ')"))
+
+def with_repetition_flag_from_hashes(docs: DataFrame) -> DataFrame:
+    """Append `is_repetitive` to the output of with_word_hashes (reads
+    `_w` and `_wh`, keeps both) — the gate with_repetition_flag applies."""
     # 2-gram fingerprints as LONGS (adjacent word-hash pairs combined), not
     # strings: no per-gram string allocation, and the sort+fold runs over
     # 8-byte values. Word hashes range over [0, 1e9+6] (poly-mod-(1e9+7)),
@@ -288,9 +287,6 @@ def with_repetition_flag(docs: DataFrame) -> DataFrame:
     # wrapping one; collisions would need equal (h1, h2) pairs. (A smaller
     # multiplier like 1000003 is NOT injective: (a, b) collides with
     # (a+1, b-1000003).)
-    docs = docs.withColumn(
-        "_wh", F.expr(tx.word_hashes("spark", "_w"))
-    )
     docs = docs.withColumn(
         "_g",
         F.expr("zip_with(slice(_wh, 1, greatest(size(_wh) - 1, 0)), "
@@ -309,7 +305,30 @@ def with_repetition_flag(docs: DataFrame) -> DataFrame:
         F.expr("CASE WHEN size(_w) >= 2 THEN "
                "_top2 >= 2 AND _top2 * 5 > size(_w) "
                "ELSE false END"),
-    ).drop("_w", "_wh", "_g", "_top2")
+    ).drop("_g", "_top2")
+
+
+def with_repetition_flag(docs: DataFrame) -> DataFrame:
+    """Append `is_repetitive` (the Gopher top-2-gram gate: most frequent
+    word 2-gram accounts for >20% of words) to a DataFrame with a `text`
+    column — the composable form the cleanup cascade uses.
+
+    Unlike q_repetition_stats' per-distinct-gram scan (O(L^2), fine on
+    the short driver docs and oracle-mirrored), this runs on real
+    extracted text (hundreds of words), so the top-gram count is
+    O(L log L): sort the gram array and fold the longest equal-adjacent
+    run — pure codegen, measured ~100x faster on the extraction corpus
+    (the O(L^2) form burned minutes at sf0.01).
+
+    Filter on the flag only ABOVE a materialization boundary (a persist,
+    a staging write): a filter placed directly on this output is pushed
+    down through the gate's projections, and Catalyst inlines the whole
+    hash pipeline into the predicate — the word-hash lambda 8 times and
+    the sort+fold twice per row (operators/cleanup.py filters its cached
+    relation for this reason)."""
+    return with_repetition_flag_from_hashes(with_word_hashes(docs)).drop(
+        "_w", "_wh"
+    )
 
 
 QUERIES = {

@@ -7,6 +7,13 @@ and check the plan properties the engine promises (SURVEY.md §4):
   * scalar pipelines run inside WholeStageCodegen,
   * extraction scans prune to the needed columns (ReadSchema).
 
+It also lists, over every registered query, the operators whose
+expressions hold the same `lambdafunction` subtree (the higher-order call
+with its inputs) more than once: the shape Catalyst leaves when it
+inlines a multi-referenced higher-order column into a predicate or
+projection, where each copy is interpreted again per row
+(repeated_lambdas).
+
 Usage: python scripts/explain_audit.py [sf_dir]   (writes BENCH/plans.md)
 """
 
@@ -16,6 +23,7 @@ import io
 import os
 import re
 import sys
+from collections import Counter
 from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -231,6 +239,75 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+_LAMBDA = "lambdafunction("
+
+
+def _lambda_calls(expr: str) -> list[str]:
+    """The higher-order calls (`transform(arr, lambdafunction(...))`,
+    `aggregate(...)`, ...) in a plan node's string, each with its array
+    arguments — two copies are the same computation only if their inputs
+    match too. Expression ids are kept: an inlined copy shares them."""
+    spans = set()
+    start = expr.find(_LAMBDA)
+    while start != -1:
+        depth, i = 0, start - 1
+        while i >= 0:  # back to the "(" that opens the enclosing call
+            depth += (expr[i] == ")") - (expr[i] == "(")
+            if depth < 0:
+                break
+            i -= 1
+        j, k = i, i
+        while j > 0 and (expr[j - 1].isalnum() or expr[j - 1] == "_"):
+            j -= 1
+        depth = 0
+        while k < len(expr):  # forward to the ")" that closes it
+            depth += (expr[k] == "(") - (expr[k] == ")")
+            k += 1
+            if depth == 0:
+                break
+        spans.add((j, k))
+        start = expr.find(_LAMBDA, start + 1)
+    return [expr[a:b] for a, b in spans]
+
+
+def repeated_lambdas(df) -> list[tuple[str, int, str]]:
+    """(operator, copies, call) for every operator of `df`'s optimized plan
+    (cached plans included) whose expressions hold the same higher-order
+    call more than once; a repeat nested inside a larger repeated call is
+    not listed on its own."""
+    hits = []
+
+    def walk(node) -> None:
+        counts = Counter(_lambda_calls(node.simpleString(1 << 20)))
+        repeated = [call for call, n in counts.items() if n > 1]
+        hits.extend(
+            (node.nodeName(), counts[call], call) for call in repeated
+            if not any(call != other and call in other for other in repeated)
+        )
+        if node.nodeName() == "InMemoryRelation":
+            walk(node.cacheBuilder().cachedPlan())
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().optimizedPlan())
+    return hits
+
+
+def lambda_report(rows: list[tuple], n_queries: int) -> list[str]:
+    """plans.md section for (query, operator, copies, subtree) rows."""
+    out = [f"\n## Repeated lambda subtrees ({n_queries} registered queries)\n\n",
+           "Operators of the optimized plan holding the same higher-order "
+           "call (a `lambdafunction` with its inputs) more than once; each "
+           "copy is evaluated again per row: "
+           f"{len(rows)} hits in {len({r[0] for r in rows})} queries.\n"]
+    if rows:
+        out.append("\n| query | operator | copies | subtree |\n|---|---|---|---|\n")
+        out += [f"| {q} | {op} | {n} | `{lam[:100]}{'...' if len(lam) > 100 else ''}` |\n"
+                for q, op, n, lam in rows]
+    return out
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from no_ocr_spark.session import get_spark
@@ -255,9 +332,13 @@ def main() -> int:
             if not ok:
                 failures.append((name, pat))
         out.append("\n```\n" + plan[:4000] + "\n```\n")
+    lambda_hits = [(name, *hit) for name in sorted(qmap)
+                   for hit in repeated_lambdas(qmap[name](spark, sf_dir))]
+    out += lambda_report(lambda_hits, len(qmap))
     with open(os.path.join(REPO, "BENCH", "plans.md"), "w") as f:
         f.writelines(out)
-    print(f"audited {len(CHECKS)} plans; {len(failures)} missing markers")
+    print(f"audited {len(CHECKS)} plans; {len(failures)} missing markers; "
+          f"{len(lambda_hits)} repeated lambda subtrees")
     for name, pat in failures:
         print(f"  MISSING {name}: {pat}")
     spark.stop()

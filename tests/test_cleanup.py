@@ -190,3 +190,96 @@ def test_perplexity_gate_off_by_default_keeps_stats_shape(spark):
     assert "n_after_perplexity" not in stats
     clean.collect()
     finalize()
+
+
+def _plan_nodes_above_cache(plan):
+    """(class name, node) for every node of a logical plan, not descending
+    into the cached plans of InMemoryRelation leaves."""
+    out = [(plan.getClass().getSimpleName(), plan)]
+    if out[0][0] != "InMemoryRelation":
+        children = plan.children()
+        for i in range(children.size()):
+            out += _plan_nodes_above_cache(children.apply(i))
+    return out
+
+
+def test_cached_stage_hashes_each_word_once(spark):
+    """The repetition gate filters the CACHED relation, so the filter is
+    not pushed into the gate's projections: the persisted plan holds the
+    char-level word-hash lambda (`ascii(`) once, not once per inlined
+    reference."""
+    clean, stats = clean_corpus(_extracted(spark), min_tokens=10)
+    try:
+        nodes = _plan_nodes_above_cache(
+            clean._jdf.queryExecution().optimizedPlan())
+        cached = {n.cacheBuilder().cachedPlan().toString()
+                  for cls, n in nodes if cls == "InMemoryRelation"}
+        assert len(cached) == 1
+        assert cached.pop().count("ascii(") == 1
+    finally:
+        clean.collect()  # the action finalize's observed counts ride on
+        stats.pop("_finalize")()
+
+
+def test_clean_plan_reads_hashes_from_the_cache(spark):
+    """Above the cached relation nothing re-hashes: the LSH self-join reads
+    `sig` from the cache instead of re-deriving word hashes (`ascii(`),
+    shingle sets (`array_distinct(`) and MinHash slots (`array_min(`)
+    from `text` in both of its branches."""
+    clean, stats = clean_corpus(_extracted(spark), min_tokens=10)
+    try:
+        nodes = _plan_nodes_above_cache(
+            clean._jdf.queryExecution().optimizedPlan())
+        above = [n.simpleString(100000) for cls, n in nodes
+                 if cls != "InMemoryRelation"]
+        for marker in ("ascii(", "array_distinct(", "array_min("):
+            assert not any(marker in s for s in above), marker
+    finally:
+        clean.collect()  # the action finalize's observed counts ride on
+        stats.pop("_finalize")()
+
+
+def test_pii_scrub_runs_after_the_dedup_key(spark):
+    """Two docs that differ only in an email address are not exact
+    duplicates: the dedup key is taken from the unscrubbed text, so both
+    survive (and both come out scrubbed, then textually equal)."""
+    base = ("kato mira senvel dorun prasto {} lengar nubel trimon fizer "
+            "qualix")
+    rows = [
+        ("https://m1.example.org/a", base.format("ann@one.example.com"), None),
+        ("https://m2.example.org/a", base.format("bob@two.example.net"), None),
+    ]
+    ext = spark.createDataFrame(rows, "url string, text string, error string")
+    clean, stats = clean_corpus(ext, min_tokens=10)
+    finalize = stats.pop("_finalize")
+    got = {r.url: r.text for r in clean.collect()}
+    stats = finalize()
+    assert stats["n_after_exact_dedup"] == 2
+    assert set(got) == {u for u, _, _ in rows}
+    assert all(t == base.format("<EMAIL>") for t in got.values())
+
+
+def test_explain_audit_flags_a_filter_on_the_gate(spark):
+    """scripts/explain_audit.py's repeated-lambda check catches the trap
+    the cascade avoids — a filter straight on with_repetition_flag's output
+    re-inlines the hash pipeline — and finds no repeat in clean_corpus."""
+    import importlib.util
+    import os
+
+    from no_ocr_spark.operators.repetition import with_repetition_flag
+
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "scripts", "explain_audit.py")
+    spec = importlib.util.spec_from_file_location("explain_audit", path)
+    audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(audit)
+
+    ext = _extracted(spark)
+    trap = with_repetition_flag(ext).filter(~F.col("is_repetitive"))
+    assert [op for op, _, _ in audit.repeated_lambdas(trap)] == ["Filter"]
+    clean, stats = clean_corpus(ext, min_tokens=10)
+    try:
+        assert audit.repeated_lambdas(clean) == []
+    finally:
+        clean.collect()  # the action finalize's observed counts ride on
+        stats.pop("_finalize")()
