@@ -34,6 +34,8 @@ def main(argv: list[str]) -> int:
     ap.add_argument("--page-images-dpi", type=int, default=96)
     args = ap.parse_args(argv)
 
+    from pyspark.sql import functions as F
+
     from no_ocr_spark.session import get_spark
     from no_ocr_spark.plans.lineage import run_with_lineage
     from no_ocr_spark.sources.synth_spark import materialize_pages
@@ -52,7 +54,10 @@ def main(argv: list[str]) -> int:
             spark, args.out, args.snapshot, res["processed_buckets"]
         )
     wall = time.time() - t0
-    n_docs = spark.read.parquet(args.out + "/extracted").count()
+    # docs this run extracted: its wall covers only the processed buckets
+    n_docs = sum(r.n_docs for r in spark.read.parquet(args.out + "/lineage")
+                 .filter(F.col("bucket").isin(res["processed_buckets"]))
+                 .select("n_docs").collect())
     out = {
         "job": "extract",
         "n_docs": n_docs,

@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 def connected_components(edges: DataFrame, max_iters: int = 25) -> DataFrame:
     """edges(src, dst) undirected -> (v, label) with label = min vertex id
     reachable. Deterministic; converges in O(max component diameter)
-    rounds, early-exits when a round changes nothing."""
+    rounds, early-exits when a round changes nothing; raises RuntimeError
+    if a round still changes labels after `max_iters` rounds."""
     # r6 (guide §2.4): checkpoint the DIRECTED edges once and derive the
     # symmetric view by a map-only union over the checkpoint — the old
     # plan ran a corpus-pair-sized distinct() (one full extra shuffle)
@@ -73,6 +74,9 @@ def connected_components(edges: DataFrame, max_iters: int = 25) -> DataFrame:
         labels = new_labels.select("v", "label")
         if changed == 0:
             break
+    else:
+        raise RuntimeError(f"connected_components: labels still changing "
+                           f"after max_iters={max_iters} rounds")
     return labels
 
 

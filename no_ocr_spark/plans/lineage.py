@@ -15,9 +15,12 @@ Design:
     identical data => identical checksum regardless of row order or
     parallelism — this is how two runs at different cluster sizes are
     proven byte-identical.
-  * Resume = left-anti join of all buckets against lineage status='done'
-    (SURVEY.md §2.4) — only pending buckets are scanned (the bucket
-    predicate prunes parquet row groups via pushdown).
+  * Resume = all buckets minus the ledger's done set (one column-pruned
+    read); only pending buckets are scanned (bucket predicate pushdown).
+  * Write tasks follow data volume, not bucket count: the extracted write
+    is a `rebalance` on bucket (AQE coalesces small partitions and splits
+    big ones, so a bucket dir may hold several files); the ledger is one
+    task, one file per run.
 """
 
 from __future__ import annotations
@@ -48,20 +51,20 @@ def lineage_rollup(extracted: DataFrame) -> DataFrame:
     )
 
 
+def _done_buckets(spark: SparkSession, lineage_path: str) -> set[int]:
+    """Buckets marked done in the lineage ledger (empty if none exists)."""
+    if not os.path.exists(lineage_path):
+        return set()
+    return {
+        r.bucket for r in spark.read.parquet(lineage_path)
+        .filter(F.col("status") == "done").select("bucket").collect()
+    }
+
+
 def pending_buckets(spark: SparkSession, n_buckets: int, lineage_path: str) -> list[int]:
     """All buckets minus those marked done in the lineage table."""
-    all_b = spark.range(n_buckets).select(F.col("id").cast("int").alias("bucket"))
-    if not os.path.exists(lineage_path):
-        return [r.bucket for r in all_b.collect()]
-    done = (
-        spark.read.parquet(lineage_path)
-        .filter(F.col("status") == "done")
-        .select("bucket")
-        .distinct()
-    )
-    return sorted(
-        r.bucket for r in all_b.join(done, "bucket", "left_anti").collect()
-    )
+    done = _done_buckets(spark, lineage_path)
+    return [b for b in range(n_buckets) if b not in done]
 
 
 def run_with_lineage(
@@ -91,40 +94,17 @@ def run_with_lineage(
         bucketed = bucketed.filter(F.col("bucket").isin(todo))
 
     # Extraction runs directly on the scan splits (max parallelism, zero
-    # shuffle of raw html). The explicit url-hash repartition (SURVEY §4
-    # item 1) happens AFTER extraction, on the ~10x smaller extracted data:
-    # tasks land on (bucket, sub-split) groups — several files per bucket
-    # dir, each dir still replaced atomically by dynamic overwrite — and it
-    # is the shuffle you'd accept at 100 TB: never the fat input column.
-    # Explicit N => AQE keeps it.
-    #
-    # Write-once, project-on-read: the `extracted` table carries the nested
-    # spans column (schema superset of FIXTURES.md A2 — columnar readers
-    # that don't select it never touch it). Storing text twice (a staging
-    # copy + a projection copy) bought nothing; the per-page `spans` table
-    # and the lineage rollup derive from column-pruned re-reads. Downstream
-    # jobs run SERIALLY: concurrent jobs over nested-struct scans measured
-    # 3x slower at high core counts (GC interference), with no win at low.
+    # shuffle of raw html); the url-hash bucket shuffle (SURVEY §4 item 1)
+    # moves only the ~10x smaller extracted rows. Write-once,
+    # project-on-read: `extracted` carries the nested spans column (schema
+    # superset of FIXTURES.md A2); the `spans` table and the ledger derive
+    # from column-pruned re-reads, run serially (concurrent jobs over
+    # nested-struct scans measured 3x slower at high core counts).
     result = extract(bucketed)  # bucket recomputed from url (pure fn)
     extracted_path = os.path.join(out_dir, "extracted")
-    # Write parallelism: hash on (bucket, url-subsplit) rather than bucket
-    # alone, so the number of write tasks is decoupled from n_buckets. With
-    # exactly n_buckets tasks, a 32-bucket job runs only 4 waves on 8 cores
-    # and one straggler stretches the stage; ~4 waves' worth of smaller
-    # tasks per core keeps the tail short at every parallelism level (and
-    # multiple files per bucket dir is what a real 100 TB run produces
-    # anyway — dynamic overwrite replaces whole bucket dirs, so resume
-    # semantics are unchanged).
-    par = spark.sparkContext.defaultParallelism
-    n_write = max(n_buckets, 8 * par)
-    # NB: salt the sub-split hash (extra lit column) — bucket is
-    # pmod(xxhash64(url), n_buckets), so an unsalted xxhash64(url) mod k
-    # is perfectly correlated with it and yields no extra distinct keys.
-    sub = F.pmod(F.xxhash64("url", F.lit("w")),
-                 F.lit(max(1, n_write // n_buckets)))
     (
         with_bucket(result, n_buckets)
-        .repartition(n_write, "bucket", sub)
+        .hint("rebalance", "bucket")
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(extracted_path)
@@ -140,15 +120,16 @@ def run_with_lineage(
         "overwrite"
     ).partitionBy("bucket").parquet(os.path.join(out_dir, "spans"))
 
-    lineage_rows = lineage_rollup(
-        st.select("bucket", "url", "text", "n_chars")
-    ).collect()
-
+    # the ledger is appended last: a crash before it leaves this run's
+    # buckets pending, and the resume rewrites their directories
     wall_ms = int((time.time() - t0) * 1000)
-    lineage = spark.createDataFrame(lineage_rows).withColumn(
-        "wall_ms", F.lit(wall_ms)
+    (
+        lineage_rollup(st.select("bucket", "url", "text", "n_chars"))
+        .withColumn("wall_ms", F.lit(wall_ms))
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(lineage_path)
     )
-    lineage.write.mode("append").parquet(lineage_path)
     return {"processed_buckets": todo, "wall_ms": wall_ms}
 
 
@@ -203,14 +184,7 @@ def snapshot_extracted(spark: SparkSession, out_dir: str, snap_path: str,
     already-snapshotted buckets' data."""
     from no_ocr_spark.sources import snaptable
 
-    done: set[int] = set()
-    lineage_path = os.path.join(out_dir, "lineage")
-    if os.path.exists(lineage_path):
-        done = {
-            r.bucket for r in spark.read.parquet(lineage_path)
-            .filter(F.col("status") == "done")
-            .select("bucket").distinct().collect()
-        }
+    done = _done_buckets(spark, os.path.join(out_dir, "lineage"))
     have = snapshot_buckets(spark, snap_path)
     missing = sorted((set(processed_buckets) | done) - have)
     if not missing:

@@ -2,6 +2,8 @@
 convergence. (Oracle parity for near_dup_clusters runs in
 test_oracle_parity.py against a DuckDB recursive CTE.)"""
 
+import pytest
+
 from no_ocr_spark.operators.graph import connected_components
 
 
@@ -28,3 +30,11 @@ def test_star_and_direction_independence(spark):
     a = _cc(spark, [(5, 1), (5, 2), (5, 3)])
     b = _cc(spark, [(1, 5), (2, 5), (3, 5)])
     assert a == b == {1: 1, 2: 1, 3: 1, 5: 1}
+
+
+def test_unconverged_labels_raise(spark):
+    # the 20-vertex path needs more than 3 rounds: labels after 3 are wrong
+    df = spark.createDataFrame([(i, i + 1) for i in range(1, 20)],
+                               "src bigint, dst bigint")
+    with pytest.raises(RuntimeError, match="max_iters=3"):
+        connected_components(df, max_iters=3)

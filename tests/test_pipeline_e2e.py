@@ -4,9 +4,13 @@
   vs the pure-Python extractor run directly (the golden oracle),
 * identity holds under different partitionings (the determinism contract),
 * spans table shape + ordering,
-* lineage rows present; checkpoint-resume processes only missing buckets.
+* lineage rows present; checkpoint-resume processes only missing buckets,
+  also when a bucket spans several files,
+* the extraction job's fixed costs: jobs, ledger files, write tasks.
 """
 
+import os
+import pathlib
 import shutil
 
 import pytest
@@ -62,6 +66,22 @@ def test_spans_table_shape_and_order(spark, pages):
     assert html_row.spans[0].x0 is None
 
 
+def _ledger(spark, out):
+    return sorted(tuple(r) for r in spark.read.parquet(out + "/lineage")
+                  .drop("wall_ms").collect())
+
+
+def _drop_from_ledger(spark, out, lost):
+    lin = spark.read.parquet(out + "/lineage").filter(~F.col("bucket").isin(lost))
+    lin.write.mode("overwrite").parquet(out + "/lineage_tmp")
+    shutil.rmtree(out + "/lineage")
+    shutil.move(out + "/lineage_tmp", out + "/lineage")
+
+
+def _data_files(d):
+    return {f.name for f in d.iterdir() if f.name.endswith(".parquet")}
+
+
 def test_lineage_and_resume(spark, pages, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("job_out"))
     n_buckets = 8
@@ -70,10 +90,7 @@ def test_lineage_and_resume(spark, pages, tmp_path_factory):
     r1 = run_with_lineage(spark, part, out, n_buckets=n_buckets)
     assert r1["processed_buckets"] == list(range(n_buckets))
     # corrupt the ledger: mark buckets >=4 as never-done by rewriting lineage
-    lin = spark.read.parquet(out + "/lineage").filter(F.col("bucket") < 4)
-    lin.write.mode("overwrite").parquet(out + "/lineage_tmp")
-    shutil.rmtree(out + "/lineage")
-    shutil.move(out + "/lineage_tmp", out + "/lineage")
+    _drop_from_ledger(spark, out, [4, 5, 6, 7])
     assert pending_buckets(spark, n_buckets, out + "/lineage") == [4, 5, 6, 7]
     # resume with the FULL input: only buckets 4-7 get processed
     r2 = run_with_lineage(spark, pages, out, n_buckets=n_buckets)
@@ -96,3 +113,80 @@ def test_lineage_checksum_order_independent(spark, pages):
     c1 = {r.bucket: r.checksum for r in lineage_rollup(ext.repartition(2)).collect()}
     c2 = {r.bucket: r.checksum for r in lineage_rollup(ext.repartition(13)).collect()}
     assert c1 == c2 and len(c1) == 4
+
+
+def test_split_buckets_survive_resume(spark, pages, tmp_path_factory):
+    """The extracted write sizes its files by data: below the advisory
+    partition size a bucket is split over several files. A resume must
+    replace such a bucket's whole directory, and the ledger must not
+    depend on how the buckets were split."""
+    n_buckets = 8
+    ref = str(tmp_path_factory.mktemp("ref_out"))
+    run_with_lineage(spark, pages, ref, n_buckets=n_buckets)
+
+    out = str(tmp_path_factory.mktemp("split_out"))
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        run_with_lineage(spark, pages, out, n_buckets=n_buckets)
+    finally:
+        spark.conf.set(key, prev)
+    dirs = {int(d.name.split("=")[1]): d
+            for d in pathlib.Path(out, "extracted").glob("bucket=*")}
+    before = {b: _data_files(d) for b, d in dirs.items()}
+    assert max(len(f) for f in before.values()) > 1, "no bucket was split"
+    assert _ledger(spark, out) == _ledger(spark, ref)
+
+    lost = [1, 3, 4, 6]
+    _drop_from_ledger(spark, out, lost)
+    r = run_with_lineage(spark, pages, out, n_buckets=n_buckets)
+    assert r["processed_buckets"] == lost
+    assert _ledger(spark, out) == _ledger(spark, ref)
+    for b in lost:
+        now = _data_files(dirs[b])
+        assert now and not now & before[b], f"bucket {b} kept stale files"
+    for b in set(dirs) - set(lost):
+        assert _data_files(dirs[b]) == before[b]
+
+
+def test_extraction_job_and_file_budget(spark, pages, tmp_path_factory):
+    """Fixed costs of one extraction job: the pending set of a fresh job
+    runs no Spark job, every run appends one ledger file, and the
+    extracted write runs no more post-shuffle tasks than there are cores
+    on a tiny corpus."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    tracker = spark.sparkContext.statusTracker()
+    out = str(tmp_path_factory.mktemp("budget_out"))
+    n_buckets = 8
+
+    before = dag.numTotalJobs()
+    assert pending_buckets(spark, n_buckets, out + "/lineage") == list(range(n_buckets))
+    assert dag.numTotalJobs() == before, "pending_buckets ran a Spark job"
+
+    bucketed = with_bucket(pages, n_buckets)
+    runs = []
+    for upto in (3, 6, n_buckets):  # one fresh run, then two resumes
+        first = dag.numTotalJobs()
+        r = run_with_lineage(
+            spark, bucketed.filter(F.col("bucket") < upto).drop("bucket"),
+            out, n_buckets=n_buckets)
+        runs.append((r, range(first, dag.numTotalJobs())))
+    assert [r["processed_buckets"] for r, _ in runs] == [
+        list(range(n_buckets)), [3, 4, 5, 6, 7], [6, 7]]
+    ledger_files = [f for f in os.listdir(out + "/lineage")
+                    if f.endswith(".parquet")]
+    assert len(ledger_files) == len(runs)
+
+    # the extracted write is the run's first stage that reads a shuffle
+    # and writes output; the status store is fed asynchronously, and once
+    # it is full it evicts skipped stages first (they never qualify)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    for _, jobs in runs:
+        stages = sorted(s for j in jobs for s in tracker.getJobInfo(j).stageIds
+                        if tracker.getStageInfo(s))
+        write = next(sd for sd in map(store.lastStageAttempt, stages)
+                     if sd.shuffleReadBytes() > 0 and sd.outputBytes() > 0)
+        assert write.numTasks() <= sc.defaultParallelism
