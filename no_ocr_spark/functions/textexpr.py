@@ -8,7 +8,9 @@ engines were empirically verified to agree on the primitives used here
 
 These power the training-data operator family: MinHash/SimHash/Jaccard
 dedup, fingerprinting, token counting, language-ID — all expressed over
-built-ins so they hold up at 100 TB (no UDF wall, full codegen).
+built-ins so they hold up at 100 TB (no UDF wall, full codegen). The
+vectors section at the end does the same for retrieval: dot products,
+cosine, MaxSim, quantization and nearest-centroid assignment.
 """
 
 from __future__ import annotations
@@ -375,3 +377,201 @@ def surt_key(dialect: str, url: str) -> str:
     labels = f"string_split(regexp_replace({host}, '^www\\.', ''), '.')"
     return (f"array_to_string(list_reverse({labels}), ',') || {port} || ')' "
             f"|| {path}")
+
+
+# ------------------------------------------------------------------ vectors
+#
+# The vector family: dot products, cosine, MaxSim, quantization, the
+# nearest-centroid argmax and the SQ8 elements, for every retrieval,
+# PQ and SQ8 operator. Spark scores and DuckDB oracle scores are the same
+# doubles bit for bit, for three reasons:
+#
+#   * every dot product is a LEFT fold from 0 over the element products,
+#     ((0 + x1*y1) + x2*y2) + ..., in both engines (Spark aggregate over
+#     zip_with, DuckDB list_reduce over list_prepend(0)); 0.0 + t == t in
+#     IEEE double, and integer folds are exact in any order;
+#   * a collected double re-enters a plan as CAST('<repr>' AS DOUBLE):
+#     repr is the shortest round-trip decimal and string-to-double
+#     parsing is correctly rounded, so the literal is the collected
+#     double (a bare decimal literal would parse as DECIMAL);
+#   * a nearest-centroid pick is one greatest() over
+#     struct(csim, -cid) (argmax_cid), which is exactly
+#     row_number() OVER (ORDER BY csim DESC, cid ASC) = 1: ties on csim
+#     go to max(-cid) = min cid, a NULL csim sorts below every value
+#     (the window's DESC NULLS LAST) and NaN above (as in Spark's sort).
+#
+# A zero-norm vector has no cosine. Spark divides with try_divide so the
+# cosine is NULL, as it is in DuckDB, instead of raising DIVIDE_BY_ZERO
+# under ANSI mode.
+
+DIM = 64             # embedding width
+SUBVECS = 4          # multi-vector view: 4 sub-vectors of 16 dims
+SUBDIM = DIM // SUBVECS
+SQ8_LEVELS = 255     # SQ8 codes are 0..SQ8_LEVELS
+
+
+def dot(dialect: str, a: str, b: str, typ: str = "double") -> str:
+    """<a, b> as a left fold from 0: `double` casts each element,
+    `bigint` multiplies exact int64 elements as they are."""
+    _check(dialect)
+    if typ not in ("double", "bigint"):
+        raise ValueError(f"unknown dot type {typ!r}")
+    exact = typ == "bigint"
+    if dialect == "spark":
+        xy = "x * y" if exact else "cast(x as double) * cast(y as double)"
+        return (f"aggregate(zip_with({a}, {b}, (x, y) -> {xy}), "
+                f"cast(0 as {typ}), (acc, x) -> acc + x)")
+    ai, bi = (f"{a}[i]", f"{b}[i]") if exact else (f"{a}[i]::DOUBLE",
+                                                    f"{b}[i]::DOUBLE")
+    return (f"list_reduce(list_prepend(0::{typ.upper()}, "
+            f"list_transform(generate_series(1, len({a})), "
+            f"i -> {ai} * {bi})), (acc, x) -> acc + x)")
+
+
+def dot_unrolled(a: str, b: str | list[int], n: int = 0) -> str:
+    """Spark-only exact int64 <a, b> as an UNROLLED add-chain, `b` an
+    array column of `n` elements or a list of int literals. A short
+    chain stays in whole-stage codegen where the fold's lambdas are
+    interpreted per element; integer addition is associative, so the
+    value equals the fold's."""
+    rhs = ([f"element_at({b}, {i + 1})" for i in range(n)]
+           if isinstance(b, str) else [f"{v}L" for v in b])
+    return " + ".join(f"element_at({a}, {i + 1}) * {r}"
+                      for i, r in enumerate(rhs))
+
+
+def cosine_from(dialect: str, ab: str, aa: str, bb: str) -> str:
+    """Cosine from <a, b>, <a, a> and <b, b>; NULL on a zero norm."""
+    _check(dialect)
+    den = f"(sqrt({aa}) * sqrt({bb}))"
+    if dialect == "spark":
+        return f"try_divide(({ab}), {den})"
+    return f"({ab}) / {den}"
+
+
+def cosine(dialect: str, a: str, b: str) -> str:
+    return cosine_from(dialect, dot(dialect, a, b), dot(dialect, a, a),
+                       dot(dialect, b, b))
+
+
+def array_lit(vals: list) -> str:
+    """Spark array literal for collected values: ints as exact bigint
+    literals, floats as CAST('<repr>' AS DOUBLE)."""
+    return "array({})".format(", ".join(
+        f"{v}L" if isinstance(v, int) else f"CAST('{v!r}' AS DOUBLE)"
+        for v in vals))
+
+
+def csim_lit(vec: str, vals: list) -> str:
+    """Spark round(cosine(vec, literal vector), 6), the ranking key of
+    every nearest-centroid pick."""
+    return f"round({cosine('spark', vec, array_lit(vals))}, 6)"
+
+
+def argmax_cid(csims: list[tuple[int, str]]) -> str:
+    """Spark cid of the largest csim expression, ties to the smallest
+    cid, NULL csims last: -greatest(struct(csim, -cid), ...).ncid."""
+    structs = ", ".join(f"named_struct('csim', {csim}, 'ncid', {-cid}L)"
+                        for cid, csim in csims)
+    return f"-greatest({structs}).ncid"
+
+
+def quantize(dialect: str, e: str) -> str:
+    """Deterministic integer quantization (scale 1e7 ~ float32's
+    precision): k-means sums, SQ8 ranges and PQ codebooks then run in
+    EXACT int64, order-independent and identical across engines — the
+    same reason the reference's vector-index twin runs INT8 scalar
+    quantization (`no-ocr-api/tests/lance_vs_qdrant.py:247-257`).
+    round() is away-from-zero on ties in BOTH engines (Spark HALF_UP ==
+    C round)."""
+    _check(dialect)
+    if dialect == "spark":
+        return (f"transform({e}, v -> "
+                f"cast(round(cast(v as double) * 10000000, 0) as bigint))")
+    return f"list_transform({e}, v -> round(v::DOUBLE * 10000000)::BIGINT)"
+
+
+def multivec(dialect: str, e: str) -> str:
+    """DIM-wide vector -> array of SUBVECS sub-vectors (the reference's
+    multi-vector page embedding, search.py:83-84, arity by convention)."""
+    _check(dialect)
+    if dialect == "spark":
+        return (f"transform(sequence(0, {SUBVECS - 1}), "
+                f"i -> slice({e}, i * {SUBDIM} + 1, {SUBDIM}))")
+    return (f"list_transform(generate_series(0, {SUBVECS - 1}), "
+            f"i -> {e}[i * {SUBDIM} + 1 : i * {SUBDIM} + {SUBDIM}])")
+
+
+def maxsim(dialect: str, q_mv: str, d_mv: str) -> str:
+    """MaxSim(q, d) = sum_i max_j dot(q_i, d_j) over nested multi-vectors
+    (array<array<double>>), the reference's stored vector shape —
+    `list<list<float32,128>>` per page (`no-ocr-api/np_ocr/search.py:
+    78-87`). Flat vectors go through multivec first."""
+    _check(dialect)
+    if dialect == "spark":
+        inner = f"array_max(transform({d_mv}, dv -> {dot('spark', 'qv', 'dv')}))"
+        return (f"aggregate({q_mv}, cast(0 as double), "
+                f"(acc, qv) -> acc + {inner})")
+    inner = f"list_max(list_transform({d_mv}, dv -> {dot('duckdb', 'qv', 'dv')}))"
+    return (f"list_reduce(list_prepend(0::DOUBLE, "
+            f"list_transform({q_mv}, qv -> {inner})), (acc, x) -> acc + x)")
+
+
+def _sq8_code(dialect: str, qv: str, minqs: str, spans: str) -> str:
+    """SQ8 code of element i: round_half_up((q - min) * 255 / span) in
+    exact int64, as ((q - min) * 510 + span) div (2 * span); integer
+    division of non-negative values truncates the same in Spark (`div`)
+    and DuckDB (`//`). A constant dimension (span 0) codes to 0."""
+    if dialect == "spark":
+        return (f"case when element_at({spans}, i) = 0 then cast(0 as bigint) "
+                f"else ((element_at({qv}, i) - element_at({minqs}, i)) "
+                f"* {2 * SQ8_LEVELS} + element_at({spans}, i)) "
+                f"div (2 * element_at({spans}, i)) end")
+    return (f"case when {spans}[i] = 0 then 0::BIGINT "
+            f"else (({qv}[i] - {minqs}[i]) * {2 * SQ8_LEVELS} + {spans}[i]) "
+            f"// (2 * {spans}[i]) end")
+
+
+def _sq8_dequant(dialect: str, code: str, minqs: str, spans: str) -> str:
+    """Element i back on the float scale: (min + code * span / 255) / 1e7."""
+    if dialect == "spark":
+        return (f"(cast(element_at({minqs}, i) as double) "
+                f"+ cast({code} as double) "
+                f"* cast(element_at({spans}, i) as double) / {SQ8_LEVELS}.0) / 1e7")
+    return (f"({minqs}[i]::DOUBLE + {code}::DOUBLE * {spans}[i]::DOUBLE "
+            f"/ {SQ8_LEVELS}.0) / 1e7")
+
+
+def _over_dims(dialect: str, body: str) -> str:
+    if dialect == "spark":
+        return f"transform(sequence(1, {DIM}), i -> {body})"
+    return f"list_transform(generate_series(1, {DIM}), i -> {body})"
+
+
+def sq8_codes_expr(dialect: str, qv: str, minqs: str, spans: str) -> str:
+    """array<int64 codes in 0..255>: exact integer round-half-up."""
+    _check(dialect)
+    return _over_dims(dialect, _sq8_code(dialect, qv, minqs, spans))
+
+
+def sq8_dequant_expr(dialect: str, codes: str, minqs: str,
+                     spans: str) -> str:
+    """codes -> double array back on the original float scale."""
+    _check(dialect)
+    code = f"element_at({codes}, i)" if dialect == "spark" else f"{codes}[i]"
+    return _over_dims(dialect, _sq8_dequant(dialect, code, minqs, spans))
+
+
+def sq8_dequant_direct_expr(qv: str, minqs: str, spans: str) -> str:
+    """Spark fused encode+dequant: the code of each element is computed
+    inline, ONE transform of DIM elements per row, with the same
+    arithmetic per element as encode-then-dequant.
+
+    Composing `sq8_dequant_expr` over a `codes` column lets
+    CollapseProject inline the DIM-element codes transform INSIDE each
+    element of the dequant transform: element_at(transform(...), i)
+    re-evaluates the whole inner array per dimension — O(DIM^2)
+    interpreted higher-order-function work per row (measured 5x on the
+    IVF x SQ8 checkpoint leg)."""
+    code = f"({_sq8_code('spark', qv, minqs, spans)})"
+    return _over_dims("spark", _sq8_dequant("spark", code, minqs, spans))

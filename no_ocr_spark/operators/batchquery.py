@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from no_ocr_spark.operators.retrieval import _cosine
+from no_ocr_spark.functions.textexpr import cosine
 from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
@@ -39,7 +39,7 @@ def q_batch_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(~F.col("vec_id").isin(QUERY_IDS)), spark)
     scored = corpus.crossJoin(F.broadcast(queries)).select(
         "query_id", "vec_id",
-        F.round(F.expr(_cosine("spark", "embedding", "qv")), 6)
+        F.round(F.expr(cosine("spark", "embedding", "qv")), 6)
          .alias("score"),
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -60,7 +60,7 @@ def _oracle() -> str:
         ),
         scored AS (
           SELECT q.query_id, e.vec_id,
-                 round({_cosine('duckdb', 'e.embedding', 'q.qv')}, 6)
+                 round({cosine('duckdb', 'e.embedding', 'q.qv')}, 6)
                    AS score
           FROM embeddings e CROSS JOIN q
           WHERE e.vec_id NOT IN ({ids})

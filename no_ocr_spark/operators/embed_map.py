@@ -37,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from no_ocr_spark.operators.retrieval import _cosine
+from no_ocr_spark.functions.textexpr import cosine
 from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
@@ -159,7 +159,7 @@ def q_search_flow_embedded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(q))
         .select(
             "doc_id",
-            F.round(F.expr(_cosine("spark", "embedding", "qv")), 6).alias("score"),
+            F.round(F.expr(cosine("spark", "embedding", "qv")), 6).alias("score"),
         )
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(3)
@@ -210,7 +210,7 @@ ORACLES = {
         q AS (SELECT embedding AS qv FROM emb WHERE doc_id = 0),
         hits AS (
             SELECT e.doc_id AS hit_id,
-                   round({_cosine("duckdb", "e.embedding", "q.qv")}, 6) AS score
+                   round({cosine("duckdb", "e.embedding", "q.qv")}, 6) AS score
             FROM emb e, q WHERE e.doc_id <> 0
             ORDER BY score DESC, e.doc_id ASC LIMIT 3)
         SELECT d.doc_id, d.lang, d.n_chars, h.score

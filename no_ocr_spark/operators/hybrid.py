@@ -26,8 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from no_ocr_spark.functions.textexpr import cosine
 from no_ocr_spark.operators import bm25
-from no_ocr_spark.operators.retrieval import _cosine
 from no_ocr_spark.sources.tables import load_table
 
 RRF_K = 60
@@ -62,7 +62,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            F.round(F.expr(_cosine("spark", "embedding", "qv")), 6)
+            F.round(F.expr(cosine("spark", "embedding", "qv")), 6)
              .alias("score"),
         )
     )
@@ -95,7 +95,7 @@ _ORACLE = f"""
     q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
     vec_scores AS (
       SELECT e.vec_id AS doc_id,
-             round({_cosine('duckdb', 'e.embedding', 'q.qv')}, 6) AS score
+             round({cosine('duckdb', 'e.embedding', 'q.qv')}, 6) AS score
       FROM embeddings e, q WHERE e.vec_id <> 0
     ),
     vec AS (

@@ -15,7 +15,7 @@ Spark-first, exact-oracle design (same discipline as `ann_ivf_kmeans`):
 
   * All arithmetic that crosses an aggregation boundary is EXACT INT64
     on the repo's deterministic 1e7-scaled quantization
-    (`retrieval._quant`), so sums are order-independent and the oracle
+    (`textexpr.quantize`), so sums are order-independent and the oracle
     is bit-equal: subspace assignment ranks round(cosine, 6) (cosine is
     scale-invariant, so int inputs are fine); centroid refit uses
     integer mean with half-away-from-zero rounding computed ONLY on
@@ -52,7 +52,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from no_ocr_spark.operators.retrieval import DIM, _cosine, _quant
+from no_ocr_spark.functions.textexpr import (
+    DIM,
+    argmax_cid,
+    array_lit,
+    cosine,
+    cosine_from,
+    dot,
+    dot_unrolled,
+    quantize,
+)
 from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
@@ -60,17 +69,6 @@ M = 8                  # subspaces
 SUB = DIM // M         # dims per subspace
 K = 16                 # centroids per subspace (production: 256)
 TOPK = 10
-
-
-def _idot(dialect: str, a: str, b: str) -> str:
-    """Exact int64 dot product (inputs are 1e7-quantized ints; SUB-dim
-    partials stay < 1e15, far under int64)."""
-    if dialect == "spark":
-        return (f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-                f"cast(0 as bigint), (acc, x) -> acc + x)")
-    return (f"list_reduce(list_prepend(0::BIGINT, "
-            f"list_transform(generate_series(1, len({a})), "
-            f"i -> {a}[i] * {b}[i])), (acc, x) -> acc + x)")
 
 
 def _imean(s: str, n: str) -> str:
@@ -81,52 +79,20 @@ def _imean(s: str, n: str) -> str:
             f"ELSE -((-2 * {s} + {n}) {{div}} (2 * {n})) END")
 
 
-def _csim(dialect: str, a: str, b: str) -> str:
-    """Tie-safe assignment key: null cosine (zero-norm slice) sinks."""
-    return f"coalesce(round({_cosine(dialect, a, b)}, 6), -2.0)"
-
-
-def _arr_lit(vals: list[int]) -> str:
-    return "array({})".format(", ".join(f"{v}L" for v in vals))
-
-
-def _dot_unrolled(sv: str, cv: list[int]) -> str:
-    """<sv, literal cv> as an UNROLLED int64 add-chain. SUB is 8, so the
-    chain is tiny and stays whole-stage-codegen — the HOF form
-    (aggregate(zip_with(...))) is interpreted per element and was the
-    bulk of the assignment pass (r6; 128 dots/row x 2 passes). Integer
-    addition is associative, so the value is bit-identical to the fold."""
-    return " + ".join(
-        f"element_at({sv}, {i + 1}) * {v}L" for i, v in enumerate(cv)
-    )
-
-
-def _dot_unrolled_col(sv: str) -> str:
-    """<sv, sv> as the same unrolled int64 chain (the slice norm)."""
-    return " + ".join(
-        f"element_at({sv}, {i + 1}) * element_at({sv}, {i + 1})"
-        for i in range(SUB)
-    )
-
-
 def _code_expr(sv_col: str, n_col: str,
                cents_m: list[tuple[int, list[int]]]) -> str:
-    """Assigned centroid id for one subspace slice — EXACTLY the old
-    `row_number() OVER (ORDER BY csim DESC, cid ASC) = 1` pick, as one
-    map-side greatest() over struct(csim, -cid): csim ties resolve to
-    max(-cid) = min cid. csim is the verbatim round(cosine, 6) double —
-    dot and centroid norm as exact int64 (unrolled chain / Python int
-    literal, both bit-equal to the old HOF folds), the slice norm staged
-    ONCE per row in `n_col` (the old form re-evaluated it per centroid,
-    r6 guide §1.2)."""
-    structs = ", ".join(
-        f"named_struct('csim', coalesce(round(({_dot_unrolled(sv_col, cv)})"
-        f" / (sqrt(cast({n_col} as double))"
-        f" * sqrt(cast({_idot_py(cv, cv)}L as double))), 6), -2.0), "
-        f"'ncid', {-cid}L)"
-        for cid, cv in cents_m
-    )
-    return f"-greatest({structs}).ncid"
+    """Assigned centroid id for one subspace slice: argmax_cid over
+    csim = coalesce(round(cosine, 6), -2.0), the dot an unrolled int64
+    chain (SUB is 8, so it stays whole-stage codegen where the fold's
+    lambdas are interpreted per element), the slice norm staged ONCE per
+    row in `n_col` and the centroid norm a Python int literal."""
+    def csim(cv: list[int]) -> str:
+        cos = cosine_from("spark", dot_unrolled(sv_col, cv),
+                          f"cast({n_col} as double)",
+                          f"cast({_idot_py(cv, cv)}L as double)")
+        return f"coalesce(round({cos}, 6), -2.0)"
+
+    return argmax_cid([(cid, csim(cv)) for cid, cv in cents_m])
 
 
 def _imean_py(s: int, n: int) -> int:
@@ -145,24 +111,19 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ codebook train (1 Lloyd round) -> M-byte codes -> ADC top-10
     for query = embedding(vec_id=0). Returns (vec_id, pq_code, score).
 
-    r6 plan shape (guide §1.2/§2.4, same rewrite as q_ann_ivf_kmeans):
-    the codebook is M*K rows of exact int64 — collect it per training
-    step and inline it as literals, so every per-(vector, subspace)
-    assignment is map-side codegen over a localCheckpoint'd slim frame
-    instead of an M-way explode + broadcast join + per-(vec, m)
-    row_number window. The old lazy form also recomputed the whole
-    train subtree twice (refit fed both the encode leg and the ADC
-    distance table). The distance table and query norms are pure int64
-    arithmetic on the collected codebook, replayed in Python where
-    arbitrary-precision ints equal in-range int64 ops exactly. Output
-    is bit-identical (verified at sf0.01/0.1/1)."""
+    The codebook is M*K rows of exact int64: it is collected per training
+    step and inlined as literals, so every per-(vector, subspace)
+    assignment is map-side codegen over a localCheckpoint'd slim frame.
+    The distance table and query norms are int64 arithmetic on the
+    collected codebook, replayed in Python, where arbitrary-precision
+    ints equal in-range int64 ops exactly."""
     emb = (
         fan_out_for_cpu(
             load_table(spark, sf_dir, "embeddings")
             .select("vec_id", "embedding"),
             spark,
         )
-        .select("vec_id", F.expr(_quant("spark", "embedding")).alias("qv"))
+        .select("vec_id", F.expr(quantize("spark", "embedding")).alias("qv"))
         .localCheckpoint()
     )
     base = {
@@ -182,7 +143,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for m in range(1, M + 1)
     ]
     norms = [
-        F.expr(_dot_unrolled_col(f"_s{m}")).alias(f"_n{m}")
+        F.expr(dot_unrolled(f"_s{m}", f"_s{m}", SUB)).alias(f"_n{m}")
         for m in range(1, M + 1)
     ]
     enc0 = emb.select(
@@ -234,7 +195,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         surviving cids."""
         mx = max(table) if table else 1
         vals = [table.get(cid, 0) for cid in range(1, mx + 1)]
-        return _arr_lit(vals)
+        return array_lit(vals)
 
     enc1 = emb.filter(F.col("vec_id") != 0).select(
         "vec_id", *slices
@@ -263,9 +224,10 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id", "pq_code",
             F.expr(
-                "CASE WHEN sc2 = 0 THEN -2.0 ELSE "
-                f"round(cast(sp as double) / (sqrt(cast({qn2}L as double)) "
-                "* sqrt(cast(sc2 as double))), 6) END"
+                "CASE WHEN sc2 = 0 THEN -2.0 ELSE round("
+                + cosine_from("spark", "cast(sp as double)",
+                              f"cast({qn2}L as double)", "cast(sc2 as double)")
+                + ", 6) END"
             ).alias("score"),
         )
     )
@@ -278,12 +240,15 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pq_oracle() -> str:
     """DuckDB replay of q_ann_pq_topk: identical int arithmetic, so the
     codes AND scores are bit-equal (not just rank-equal)."""
-    q = _quant("duckdb", "embedding")
-    asn0 = _csim("duckdb", "s.sv", "c.cv")
+    q = quantize("duckdb", "embedding")
+    # null cosine (zero-norm slice) sinks
+    asn0 = f"coalesce(round({cosine('duckdb', 's.sv', 'c.cv')}, 6), -2.0)"
     imean = _imean("s", "n").format(div="//")
-    idot_qc = _idot("duckdb", "q.qsv", "c.cv")
-    idot_cc = _idot("duckdb", "c.cv", "c.cv")
-    idot_qq = _idot("duckdb", "qv", "qv")
+    # exact int64 dots: 1e7-scaled components keep even the DIM-wide
+    # query norm far below 2^63
+    idot_qc = dot("duckdb", "q.qsv", "c.cv", "bigint")
+    idot_cc = dot("duckdb", "c.cv", "c.cv", "bigint")
+    idot_qq = dot("duckdb", "qv", "qv", "bigint")
     return f"""
         WITH qe AS (SELECT vec_id, {q} AS qv FROM embeddings),
         sub AS (

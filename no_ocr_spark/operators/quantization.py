@@ -9,7 +9,7 @@ Spark-first, exact-oracle design:
 
   * TRAIN (one scan + a dim-sized agg): per-DIMENSION min/max over the
     corpus — computed on the repo's deterministic 1e7-scaled int64
-    embedding quantization (`retrieval._quant`), so the range stats are
+    embedding quantization (`textexpr.quantize`), so the range stats are
     EXACT integers, identical in both engines.
   * ENCODE (map-only): code_d = round_half_up((q_d - min_d) * 255 /
     span_d), computed entirely in int64 as
@@ -38,30 +38,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from no_ocr_spark.operators.retrieval import _cosine, _quant
+from no_ocr_spark.functions.textexpr import (
+    DIM,
+    cosine,
+    quantize,
+    sq8_codes_expr,
+    sq8_dequant_direct_expr,
+    sq8_dequant_expr,
+)
+from no_ocr_spark.operators.retrieval import ivf_probe_topk
 from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
-
-DIM = 64
-LEVELS = 255
-
-
-def sq8_codes_expr(dialect: str, qv: str, minqs: str, spans: str) -> str:
-    """array<int64 codes in 0..255>: exact integer round-half-up."""
-    if dialect == "spark":
-        return (
-            f"transform(sequence(1, {DIM}), i -> "
-            f"case when element_at({spans}, i) = 0 then cast(0 as bigint) "
-            f"else ((element_at({qv}, i) - element_at({minqs}, i)) "
-            f"* {2 * LEVELS} + element_at({spans}, i)) "
-            f"div (2 * element_at({spans}, i)) end)"
-        )
-    return (
-        f"list_transform(generate_series(1, {DIM}), i -> "
-        f"case when {spans}[i] = 0 then 0::BIGINT "
-        f"else (({qv}[i] - {minqs}[i]) * {2 * LEVELS} + {spans}[i]) "
-        f"// (2 * {spans}[i]) end)"
-    )
 
 
 def sq8_hex_expr(dialect: str, codes: str) -> str:
@@ -73,53 +60,11 @@ def sq8_hex_expr(dialect: str, codes: str) -> str:
             f"c -> lpad(hex(c), 2, '0')), '')")
 
 
-def sq8_dequant_expr(dialect: str, codes: str, minqs: str,
-                     spans: str) -> str:
-    """codes -> double array back on the original float scale."""
-    if dialect == "spark":
-        return (
-            f"transform(sequence(1, {DIM}), i -> "
-            f"(cast(element_at({minqs}, i) as double) "
-            f"+ cast(element_at({codes}, i) as double) "
-            f"* cast(element_at({spans}, i) as double) / {LEVELS}.0) / 1e7)"
-        )
-    return (
-        f"list_transform(generate_series(1, {DIM}), i -> "
-        f"({minqs}[i]::DOUBLE + {codes}[i]::DOUBLE * {spans}[i]::DOUBLE "
-        f"/ {LEVELS}.0) / 1e7)"
-    )
-
-
-def sq8_dequant_direct_expr(qv: str, minqs: str, spans: str) -> str:
-    """Fused encode+dequant: dv_i = (min_i + code_i * span_i / 255) / 1e7
-    with code_i computed inline — ONE transform of DIM elements per row.
-
-    Composing `sq8_dequant_expr` over a `codes` column lets
-    CollapseProject inline the 64-element codes transform INSIDE each
-    element of the dequant transform: element_at(transform(...), i)
-    re-evaluates the whole inner array per dimension — O(DIM^2)
-    INTERPRETED higher-order-function work per row (HOF lambdas never
-    reach codegen). Measured 5x on the IVFxSQ8 checkpoint leg (r6).
-    Arithmetic per element is bit-identical to encode-then-dequant."""
-    code = (
-        f"case when element_at({spans}, i) = 0 then cast(0 as bigint) "
-        f"else ((element_at({qv}, i) - element_at({minqs}, i)) "
-        f"* {2 * LEVELS} + element_at({spans}, i)) "
-        f"div (2 * element_at({spans}, i)) end"
-    )
-    return (
-        f"transform(sequence(1, {DIM}), i -> "
-        f"(cast(element_at({minqs}, i) as double) "
-        f"+ cast(({code}) as double) "
-        f"* cast(element_at({spans}, i) as double) / {LEVELS}.0) / 1e7)"
-    )
-
-
 def sq8_encode(emb: DataFrame) -> DataFrame:
     """(vec_id, label, embedding) -> + qv, codes, minqs, spans columns.
     Stats are a one-row broadcast (no driver collect)."""
     q = fan_out_for_cpu(emb, emb.sparkSession).select(
-        "vec_id", "label", F.expr(_quant("spark", "embedding")).alias("qv")
+        "vec_id", "label", F.expr(quantize("spark", "embedding")).alias("qv")
     )
     stats = (
         q.filter(F.col("vec_id") != 0)
@@ -149,7 +94,7 @@ def _query_vec(emb: DataFrame) -> DataFrame:
     crossJoin subtree just to project one row (review finding; shared by
     both ANN queries so the derivation cannot drift between them)."""
     return emb.filter(F.col("vec_id") == 0).select(
-        F.expr(f"transform({_quant('spark', 'embedding')}, "
+        F.expr(f"transform({quantize('spark', 'embedding')}, "
                f"v -> cast(v as double) / 1e7)").alias("qd")
     )
 
@@ -164,8 +109,8 @@ def q_ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # score over the FUSED dequant (sq8_dequant_direct_expr) — composing
     # the dequant transform over the codes column would inline the
     # 64-element codes transform inside every element reference
-    # (O(DIM^2) interpreted HOF work per row, x4: _cosine references its
-    # vector argument four times). codes itself is still materialized
+    # (O(DIM^2) interpreted HOF work per row, x3: cosine references its
+    # vector argument three times). codes itself is still materialized
     # exactly once, for the digest.
     dqd = sq8_dequant_direct_expr("qv", "minqs", "spans")
     return (
@@ -173,7 +118,7 @@ def q_ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(qd))
         .select(
             "vec_id", "label",
-            F.round(F.expr(_cosine("spark", f"({dqd})", "qd")), 6)
+            F.round(F.expr(cosine("spark", f"({dqd})", "qd")), 6)
             .alias("score"),
             F.md5(F.expr(sq8_hex_expr("spark", "codes")).cast("binary"))
             .alias("sq8_digest"),
@@ -197,23 +142,15 @@ def q_ann_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probing asymmetrically. Scale shape: assignment is
     broadcast(8 centroids) x scan over dim-byte codes (4x less scan IO
     than floats), probing rescores ~N_PROBE/N_LISTS of the corpus."""
-    # r6 (guide §1.2/§2.4, same rewrite as q_ann_ivf_kmeans): the SQ8
-    # range stats are 2*DIM exact ints and the coarse centroids are
-    # N_LISTS dequantized vectors — collect both, inline them as
-    # literals, and run list assignment as one map-side argmax over a
-    # localCheckpoint'd (vec_id, label, dv) frame. The old lazy form
-    # re-instantiated the stats subtree three times and shuffled every
-    # (vector x centroid) pair through a row_number window; the
-    # checkpoint also keeps the probe's cid filter from being pushed —
-    # re-expanded — into the single-task parquet scan. Bit-identical
-    # output (same argmax pick semantics, same fold arithmetic).
-    from no_ocr_spark.operators.retrieval import _csim_lit, _with_cid
-
+    # The SQ8 range stats are 2*DIM exact ints and the coarse centroids
+    # are N_LISTS dequantized vectors: both are collected and inlined as
+    # literals, and list assignment is one map-side argmax over a
+    # localCheckpoint'd (vec_id, label, dv) frame, so the stats subtree
+    # runs once.
     emb = load_table(spark, sf_dir, "embeddings")
-    raw = emb.select("vec_id", "label", "embedding")
     # fused encode+dequant (sq8_dequant_direct_expr): the codes column
     # is never materialized, so the O(DIM^2) CollapseProject inline of
-    # transform-inside-transform never forms (r6)
+    # transform-inside-transform never forms
     d = (
         sq8_encode(emb)
         .select("vec_id", "label",
@@ -225,34 +162,11 @@ def q_ann_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(r["vec_id"]), [float(v) for v in r["dv"]])
         for r in d.filter(F.col("vec_id").between(1, N_LISTS)).collect()
     )
-    qd_rows = _query_vec(raw).collect()
-    qd0 = [float(v) for v in qd_rows[0]["qd"]] if qd_rows else None
-    probe_structs = ", ".join(
-        f"named_struct('cid', {cid}L, 'csim', {_csim_lit('qd', cv, DIM)})"
-        for cid, cv in cents_rows
-    )
-    pcids = [
-        r["cid"]
-        for r in _query_vec(raw)
-        .select(F.explode(F.expr(f"array({probe_structs})")).alias("c"))
-        .select("c.cid", "c.csim")
-        .orderBy(F.desc("csim"), F.asc("cid"))
-        .limit(N_PROBE)
-        .collect()
-    ]
-    res = (
-        _with_cid(d.filter(F.col("vec_id") != 0), cents_rows, vec="dv")
-        .filter(F.col("cid").isin(pcids))
-        .select(
-            "vec_id", "label", "cid",
-            F.expr(_csim_lit("dv", qd0 if qd0 is not None else [0.0] * DIM,
-                             DIM)).alias("score"),
-        )
-    )
-    if qd0 is None:
-        # no vec_id=0: the old qd crossJoin made the result empty
-        res = res.filter(F.lit(False))
-    return res.orderBy(F.desc("score"), F.asc("vec_id")).limit(5)
+    return ivf_probe_topk(
+        d.filter(F.col("vec_id") != 0),
+        _query_vec(emb.select("vec_id", "label", "embedding")), cents_rows,
+        vec="dv", qvec="qd", cols=["vec_id", "label", "cid"],
+        n_probe=N_PROBE)
 
 
 QUERIES: dict = {}
@@ -261,7 +175,7 @@ EXTRA_QUERIES = {"ann_sq8_topk": q_ann_sq8_topk,
 
 
 def _oracle() -> str:
-    qv = "list_transform(embedding, v -> round(v::DOUBLE * 10000000)::BIGINT)"
+    qv = quantize("duckdb", "embedding")
     codes = sq8_codes_expr("duckdb", "qv", "minqs", "spans")
     dq = sq8_dequant_expr("duckdb", "codes", "minqs", "spans")
     return f"""
@@ -287,7 +201,7 @@ def _oracle() -> str:
           FROM q WHERE vec_id = 0
         )
         SELECT vec_id, label,
-               round({_cosine("duckdb", f"({dq})", "qd")}, 6) AS score,
+               round({cosine("duckdb", f"({dq})", "qd")}, 6) AS score,
                md5({sq8_hex_expr("duckdb", "codes")}) AS sq8_digest
         FROM enc, qry
         ORDER BY score DESC, vec_id ASC
@@ -296,12 +210,12 @@ def _oracle() -> str:
 
 
 def _ivf_oracle() -> str:
-    qv = "list_transform(embedding, v -> round(v::DOUBLE * 10000000)::BIGINT)"
+    qv = quantize("duckdb", "embedding")
     codes = sq8_codes_expr("duckdb", "qv", "minqs", "spans")
     dq = sq8_dequant_expr("duckdb", "codes", "minqs", "spans")
-    cos_assign = _cosine("duckdb", "d.dv", "c.cv")
-    cos_probe = _cosine("duckdb", "x.qd", "c.cv")
-    cos_final = _cosine("duckdb", "b.dv", "x.qd")
+    cos_assign = cosine("duckdb", "d.dv", "c.cv")
+    cos_probe = cosine("duckdb", "x.qd", "c.cv")
+    cos_final = cosine("duckdb", "b.dv", "x.qd")
     return f"""
         WITH q AS (
           SELECT vec_id, label, {qv} AS qv FROM embeddings

@@ -12,8 +12,8 @@ TakeOrderedAndProject (no global sort). The query vector rides a broadcast
 (1-row crossJoin). ANN variants (IVF pre-clustering, LSH bucketing) are the
 scale path: they cut the scored candidate set; semantics stay comparable.
 
-All scores are computed with an explicit LEFT-FOLD over double-cast elements
-so Spark and the DuckDB oracle produce bit-identical doubles; round(6) is a
+All scores come from the vector builders of `functions/textexpr.py`, whose
+Spark and DuckDB texts produce bit-identical doubles; round(6) is a
 belt-and-braces guard.
 """
 
@@ -22,56 +22,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from no_ocr_spark.functions.textexpr import (
+    DIM,
+    argmax_cid,
+    array_lit,
+    cosine,
+    cosine_from,
+    csim_lit,
+    dot,
+    maxsim,
+    multivec,
+    quantize,
+)
 from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
-
-DIM = 64
-SUBVECS = 4          # multi-vector view: 4 sub-vectors of 16 dims
-SUBDIM = DIM // SUBVECS
-
-
-# ---------------------------------------------------------------- dialects
-def _dot(dialect: str, a: str, b: str) -> str:
-    if dialect == "spark":
-        return (
-            f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), "
-            f"cast(0 as double), (acc, x) -> acc + x)"
-        )
-    return (
-        f"list_reduce(list_prepend(0::DOUBLE, "
-        f"list_transform(generate_series(1, len({a})), i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE)), "
-        f"(acc, x) -> acc + x)"
-    )
-
-
-def _cosine(dialect: str, a: str, b: str) -> str:
-    return (
-        f"({_dot(dialect, a, b)}) / "
-        f"(sqrt({_dot(dialect, a, a)}) * sqrt({_dot(dialect, b, b)}))"
-    )
-
-
-def _multivec(dialect: str, e: str) -> str:
-    """64-dim vector -> array of SUBVECS sub-vectors (the reference's
-    multi-vector page embedding, search.py:83-84, arity by convention)."""
-    if dialect == "spark":
-        return (f"transform(sequence(0, {SUBVECS - 1}), "
-                f"i -> slice({e}, i * {SUBDIM} + 1, {SUBDIM}))")
-    return (f"list_transform(generate_series(0, {SUBVECS - 1}), "
-            f"i -> {e}[i * {SUBDIM} + 1 : i * {SUBDIM} + {SUBDIM}])")
-
-
-def _maxsim(dialect: str, q: str, d: str) -> str:
-    """MaxSim(q, d) = sum_i max_j dot(q_i, d_j) over sub-vectors."""
-    qmv = _multivec(dialect, q)
-    dmv = _multivec(dialect, d)
-    if dialect == "spark":
-        inner = f"array_max(transform({dmv}, dv -> {_dot('spark', 'qv', 'dv')}))"
-        return (f"aggregate({qmv}, cast(0 as double), "
-                f"(acc, qv) -> acc + {inner})")
-    inner = f"list_max(list_transform({dmv}, dv -> {_dot('duckdb', 'qv', 'dv')}))"
-    return (f"list_reduce(list_prepend(0::DOUBLE, "
-            f"list_transform({qmv}, qv -> {inner})), (acc, x) -> acc + x)")
 
 
 # ----------------------------------------------------------------- queries
@@ -91,7 +55,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            F.round(F.expr(_cosine("spark", "embedding", "qv")), 6).alias("score"),
+            F.round(F.expr(cosine("spark", "embedding", "qv")), 6).alias("score"),
         )
     )
     return scored.orderBy(F.desc("score"), F.asc("vec_id")).limit(10)
@@ -106,7 +70,9 @@ def q_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            F.round(F.expr(_maxsim("spark", "qv", "embedding")), 6).alias("score"),
+            F.round(F.expr(maxsim("spark", multivec("spark", "qv"),
+                                  multivec("spark", "embedding"))), 6)
+            .alias("score"),
         )
     )
     return scored.orderBy(F.desc("score"), F.asc("vec_id")).limit(5)
@@ -132,53 +98,18 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: assignment = broadcast(centroids) x scan (the standard IVF build
     cost, embarrassingly parallel); probing scans ~2/8 of the data.
     """
-    # r6: collected-literal assignment + localCheckpoint, same plan shape
-    # as the rewritten q_ann_ivf_kmeans (see its comment): one map-side
-    # argmax instead of crossJoin x8 + per-vector row_number window, and
-    # a checkpoint barrier so the probe's cid filter cannot be pushed —
-    # re-expanded to the full assignment expression — into the
-    # single-task parquet scan. Output is bit-identical (argmax pick
-    # semantics proven at _with_cid).
-    emb = fan_out_for_cpu(
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "label", "embedding"),
-        spark,
-    ).localCheckpoint()
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", "embedding")
     cents_rows = sorted(
         (r["cid"], [float(v) for v in r["cv"]])
         for r in emb.filter(F.col("vec_id").between(1, 8))
         .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
         .collect()
     )
-    probe_structs = ", ".join(
-        f"named_struct('cid', {cid}L, "
-        f"'csim', {_csim_lit('embedding', cv, DIM)})"
-        for cid, cv in cents_rows
-    )
-    pcids = [
-        r["cid"]
-        for r in emb.filter(F.col("vec_id") == 0)
-        .select(F.explode(F.expr(f"array({probe_structs})")).alias("c"))
-        .select("c.cid", "c.csim")
-        .orderBy(F.desc("csim"), F.asc("cid"))
-        .limit(2)
-        .collect()
-    ]
-    qv0 = [
-        float(v) for v in
-        emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-    ]
-    return (
-        _with_cid(emb.filter(F.col("vec_id") != 0), cents_rows,
-                  vec="embedding")
-        .filter(F.col("cid").isin(pcids))
-        .select(
-            "vec_id", "label", "cid",
-            F.expr(_csim_lit("embedding", qv0, DIM)).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(5)
-    )
+    return ivf_probe_topk(
+        fan_out_for_cpu(emb.filter(F.col("vec_id") != 0), spark),
+        emb.filter(F.col("vec_id") == 0), cents_rows,
+        vec="embedding", qvec="embedding", cols=["vec_id", "label", "cid"])
 
 
 def lsh_bits_for(n_vectors: int, target_bucket_size: int = 16) -> int:
@@ -277,7 +208,7 @@ def q_lsh_bucket_pairs(spark: SparkSession, sf_dir: str,
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
             F.col("a.sig").alias("sig"),
-            F.round(F.expr(_cosine("spark", "a.embedding", "b.embedding")), 6).alias("score"),
+            F.round(F.expr(cosine("spark", "a.embedding", "b.embedding")), 6).alias("score"),
         )
     )
 
@@ -292,20 +223,6 @@ def q_near_dup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------- nested multi-vectors
-def _maxsim_over_nested(dialect: str, q_mv: str, d_mv: str) -> str:
-    """MaxSim over ALREADY-NESTED multi-vectors (array<array<double>>), the
-    reference's stored vector shape — `list<list<float32,128>>` per page
-    (`no-ocr-api/np_ocr/search.py:78-87`). No flat-array convention: the
-    sub-vector structure is the column's own type."""
-    if dialect == "spark":
-        inner = f"array_max(transform({d_mv}, dv -> {_dot('spark', 'qv', 'dv')}))"
-        return (f"aggregate({q_mv}, cast(0 as double), "
-                f"(acc, qv) -> acc + {inner})")
-    inner = f"list_max(list_transform({d_mv}, dv -> {_dot('duckdb', 'qv', 'dv')}))"
-    return (f"list_reduce(list_prepend(0::DOUBLE, "
-            f"list_transform({q_mv}, qv -> {inner})), (acc, x) -> acc + x)")
-
-
 def nested_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The embeddings table re-typed to the reference's nested schema:
     (vec_id, label, mv: array<array<double>>) — a REAL nested column, so
@@ -314,7 +231,7 @@ def nested_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return emb.select(
         "vec_id", "label",
-        F.expr(_multivec("spark", "transform(embedding, "
+        F.expr(multivec("spark", "transform(embedding, "
                          "v -> cast(v as double))")).alias("mv"),
     )
 
@@ -334,7 +251,7 @@ def q_maxsim_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.round(
-                F.expr(_maxsim_over_nested("spark", "qmv", "mv")), 6
+                F.expr(maxsim("spark", "qmv", "mv")), 6
             ).alias("score"),
         )
     )
@@ -343,70 +260,17 @@ def q_maxsim_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------------------- IVF index BUILD
 #
-# Literal-centroid assignment helpers (round-6 optimization, guide
-# §1.2/§4.1): a Lloyd/IVF centroid table is K rows of exact int64 — the
-# same vocab-sized class the engine already collects for bucket lists —
-# so the per-vector assignment can be ONE map-side expression over
-# inlined centroid literals instead of a crossJoin fan-out + per-vector
-# row_number window. Two properties make the rewrite bit-identical:
-#
-#   * the fold arithmetic is UNROLLED into a left-associated codegen
-#     sum (element_at(v, i) * lit chains). Spark's `aggregate(zip_with)`
-#     fold computes ((0 + x1*y1) + x2*y2) + ... in that exact order, and
-#     0.0 + t == t exactly in IEEE double, so the unrolled chain
-#     produces the same double bit for bit — while executing in
-#     whole-stage codegen instead of interpreted higher-order lambdas
-#     (measured ~100x per-row: HOF lambdas are CodegenFallback).
-#   * the argmax is a greatest() chain over struct(csim, -cid):
-#     struct ordering puts NULL csim smallest (the window's DESC NULLS
-#     LAST), NaN largest (Spark sorts NaN above every double in both
-#     window sort and greatest), and resolves csim ties by
-#     max(-cid) = min cid — exactly the old
-#     row_number() OVER (ORDER BY csim DESC, cid ASC) = 1 pick.
+# A Lloyd/IVF centroid table is K rows — the vocab-sized class the engine
+# already collects for bucket lists — so the per-vector assignment is ONE
+# map-side argmax over inlined centroid literals (textexpr.argmax_cid)
+# instead of a crossJoin fan-out + per-vector row_number window; the
+# vectors section of functions/textexpr.py states why both are the same
+# pick, bit for bit.
 
 
-def _arr_lit(vals: list) -> str:
-    """Array literal for collected centroid values. Ints stay exact
-    bigint literals; floats go through CAST('<repr>' AS DOUBLE) — repr
-    is the shortest round-trip decimal and string->double parsing is
-    correctly rounded, so the literal is the collected double bit for
-    bit (a bare decimal literal would parse as DECIMAL and change the
-    arithmetic)."""
-    return "array({})".format(", ".join(
-        f"{v}L" if isinstance(v, int) else f"CAST('{v!r}' AS DOUBLE)"
-        for v in vals))
-
-
-def _dot_lit(vec: str, vals: list[int]) -> str:
-    """<vec, literal> double dot product — the SAME fold expression as
-    _dot (bit-identical doubles), with the centroid inlined as an array
-    literal. (An unrolled add-chain was tried first: bit-identical too,
-    but the generated method blew Janino's 64KB limit and every stage
-    paid a multi-second failed-compile + interpreted fallback.)"""
-    return _dot("spark", vec, _arr_lit(vals))
-
-
-def _norm2_col(vec: str, dim: int) -> str:
-    """<vec, vec> double dot product (same fold as _dot)."""
-    return _dot("spark", vec, vec)
-
-
-def _norm2_lit(vals: list[int]) -> str:
-    """<lit, lit> dot, same fold over the inlined literal."""
-    lit = _arr_lit(vals)
-    return _dot("spark", lit, lit)
-
-
-def _csim_lit(vec: str, cv: list[int], dim: int) -> str:
-    """round(cosine(vec, literal centroid), 6) — identical arithmetic to
-    round(_cosine(vec, cv), 6) with cv inlined."""
-    return (f"round(({_dot_lit(vec, cv)}) / (sqrt({_norm2_col(vec, dim)}) "
-            f"* sqrt({_norm2_lit(cv)})), 6)")
-
-
-def _with_cid(df: DataFrame, cents_rows: list[tuple[int, list[int]]],
-              vec: str = "qv", dim: int = DIM, out: str = "cid") -> DataFrame:
-    """df + `out` = cid of the max-(round(cosine,6), min-cid) centroid.
+def _with_cid(df: DataFrame, cents_rows: list[tuple[int, list]],
+              vec: str = "qv") -> DataFrame:
+    """df + `cid` = cid of the max-(round(cosine,6), min-cid) centroid.
 
     Staged as intermediate columns (_nq, _d<cid>) rather than one
     expression: the vector norm is referenced by every centroid's cosine,
@@ -414,34 +278,63 @@ def _with_cid(df: DataFrame, cents_rows: list[tuple[int, list[int]]],
     CollapseProject from re-inlining the dot chains into one giant
     expression whose generated method would blow the JVM's 64KB method
     limit and silently fall back to interpreted eval (measured: the
-    single-expression form ran ~50x slower per row)."""
+    single-expression form ran ~50x slower per row). The dots are folds,
+    not unrolled add-chains: DIM-long chains per centroid blew Janino's
+    64KB limit too, a multi-second failed compile per stage."""
     dcols = [f"_d{cid}" for cid, _ in cents_rows]
     proj = df.select(
         *df.columns,
-        F.expr(_norm2_col(vec, dim)).alias("_nq"),
-        *[F.expr(_dot_lit(vec, cv)).alias(f"_d{cid}")
+        F.expr(dot("spark", vec, vec)).alias("_nq"),
+        *[F.expr(dot("spark", vec, array_lit(cv))).alias(f"_d{cid}")
           for cid, cv in cents_rows],
     )
-    structs = ", ".join(
-        f"named_struct('csim', round(_d{cid} / (sqrt(_nq) "
-        f"* sqrt({_norm2_lit(cv)})), 6), 'ncid', {-cid}L)"
-        for cid, cv in cents_rows
+
+    def csim(cid: int, cv: list) -> str:
+        n2 = dot("spark", array_lit(cv), array_lit(cv))
+        return f"round({cosine_from('spark', f'_d{cid}', '_nq', n2)}, 6)"
+
+    argmax = argmax_cid([(cid, csim(cid, cv)) for cid, cv in cents_rows])
+    return proj.withColumn("cid", F.expr(argmax)).drop("_nq", *dcols)
+
+
+def ivf_probe_topk(data: DataFrame, query: DataFrame,
+                   cents_rows: list[tuple[int, list]], vec: str, qvec: str,
+                   cols: list[str], n_probe: int = 2) -> DataFrame:
+    """IVF search: exact top-5 of `data` by round(cosine(vec, q), 6),
+    within the `n_probe` lists nearest to q (by the same key, ties to the
+    smaller cid), q = `qvec` of the 1-row `query`. `cols` (with "cid")
+    are kept next to the score; no query row yields an empty result.
+
+    The assigned lists are stored with their cid (localCheckpoint after
+    _with_cid): a cid filter over _with_cid's projections is pushed
+    through them, and the optimized plan then derives the whole argmax
+    twice, once in the Filter and once in the Project above it."""
+    q_rows = query.select(qvec).collect()
+    lists = _with_cid(data, cents_rows, vec=vec)
+    if not q_rows:
+        qv0, pcids, lists = [0.0] * DIM, [], lists.filter(F.lit(False))
+    else:
+        qv0 = list(q_rows[0][0])
+        probe = ", ".join(
+            f"named_struct('cid', {cid}L, 'csim', {csim_lit(qvec, cv)})"
+            for cid, cv in cents_rows
+        )
+        pcids = [
+            r["cid"]
+            for r in query
+            .select(F.explode(F.expr(f"array({probe})")).alias("c"))
+            .select("c.cid", "c.csim")
+            .orderBy(F.desc("csim"), F.asc("cid"))
+            .limit(n_probe)
+            .collect()
+        ]
+        lists = lists.localCheckpoint()
+    return (
+        lists.filter(F.col("cid").isin(pcids))
+        .select(*cols, F.expr(csim_lit(vec, qv0)).alias("score"))
+        .orderBy(F.desc("score"), F.asc("vec_id"))
+        .limit(5)
     )
-    return proj.withColumn(out, F.expr(f"-greatest({structs}).ncid")).drop(
-        "_nq", *dcols)
-
-
-def _quant(dialect: str, e: str) -> str:
-    """Deterministic integer quantization (scale 1e7 ~ float32's precision):
-    all k-means accumulation then happens in EXACT int64, so centroid sums
-    are order-independent and bit-identical across engines — the same
-    reason the reference's vector-index twin runs INT8 scalar quantization
-    (`no-ocr-api/tests/lance_vs_qdrant.py:247-257`). round() is
-    away-from-zero on ties in BOTH engines (Spark HALF_UP == C round)."""
-    if dialect == "spark":
-        return (f"transform({e}, v -> "
-                f"cast(round(cast(v as double) * 10000000, 0) as bigint))")
-    return f"list_transform({e}, v -> round(v::DOUBLE * 10000000)::BIGINT)"
 
 
 def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str,
@@ -460,34 +353,20 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str,
     identical iterations in DuckDB SQL; integer math makes them bit-equal.
     """
     # Fan out the RAW scan (quant is CPU-heavy per row), then
-    # localCheckpoint the slim (vec_id, qv) frame: the k-means build
-    # reads it once per Lloyd round + once for the probe scan, and the
-    # checkpoint (a) truncates lineage exactly like graph.py's iterative
-    # CC and (b) stops Catalyst pushing the probe's cid filter — which
-    # it rewrites into the full assignment expression — below the
-    # exchange into the single-task parquet scan (measured: that
-    # pushdown made the final probe 6s of one-core work; checkpointed,
-    # the whole query is ~1s). Row count is the embeddings table — the
-    # index-build working set, recomputed fresh on every invocation.
+    # localCheckpoint the slim (vec_id, qv) frame: the k-means build reads
+    # it once per Lloyd round + once for the final assignment, and the
+    # checkpoint truncates lineage exactly like graph.py's iterative CC.
     raw = fan_out_for_cpu(
         load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
         spark,
     )
     emb = raw.select(
-        "vec_id", F.expr(_quant("spark", "embedding")).alias("qv")
+        "vec_id", F.expr(quantize("spark", "embedding")).alias("qv")
     ).localCheckpoint()
-    emb_wide = emb
-    # r6 optimization (guide §1.2/§2.4/§4.1): each Lloyd round's centroid
-    # table is n_centroids rows of exact int64 — collect it and inline it
-    # as literals, so per-vector assignment is ONE map-side codegen argmax
-    # (identical pick semantics, see _argmax_cid_expr) instead of a
-    # crossJoin fan-out + per-vector row_number window. The old lazy
-    # formulation also REPLAYED every earlier round inside each later
-    # round's plan (round i's centroids were a subtree of round i+1);
-    # collecting per round truncates that lineage exactly like the
-    # iterative-graph localCheckpoint. The collect is index-metadata-sized
-    # (K x DIM ints), the same size class as the bucket lists the engine
-    # already collects — never corpus rows.
+    # Each Lloyd round's centroid table is n_centroids rows of exact int64
+    # (K x DIM ints, never corpus rows): collecting it per round inlines
+    # it as literals for _with_cid and keeps round i's centroids out of
+    # round i+1's plan.
     cents_rows = [
         (r["cid"], [int(v) for v in r["cv"]])
         for r in emb.filter(F.col("vec_id").between(1, n_centroids))
@@ -500,7 +379,7 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str,
         # over element_at — NOT posexplode (a generator re-evaluates the
         # assignment expression once per exploded element, measured 10x)
         sums_row = (
-            _with_cid(emb_wide.select("qv"), cents_rows)
+            _with_cid(emb.select("qv"), cents_rows)
             .groupBy("cid")
             .agg(*[F.sum(F.element_at("qv", i + 1)).alias(f"s{i}")
                    for i in range(DIM)])
@@ -511,41 +390,15 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str,
             for r in sums_row
         ]
         cents_rows.sort()
-
-    qv0 = [
-        int(v) for v in
-        emb.filter(F.col("vec_id") == 0).collect()[0]["qv"]
-    ]
-    # probe = the query's 2 nearest lists, same (csim DESC, cid ASC) order
-    probe_structs = ", ".join(
-        f"named_struct('cid', {cid}L, 'csim', {_csim_lit('qv', cv, DIM)})"
-        for cid, cv in cents_rows
-    )
-    pcids = [
-        r["cid"]
-        for r in emb.filter(F.col("vec_id") == 0)
-        .select(F.explode(F.expr(f"array({probe_structs})")).alias("c"))
-        .select("c.cid", "c.csim")
-        .orderBy(F.desc("csim"), F.asc("cid"))
-        .limit(2)
-        .collect()
-    ]
-    return (
-        _with_cid(emb_wide.filter(F.col("vec_id") != 0), cents_rows)
-        .filter(F.col("cid").isin(pcids))
-        .select(
-            "vec_id", "cid",
-            F.expr(_csim_lit("qv", qv0, DIM)).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(5)
-    )
+    return ivf_probe_topk(
+        emb.filter(F.col("vec_id") != 0), emb.filter(F.col("vec_id") == 0),
+        cents_rows, vec="qv", qvec="qv", cols=["vec_id", "cid"])
 
 
 def _ivf_kmeans_oracle(n_centroids: int = 8, n_iters: int = 2) -> str:
     """DuckDB replay of q_ann_ivf_kmeans, iteration by iteration."""
-    q = _quant("duckdb", "embedding")
-    cos = _cosine("duckdb", "e.qv", "c.cv")
+    q = quantize("duckdb", "embedding")
+    cos = cosine("duckdb", "e.qv", "c.cv")
     parts = [f"""
         qe AS (SELECT vec_id, {q} AS qv FROM embeddings),
         c0 AS (SELECT vec_id AS cid, qv AS cv FROM qe
@@ -581,7 +434,7 @@ def _ivf_kmeans_oracle(n_centroids: int = 8, n_iters: int = 2) -> str:
             FROM qe e, {prev} c WHERE e.vec_id = 0
             ORDER BY round({cos}, 6) DESC, c.cid ASC LIMIT 2),
         qv0 AS (SELECT qv AS query_v FROM qe WHERE vec_id = 0)""")
-    final_cos = _cosine("duckdb", "f.qv", "q.query_v")
+    final_cos = cosine("duckdb", "f.qv", "q.query_v")
     return f"""
         WITH {','.join(parts)}
         SELECT f.vec_id, f.cid, round({final_cos}, 6) AS score
@@ -602,8 +455,10 @@ QUERIES = {
     "lsh_bucket_pairs": q_lsh_bucket_pairs,
 }
 
-_COS_D = _cosine("duckdb", "e.embedding", "q.qv")
-_COS_AB = _cosine("duckdb", "a.embedding", "b.embedding")
+_COS_D = cosine("duckdb", "e.embedding", "q.qv")
+_COS_AB = cosine("duckdb", "a.embedding", "b.embedding")
+_MAXSIM_D = maxsim("duckdb", multivec("duckdb", "q.qv"),
+                   multivec("duckdb", "e.embedding"))
 
 ORACLES = {
     "ann_ivf_kmeans": _ivf_kmeans_oracle(),
@@ -625,18 +480,18 @@ ORACLES = {
     """,
     "maxsim_topk": f"""
         WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-        SELECT e.vec_id, round({_maxsim("duckdb", "q.qv", "e.embedding")}, 6) AS score
+        SELECT e.vec_id, round({_MAXSIM_D}, 6) AS score
         FROM embeddings e, q WHERE e.vec_id <> 0
         ORDER BY score DESC, e.vec_id ASC LIMIT 5
     """,
     "maxsim_nested": f"""
         WITH nested AS (
             SELECT vec_id,
-                   {_multivec("duckdb", "list_transform(embedding, v -> v::DOUBLE)")} AS mv
+                   {multivec("duckdb", "list_transform(embedding, v -> v::DOUBLE)")} AS mv
             FROM embeddings),
         q AS (SELECT mv AS qmv FROM nested WHERE vec_id = 0)
         SELECT e.vec_id,
-               round({_maxsim_over_nested("duckdb", "q.qmv", "e.mv")}, 6) AS score
+               round({maxsim("duckdb", "q.qmv", "e.mv")}, 6) AS score
         FROM nested e, q WHERE e.vec_id <> 0
         ORDER BY score DESC, e.vec_id ASC LIMIT 5
     """,
@@ -655,16 +510,16 @@ ORACLES = {
             WHERE vec_id BETWEEN 1 AND 8),
         scored AS (
             SELECT e.vec_id, e.label, e.embedding, c.cid,
-                   round({_cosine("duckdb", "e.embedding", "c.cv")}, 6) AS csim,
+                   round({cosine("duckdb", "e.embedding", "c.cv")}, 6) AS csim,
                    row_number() OVER (PARTITION BY e.vec_id
-                                      ORDER BY round({_cosine("duckdb", "e.embedding", "c.cv")}, 6) DESC,
+                                      ORDER BY round({cosine("duckdb", "e.embedding", "c.cv")}, 6) DESC,
                                                c.cid ASC) AS rn
             FROM embeddings e, cents c),
         best AS (SELECT vec_id, label, embedding, cid FROM scored WHERE rn = 1),
         probe AS (SELECT cid AS pcid FROM scored WHERE vec_id = 0 AND rn <= 2),
         q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
         SELECT e.vec_id, e.label, e.cid,
-               round({_cosine("duckdb", "e.embedding", "q.qv")}, 6) AS score
+               round({cosine("duckdb", "e.embedding", "q.qv")}, 6) AS score
         FROM best e JOIN probe p ON e.cid = p.pcid, q
         WHERE e.vec_id <> 0
         ORDER BY score DESC, e.vec_id ASC LIMIT 5

@@ -11,7 +11,7 @@ from no_ocr_spark.operators.batchquery import (
     TOP_K,
     q_batch_cosine_topk,
 )
-from no_ocr_spark.operators.retrieval import _cosine
+from no_ocr_spark.functions.textexpr import cosine as _cosine
 from no_ocr_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"

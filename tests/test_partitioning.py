@@ -189,6 +189,12 @@ def test_fan_out_for_cpu_fans_out_single_row_group_splits(spark, sf_dir,
     assert fanned.rdd.getNumPartitions() == par
 
 
+def _registry() -> dict:
+    import __spark_entry__ as entry
+
+    return {**entry.queries(), **entry.extra_queries()}
+
+
 def test_fan_out_for_cpu_adds_no_job_to_any_registered_query(spark, sf_dir,
                                                              monkeypatch):
     """Compose every registered query with the helper wrapped: the helper
@@ -196,7 +202,6 @@ def test_fan_out_for_cpu_adds_no_job_to_any_registered_query(spark, sf_dir,
     AQE fixes only at run time (page_rasters' distinct)."""
     import sys
 
-    import __spark_entry__ as entry
     from no_ocr_spark.plans import partitioning
 
     real = partitioning.fan_out_for_cpu
@@ -209,7 +214,7 @@ def test_fan_out_for_cpu_adds_no_job_to_any_registered_query(spark, sf_dir,
         jobs[current[0]] = jobs.get(current[0], 0) + _n_spark_jobs(spark_) - n0
         return out
 
-    registry = {**entry.queries(), **entry.extra_queries()}
+    registry = _registry()
     for name, mod in list(sys.modules.items()):
         if (name.startswith("no_ocr_spark")
                 and getattr(mod, "fan_out_for_cpu", None) is real):
@@ -221,6 +226,26 @@ def test_fan_out_for_cpu_adds_no_job_to_any_registered_query(spark, sf_dir,
 
     assert "page_rasters" in jobs and len(jobs) > 20  # the wrapper is live
     assert {n: j for n, j in jobs.items() if j} == {}
+
+
+def test_no_registered_query_repeats_a_lambda(spark, sf_dir):
+    """scripts/explain_audit.repeated_lambdas is empty for every registered
+    query: no operator of an optimized plan evaluates the same
+    higher-order call twice per row."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "scripts", "explain_audit.py")
+    spec = importlib.util.spec_from_file_location("explain_audit", path)
+    audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(audit)
+
+    hits = {name: [op for op, _, _ in audit.repeated_lambdas(query(spark, sf_dir))]
+            for name, query in _registry().items()}
+    spark.catalog.clearCache()
+    assert len(hits) > 90
+    assert {name: ops for name, ops in hits.items() if ops} == {}
 
 
 def test_no_inline_default_parallelism_repartition():

@@ -9,10 +9,10 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
+from no_ocr_spark.functions.textexpr import SQ8_LEVELS as LEVELS
+from no_ocr_spark.functions.textexpr import sq8_dequant_expr
 from no_ocr_spark.operators.quantization import (
-    LEVELS,
     q_ann_sq8_topk,
-    sq8_dequant_expr,
     sq8_encode,
     sq8_packed_col,
 )

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from no_ocr_spark.extract.pdf import build_pdf
 from no_ocr_spark.operators.page_images import page_images
-from no_ocr_spark.operators.retrieval import _maxsim_over_nested
+from no_ocr_spark.functions.textexpr import maxsim as _maxsim_over_nested
 
 N_TOK, DIM = 3, 8  # patch tokens x dims (tiny ColQwen2 stand-in)
 

@@ -15,10 +15,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from no_ocr_spark.functions.textexpr import cosine as _cosine
+from no_ocr_spark.functions.textexpr import maxsim as _maxsim_over_nested
 from no_ocr_spark.operators.retrieval import (
-    _cosine,
     _lsh_sig,
-    _maxsim_over_nested,
     lsh_bits_for,
     nested_embeddings,
     q_lsh_bucket_pairs,
