@@ -11,7 +11,6 @@ Layout:
   sources/    table loaders + deterministic synthetic `pages` corpus.
   functions/  reusable column expressions (hashing, similarity, text stats).
   plans/      lineage / checkpoint-resume / skew-salting driver logic.
-  streaming/  incremental-ingest notes (reference has no streaming ops).
   jobs/       spark-submit entry points.
 """
 

@@ -41,6 +41,8 @@ import re
 import zlib
 from dataclasses import dataclass
 
+import numpy as np
+
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\nendstream", re.DOTALL)
 _NUM_RE = re.compile(rb"[-+]?\d+(?:\.\d+)?")
 
@@ -663,20 +665,6 @@ def _aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
     and as the FIPS-vector cross-check in tests."""
     if len(data) < 32 or (len(data) - 16) % 16:
         return b""
-    try:
-        import numpy as np
-    except ImportError:  # scalar fallback, same result
-        rk = _aes_round_keys(key)
-        prev = data[:16]
-        out = bytearray()
-        for i in range(16, len(data), 16):
-            blk = data[i:i + 16]
-            out += bytes(p ^ c
-                         for p, c in zip(_aes_decrypt_block(rk, blk), prev))
-            prev = blk
-        pad = out[-1]
-        return bytes(out[:-pad]) if 1 <= pad <= 16 else b""
-
     _, inv_sbox, mul = _aes_tables()
     inv_s = np.asarray(inv_sbox, np.uint8)
     m9, m11, m13, m14 = (np.asarray(mul[c], np.uint8)

@@ -76,13 +76,6 @@ def word_shingles(dialect: str, words_expr: str, k: int) -> str:
     )
 
 
-def set_size(dialect: str, arr: str) -> str:
-    _check(dialect)
-    if dialect == "spark":
-        return f"size(array_distinct({arr}))"
-    return f"len(list_distinct({arr}))"
-
-
 def intersect_size(dialect: str, a: str, b: str) -> str:
     _check(dialect)
     if dialect == "spark":

@@ -66,12 +66,13 @@ def q_page_rasters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # raster is a pure function of the cleaned 24-char line, and the
     # corpus repeats lines heavily (50k docs -> 4.7k distinct lines at
     # the 10x bench scale), so render each DISTINCT line once and attach
-    # the (width, height, ink) triple back by a tiny broadcast join —
-    # the rasterizer's 612x792 canvas alloc + ink scan per doc was the
-    # whole query. NULL text folds to '' BEFORE the distinct so the join
-    # key is total (rasterizing '' is the oracle's COALESCE(ink,0) row).
-    # Per-doc output rows are unchanged. At corpus scale the distinct
-    # prefix table is bounded by the alphabet, not the corpus.
+    # the (width, height, ink) triple back by a join — the rasterizer's
+    # 612x792 canvas alloc + ink scan per doc was the whole query. NULL
+    # text folds to '' BEFORE the distinct so the join key is total
+    # (rasterizing '' is the oracle's COALESCE(ink,0) row).
+    # Per-doc output rows are unchanged. The distinct-line table grows
+    # with the corpus (24-char prefixes over [a-z0-9 ]), so the join
+    # strategy is left to the broadcast threshold, not forced.
     docs = fan_out_for_cpu(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"), spark
     ).select(
@@ -88,7 +89,7 @@ def q_page_rasters(spark: SparkSession, sf_dir: str) -> DataFrame:
                               ).mapInPandas(
         _raster_line_batches, schema=_LINE_SCHEMA)
     return (
-        docs.join(F.broadcast(rasters), "line")
+        docs.join(rasters, "line")
         .select("doc_id", F.lit(1).cast("int").alias("page"),
                 "width", "height", "ink_pixels")
     )

@@ -42,10 +42,11 @@ LINEAGE_SCHEMA = (
 
 def lineage_rollup(extracted: DataFrame) -> DataFrame:
     """Per-bucket lineage aggregate (SURVEY.md §2.5 A4): partial+final hash
-    agg, order-independent checksum."""
+    agg, order-independent checksum. `n_bytes` is the UTF-8 size of the
+    extracted text (`n_chars` counts code points)."""
     return extracted.groupBy("bucket").agg(
         F.count("*").alias("n_docs"),
-        F.sum("n_chars").alias("n_bytes"),
+        F.sum(F.octet_length("text")).alias("n_bytes"),
         F.lower(F.hex(F.bit_xor(F.xxhash64("url", "text")))).alias("checksum"),
         F.lit("done").alias("status"),
     )
@@ -124,7 +125,7 @@ def run_with_lineage(
     # buckets pending, and the resume rewrites their directories
     wall_ms = int((time.time() - t0) * 1000)
     (
-        lineage_rollup(st.select("bucket", "url", "text", "n_chars"))
+        lineage_rollup(st.select("bucket", "url", "text"))
         .withColumn("wall_ms", F.lit(wall_ms))
         .coalesce(1)
         .write.mode("append")

@@ -50,11 +50,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in TABLE_NAMES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for n in TABLE_NAMES:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Single write chokepoint — Parquet today, Iceberg when the runtime jar
     is on the classpath (`df.writeTo(...).createOrReplace()`)."""

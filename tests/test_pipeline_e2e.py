@@ -115,6 +115,24 @@ def test_lineage_checksum_order_independent(spark, pages):
     assert c1 == c2 and len(c1) == 4
 
 
+def test_ledger_n_bytes_counts_utf8_bytes(spark, tmp_path_factory):
+    """The ledger's n_bytes is the UTF-8 size of the extracted text, not
+    its length in code points."""
+    from no_ocr_spark.extract.api import extract_document
+
+    para = "Every café naïve visitor orders the strong house coffee. " * 4
+    html = f"<html><body><article><p>{para}</p></article></body></html>".encode()
+    text = extract_document(html)["text"]
+    assert "café naïve" in text
+    page = spark.createDataFrame(
+        [("http://cafe.example/a", None, html, None, "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string")
+    out = str(tmp_path_factory.mktemp("utf8_out"))
+    run_with_lineage(spark, page, out, n_buckets=1)
+    (row,) = spark.read.parquet(out + "/lineage").collect()
+    assert row.n_bytes == len(text.encode("utf-8")) > len(text)
+
+
 def test_split_buckets_survive_resume(spark, pages, tmp_path_factory):
     """The extracted write sizes its files by data: below the advisory
     partition size a bucket is split over several files. A resume must

@@ -201,3 +201,26 @@ def test_null_line_rasterizes_empty(spark, tmp_path):
     by_id = {int(r["doc_id"]): int(r["ink_pixels"]) for r in out.collect()}
     assert by_id[7] == 0
     assert by_id[8] == ink_formula("ab")
+
+
+def test_page_rasters_join_follows_broadcast_threshold(spark, sf_dir):
+    """The distinct-line table grows with the corpus, so page_rasters
+    must not force a broadcast: with broadcasts switched off the join
+    is a shuffle join, and its rows equal the default run's."""
+    from no_ocr_spark.operators.raster_query import q_page_rasters
+
+    def rows_and_plan():
+        df = q_page_rasters(spark, sf_dir)
+        rows = sorted(tuple(r) for r in df.collect())
+        return rows, df._jdf.queryExecution().executedPlan().toString()
+
+    default_rows, _ = rows_and_plan()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        rows, plan = rows_and_plan()
+    finally:
+        spark.conf.set(key, prev)
+    assert "BroadcastHashJoin" not in plan and "SortMergeJoin" in plan
+    assert rows == default_rows and rows
