@@ -101,34 +101,6 @@ def transform_arr(dialect: str, arr: str, var: str, body: str) -> str:
     return f"{fn}({arr}, {var} -> {body})"
 
 
-def minhash_term(dialect: str, shingles_expr: str, a: int, b: int,
-                 p: int = P64) -> str:
-    """One MinHash slot: min over shingles of (a*H(s)+b) mod p; empty -> p."""
-    hashed = transform_arr(
-        dialect, shingles_expr, "s",
-        f"({a} * ({poly_hash(dialect, 's', p)}) + {b}) % {p}",
-    )
-    return f"coalesce({array_min(dialect, hashed)}, {p})"
-
-
-def minhash_signature(dialect: str, shingles_expr: str, k: int = 8,
-                      p: int = P64) -> str:
-    """array<bigint> MinHash signature of length k."""
-    terms = ", ".join(
-        minhash_term(dialect, shingles_expr, MINHASH_A[j], MINHASH_B[j], p)
-        for j in range(k)
-    )
-    fn = "array" if dialect == "spark" else "list_value"
-    return f"{fn}({terms})"
-
-
-def shingle_hashes(dialect: str, shingles_expr: str, p: int = P64) -> str:
-    """Hash every shingle ONCE (array<bigint>) — materialize this as a
-    column/CTE and feed it to minhash_signature_from_hashes so the k slots
-    reuse it instead of re-hashing k times (8x cheaper)."""
-    return transform_arr(dialect, shingles_expr, "s", poly_hash(dialect, "s", p))
-
-
 def word_hashes(dialect: str, words_expr: str, p: int = P64,
                 mult: int = MULT) -> str:
     """Hash every word once (array<bigint>). A non-default `mult` yields an
@@ -243,36 +215,14 @@ def iff(dialect: str, cond: str, then: str, els: str) -> str:
     return f"(case when {cond} then {then} else {els} end)"
 
 
-def simhash(dialect: str, words_expr: str, n_bits: int = 16) -> str:
-    """SimHash over word tokens: bit b is set iff the sum over tokens of
-    (+1 if bit b of poly_hash(token) else -1) is positive."""
-    h = poly_hash(dialect, "w")
-    bit_sum = fold(
-        dialect,
-        transform_arr(dialect, words_expr, "w",
-                      f"({shift_right(dialect, f'({h})', 'b')} & 1) * 2 - 1"),
-        "cast(0 as bigint)" if dialect == "spark" else "0::BIGINT",
-        "acc + x",
-    )
-    one = "cast(1 as bigint)" if dialect == "spark" else "1::BIGINT"
-    seq = (f"sequence(0, {n_bits - 1})" if dialect == "spark"
-           else f"generate_series(0, {n_bits - 1})")
-    body = iff(dialect, f"({bit_sum}) > 0",
-               shift_left(dialect, one, "b"), "0")
-    # outer fold over bit positions
-    if dialect == "spark":
-        return f"aggregate({seq}, cast(0 as bigint), (acc, b) -> acc + {body})"
-    return (f"list_reduce(list_prepend(0::BIGINT, {seq}), "
-            f"(acc, b) -> acc + {body})")
-
-
 def simhash_from_word_hashes(dialect: str, wh_col: str, n_bits: int = 16) -> str:
-    """SimHash over a PRECOMPUTED word-hash array column: O(words) hashing
-    once + O(bits x words) integer ops, vs simhash()'s O(bits x words x
-    chars) re-hash of every word per bit (measured 5x on the bench corpus).
-    Same math as simhash() modulo hash reuse => identical output. NOTE:
-    poly hashes are mod P64 (~2^30), so only bits 0..29 carry signal —
-    n_bits must be <= 30."""
+    """SimHash over a PRECOMPUTED word-hash array column: bit b is set iff
+    the sum over words of (+1 if bit b of the word's hash else -1) is
+    positive. O(words) hashing once + O(bits x words) integer ops, vs a
+    re-hash of every word per bit (measured 5x on the bench corpus). The
+    Spark side runs simhash_single_pass_spark, the same math. NOTE: poly
+    hashes are mod P64 (~2^30), so only bits 0..29 carry signal — n_bits
+    must be <= 30."""
     if n_bits > 30:
         raise ValueError("poly_hash provides 30 useful bits")
     bit_sum = fold(

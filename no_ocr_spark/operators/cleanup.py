@@ -13,7 +13,8 @@ Scale shapes (the reason each stage looks the way it does):
     documents (a second pass would resolve astronomically-unlikely hash
     collisions; at 10^12 docs that matters, here it is documented);
   * near-dup = banded MinHash-LSH candidates + slot-agreement verify —
-    the linear-time path, identical shape to dedup.q_dedup_minhash_pairs;
+    the linear-time path, dedup.minhash_pairs (the same banding policy
+    dedup_minhash_pairs and near_dup_clusters run);
   * the drop rule is greedy keep-smallest-url: any url appearing as the
     LARGER side of a verified near-dup pair is dropped. One pass, no
     iteration; transitive chains collapse toward their smallest member
@@ -37,7 +38,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from no_ocr_spark.functions import textexpr as tx
+from no_ocr_spark.operators.dedup import minhash_pairs, with_minhash_sig
 from no_ocr_spark.operators.repetition import (
     with_repetition_flag_from_hashes,
     with_word_hashes,
@@ -46,49 +47,16 @@ from no_ocr_spark.operators.repetition import (
 MIN_TOKENS = 10
 
 
-def _add_sig(docs: DataFrame) -> DataFrame:
-    """Append the 8-slot MinHash `sig` from the `_wh` word-hash column
-    (repetition.with_word_hashes)."""
-    sh = tx.shingle_hashes_from_word_hashes("spark", "_wh")
-    sig = tx.minhash_signature_from_hashes("spark", "_sh")
-    # `_sh` is a column because all 8 slots read it: inlined, the shingle
-    # pass would run once per slot
-    return docs.withColumn("_sh", F.expr(sh)).withColumn(
-        "sig", F.expr(sig)
-    ).drop("_sh")
-
-
-def _with_sig(docs: DataFrame) -> DataFrame:
-    """(url, text) -> (url, sig)."""
-    return _add_sig(with_word_hashes(docs)).select("url", "sig")
-
-
 def _sig_losers(sigs: DataFrame) -> DataFrame:
     """(url, sig) -> urls to DROP: the larger url of every verified near-dup
-    pair, from a banded self-join over the signatures."""
-    bands = sigs.select(
-        "url", "sig",
-        F.explode(F.expr(
-            "transform(sequence(0, 1), j -> struct(j as band_id, "
-            "slice(sig, 4*j+1, 4) as bh))"
-        )).alias("b"),
-    ).select("url", "sig", "b.band_id", "b.bh")
-    x, y = bands.alias("x"), bands.alias("y")
-    slots_eq = F.expr("size(filter(zip_with(x.sig, y.sig, (a, b) -> a = b), t -> t))")
-    return (
-        x.join(y, (F.col("x.band_id") == F.col("y.band_id"))
-               & (F.col("x.bh") == F.col("y.bh"))
-               & (F.col("x.url") < F.col("y.url")))
-        .filter(slots_eq >= 6)
-        .select(F.col("y.url").alias("url"))
-        .distinct()
-    )
+    pair (dedup.minhash_pairs)."""
+    return minhash_pairs(sigs, "url").select(F.col("b").alias("url")).distinct()
 
 
 def near_dup_losers(docs: DataFrame) -> DataFrame:
-    """urls to DROP: the larger url of every verified MinHash near-dup pair
-    (2 bands x 4 rows candidates, >= 6/8 slot agreement)."""
-    return _sig_losers(_with_sig(docs))
+    """(url, text) -> urls to DROP, as _sig_losers."""
+    return _sig_losers(
+        with_minhash_sig(with_word_hashes(docs)).select("url", "sig"))
 
 
 def _scrub_pii(docs: DataFrame) -> DataFrame:
@@ -161,7 +129,7 @@ def clean_corpus(extracted: DataFrame, min_tokens: int = MIN_TOKENS,
     # self-join's two branches) read cached rows and never re-hash. At
     # 100 TB the equivalent boundary is a staging-table write, exactly
     # like run_with_lineage's extracted table.
-    gated = _add_sig(with_repetition_flag_from_hashes(
+    gated = with_minhash_sig(with_repetition_flag_from_hashes(
         with_word_hashes(quality))).drop("_w", "_wh").persist()
     rep = gated.filter(~F.col("is_repetitive")).drop("is_repetitive")
     n_rep = rep.count()

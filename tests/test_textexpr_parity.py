@@ -49,21 +49,31 @@ def test_token_count_parity(spark, duck, text):
     assert int(s) == int(d)
 
 
+def _word_hashes(dialect: str) -> str:
+    return tx.word_hashes(dialect, tx.words(dialect, "text"))
+
+
 @pytest.mark.parametrize("text", CASES)
 def test_simhash_parity(spark, duck, text):
-    words_s = tx.words("spark", "text")
-    words_d = tx.words("duckdb", "text")
-    s = _spark_eval(spark, tx.simhash("spark", words_s), text)
-    d = _duck_eval(duck, tx.simhash("duckdb", words_d), text)
+    """The engine's Spark SimHash (single-pass fold) against the oracle's."""
+    s = _spark_eval(spark, tx.simhash_single_pass_spark(_word_hashes("spark")),
+                    text)
+    d = _duck_eval(duck, tx.simhash_from_word_hashes("duckdb",
+                                                     _word_hashes("duckdb")),
+                   text)
     assert s == d
 
 
 @pytest.mark.parametrize("text", CASES)
 def test_minhash_parity(spark, duck, text):
-    sh_s = f"array_distinct({tx.word_shingles('spark', tx.words('spark', 'text'), 2)})"
-    sh_d = f"list_distinct({tx.word_shingles('duckdb', tx.words('duckdb', 'text'), 2)})"
-    s = _spark_eval(spark, tx.minhash_signature("spark", sh_s), text)
-    d = _duck_eval(duck, tx.minhash_signature("duckdb", sh_d), text)
+    """The MinHash signature the engine and the oracles compute: 8 slots
+    over the distinct 3-word shingle hashes composed from word hashes."""
+    def sig(dialect):
+        sh = tx.shingle_hashes_from_word_hashes(dialect, _word_hashes(dialect))
+        return tx.minhash_signature_from_hashes(dialect, sh)
+
+    s = _spark_eval(spark, sig("spark"), text)
+    d = _duck_eval(duck, sig("duckdb"), text)
     assert list(s) == list(d)
 
 
