@@ -4,13 +4,15 @@ Reference analogue: the per-row hot loop `get_pdf_images`
 (`no-ocr-api/np_ocr/data.py:14-33`) + page explode (`data.py:50-60`).
 Here a single mapInPandas pass parses each document ONCE and emits both the
 document-level text row and the nested span array; the two output tables
-(`extracted`, `spans`) are cheap projections/explodes of this one pass —
-no double parse, no per-row Python dispatch (input_hint requirement).
+(`extracted`, `spans`) are written from this one pass, persisted once
+after the bucket rebalance (plans/lineage.py): `extracted` as is, `spans`
+as a row-local explode of it — no double parse, no re-read of written
+output, no per-row Python dispatch (input_hint requirement).
 
 Plan shape at scale: parquet scan (column-pruned to url/warc_ts/html/lang;
-html is read only here) -> optional repartition by url-hash bucket ->
-ArrowEvalPython/MapInPandas -> project/explode -> sinks. The heavy column
-(html) never crosses a shuffle after extraction.
+html is read only here) -> ArrowEvalPython/MapInPandas -> rebalance by
+url-hash bucket -> persisted -> project/explode -> sinks. The heavy
+column (html) never crosses a shuffle.
 """
 
 from __future__ import annotations
@@ -76,9 +78,9 @@ def spans_table(result: DataFrame) -> DataFrame:
 
     CRITICAL scale property: the UDF already emits every span of a document
     in one row, so per-page re-nesting is a ROW-LOCAL reshape (higher-order
-    functions + explode) — zero shuffle, fused into the same stage as the
-    extraction. A groupBy(url, page) here would re-shuffle every span in
-    the corpus for nothing.
+    functions + explode) — zero shuffle, fused into the stage that reads
+    the extraction result. A groupBy(url, page) here would re-shuffle
+    every span in the corpus for nothing.
 
     Span order within a page is made explicit by array_sort on a
     (block, line)-keyed struct (struct comparison is field-order

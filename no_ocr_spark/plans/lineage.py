@@ -17,17 +17,24 @@ Design:
     proven byte-identical.
   * Resume = all buckets minus the ledger's done set (one column-pruned
     read); only pending buckets are scanned (bucket predicate pushdown).
-  * Write tasks follow data volume, not bucket count: the extracted write
-    is a `rebalance` on bucket (AQE coalesces small partitions and splits
-    big ones, so a bucket dir may hold several files); the ledger is one
-    task, one file per run.
+  * Write tasks follow data volume, not bucket count: the extraction
+    result is a `rebalance` on bucket (AQE coalesces small partitions and
+    splits big ones, so a bucket dir may hold several files); the ledger
+    is one task, one file per run.
+  * One shuffle feeds all three sinks: the rebalanced result is persisted
+    once, the `extracted` and `spans` writes read it concurrently from two
+    driver threads, and the ledger rollup reads it after both; nothing the
+    run wrote is read back. The ledger is appended last, so a crash before
+    it leaves the run's buckets pending.
 """
 
 from __future__ import annotations
 
 import os
 import time
+from typing import Callable
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,6 +45,12 @@ LINEAGE_SCHEMA = (
     "bucket int, n_docs bigint, n_bytes bigint, checksum string, "
     "status string, wall_ms bigint"
 )
+
+JOB_DESCRIPTION = "spark.job.description"
+# Off by default: a cached plan then loses AQE's final-stage coalesce and
+# skew split, and the rebalance becomes spark.sql.shuffle.partitions
+# fixed partitions. Read when the cache entry is created.
+CACHED_PLAN_REPARTITION = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
 
 def lineage_rollup(extracted: DataFrame) -> DataFrame:
@@ -68,6 +81,42 @@ def pending_buckets(spark: SparkSession, n_buckets: int, lineage_path: str) -> l
     return [b for b in range(n_buckets) if b not in done]
 
 
+def _described(spark: SparkSession, description: str, action: Callable[[], None]) -> None:
+    """Run `action` with its Spark jobs described as `description`, then
+    restore the calling thread's description."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty(JOB_DESCRIPTION)
+    sc.setJobDescription(description)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty(JOB_DESCRIPTION, prev)
+
+
+def _run_concurrently(spark: SparkSession,
+                      actions: list[tuple[str, Callable[[], None]]]) -> None:
+    """Run each (description, action) in its own driver thread, join them
+    all, then re-raise the first action's error. InheritableThread carries
+    the caller's local properties (job group, scheduler pool) over."""
+    errors: list[Exception | None] = [None] * len(actions)
+
+    def run(i: int, description: str, action: Callable[[], None]) -> None:
+        try:
+            _described(spark, description, action)
+        except Exception as e:  # handed to the caller below
+            errors[i] = e
+
+    threads = [InheritableThread(target=run, args=(i, d, a))
+               for i, (d, a) in enumerate(actions)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+
+
 def run_with_lineage(
     spark: SparkSession,
     pages: DataFrame,
@@ -96,41 +145,48 @@ def run_with_lineage(
 
     # Extraction runs directly on the scan splits (max parallelism, zero
     # shuffle of raw html); the url-hash bucket shuffle (SURVEY §4 item 1)
-    # moves only the ~10x smaller extracted rows. Write-once,
-    # project-on-read: `extracted` carries the nested spans column (schema
-    # superset of FIXTURES.md A2); the `spans` table and the ledger derive
-    # from column-pruned re-reads, run serially (concurrent jobs over
-    # nested-struct scans measured 3x slower at high core counts).
-    result = extract(bucketed)  # bucket recomputed from url (pure fn)
-    extracted_path = os.path.join(out_dir, "extracted")
-    (
-        with_bucket(result, n_buckets)
-        .hint("rebalance", "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(extracted_path)
-    )
-    st = spark.read.parquet(extracted_path)
-    if len(todo) < n_buckets:
-        # resume: derive spans/lineage only for the buckets just written
-        # (bucket is a partition column -> directory pruning, no data read
-        # for the already-done buckets)
-        st = st.filter(F.col("bucket").isin(todo))
-
-    with_bucket(spans_table(st), n_buckets).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(os.path.join(out_dir, "spans"))
-
-    # the ledger is appended last: a crash before it leaves this run's
-    # buckets pending, and the resume rewrites their directories
-    wall_ms = int((time.time() - t0) * 1000)
-    (
-        lineage_rollup(st.select("bucket", "url", "text"))
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(lineage_path)
-    )
+    # moves only the ~10x smaller extracted rows. That shuffle's output is
+    # persisted and feeds every sink: `extracted` (the nested spans column
+    # included, schema superset of FIXTURES.md A2), the `spans` table and
+    # the ledger. It holds only the pending buckets, so a resume needs no
+    # filter, and nothing written here is read back.
+    prev = spark.conf.get(CACHED_PLAN_REPARTITION, None)
+    spark.conf.set(CACHED_PLAN_REPARTITION, "true")
+    try:
+        staged = (
+            with_bucket(extract(bucketed), n_buckets)  # bucket recomputed from url
+            .hint("rebalance", "bucket")
+            .persist()
+        )
+    finally:
+        if prev is None:
+            spark.conf.unset(CACHED_PLAN_REPARTITION)
+        else:
+            spark.conf.set(CACHED_PLAN_REPARTITION, prev)
+    try:
+        # Whichever writer reaches the cache first runs the extraction,
+        # under its own job description; the cache's block locks keep the
+        # other from computing any partition twice.
+        _run_concurrently(spark, [
+            ("lineage: extract + write extracted", lambda: (
+                staged.write.mode("overwrite").partitionBy("bucket")
+                .parquet(os.path.join(out_dir, "extracted")))),
+            ("lineage: write spans", lambda: (
+                with_bucket(spans_table(staged), n_buckets)
+                .write.mode("overwrite").partitionBy("bucket")
+                .parquet(os.path.join(out_dir, "spans")))),
+        ])
+        # the ledger is appended last: a crash before it leaves this run's
+        # buckets pending, and the resume rewrites their directories
+        wall_ms = int((time.time() - t0) * 1000)
+        _described(spark, "lineage: append ledger", lambda: (
+            lineage_rollup(staged.select("bucket", "url", "text"))
+            .withColumn("wall_ms", F.lit(wall_ms))
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(lineage_path)))
+    finally:
+        staged.unpersist()
     return {"processed_buckets": todo, "wall_ms": wall_ms}
 
 

@@ -6,7 +6,10 @@
 * spans table shape + ordering,
 * lineage rows present; checkpoint-resume processes only missing buckets,
   also when a bucket spans several files,
-* the extraction job's fixed costs: jobs, ledger files, write tasks.
+* the extraction job's fixed costs: jobs, ledger files, write tasks,
+* one persisted extraction result feeds every sink: no read-back, the
+  cache is released, a failed write leaves the run resumable, and each
+  phase's jobs are named.
 """
 
 import os
@@ -170,9 +173,9 @@ def test_split_buckets_survive_resume(spark, pages, tmp_path_factory):
 
 def test_extraction_job_and_file_budget(spark, pages, tmp_path_factory):
     """Fixed costs of one extraction job: the pending set of a fresh job
-    runs no Spark job, every run appends one ledger file, and the
-    extracted write runs no more post-shuffle tasks than there are cores
-    on a tiny corpus."""
+    runs no Spark job, every run appends one ledger file, and neither the
+    stage that reads the bucket shuffle nor any write runs more tasks than
+    there are cores on a tiny corpus."""
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     tracker = spark.sparkContext.statusTracker()
     out = str(tmp_path_factory.mktemp("budget_out"))
@@ -182,29 +185,116 @@ def test_extraction_job_and_file_budget(spark, pages, tmp_path_factory):
     assert pending_buckets(spark, n_buckets, out + "/lineage") == list(range(n_buckets))
     assert dag.numTotalJobs() == before, "pending_buckets ran a Spark job"
 
+    def ledger_files():
+        d = out + "/lineage"
+        return [f for f in os.listdir(d) if f.endswith(".parquet")] if os.path.isdir(d) else []
+
     bucketed = with_bucket(pages, n_buckets)
     runs = []
     for upto in (3, 6, n_buckets):  # one fresh run, then two resumes
-        first = dag.numTotalJobs()
+        first, n_files = dag.numTotalJobs(), len(ledger_files())
         r = run_with_lineage(
             spark, bucketed.filter(F.col("bucket") < upto).drop("bucket"),
             out, n_buckets=n_buckets)
         runs.append((r, range(first, dag.numTotalJobs())))
+        assert len(ledger_files()) == n_files + 1, "a run must append one ledger file"
     assert [r["processed_buckets"] for r, _ in runs] == [
         list(range(n_buckets)), [3, 4, 5, 6, 7], [6, 7]]
-    ledger_files = [f for f in os.listdir(out + "/lineage")
-                    if f.endswith(".parquet")]
-    assert len(ledger_files) == len(runs)
 
-    # the extracted write is the run's first stage that reads a shuffle
-    # and writes output; the status store is fed asynchronously, and once
-    # it is full it evicts skipped stages first (they never qualify)
+    # the shuffled extraction result is read once, into the cache, and the
+    # writes read the cache; the status store is fed asynchronously, and
+    # once it is full it evicts skipped stages first (they never qualify)
     sc = spark.sparkContext
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     store = sc._jsc.sc().statusStore()
     for _, jobs in runs:
-        stages = sorted(s for j in jobs for s in tracker.getJobInfo(j).stageIds
-                        if tracker.getStageInfo(s))
-        write = next(sd for sd in map(store.lastStageAttempt, stages)
-                     if sd.shuffleReadBytes() > 0 and sd.outputBytes() > 0)
-        assert write.numTasks() <= sc.defaultParallelism
+        stages = sorted({s for j in jobs for s in tracker.getJobInfo(j).stageIds
+                         if tracker.getStageInfo(s)})
+        details = list(map(store.lastStageAttempt, stages))
+        reads = [sd for sd in details if sd.shuffleReadBytes() > 0]
+        writes = [sd for sd in details if sd.outputBytes() > 0]
+        assert reads and len(writes) == 3
+        for sd in reads + writes:
+            assert sd.numTasks() <= sc.defaultParallelism, sd.name()
+
+
+def _cache_entries(spark):
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def test_run_reads_back_nothing_it_wrote(spark, pages, tmp_path_factory, monkeypatch):
+    """All three sinks are fed from one persisted extraction result: no run,
+    fresh or resumed, reads its own `extracted` or `spans` output, and the
+    persisted frame is released when the run returns."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    out = str(tmp_path_factory.mktemp("noreread_out"))
+    n_buckets = 8
+    read = []
+    real_parquet = DataFrameReader.parquet
+
+    def recording_parquet(self, *paths, **options):
+        read.extend(paths)
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording_parquet)
+    cached = _cache_entries(spark)
+    run_with_lineage(spark, pages, out, n_buckets=n_buckets)
+    assert _cache_entries(spark) == cached
+    _drop_from_ledger(spark, out, [2, 5])
+    r = run_with_lineage(spark, pages, out, n_buckets=n_buckets)
+    assert r["processed_buckets"] == [2, 5]
+    assert _cache_entries(spark) == cached
+    own = [p for p in read if os.path.relpath(p, out).split(os.sep)[0]
+           in ("extracted", "spans")]
+    assert read and own == []
+
+
+def test_failed_write_leaves_run_resumable(spark, pages, tmp_path_factory, monkeypatch):
+    """A write that fails in one writer thread fails the run: no ledger row
+    is appended, the persisted frame is released, and the next run
+    processes every bucket into the same ledger as a clean run."""
+    from no_ocr_spark.plans import lineage
+
+    n_buckets = 8
+    ref = str(tmp_path_factory.mktemp("fault_ref"))
+    run_with_lineage(spark, pages, ref, n_buckets=n_buckets)
+
+    out = str(tmp_path_factory.mktemp("fault_out"))
+    real_spans = lineage.spans_table
+    monkeypatch.setattr(lineage, "spans_table", lambda result: real_spans(result)
+                        .withColumn("page", F.coalesce(
+                            F.raise_error(F.lit("boom")).cast("int"), "page")))
+    cached = _cache_entries(spark)
+    with pytest.raises(Exception, match="boom"):
+        run_with_lineage(spark, pages, out, n_buckets=n_buckets)
+    assert _cache_entries(spark) == cached
+    assert not os.path.exists(out + "/lineage")
+    assert pending_buckets(spark, n_buckets, out + "/lineage") == list(range(n_buckets))
+
+    monkeypatch.setattr(lineage, "spans_table", real_spans)
+    r = run_with_lineage(spark, pages, out, n_buckets=n_buckets)
+    assert r["processed_buckets"] == list(range(n_buckets))
+    assert _ledger(spark, out) == _ledger(spark, ref)
+    assert (spark.read.parquet(out + "/spans").count()
+            == spark.read.parquet(ref + "/spans").count())
+
+
+def test_run_names_its_jobs(spark, pages, tmp_path_factory):
+    """Each phase of a run carries its own job description, the writer
+    threads inherit the caller's job group, and the caller's description
+    is unchanged afterwards."""
+    sc = spark.sparkContext
+    out = str(tmp_path_factory.mktemp("names_out"))
+    sc.setJobGroup("lineage-names", "caller")
+    try:
+        run_with_lineage(spark, pages, out, n_buckets=4)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    jobs = sc.statusTracker().getJobIdsForGroup("lineage-names")
+    described = {store.job(j).description().get() for j in jobs}
+    assert described == {"lineage: extract + write extracted",
+                         "lineage: write spans", "lineage: append ledger"}
