@@ -24,11 +24,11 @@ dynamic partition overwrite per bucket and journaled crash replay.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from no_ocr_spark.session import scratch_dir
 from no_ocr_spark.sources.merge import delete_keys, merge_upsert, read_merged
 from no_ocr_spark.sources.tables import load_table
 
@@ -50,7 +50,7 @@ def q_merge_upsert_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dels = docs.filter(F.col("doc_id") % 10 == 0).select("doc_id")
 
-    # DETERMINISTIC per-sf table dir (not a fresh mkdtemp per invocation —
+    # One table dir per session and sf (not a fresh mkdtemp per invocation —
     # repeated composes would accumulate copies in /tmp). Re-running the
     # op sequence on the previous final state CONVERGES to the same
     # result: every key in the final set ((%2 or %3) minus %10) is
@@ -58,8 +58,8 @@ def q_merge_upsert_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-deleted, so stale state cannot leak into the returned rows. The
     # returned DataFrame reads the dir lazily, so it must outlive this
     # function.
-    path = os.path.join(tempfile.gettempdir(), "no_ocr_merge_gate",
-                        os.path.basename(sf_dir.rstrip("/")), "t")
+    path = scratch_dir(spark, "no_ocr_merge_gate",
+                       os.path.basename(sf_dir.rstrip("/")), "t")
     merge_upsert(spark, path, base, key="doc_id", n_buckets=_N_BUCKETS)
     merge_upsert(spark, path, upd, key="doc_id", n_buckets=_N_BUCKETS)
     delete_keys(spark, path, dels, key="doc_id", n_buckets=_N_BUCKETS)

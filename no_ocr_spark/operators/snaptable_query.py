@@ -4,18 +4,18 @@ read BOTH versions back (latest + time travel) and vacuum. The DuckDB
 oracle pins the exact row sets each version must yield — a red row means a
 broken commit, a leaking snapshot, or time travel returning the wrong file
 set. Like merge_upsert_read, the query deliberately RUNS the writes at
-compose time (it exercises a writer) against a deterministic per-sf dir;
+compose time (it exercises a writer) against a per-session, per-sf dir;
 the trailing vacuum(keep_versions=2) bounds on-disk growth across repeated
 invocations AND exercises the GC path under the parity bar."""
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from no_ocr_spark.session import scratch_dir
 from no_ocr_spark.sources import snaptable as st
 from no_ocr_spark.sources.tables import load_table
 
@@ -24,8 +24,8 @@ def q_snapshot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     base = docs.filter(F.col("doc_id") % 4 == 0)
     extra = docs.filter(F.col("doc_id") % 4 == 1)
-    path = os.path.join(tempfile.gettempdir(), "no_ocr_snap_gate",
-                        os.path.basename(sf_dir.rstrip("/")), "t")
+    path = scratch_dir(spark, "no_ocr_snap_gate",
+                       os.path.basename(sf_dir.rstrip("/")), "t")
     v1 = st.write(spark, path, base, mode="overwrite")
     v2 = st.write(spark, path, extra, mode="append")
     st.vacuum(spark, path, keep_versions=2)

@@ -11,19 +11,19 @@ either a lost/duplicated record or a corrupted payload.
 
 Like merge_upsert_read, this query deliberately RUNS the write at compose
 time (it exercises a writer; it is not a plan-builder) and reads back
-lazily from a per-invocation temp dir.
+lazily from a per-session scratch dir (`session.scratch_dir`).
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.operators.extraction_queries import pages_from_documents
 from no_ocr_spark.plans.partitioning import fan_out_for_cpu
+from no_ocr_spark.session import scratch_dir
 from no_ocr_spark.sources.tables import load_table
 from no_ocr_spark.sources.warc import pages_from_warc, pages_to_warc
 
@@ -32,12 +32,12 @@ def q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = pages_from_documents(spark, sf_dir).select(
         "url", "warc_ts", "html"
     )
-    # DETERMINISTIC per-sf dir, not a fresh mkdtemp per compose: the sink
-    # clears stale parts itself, so repeated invocations overwrite one
-    # corpus copy instead of accumulating copies in /tmp (tmpfs = RAM on
-    # the sandbox) across parity/audit/bench loops
-    out = os.path.join(tempfile.gettempdir(), "no_ocr_warc_gate",
-                       os.path.basename(sf_dir.rstrip("/")))
+    # one dir per session and sf, not a fresh mkdtemp per compose: the
+    # sink clears stale parts itself, so repeated invocations overwrite one
+    # corpus copy instead of accumulating copies in /tmp across
+    # parity/audit/bench loops
+    out = scratch_dir(spark, "no_ocr_warc_gate",
+                      os.path.basename(sf_dir.rstrip("/")))
     pages_to_warc(pages, out, compress=True)
     back = pages_from_warc(spark, out).select(
         "url",
@@ -78,8 +78,8 @@ def q_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                "+ make_interval(0, 0, 0, 0, 0, 0, doc_id)").alias("warc_ts"),
         F.coalesce(F.col("text"), F.lit("")).alias("text"),
     )
-    out = os.path.join(tempfile.gettempdir(), "no_ocr_wet_gate",
-                       os.path.basename(sf_dir.rstrip("/")))
+    out = scratch_dir(spark, "no_ocr_wet_gate",
+                      os.path.basename(sf_dir.rstrip("/")))
     # fan the sink input out: one task per part file, so the gzip and the
     # read-back parse both run on every core
     texts_to_wet(fan_out_for_cpu(docs, spark), out, compress=True)
@@ -122,8 +122,8 @@ def q_wat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                " 0, 0, cast(regexp_extract(url, 'doc(\\\\d+)$', 1) as"
                " bigint))"),
     ).localCheckpoint()
-    out = os.path.join(tempfile.gettempdir(), "no_ocr_wat_gate",
-                       os.path.basename(sf_dir.rstrip("/")))
+    out = scratch_dir(spark, "no_ocr_wat_gate",
+                      os.path.basename(sf_dir.rstrip("/")))
     pages_to_wat(metadata_from_pages(pages), out)
     back = wat_from_files(spark, out)
     src = pages.select("url", F.col("warc_ts").alias("ts_src"))
@@ -183,8 +183,8 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = documents_as_jsonl_rows(spark, sf_dir)
-    out = os.path.join(tempfile.gettempdir(), "no_ocr_jsonl_gate",
-                       os.path.basename(sf_dir.rstrip("/")))
+    out = scratch_dir(spark, "no_ocr_jsonl_gate",
+                      os.path.basename(sf_dir.rstrip("/")))
     docs_to_jsonl(fan_out_for_cpu(docs, spark), out, compress=True)
     back = docs_from_jsonl(spark, out).select(
         "id",
@@ -239,8 +239,8 @@ def q_warc_revisit_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "html",
     )
     crawl = pages.unionByName(mirrors)
-    out = os.path.join(tempfile.gettempdir(), "no_ocr_revisit_gate",
-                       os.path.basename(sf_dir.rstrip("/")))
+    out = scratch_dir(spark, "no_ocr_revisit_gate",
+                      os.path.basename(sf_dir.rstrip("/")))
     pages_to_warc_dedup(crawl, out, compress=True)
     back = pages_from_warc_resolved(spark, out).select(
         "url",

@@ -7,14 +7,26 @@ Tuned for correctness-comparable, scale-ready plans:
   * UTC session timezone (duckdb-oracle comparability),
   * shuffle partitions sized to cores for local mode (a 1000-executor
     deployment overrides via spark-submit --conf; nothing here assumes
-    local mode except the default master).
+    local mode except the default master),
+  * file:// served by `jvm/PosixLocalFileSystem.java` whenever this call
+    launches the JVM: without libhadoop, Hadoop's local FileSystem forks a
+    `chmod` for every file, `.crc` sidecar and directory it creates; this
+    one sets the same modes in-process and keeps the checksums.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+LOCAL_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                            "jvm", "posix-localfs.jar")
+LOCAL_FS_CLASS = "no_ocr_spark.jvm.PosixLocalFileSystem"
 
 
 def get_spark(app: str = "no_ocr_spark", master: str | None = None,
@@ -29,6 +41,13 @@ def get_spark(app: str = "no_ocr_spark", master: str | None = None,
     # the caller passes one explicitly.
     if master is not None or "PYSPARK_GATEWAY_PORT" not in os.environ:
         builder = builder.master(master or f"local[{cpus}]")
+    # The jar reaches the classpath only through the launch command, so the
+    # FileSystem is named only when this call starts the JVM; a submitted
+    # job passes both itself (see README). A JVM started earlier by this
+    # process keeps both as system properties for its later sessions.
+    if "PYSPARK_GATEWAY_PORT" not in os.environ and SparkContext._gateway is None:
+        builder = (builder.config("spark.driver.extraClassPath", LOCAL_FS_JAR)
+                   .config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS))
     builder = (
         builder.appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -68,3 +87,20 @@ def get_spark(app: str = "no_ocr_spark", master: str | None = None,
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def scratch_dir(spark: SparkSession, *parts: str) -> str:
+    """A temp path private to `spark`'s application, for the tables a query
+    writes while it is composed: two concurrent sessions never overwrite or
+    vacuum each other's copy. The application's tree is removed when this
+    process exits, so repeated sessions do not pile copies up in the temp
+    dir (tmpfs = RAM on many hosts)."""
+    root = os.path.join(tempfile.gettempdir(), "no_ocr_spark_scratch",
+                        spark.sparkContext.applicationId)
+    try:
+        os.makedirs(root)
+    except FileExistsError:
+        pass
+    else:
+        atexit.register(shutil.rmtree, root, True)
+    return os.path.join(root, *parts)
