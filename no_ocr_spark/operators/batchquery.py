@@ -73,5 +73,5 @@ def _oracle() -> str:
     """
 
 
-EXTRA_QUERIES = {"batch_cosine_topk": q_batch_cosine_topk}
-EXTRA_ORACLES = {"batch_cosine_topk": _oracle()}
+QUERIES = {"batch_cosine_topk": q_batch_cosine_topk}
+ORACLES = {"batch_cosine_topk": _oracle()}

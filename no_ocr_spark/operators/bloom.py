@@ -117,10 +117,7 @@ def q_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return probe(docs, bitset)
 
 
-# Round-5 gate rotation: driver-graded (exact-FP md5 oracle).
 QUERIES = {"bloom_dedup": q_bloom_dedup}
-EXTRA_QUERIES: dict = {}
-EXTRA_ORACLES: dict = {}
 
 
 def _oracle() -> str:

@@ -137,5 +137,5 @@ def _oracle() -> str:
     """
 
 
-EXTRA_QUERIES = {"bm25_topk": q_bm25_topk}
-EXTRA_ORACLES = {"bm25_topk": _oracle()}
+QUERIES = {"bm25_topk": q_bm25_topk}
+ORACLES = {"bm25_topk": _oracle()}

@@ -225,6 +225,5 @@ def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_encode_df(spark, docs, merges)
 
 
-QUERIES: dict = {}
-EXTRA_QUERIES = {"bpe_tokenize": q_bpe_tokenize}
-EXTRA_ORACLES: dict = {}  # iterative training: pytest independent-oracle
+QUERIES = {"bpe_tokenize": q_bpe_tokenize}
+ORACLES: dict = {}  # iterative training: pytest independent-oracle

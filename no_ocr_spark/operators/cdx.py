@@ -109,10 +109,9 @@ def q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES: dict = {}
-EXTRA_QUERIES = {"cdx_index": q_cdx_index}
+QUERIES = {"cdx_index": q_cdx_index}
 
-EXTRA_ORACLES = {
+ORACLES = {
     "cdx_index": f"""
         WITH caps AS (
           SELECT doc_id,

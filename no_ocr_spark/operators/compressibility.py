@@ -77,7 +77,7 @@ def q_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES = {"compression_ratio": q_compression_ratio}
+QUERIES = {"compression_ratio": q_compression_ratio}
 # no SQL oracle by design (deflate is not SQL-expressible); exact
 # per-doc byte counts are pinned by tests/test_compressibility.py
-EXTRA_ORACLES: dict = {}
+ORACLES: dict = {}

@@ -69,5 +69,5 @@ _ORACLE = """
     FROM sig GROUP BY source, lang
 """
 
-EXTRA_QUERIES = {"corpus_datacard": q_corpus_datacard}
-EXTRA_ORACLES = {"corpus_datacard": _ORACLE}
+QUERIES = {"corpus_datacard": q_corpus_datacard}
+ORACLES = {"corpus_datacard": _ORACLE}

@@ -649,13 +649,3 @@ ORACLES = {
         WHERE bit_count(xor(a.simhash, b.simhash)) <= 2
     """,
 }
-
-# Round-4 gate rotation (VERDICT r3 §Next #1): the signature-only
-# dedup_simhash is subsumed by its graded _pairs counterpart (which computes
-# the same signatures and then the banded join on top), so it sits in the
-# held-out extras registry. Identical DuckDB-parity bar locally
-# (tests/test_oracle_parity.py).
-_ROTATED_OUT = ["dedup_simhash"]
-EXTRA_QUERIES = {k: QUERIES.pop(k) for k in _ROTATED_OUT}
-EXTRA_ORACLES = {k: ORACLES.pop(k) for k in _ROTATED_OUT}
-

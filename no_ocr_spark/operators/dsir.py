@@ -149,8 +149,7 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     ))
 
 
-QUERIES: dict = {}
-EXTRA_QUERIES = {"dsir_select": q_dsir_select}
+QUERIES = {"dsir_select": q_dsir_select}
 
 
 def _oracle() -> str:
@@ -215,4 +214,4 @@ def _oracle() -> str:
     """
 
 
-EXTRA_ORACLES = {"dsir_select": _oracle()}
+ORACLES = {"dsir_select": _oracle()}

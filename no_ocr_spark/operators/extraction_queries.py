@@ -1,10 +1,9 @@
 """Extraction-pipeline queries for the driver contract.
 
 These run the REAL extraction path (Arrow-batched mapInPandas over the
-from-scratch extractor). They are not SQL-expressible (the extractor is the
-whole point), so they have no DuckDB oracle — correctness is covered by the
-byte-identity golden tests in tests/test_pipeline_e2e.py; the driver records
-a rows-only check (allowed for non-SQL-expressible ops).
+from-scratch extractor). The extractor is not SQL-expressible, so each
+DuckDB oracle reads a committed golden instead (see ORACLES below): the
+expected records are re-derived in pure Python by scripts/gen_goldens.py.
 """
 
 from __future__ import annotations

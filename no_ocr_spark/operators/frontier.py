@@ -100,5 +100,5 @@ def _oracle() -> str:
     """
 
 
-EXTRA_QUERIES = {"frontier_schedule": q_frontier_schedule}
-EXTRA_ORACLES = {"frontier_schedule": _oracle()}
+QUERIES = {"frontier_schedule": q_frontier_schedule}
+ORACLES = {"frontier_schedule": _oracle()}

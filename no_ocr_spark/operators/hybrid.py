@@ -110,5 +110,5 @@ _ORACLE = f"""
     ORDER BY rrf DESC, doc_id LIMIT {TOP_K}
 """
 
-EXTRA_QUERIES = {"hybrid_rrf": q_hybrid_rrf}
-EXTRA_ORACLES = {"hybrid_rrf": _ORACLE}
+QUERIES = {"hybrid_rrf": q_hybrid_rrf}
+ORACLES = {"hybrid_rrf": _ORACLE}

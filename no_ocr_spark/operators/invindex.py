@@ -121,5 +121,5 @@ def _tf_oracle() -> str:
     """
 
 
-EXTRA_QUERIES = {"bm25_indexed_topk": q_bm25_indexed_topk}
-EXTRA_ORACLES = {"bm25_indexed_topk": _tf_oracle()}
+QUERIES = {"bm25_indexed_topk": q_bm25_indexed_topk}
+ORACLES = {"bm25_indexed_topk": _tf_oracle()}

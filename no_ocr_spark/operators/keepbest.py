@@ -54,7 +54,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle() -> str:
     from no_ocr_spark.operators.graph import ORACLES as G
-    from no_ocr_spark.operators.textstats import EXTRA_ORACLES as T
+    from no_ocr_spark.operators.textstats import ORACLES as T
 
     # graph.py's oracle is a full statement with its own WITH RECURSIVE;
     # nest both legs as subqueries to keep each module's SQL sovereign
@@ -78,5 +78,5 @@ def _oracle() -> str:
     """
 
 
-EXTRA_QUERIES = {"dedup_keep_best": q_dedup_keep_best}
-EXTRA_ORACLES = {"dedup_keep_best": _oracle()}
+QUERIES = {"dedup_keep_best": q_dedup_keep_best}
+ORACLES = {"dedup_keep_best": _oracle()}

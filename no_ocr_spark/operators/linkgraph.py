@@ -325,8 +325,7 @@ def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank_fixed_point(edges, init_rank=SCALE // HOSTS)
 
 
-QUERIES: dict = {}
-EXTRA_QUERIES = {
+QUERIES = {
     "host_link_graph": q_host_link_graph,
     "host_pagerank": q_host_pagerank,
     "anchor_text_topk": q_anchor_text_topk,
@@ -386,7 +385,7 @@ def _pagerank_sql() -> str:
     return "".join(cte)
 
 
-EXTRA_ORACLES = {
+ORACLES = {
     "host_link_graph": _EDGES_CTE
     + "\nSELECT src_host, dst_host, w FROM edges",
     "host_pagerank": _pagerank_sql(),

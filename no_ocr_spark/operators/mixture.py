@@ -78,10 +78,9 @@ def q_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mixture_repeats(docs)
 
 
-QUERIES: dict = {}
-EXTRA_QUERIES = {"mixture_resample": q_mixture_resample}
+QUERIES = {"mixture_resample": q_mixture_resample}
 
-EXTRA_ORACLES = {
+ORACLES = {
     "mixture_resample": f"""
         WITH per_src AS (
           SELECT source, count(*) AS n_s, {_W_DUCK} AS w_s

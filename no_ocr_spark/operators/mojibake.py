@@ -118,7 +118,7 @@ def q_mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES = {"mojibake_repair": q_mojibake_repair}
+QUERIES = {"mojibake_repair": q_mojibake_repair}
 # no SQL oracle by design (no charset conversion in SQL); exact repair
 # is pinned by tests/test_mojibake.py with Python's codecs
-EXTRA_ORACLES: dict = {}
+ORACLES: dict = {}

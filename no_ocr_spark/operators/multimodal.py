@@ -21,7 +21,7 @@ Two decode legs:
 * STUB — only `multimodal_meta` keeps the original clearly-marked
   deterministic fake, proving the bare Spark plumbing (binary column,
   Arrow transport, batch-shaped UDF, typed struct out) with its own SQL
-  oracle — it stays because its oracle is driver-graded.
+  oracle.
 """
 
 from __future__ import annotations
@@ -204,15 +204,20 @@ def q_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return payloads.mapInPandas(_jpeg_decode_batches, schema=_JPEG_SCHEMA)
 
 
-# Round-5 gate rotation: the codec queries (T4/T5 evidence) are
-# driver-graded; base64_roundtrip (pure built-ins) stays held out.
 QUERIES = {"multimodal_meta": q_multimodal_meta,
            "image_thumbnails": q_image_thumbnails,
            "jpeg_roundtrip": q_jpeg_roundtrip}
 
-EXTRA_QUERIES: dict = {}
-
-_GATE_ORACLES = {
+ORACLES = {
+    "multimodal_meta": """
+        SELECT doc_id,
+               octet_length(encode(text))::BIGINT AS n_bytes,
+               (64 + octet_length(encode(text)) % 512)::INT AS width,
+               (64 + (octet_length(encode(text)) * 7) % 512)::INT AS height,
+               3::INT AS channels,
+               'fakeimg' AS fmt
+        FROM documents
+    """,
     # pixel(y,x,c) = (doc_id + x + y*W + 7c) % 256; thumb(y,x,c) =
     # pixel((y*H)//4, (x*W)//4, c) — same floor mapping as resize_nearest
     "image_thumbnails": """
@@ -247,18 +252,3 @@ _GATE_ORACLES = {
         FROM documents d
     """,
 }
-
-ORACLES = {
-    "multimodal_meta": """
-        SELECT doc_id,
-               octet_length(encode(text))::BIGINT AS n_bytes,
-               (64 + octet_length(encode(text)) % 512)::INT AS width,
-               (64 + (octet_length(encode(text)) * 7) % 512)::INT AS height,
-               3::INT AS channels,
-               'fakeimg' AS fmt
-        FROM documents
-    """,
-}
-
-ORACLES.update(_GATE_ORACLES)
-EXTRA_ORACLES: dict = {}

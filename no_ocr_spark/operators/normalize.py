@@ -128,5 +128,5 @@ _ORACLE = f"""
     FROM norm
 """
 
-EXTRA_QUERIES = {"normalize_text": q_normalize_text}
-EXTRA_ORACLES = {"normalize_text": _ORACLE}
+QUERIES = {"normalize_text": q_normalize_text}
+ORACLES = {"normalize_text": _ORACLE}

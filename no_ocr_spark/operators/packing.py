@@ -68,11 +68,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.groupBy("lang").applyInPandas(_pack_group, schema=_SCHEMA)
 
 
-# Round-5 gate rotation: driver-graded (recursive-CTE oracle).
 QUERIES = {"pack_sequences": q_pack_sequences}
-
-EXTRA_QUERIES: dict = {}
-EXTRA_ORACLES: dict = {}
 
 ORACLES = {
     # independent formulation: recursive CTE stepping the per-group row

@@ -129,8 +129,7 @@ def q_perplexity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ))
 
 
-QUERIES: dict = {}
-EXTRA_QUERIES = {"perplexity_score": q_perplexity_score}
+QUERIES = {"perplexity_score": q_perplexity_score}
 
 
 def _oracle() -> str:
@@ -176,4 +175,4 @@ def _oracle() -> str:
     """
 
 
-EXTRA_ORACLES = {"perplexity_score": _oracle()}
+ORACLES = {"perplexity_score": _oracle()}

@@ -96,5 +96,5 @@ def _oracle() -> str:
     """
 
 
-EXTRA_QUERIES = {"phrase_search": q_phrase_search}
-EXTRA_ORACLES = {"phrase_search": _oracle()}
+QUERIES = {"phrase_search": q_phrase_search}
+ORACLES = {"phrase_search": _oracle()}

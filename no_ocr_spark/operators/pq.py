@@ -301,5 +301,5 @@ def _pq_oracle() -> str:
     """
 
 
-EXTRA_QUERIES = {"ann_pq_topk": q_ann_pq_topk}
-EXTRA_ORACLES = {"ann_pq_topk": _pq_oracle()}
+QUERIES = {"ann_pq_topk": q_ann_pq_topk}
+ORACLES = {"ann_pq_topk": _pq_oracle()}

@@ -169,9 +169,8 @@ def q_ann_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_probe=N_PROBE)
 
 
-QUERIES: dict = {}
-EXTRA_QUERIES = {"ann_sq8_topk": q_ann_sq8_topk,
-                 "ann_ivf_sq8_topk": q_ann_ivf_sq8_topk}
+QUERIES = {"ann_sq8_topk": q_ann_sq8_topk,
+           "ann_ivf_sq8_topk": q_ann_ivf_sq8_topk}
 
 
 def _oracle() -> str:
@@ -271,5 +270,5 @@ def _ivf_oracle() -> str:
     """
 
 
-EXTRA_ORACLES = {"ann_sq8_topk": _oracle(),
-                 "ann_ivf_sq8_topk": _ivf_oracle()}
+ORACLES = {"ann_sq8_topk": _oracle(),
+           "ann_ivf_sq8_topk": _ivf_oracle()}

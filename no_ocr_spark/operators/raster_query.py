@@ -95,12 +95,7 @@ def q_page_rasters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Round-5 gate rotation: S3's raster query is driver-graded (VERDICT r4
-# noted S3 had local-oracle evidence only while the gate was full).
 QUERIES = {"page_rasters": q_page_rasters}
-
-EXTRA_QUERIES: dict = {}
-EXTRA_ORACLES: dict = {}
 
 
 def _font_values_sql() -> str:

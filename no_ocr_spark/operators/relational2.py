@@ -242,17 +242,6 @@ QUERIES = {
     "grouped_stats_pandas": q_grouped_stats_pandas,
 }
 
-# Round-4 gate rotation (VERDICT r3 §Next #1): the driver grades only the
-# first 50 registered queries, and these six are beyond-SURVEY-§2
-# "extended relational surface" — rotated into the held-out extras
-# registry to free gate slots for the round-3 web-curation / repetition /
-# decontamination family and the journaled-merge query. They keep the
-# identical DuckDB-parity bar locally (tests/test_oracle_parity.py grades
-# queries() and extra_queries() alike). grouped_stats_pandas stays graded
-# (it is the §2.12 Arrow-grouped-map evidence row).
-_ROTATED_OUT = ["percentiles", "range_join", "salted_group_count",
-                "cube_stats", "pivot_events", "asof_join"]
-
 ORACLES = {
     "percentiles": """
         SELECT event_type, count(*) AS n,
@@ -309,6 +298,3 @@ ORACLES = {
         FROM events GROUP BY user_id
     """,
 }
-
-EXTRA_QUERIES = {k: QUERIES.pop(k) for k in _ROTATED_OUT}
-EXTRA_ORACLES = {k: ORACLES.pop(k) for k in _ROTATED_OUT}

@@ -132,10 +132,7 @@ def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             ))
 
 
-# Round-5 gate rotation: driver-graded.
 QUERIES = {"robots_filter": q_robots_filter}
-EXTRA_QUERIES: dict = {}
-EXTRA_ORACLES: dict = {}
 
 ORACLES = {
     # the oracle recomputes the planted rules ARITHMETICALLY (it never

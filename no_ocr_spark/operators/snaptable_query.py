@@ -1,5 +1,5 @@
-"""Snapshot-table (Iceberg stand-in) as an oracle-checked query (extras
-registry): overwrite-commit a base set, append-commit an extension, then
+"""Snapshot-table (Iceberg stand-in) as an oracle-checked query:
+overwrite-commit a base set, append-commit an extension, then
 read BOTH versions back (latest + time travel) and vacuum. The DuckDB
 oracle pins the exact row sets each version must yield — a red row means a
 broken commit, a leaking snapshot, or time travel returning the wrong file

@@ -88,5 +88,5 @@ def _oracle() -> str:
     """
 
 
-EXTRA_QUERIES = {"search_snippets": q_search_snippets}
-EXTRA_ORACLES = {"search_snippets": _oracle()}
+QUERIES = {"search_snippets": q_search_snippets}
+ORACLES = {"search_snippets": _oracle()}

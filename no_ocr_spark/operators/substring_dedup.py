@@ -144,8 +144,7 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ))
 
 
-QUERIES: dict = {}
-EXTRA_QUERIES = {"substring_dedup": q_substring_dedup}
+QUERIES = {"substring_dedup": q_substring_dedup}
 
 
 def _oracle() -> str:
@@ -187,4 +186,4 @@ def _oracle() -> str:
     """
 
 
-EXTRA_ORACLES = {"substring_dedup": _oracle()}
+ORACLES = {"substring_dedup": _oracle()}

@@ -297,10 +297,3 @@ ORACLES = {
         FROM sig
     """,
 }
-
-# Round-5 gate rotation: corpus_filter composes the same quality-scoring
-# formula end-to-end (plus dedup + length gates), so the standalone
-# quality_score row adds no unique gate evidence — held out to free a
-# slot for the round-4 family; full DuckDB parity retained locally.
-EXTRA_QUERIES = {"quality_score": QUERIES.pop("quality_score")}
-EXTRA_ORACLES = {"quality_score": ORACLES.pop("quality_score")}

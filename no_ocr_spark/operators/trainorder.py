@@ -77,5 +77,5 @@ _ORACLE = f"""
     FROM keyed
 """
 
-EXTRA_QUERIES = {"train_order": q_train_order}
-EXTRA_ORACLES = {"train_order": _ORACLE}
+QUERIES = {"train_order": q_train_order}
+ORACLES = {"train_order": _ORACLE}

@@ -1,4 +1,4 @@
-"""WARC sink round-trip as an oracle-checked query (extras registry).
+"""WARC sink round-trip as an oracle-checked query.
 
 The sink (`sources/warc.py pages_to_warc`) was pytest-only evidence; this
 query runs the full sink -> source cycle inside the parity harness: derive

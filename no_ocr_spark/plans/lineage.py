@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from no_ocr_spark.operators.extract_udf import extract, spans_table
 from no_ocr_spark.plans.partitioning import with_bucket
+from no_ocr_spark.sources.merge import _Fs
 
 LINEAGE_SCHEMA = (
     "bucket int, n_docs bigint, n_bytes bigint, checksum string, "
@@ -66,8 +67,10 @@ def lineage_rollup(extracted: DataFrame) -> DataFrame:
 
 
 def _done_buckets(spark: SparkSession, lineage_path: str) -> set[int]:
-    """Buckets marked done in the lineage ledger (empty if none exists)."""
-    if not os.path.exists(lineage_path):
+    """Buckets marked done in the lineage ledger (empty if none exists).
+    Existence is asked of the path's Hadoop FileSystem, so a file://,
+    hdfs:// or s3a:// out_dir resumes like a plain local path."""
+    if not _Fs(spark, lineage_path).exists(lineage_path):
         return set()
     return {
         r.bucket for r in spark.read.parquet(lineage_path)

@@ -56,11 +56,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _with_key_bucket(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
-    )
+from no_ocr_spark.plans.partitioning import with_bucket
 
 
 # ------------------------------------------------------ Hadoop FS helpers
@@ -312,7 +308,7 @@ def merge_upsert(
         .agg(F.max(F.struct(*data_cols)).alias("_r"))
         .select(key, *[F.col(f"_r.{c}").alias(c) for c in data_cols])
     )
-    upd = _with_key_bucket(upd, key, n_buckets)
+    upd = with_bucket(upd, n_buckets, url_col=key)
     touched = sorted(
         r.bucket for r in upd.select("bucket").distinct().collect()
     )
@@ -345,7 +341,7 @@ def delete_keys(
     cannot resurrect. Iceberg swap point: DELETE FROM ... WHERE key IN."""
     replayed = _recover(spark, table_path)
     fs = _Fs(spark, table_path)
-    k = _with_key_bucket(keys.select(key).distinct(), key, n_buckets)
+    k = with_bucket(keys.select(key).distinct(), n_buckets, url_col=key)
     touched = sorted(r.bucket for r in k.select("bucket").distinct().collect())
     if not touched or not fs.exists(table_path):
         return {"touched_buckets": [], "n_deleted": 0,

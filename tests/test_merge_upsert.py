@@ -6,6 +6,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from no_ocr_spark.plans.partitioning import with_bucket
 from no_ocr_spark.sources.merge import merge_upsert, read_merged
 
 
@@ -126,7 +127,7 @@ def test_upsert_crash_after_journal_commit_replays(spark, tmp_path_factory):
 
     # stage updates + commit the manifest, then "crash" (no apply)
     upd = _mk(spark, [(7, "done", 777)]).transform(
-        lambda d: M._with_key_bucket(d, "k", 4)
+        lambda d: with_bucket(d, 4, url_col="k")
     )
     M._stage(spark, path, upd, "upsert", "k",
              [r.bucket for r in upd.select("bucket").distinct().collect()])
@@ -153,7 +154,7 @@ def test_uncommitted_journal_entry_is_discarded(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("tbl7")) + "/t"
     merge_upsert(spark, path, _mk(spark, [(1, "a", 1)]), key="k", n_buckets=4)
     orphan = M._journal_root(path) + "/upsert-000"
-    M._with_key_bucket(_mk(spark, [(9, "ghost", 9)]), "k", 4).write.parquet(
+    with_bucket(_mk(spark, [(9, "ghost", 9)]), 4, url_col="k").write.parquet(
         orphan + "/data"
     )
     res = merge_upsert(spark, path, _mk(spark, [(2, "b", 2)]),
@@ -214,7 +215,7 @@ def test_journal_is_invisible_to_table_readers(spark, tmp_path_factory):
 
     path = str(tmp_path_factory.mktemp("tbl9")) + "/t"
     merge_upsert(spark, path, _mk(spark, [(1, "a", 1)]), key="k", n_buckets=4)
-    upd = M._with_key_bucket(_mk(spark, [(2, "b", 2)]), "k", 4)
+    upd = with_bucket(_mk(spark, [(2, "b", 2)]), 4, url_col="k")
     M._stage(spark, path, upd, "upsert", "k", [0])
     # a committed-but-unapplied journal entry must not pollute reads
     assert read_merged(spark, path).count() == 1
@@ -280,10 +281,9 @@ def test_journal_replays_in_staging_order(spark, tmp_path_factory, monkeypatch):
 
     # freeze the clock so both entries land in the same millisecond
     monkeypatch.setattr(_time, "time", lambda: 1700000000.0)
-    upd = m._with_key_bucket(_mk(spark, [(1, "new", 2)]), "k", 2)
+    upd = with_bucket(_mk(spark, [(1, "new", 2)]), 2, url_col="k")
     m._stage(spark, path, upd, "upsert", "k", [int(upd.first().bucket)])
-    k = m._with_key_bucket(
-        spark.createDataFrame([(1,)], "k bigint"), "k", 2)
+    k = with_bucket(spark.createDataFrame([(1,)], "k bigint"), 2, url_col="k")
     m._stage(spark, path, k.select("k", "bucket"), "delete", "k",
              [int(k.first().bucket)])
 

@@ -109,6 +109,19 @@ def test_lineage_and_resume(spark, pages, tmp_path_factory):
     assert r3["processed_buckets"] == []
 
 
+def test_resume_on_uri_out_dir(spark, tmp_path_factory):
+    """A file:// out_dir resumes like a plain path: the second run finds
+    every bucket done, and the ledger keeps one row per bucket."""
+    out = pathlib.Path(tmp_path_factory.mktemp("uri_out")).as_uri()
+    n_buckets = 4
+    few = pages_df(spark, 40)
+    assert run_with_lineage(spark, few, out, n_buckets=n_buckets)[
+        "processed_buckets"] == list(range(n_buckets))
+    r2 = run_with_lineage(spark, few, out, n_buckets=n_buckets)
+    assert r2["processed_buckets"] == []
+    assert spark.read.parquet(out + "/lineage").count() == n_buckets
+
+
 def test_lineage_checksum_order_independent(spark, pages):
     from no_ocr_spark.plans.lineage import lineage_rollup
 
