@@ -40,7 +40,6 @@ as plan observations — no extra count() passes).
 from __future__ import annotations
 
 import argparse
-import glob
 import json
 import os
 import sys
@@ -72,11 +71,13 @@ def run_incremental(spark, snapshot_in: str, out_dir: str,
     from no_ocr_spark.operators.cleanup import clean_corpus
     from no_ocr_spark.sources import snaptable
 
+    # out_dir may be any Hadoop URI (file://, hdfs://, s3a://): every
+    # file op below goes through its FileSystem, not the local disk
+    fs = snaptable._Fs(spark, out_dir)
     state_path = os.path.join(out_dir, "clean_state.json")
     from_v = 0
-    if os.path.exists(state_path):
-        with open(state_path) as f:
-            from_v = json.load(f)["cleaned_through"]
+    if fs.exists(state_path):
+        from_v = json.loads(fs.read_text(state_path))["cleaned_through"]
     to_v = snaptable.current_version(spark, snapshot_in)
     out: dict = {"mode": "incremental", "from_version": from_v,
                  "to_version": to_v}
@@ -90,11 +91,10 @@ def run_incremental(spark, snapshot_in: str, out_dir: str,
     # those rows were never committed to the ledger, so remove them —
     # leaving them would double every row they share with this run's
     # wider range in the combined delta=* dataset (review finding).
-    import shutil
     for root in ("clean", "hashes"):
-        for stale in glob.glob(os.path.join(out_dir, root,
-                                            f"delta=v{from_v}_*")):
-            shutil.rmtree(stale, ignore_errors=True)
+        for name in fs.listdir(os.path.join(out_dir, root)):
+            if name.startswith(f"delta=v{from_v}_"):
+                fs.delete(os.path.join(out_dir, root, name))
 
     # pin the range END to the probed version: a commit landing between
     # the probe and this read must wait for the next run, or its rows
@@ -110,9 +110,10 @@ def run_incremental(spark, snapshot_in: str, out_dir: str,
     # hash-ledger dirs from version ranges already consumed (end <=
     # from_v) — NOT any dir this very range wrote before a crash, which
     # would anti-join the re-run against its own output and empty it
+    hashes = os.path.join(out_dir, "hashes")
     prev_deltas = sorted(
-        d for d in glob.glob(os.path.join(out_dir, "hashes", "delta=*"))
-        if int(os.path.basename(d).rsplit("_", 1)[1]) <= from_v
+        os.path.join(hashes, d) for d in fs.listdir(hashes)
+        if d.startswith("delta=") and int(d.rsplit("_", 1)[1]) <= from_v
     )
     if prev_deltas:
         prev = spark.read.parquet(*prev_deltas)
@@ -140,9 +141,7 @@ def run_incremental(spark, snapshot_in: str, out_dir: str,
         )
     # state update is LAST: a crash anywhere above re-runs into the same
     # delta_* dirs (overwrite mode -> idempotent, no duplicated rows)
-    os.makedirs(out_dir, exist_ok=True)
-    with open(state_path, "w") as f:
-        json.dump({"cleaned_through": to_v}, f)
+    fs.write_atomic(state_path, json.dumps({"cleaned_through": to_v}))
     out.update(stats)
     # n_clean from the observation counts in-delta survivors; the written
     # delta additionally excludes cross-delta dupes

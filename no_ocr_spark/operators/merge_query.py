@@ -1,9 +1,10 @@
-"""Driver-graded query over the JOURNALED merge writer (SURVEY.md §2.9
+"""Gate-graded query over the copy-on-write merge writer (SURVEY.md §2.9
 W5/W6) — VERDICT r3 §Next #8: `merge_upsert`/`delete_keys` were unit-proven
 but invisible to the CORRECTNESS gate; this query routes a deterministic
-upsert → upsert → targeted-delete → read sequence through the journaled
-copy-on-write path (`sources/merge.py`) and exposes the final table state
-as a DataFrame the driver can hash against plain-SQL merge semantics.
+upsert → upsert → targeted-delete → read sequence through the bucket-level
+copy-on-write commits (`sources/merge.py` over `sources/snaptable.py`) and
+exposes the final table state as a DataFrame the gate hashes against
+plain-SQL merge semantics.
 
 Reference analogue: the case-status sidecar write-or-replace
 (`no-ocr-api/np_ocr/api.py:86-99, 241-252`) generalized to MERGE INTO.
@@ -11,14 +12,15 @@ Reference analogue: the case-status sidecar write-or-replace
 Determinism: base rows are documents with even doc_id; updates rewrite
 every doc_id % 3 == 0 row (lang -> 'xx', n_chars + 1000) — overlapping the
 base on doc_id % 6 == 0 and inserting the odd multiples of 3; the delete
-then removes doc_id % 10 == 0. All three ops go through the journal
-(stage → MANIFEST commit → bucket overwrite → entry delete), so the graded
-row-hash covers the full W5+W6 protocol, not just the happy read.
+then removes doc_id % 10 == 0. Each of the three ops is one snapshot
+commit (read touched buckets → write their new rows once → fenced
+metadata commit), so the graded row-hash covers the full W5+W6 path, not
+just the happy read.
 
 Scale note (100 TB): the query itself is gate-sized by design, but the
-path it exercises is the scale path — partition-level copy-on-write where
-only key-touched buckets are read/rewritten (never a table scan), with
-dynamic partition overwrite per bucket and journaled crash replay.
+path it exercises is the scale path — bucket-level copy-on-write where
+only key-touched buckets are read/rewritten (never a table scan) and one
+metadata commit swaps their entries.
 """
 
 from __future__ import annotations

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from no_ocr_spark.operators.extract_udf import extract, spans_table
 from no_ocr_spark.plans.partitioning import with_bucket
-from no_ocr_spark.sources.merge import _Fs
+from no_ocr_spark.sources import snaptable
 
 LINEAGE_SCHEMA = (
     "bucket int, n_docs bigint, n_bytes bigint, checksum string, "
@@ -70,7 +70,7 @@ def _done_buckets(spark: SparkSession, lineage_path: str) -> set[int]:
     """Buckets marked done in the lineage ledger (empty if none exists).
     Existence is asked of the path's Hadoop FileSystem, so a file://,
     hdfs:// or s3a:// out_dir resumes like a plain local path."""
-    if not _Fs(spark, lineage_path).exists(lineage_path):
+    if not snaptable._Fs(spark, lineage_path).exists(lineage_path):
         return set()
     return {
         r.bucket for r in spark.read.parquet(lineage_path)
@@ -199,8 +199,6 @@ def snapshot_buckets(spark: SparkSession, snap_path: str) -> set[int]:
     (metadata-only — no data scan). A non-compact commit written without
     the summary (foreign writer) falls back to a column-pruned distinct
     scan of the bucket column."""
-    from no_ocr_spark.sources import snaptable
-
     if snaptable.current_version(spark, snap_path) < 1:
         return set()
     have: set[int] = set()
@@ -242,8 +240,6 @@ def snapshot_extracted(spark: SparkSession, out_dir: str, snap_path: str,
     already committed are never re-appended. The bucket predicate prunes
     partition directories on the re-read, so the commit never rescans
     already-snapshotted buckets' data."""
-    from no_ocr_spark.sources import snaptable
-
     done = _done_buckets(spark, os.path.join(out_dir, "lineage"))
     have = snapshot_buckets(spark, snap_path)
     missing = sorted((set(processed_buckets) | done) - have)

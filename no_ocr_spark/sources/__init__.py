@@ -1,4 +1,3 @@
-"""Table sources: driver-provided parquet tables + the deterministic
-synthetic Common-Crawl-style `pages` corpus (FIXTURES.md A1)."""
-
-from no_ocr_spark.sources.tables import load_table, load_tables  # noqa: F401
+"""Table sources: the provided parquet tables (TESTDATA.md), the deterministic
+synthetic Common-Crawl-style `pages` corpus (FIXTURES.md A1), WARC
+containers, and the snapshot-table format with its MERGE/DELETE writer."""

@@ -1,8 +1,9 @@
 """Snapshot-table format over parquet — the from-scratch stand-in for the
 Iceberg table layer BASELINE.json names (the Iceberg runtime jar is absent
-from this environment; `sources/tables.py` remains the swap seam and this
-module implements the SEMANTICS the pipeline needs from it: atomic commits,
-snapshot isolation for readers, time travel, and safe file GC).
+from this environment). This module implements the SEMANTICS the pipeline
+needs from it — atomic commits, snapshot isolation for readers, time
+travel, copy-on-write MERGE/DELETE and safe file GC — and is the engine's
+only commit protocol.
 
 Re-derived from the publicly documented Iceberg spec concepts (spec v2:
 table metadata + snapshot list + manifest-tracked immutable data files),
@@ -10,50 +11,180 @@ not ported: the realization is deliberately minimal —
 
   <table>/data/<uuid>/part-*.parquet   immutable data-file directories
                                        (one per commit, never rewritten)
-  <table>/_meta/v{N:012d}.metadata.json  FULL metadata for version N
-  <table>/_meta/VERSION                current version, committed by
-                                       ATOMIC RENAME (the commit point —
-                                       on HDFS/posix rename is atomic; on
-                                       object stores swap this single
-                                       file for a metastore CAS, exactly
-                                       Iceberg's own catalog contract)
+  <table>/data/<uuid>/bucket=N/        the same, written partitionBy
+                                       bucket by a MERGE/DELETE commit
+  <table>/_meta/v{N:012d}.metadata.json  FULL metadata for version N; the
+                                       commit point is its CREATE-EXCLUSIVE
+  <table>/_meta/VERSION                latest version, a reader cache
+                                       updated by atomic rename after the
+                                       commit (may lag; readers probe past)
 
 Each metadata version embeds the COMPLETE snapshot history, and every
-snapshot lists its complete data-directory set (Iceberg's manifest-list
+snapshot lists its complete set of data entries (Iceberg's manifest-list
 indirection flattened — O(commits) metadata per version is the documented
 trade-off; fine up to thousands of commits, which is the lineage-bucket
-regime this engine writes).
+regime this engine writes). An entry is a whole commit dir `data/<uuid>`
+(operations create/append/overwrite/compact) or one bucket's leaf dir
+`data/<uuid>/bucket=N` (operations merge/delete: `commit_buckets` swaps
+the touched buckets' leaves and keeps every other entry as it was).
 
-Guarantees (tested in tests/test_snaptable.py):
+Guarantees (tested in tests/test_snaptable.py, tests/test_merge_upsert.py):
   * readers NEVER see a partial commit — data and metadata are invisible
-    until the VERSION rename lands;
+    until the metadata file lands;
   * a crash between data write and commit leaves only orphan files that
     `vacuum` removes (never referenced, never read);
   * time travel: `read(version=K)` reproduces any retained version
-    byte-identically (data files are immutable);
-  * `vacuum(keep_versions=k)` deletes data dirs referenced by NO retained
-    metadata version — concurrent readers of retained versions are safe.
+    byte-identically (data files are immutable); a version with no
+    entries (every row deleted) reads as 0 rows with its schema;
+  * `vacuum(keep_versions=k)` deletes data dirs referenced, whole or by a
+    leaf, by NO retained metadata version — concurrent readers of
+    retained versions are safe;
+  * `read_incremental` is an append-only change feed: a range that
+    crosses an overwrite, compact, merge or delete commit is rejected.
 
 Concurrent WRITERS are fenced: each commit claims its version file by
 CREATE-EXCLUSIVE (posix link(2) locally; HDFS create-no-overwrite
 elsewhere; a metastore CAS is the object-store swap), so of N racing
 committers exactly one wins each version and the rest rebase and retry —
 every commit survives as a distinct version (tested:
-tests/test_snaptable.py two-writer race). `compact` conflict-fails
-instead of rebasing, since rebasing could drop a concurrent append.
+tests/test_snaptable.py two-writer race). `compact`, merge and delete
+conflict-fail instead of rebasing: they rewrite rows they read, and a
+rebase could drop a concurrent commit's rows.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-
-from no_ocr_spark.sources.merge import _Fs
+from pyspark.sql.types import StructType
 
 _FORMAT = "no-ocr-snaptable/1"
+
+
+class _Fs:
+    """Thin Hadoop FileSystem wrapper: works for file://, hdfs://, etc."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        jvm = spark.sparkContext._jvm
+        self._jvm = jvm
+        self._Path = jvm.org.apache.hadoop.fs.Path
+        self._fs = self._Path(path).getFileSystem(
+            spark.sparkContext._jsc.hadoopConfiguration()
+        )
+
+    def exists(self, path: str) -> bool:
+        return self._fs.exists(self._Path(path))
+
+    def delete(self, path: str) -> None:
+        """Recursive delete; raises if the FS reports failure on an
+        existing path (no ignore_errors — a failed drop must surface)."""
+        p = self._Path(path)
+        if self._fs.exists(p) and not self._fs.delete(p, True):
+            raise IOError(f"failed to delete {path}")
+
+    def listdir(self, path: str) -> list[str]:
+        p = self._Path(path)
+        if not self._fs.exists(p):
+            return []
+        return [s.getPath().getName() for s in self._fs.listStatus(p)]
+
+    def _local(self, path: str) -> str | None:
+        """The posix path behind `path` when its FS is file://, else None."""
+        if self._fs.getScheme() != "file":
+            return None
+        return self._fs.pathToFile(self._Path(path)).getPath()
+
+    def write_atomic(self, path: str, text: str) -> None:
+        """Write via temp + rename. A local path is replaced by one posix
+        rename(2), so a reader or a crash sees the old or the new text.
+        Other FSs delete, then rename (HDFS rename never overwrites): a
+        crash in between leaves no file."""
+        local = self._local(path)
+        if local is not None:
+            os.makedirs(os.path.dirname(local), exist_ok=True)
+            tmp = f"{local}.tmp-{uuid.uuid4().hex}"
+            with open(tmp, "w", encoding="utf-8") as f:
+                f.write(text)
+            os.replace(tmp, local)
+            return
+        tmp = self._Path(path + ".tmp")
+        out = self._fs.create(tmp, True)
+        out.write(bytearray(text.encode("utf-8")))
+        out.close()
+        dst = self._Path(path)
+        if self._fs.exists(dst):
+            self._fs.delete(dst, False)
+        if not self._fs.rename(tmp, dst):
+            raise IOError(f"failed to commit {path}")
+
+    def create_exclusive(self, path: str, text: str) -> bool:
+        """Atomic create-if-absent with the FULL content — the snapshot
+        table's commit fence (two concurrent committers race for the same
+        version file; exactly one wins). Local file:// paths hard-link a
+        fully-written temp (posix link(2) is atomic and fails with EEXIST;
+        content is complete at link time so readers never see a partial
+        file). Other FSs use HDFS-style create(overwrite=false), atomic on
+        HDFS; object stores swap this single call for a metastore CAS —
+        the same catalog contract Iceberg documents."""
+        local = self._local(path)
+        if local is not None:
+            os.makedirs(os.path.dirname(local), exist_ok=True)
+            tmp = f"{local}.claim-{uuid.uuid4().hex}"
+            with open(tmp, "w", encoding="utf-8") as f:
+                f.write(text)
+            try:
+                os.link(tmp, local)
+                return True
+            except FileExistsError:
+                return False
+            finally:
+                os.unlink(tmp)
+        # non-local: write a UNIQUE temp fully, then rename — HDFS rename
+        # is atomic and FAILS if the destination exists, so the claim can
+        # never be observed half-written (create-then-write let a racing
+        # loser read a truncated claim, treat it as a dead corpse, delete
+        # it, and retake the version)
+        tmp = self._Path(f"{path}.claim-{uuid.uuid4().hex}")
+        try:
+            out = self._fs.create(tmp, True)
+            out.write(bytearray(text.encode("utf-8")))
+            out.close()
+            dst = self._Path(path)
+            if self._fs.exists(dst) or not self._fs.rename(tmp, dst):
+                self._fs.delete(tmp, False)
+                return False
+            return True
+        except Exception:
+            # transient FS failure mid-claim: drop the temp (it
+            # would leak into _meta/ forever) and report the
+            # claim lost — the caller's retry loop handles it
+            try:
+                self._fs.delete(tmp, False)
+            except Exception:
+                pass
+            return False
+
+    def read_text(self, path: str) -> str:
+        local = self._local(path)
+        if local is not None:
+            # control files are parsed on read; a hand edit (e.g. resetting
+            # clean_state.json to re-clean a range) would leave a `.crc`
+            # sidecar stale, which Hadoop's checksummed open rejects
+            with open(local, encoding="utf-8") as f:
+                return f.read()
+        inp = self._fs.open(self._Path(path))
+        try:
+            # py4j does not write back into Python bytearrays, so use the
+            # JVM-side reader (commons-io ships with Spark)
+            return self._jvm.org.apache.commons.io.IOUtils.toString(
+                inp, "UTF-8"
+            )
+        finally:
+            inp.close()
 
 
 def _meta_dir(path: str) -> str:
@@ -172,6 +303,8 @@ def read(spark: SparkSession, path: str,
         raise ValueError(f"no committed version at {path}")
     meta = _load_meta(fs, path, v)
     snap = meta["snapshots"][-1]
+    if not snap["files"]:
+        return spark.createDataFrame([], StructType.fromJson(meta["schema"]))
     base = path.rstrip("/")
     return spark.read.parquet(*[f"{base}/{d}" for d in snap["files"]])
 
@@ -192,7 +325,8 @@ def read_incremental(spark: SparkSession, path: str, from_version: int,
     exactly (to's file set) minus (from's file set). An overwrite commit
     inside the range breaks the append-only premise — rejected rather
     than silently misread (Iceberg's incremental scan has the same
-    restriction). This is what lets a downstream job consume a snapshot
+    restriction), and so is a merge or delete commit, which replaces
+    rows in place. This is what lets a downstream job consume a snapshot
     table produced by repeated `extract_job --snapshot` runs without
     ever rescanning already-processed versions."""
     fs = _Fs(spark, path)
@@ -207,8 +341,8 @@ def read_incremental(spark: SparkSession, path: str, from_version: int,
     # version need the append-only premise
     if from_version >= 1:
         for k in range(from_version + 1, to_v + 1):
-            if k in snaps and snaps[k]["operation"] in ("overwrite",
-                                                        "compact"):
+            if k in snaps and snaps[k]["operation"] in (
+                    "overwrite", "compact", "merge", "delete"):
                 raise ValueError(
                     f"version {k} is a {snaps[k]['operation']} commit — "
                     f"incremental append scan undefined across it "
@@ -258,6 +392,72 @@ def compact(spark: SparkSession, path: str,
     return _commit(fs, path, df.schema.jsonValue(), make_snap)
 
 
+def _bucket_of(entry: str) -> int | None:
+    """Bucket of a `data/<uuid>/bucket=N` leaf entry; None for a whole
+    commit dir."""
+    leaf = entry.rsplit("/", 1)[-1]
+    return int(leaf[len("bucket="):]) if leaf.startswith("bucket=") else None
+
+
+def read_buckets(spark: SparkSession, path: str,
+                 buckets: list[int]) -> tuple[int, DataFrame | None]:
+    """Read side of a copy-on-write commit: the current version and the
+    rows of its leaf entries for `buckets` (None when no entry holds
+    them, or no version exists). The rows carry no `bucket` column.
+    Every entry must be a bucket leaf: a whole commit dir (written by
+    `write` or `compact`) may hold rows of any bucket."""
+    fs = _Fs(spark, path)
+    v = _version_of(fs, path)
+    files = _load_meta(fs, path, v)["snapshots"][-1]["files"] if v else []
+    if any(_bucket_of(f) is None for f in files):
+        raise ValueError(f"{path} holds entries not split by bucket; "
+                         f"merge/delete need a table they wrote")
+    base = path.rstrip("/")
+    hit = [f"{base}/{f}" for f in files if _bucket_of(f) in buckets]
+    return v, (spark.read.parquet(*hit) if hit else None)
+
+
+def commit_buckets(spark: SparkSession, path: str, base_version: int,
+                   buckets: list[int], df: DataFrame, operation: str) -> int:
+    """Copy-on-write commit of `buckets` (Iceberg's MERGE/DELETE): write
+    `df` — the buckets' new rows, with a `bucket` column — once,
+    partitionBy bucket, into a fresh data dir, and commit a version whose
+    file list is `base_version`'s with the entries of `buckets` swapped
+    for the new leaf dirs. A bucket left with no rows drops out of the
+    list; every other entry is kept as it was. Conflict-fails, like
+    `compact`, if another commit landed after `base_version`."""
+    fs = _Fs(spark, path)
+    base = path.rstrip("/")
+    data_dir = f"data/{uuid.uuid4().hex}"
+    (
+        df.repartition(len(buckets), "bucket")
+        .write.partitionBy("bucket").parquet(f"{base}/{data_dir}")
+    )
+    leaves = sorted((f"{data_dir}/{n}" for n in fs.listdir(f"{base}/{data_dir}")
+                     if n.startswith("bucket=")), key=_bucket_of)
+    stray = {_bucket_of(f) for f in leaves} - set(buckets)
+    if stray:
+        # a non-deterministic input yielded rows in buckets it was not
+        # read for: committing would shadow those buckets' live rows
+        raise ValueError(f"rows written to unread buckets {sorted(stray)} "
+                         f"of {path}")
+
+    def make_snap(v: int, snapshots: list[dict]) -> dict:
+        if v != base_version:
+            raise IOError(f"concurrent commit (v{base_version}->v{v}) during "
+                          f"{operation} of {path}; re-run the {operation}")
+        files = snapshots[-1]["files"] if snapshots else []
+        return {
+            "id": v + 1,
+            "ts_ms": int(time.time() * 1000),
+            "operation": operation,
+            "files": [f for f in files if _bucket_of(f) not in buckets]
+            + leaves,
+        }
+
+    return _commit(fs, path, df.drop("bucket").schema.jsonValue(), make_snap)
+
+
 def vacuum(spark: SparkSession, path: str, keep_versions: int = 2) -> dict:
     """Delete data directories referenced by NO retained metadata version
     (the last `keep_versions`), plus orphans from crashed commits, plus
@@ -269,8 +469,12 @@ def vacuum(spark: SparkSession, path: str, keep_versions: int = 2) -> dict:
     keep = range(max(1, v - keep_versions + 1), v + 1)
     referenced: set[str] = set()
     for k in keep:
-        # version k's file set is its metadata's LAST snapshot (id == k)
-        referenced.update(_load_meta(fs, path, k)["snapshots"][-1]["files"])
+        # version k's file set is its metadata's LAST snapshot (id == k);
+        # a `data/<uuid>/bucket=N` leaf keeps its whole `data/<uuid>` alive
+        referenced.update(
+            "/".join(f.split("/")[:2])
+            for f in _load_meta(fs, path, k)["snapshots"][-1]["files"]
+        )
     removed_data = []
     for d in fs.listdir(f"{base}/data"):
         if f"data/{d}" not in referenced:

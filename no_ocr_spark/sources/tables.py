@@ -1,11 +1,9 @@
-"""Loaders for the driver-provided parquet tables (TESTDATA.md) and the
-synthesized `pages` table.
+"""Loaders for the provided parquet tables (TESTDATA.md).
 
 Catalog note (SURVEY.md §7 M3): the Iceberg runtime jar is not in this
-environment, so tables are plain Parquet with identical schemas; the write
-path goes through `write_table` below so swapping in
-`df.writeTo("catalog.db.t")` (Iceberg) is a one-line change. Semantics
-first, format second.
+environment, so these tables are read as plain Parquet with identical
+schemas. The table semantics the engine writes with — atomic commits,
+time travel, copy-on-write MERGE/DELETE — live in `sources/snaptable.py`.
 """
 
 from __future__ import annotations
@@ -13,11 +11,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-
-TABLE_NAMES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.01"
 
@@ -45,12 +38,3 @@ def table_rows(sf_dir: str, name: str) -> int:
         for f in files if f.endswith(".parquet")
     )
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in TABLE_NAMES}
-
-
-def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Single write chokepoint — Parquet today, Iceberg when the runtime jar
-    is on the classpath (`df.writeTo(...).createOrReplace()`)."""
-    df.write.mode(mode).parquet(path)

@@ -106,9 +106,10 @@ CHECKS = {
     "url_canonicalize": ["!BatchEvalPython", "!MapInPandas", "!Exchange"],
     # PII scrubbing: map-only redaction, zero Python, no shuffle
     "pii_scrub": ["!BatchEvalPython", "!MapInPandas", "!Exchange"],
-    # journaled-merge read-back: plain bucketed parquet scan, zero Python
-    # (the interesting plans — touched-bucket pruning, dynamic overwrite —
-    # run inside merge_upsert/delete_keys and are unit-audited)
+    # merge read-back: a parquet scan of the current snapshot's bucket
+    # leaves, zero Python (the interesting plans — touched-bucket reads,
+    # the one partitionBy-bucket write per commit — run inside
+    # merge_upsert/delete_keys and are unit-audited)
     "merge_upsert_read": ["Scan parquet", "!BatchEvalPython",
                           "!MapInPandas"],
     # real-codec multimodal family (round 4): two chained Arrow stages

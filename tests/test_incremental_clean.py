@@ -8,6 +8,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import pathlib
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -120,3 +121,17 @@ def test_all_filtered_delta_still_advances_state(spark, tmp_path_factory):
     with open(os.path.join(out, "clean_state.json")) as f:
         assert json.load(f)["cleaned_through"] == 1
     assert run_incremental(spark, snap, out, n_buckets=4).get("noop") is True
+
+
+def test_rerun_on_uri_out_dir_is_noop(spark, tmp_path_factory, monkeypatch):
+    """A file:// out_dir keeps the clean state in the output, not under the
+    working directory: a second run started elsewhere no-ops."""
+    snap = str(tmp_path_factory.mktemp("incuri")) + "/snap"
+    out = (pathlib.Path(tmp_path_factory.mktemp("incuri")) / "out").as_uri()
+    st.write(spark, snap, spark.createDataFrame(
+        _docs(spark, "a", 10, 1), "url string, text string, error string"))
+    monkeypatch.chdir(tmp_path_factory.mktemp("cwd"))
+    assert run_incremental(spark, snap, out, n_buckets=4)["n_clean"] == 10
+    monkeypatch.chdir(tmp_path_factory.mktemp("cwd"))
+    r = run_incremental(spark, snap, out, n_buckets=4)
+    assert r.get("noop") is True and r["from_version"] == 1

@@ -1,17 +1,30 @@
-"""W5 MERGE shim: keyed upsert over bucketed parquet with partition-level
-copy-on-write — updates win, untouched bucket files are not rewritten."""
+"""W5 MERGE shim: keyed upsert over a bucketed snapshot table with
+bucket-level copy-on-write commits — updates win, untouched bucket files
+are not rewritten, and a failed or raced operation commits nothing."""
 
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from no_ocr_spark.plans.partitioning import with_bucket
-from no_ocr_spark.sources.merge import merge_upsert, read_merged
+from no_ocr_spark.sources import snaptable as st
+from no_ocr_spark.sources.merge import delete_keys, merge_upsert, read_merged
+
+_PARQUET = os.path.join("data", "*", "bucket=*", "*.parquet")
 
 
 def _mk(spark, rows):
     return spark.createDataFrame(rows, "k bigint, status string, v bigint")
+
+
+def _files(spark, path):
+    return st.history(spark, path)[-1]["files"]
+
+
+def _rows(spark, path):
+    return sorted(tuple(r) for r in read_merged(spark, path).collect())
 
 
 def test_merge_upserts_and_inserts(spark, tmp_path_factory):
@@ -38,7 +51,8 @@ def test_merge_rewrites_only_touched_buckets(spark, tmp_path_factory):
     merge_upsert(spark, path, base, key="k", n_buckets=8)
 
     before = {f: os.path.getmtime(f)
-              for f in glob.glob(os.path.join(path, "bucket=*", "*.parquet"))}
+              for f in glob.glob(os.path.join(path, _PARQUET))}
+    entries_before = _files(spark, path)
 
     upd = _mk(spark, [(3, "done", 33)])
     res = merge_upsert(spark, path, upd, key="k", n_buckets=8)
@@ -46,7 +60,7 @@ def test_merge_rewrites_only_touched_buckets(spark, tmp_path_factory):
     (tb,) = res["touched_buckets"]
 
     after = {f: os.path.getmtime(f)
-             for f in glob.glob(os.path.join(path, "bucket=*", "*.parquet"))}
+             for f in glob.glob(os.path.join(path, _PARQUET))}
     for f, mt in after.items():
         in_touched = f"bucket={tb}" in f
         if not in_touched:
@@ -54,6 +68,14 @@ def test_merge_rewrites_only_touched_buckets(spark, tmp_path_factory):
     # the touched bucket WAS rewritten (new file or new mtime)
     touched_files = [f for f in after if f"bucket={tb}" in f]
     assert any(f not in before or before[f] != after[f] for f in touched_files)
+    # the committed file list keeps every untouched bucket's entry as it
+    # was and swaps only the touched one
+    entries_after = _files(spark, path)
+    untouched = [e for e in entries_before if not e.endswith(f"/bucket={tb}")]
+    assert [e for e in entries_after
+            if not e.endswith(f"/bucket={tb}")] == untouched
+    (new_leaf,) = set(entries_after) - set(entries_before)
+    assert new_leaf.endswith(f"/bucket={tb}")
 
 
 def test_merge_dedupes_same_key_within_batch(spark, tmp_path_factory):
@@ -66,14 +88,12 @@ def test_merge_dedupes_same_key_within_batch(spark, tmp_path_factory):
 
 
 def test_delete_keys_targeted(spark, tmp_path_factory):
-    from no_ocr_spark.sources.merge import delete_keys
-
     path = str(tmp_path_factory.mktemp("tbl4")) + "/t"
     base = _mk(spark, [(i, "pending", i) for i in range(200)])
     merge_upsert(spark, path, base, key="k", n_buckets=8)
 
     before = {f: os.path.getmtime(f)
-              for f in glob.glob(os.path.join(path, "bucket=*", "*.parquet"))}
+              for f in glob.glob(os.path.join(path, _PARQUET))}
 
     doomed = spark.createDataFrame([(3,), (17,), (42,)], "k bigint")
     res = delete_keys(spark, path, doomed, key="k", n_buckets=8)
@@ -84,7 +104,7 @@ def test_delete_keys_targeted(spark, tmp_path_factory):
     assert got.filter(got.k.isin([3, 17, 42])).count() == 0
     # untouched buckets' files not rewritten
     after = {f: os.path.getmtime(f)
-             for f in glob.glob(os.path.join(path, "bucket=*", "*.parquet"))}
+             for f in glob.glob(os.path.join(path, _PARQUET))}
     touched = {f"bucket={b}" for b in res["touched_buckets"]}
     for f, mt in after.items():
         if not any(t in f for t in touched):
@@ -92,13 +112,11 @@ def test_delete_keys_targeted(spark, tmp_path_factory):
 
 
 def test_delete_keys_empties_whole_bucket(spark, tmp_path_factory):
-    from no_ocr_spark.sources.merge import delete_keys
-
     path = str(tmp_path_factory.mktemp("tbl5")) + "/t"
     base = _mk(spark, [(i, "x", i) for i in range(50)])
     merge_upsert(spark, path, base, key="k", n_buckets=4)
-    # delete EVERY key of one bucket: its directory must disappear
-    bucketed = spark.read.parquet(path)
+    # delete EVERY key of one bucket: its entry must leave the table
+    bucketed = with_bucket(read_merged(spark, path), 4, url_col="k")
     some_bucket = bucketed.select("bucket").first().bucket
     doomed_keys = [
         (r.k,) for r in
@@ -107,126 +125,17 @@ def test_delete_keys_empties_whole_bucket(spark, tmp_path_factory):
     res = delete_keys(spark, path, spark.createDataFrame(doomed_keys, "k bigint"),
                       key="k", n_buckets=4)
     assert res["n_deleted"] == len(doomed_keys) > 0
-    got = spark.read.parquet(path)
+    got = with_bucket(read_merged(spark, path), 4, url_col="k")
     assert got.filter(F.col("bucket") == some_bucket).count() == 0
     assert got.count() == 50 - len(doomed_keys)
-    assert not os.path.exists(os.path.join(path, f"bucket={some_bucket}"))
-
-
-# ------------------------------------------------ crash-safety (journal)
-
-
-def test_upsert_crash_after_journal_commit_replays(spark, tmp_path_factory):
-    """Crash between the journal's MANIFEST commit and the bucket
-    overwrite: the next operation must replay the journaled updates."""
-    import no_ocr_spark.sources.merge as M
-
-    path = str(tmp_path_factory.mktemp("tbl6")) + "/t"
-    base = _mk(spark, [(i, "pending", i) for i in range(40)])
-    merge_upsert(spark, path, base, key="k", n_buckets=4)
-
-    # stage updates + commit the manifest, then "crash" (no apply)
-    upd = _mk(spark, [(7, "done", 777)]).transform(
-        lambda d: with_bucket(d, 4, url_col="k")
-    )
-    M._stage(spark, path, upd, "upsert", "k",
-             [r.bucket for r in upd.select("bucket").distinct().collect()])
-    got = {r.k: r.status for r in read_merged(spark, path).collect()}
-    assert got[7] == "pending"  # not applied yet — the crash window is real
-
-    # ANY subsequent op replays first; this one is unrelated
-    res = merge_upsert(spark, path, _mk(spark, [(300, "new", 1)]),
-                       key="k", n_buckets=4)
-    assert res["replayed"] == 1
-    got = {r.k: (r.status, r.v) for r in read_merged(spark, path).collect()}
-    assert got[7] == ("done", 777)      # journaled update applied
-    assert got[300] == ("new", 1)       # the new op applied too
-    assert len(got) == 41
-    # journal drained
-    assert M._pending_ops(M._Fs(spark, path), path) == []
-
-
-def test_uncommitted_journal_entry_is_discarded(spark, tmp_path_factory):
-    """Crash BEFORE the MANIFEST rename: staged data without a manifest is
-    garbage — recovery must drop it, not apply it."""
-    import no_ocr_spark.sources.merge as M
-
-    path = str(tmp_path_factory.mktemp("tbl7")) + "/t"
-    merge_upsert(spark, path, _mk(spark, [(1, "a", 1)]), key="k", n_buckets=4)
-    orphan = M._journal_root(path) + "/upsert-000"
-    with_bucket(_mk(spark, [(9, "ghost", 9)]), 4, url_col="k").write.parquet(
-        orphan + "/data"
-    )
-    res = merge_upsert(spark, path, _mk(spark, [(2, "b", 2)]),
-                       key="k", n_buckets=4)
-    assert res["replayed"] == 0
-    got = {r.k for r in read_merged(spark, path).collect()}
-    assert got == {1, 2}  # the ghost row never appears
-    assert not os.path.exists(orphan)
-
-
-def test_delete_crash_between_overwrite_and_drop(spark, tmp_path_factory,
-                                                 monkeypatch):
-    """Crash after the survivor overwrite but before the emptied bucket
-    directory drop: without recovery the deleted rows RESURRECT on read;
-    replay must finish the drop."""
-    import pytest
-
-    import no_ocr_spark.sources.merge as M
-    from no_ocr_spark.sources.merge import delete_keys
-
-    path = str(tmp_path_factory.mktemp("tbl8")) + "/t"
-    base = _mk(spark, [(i, "x", i) for i in range(50)])
-    merge_upsert(spark, path, base, key="k", n_buckets=4)
-
-    bucketed = spark.read.parquet(path)
-    some_bucket = bucketed.select("bucket").first().bucket
-    doomed = [(r.k,) for r in bucketed.filter(
-        F.col("bucket") == some_bucket).select("k").collect()]
-
-    orig = M._Fs.delete
-
-    def crash_at_drop(self, p):
-        if "/bucket=" in p:
-            raise RuntimeError("simulated crash at directory drop")
-        return orig(self, p)
-
-    monkeypatch.setattr(M._Fs, "delete", crash_at_drop)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        delete_keys(spark, path, spark.createDataFrame(doomed, "k bigint"),
-                    key="k", n_buckets=4)
-    monkeypatch.undo()
-
-    # the crash left the stale directory: rows resurrect — the bug is real
-    assert os.path.exists(os.path.join(path, f"bucket={some_bucket}"))
-    assert spark.read.parquet(path).filter(
-        F.col("bucket") == some_bucket).count() > 0
-
-    replayed = M._recover(spark, path)
-    assert len(replayed) == 1
-    assert not os.path.exists(os.path.join(path, f"bucket={some_bucket}"))
-    got = spark.read.parquet(path)
-    assert got.count() == 50 - len(doomed)
-    assert M._pending_ops(M._Fs(spark, path), path) == []
-
-
-def test_journal_is_invisible_to_table_readers(spark, tmp_path_factory):
-    import no_ocr_spark.sources.merge as M
-
-    path = str(tmp_path_factory.mktemp("tbl9")) + "/t"
-    merge_upsert(spark, path, _mk(spark, [(1, "a", 1)]), key="k", n_buckets=4)
-    upd = with_bucket(_mk(spark, [(2, "b", 2)]), 4, url_col="k")
-    M._stage(spark, path, upd, "upsert", "k", [0])
-    # a committed-but-unapplied journal entry must not pollute reads
-    assert read_merged(spark, path).count() == 1
+    assert not [e for e in _files(spark, path)
+                if e.endswith(f"/bucket={some_bucket}")]
 
 
 def test_delete_on_fully_emptied_table_is_noop(spark, tmp_path_factory):
-    """After a delete empties EVERY bucket (all bucket dirs dropped, only
-    _journal remains), a subsequent delete_keys must return n_deleted=0 —
-    not crash on parquet schema inference over a data-less directory."""
-    from no_ocr_spark.sources.merge import delete_keys
-
+    """A delete of every key commits a version with no entries: it reads
+    as 0 rows with the table's columns, a further delete_keys returns
+    n_deleted=0, and the table takes upserts again."""
     path = str(tmp_path_factory.mktemp("tbl_empty")) + "/t"
     base = _mk(spark, [(i, "x", i) for i in range(20)])
     merge_upsert(spark, path, base, key="k", n_buckets=4)
@@ -234,9 +143,11 @@ def test_delete_on_fully_emptied_table_is_noop(spark, tmp_path_factory):
     everything = spark.range(20).select(F.col("id").alias("k"))
     res = delete_keys(spark, path, everything, key="k", n_buckets=4)
     assert res["n_deleted"] == 20
-    assert not glob.glob(os.path.join(path, "bucket=*"))
+    assert _files(spark, path) == []
+    empty = read_merged(spark, path)
+    assert empty.columns == ["k", "status", "v"]
+    assert empty.count() == 0
 
-    # table dir still exists (holds _journal) but has zero data dirs
     again = delete_keys(spark, path, everything, key="k", n_buckets=4)
     assert again["n_deleted"] == 0
 
@@ -245,51 +156,120 @@ def test_delete_on_fully_emptied_table_is_noop(spark, tmp_path_factory):
     assert read_merged(spark, path).count() == 1
 
 
-def test_journal_entry_ids_unique_within_same_millisecond(
-    spark, tmp_path_factory, monkeypatch
-):
-    """Two ops staged in the same clock millisecond must get distinct
-    journal directories (uuid suffix), or the second stage clobbers the
-    first entry's data+manifest."""
-    import time as _time
-
-    from no_ocr_spark.sources import merge as m
-
-    path = str(tmp_path_factory.mktemp("tbl_ms")) + "/t"
-    monkeypatch.setattr(_time, "time", lambda: 1700000000.0)
-    d = _mk(spark, [(1, "a", 1)])
-    e1 = m._stage(spark, path, d, "upsert", "k", [0])
-    e2 = m._stage(spark, path, d, "upsert", "k", [0])
-    assert e1 != e2
-    fs = m._Fs(spark, path)
-    assert fs.exists(f"{e1}/MANIFEST.json")
-    assert fs.exists(f"{e2}/MANIFEST.json")
+# ------------------------------------------- crash safety and concurrency
 
 
-def test_journal_replays_in_staging_order(spark, tmp_path_factory, monkeypatch):
-    """Pending entries must replay in STAGING order even within one
-    millisecond: an upsert(k) staged before a delete(k) must leave k
-    deleted after recovery. With op-first entry names 'delete-…' sorted
-    before 'upsert-…' and the replay resurrected the row."""
-    import time as _time
+def _crash_at_commit(monkeypatch):
+    def crash(*_args):
+        raise RuntimeError("simulated crash before commit")
 
-    from no_ocr_spark.sources import merge as m
+    monkeypatch.setattr(st, "_commit", crash)
 
-    path = str(tmp_path_factory.mktemp("tbl_order")) + "/t"
-    merge_upsert(spark, path, _mk(spark, [(1, "old", 1)]), key="k",
-                 n_buckets=2)
 
-    # freeze the clock so both entries land in the same millisecond
-    monkeypatch.setattr(_time, "time", lambda: 1700000000.0)
-    upd = with_bucket(_mk(spark, [(1, "new", 2)]), 2, url_col="k")
-    m._stage(spark, path, upd, "upsert", "k", [int(upd.first().bucket)])
-    k = with_bucket(spark.createDataFrame([(1,)], "k bigint"), 2, url_col="k")
-    m._stage(spark, path, k.select("k", "bucket"), "delete", "k",
-             [int(k.first().bucket)])
+def _data_dirs(path):
+    return set(os.listdir(os.path.join(path, "data")))
 
-    replayed = m._recover(spark, path)
-    assert [r["op"] for r in replayed] == ["upsert", "delete"]
-    # k=1 was the only row: a correctly-ordered replay leaves the table
-    # fully emptied (no bucket dirs); the resurrect bug would leave k=1
-    assert not [b for b in m._Fs(spark, path).listdir(path)
-                if b.startswith("bucket=")]
+
+def test_upsert_crash_before_commit_keeps_previous_version(
+        spark, tmp_path_factory, monkeypatch):
+    """A crash after the data write and before the commit leaves the
+    previous version as the table, and vacuum removes the orphan dir."""
+    path = str(tmp_path_factory.mktemp("tbl6")) + "/t"
+    merge_upsert(spark, path, _mk(spark, [(i, "pending", i) for i in range(40)]),
+                 key="k", n_buckets=4)
+    prev, v, dirs = _rows(spark, path), st.current_version(spark, path), \
+        _data_dirs(path)
+
+    _crash_at_commit(monkeypatch)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        merge_upsert(spark, path, _mk(spark, [(7, "done", 777), (300, "new", 1)]),
+                     key="k", n_buckets=4)
+    monkeypatch.undo()
+
+    (orphan,) = _data_dirs(path) - dirs  # the data write did land
+    assert st.current_version(spark, path) == v
+    assert _rows(spark, path) == prev
+    res = st.vacuum(spark, path, keep_versions=1)
+    assert res["removed_data_dirs"] == [f"data/{orphan}"]
+    assert _rows(spark, path) == prev
+
+
+def test_delete_crash_before_commit_keeps_previous_version(
+        spark, tmp_path_factory, monkeypatch):
+    """A delete that would empty a bucket crashes before its commit: every
+    row stays readable, nothing half-applied."""
+    path = str(tmp_path_factory.mktemp("tbl8")) + "/t"
+    merge_upsert(spark, path, _mk(spark, [(i, "x", i) for i in range(50)]),
+                 key="k", n_buckets=4)
+    prev, entries = _rows(spark, path), _files(spark, path)
+    bucketed = with_bucket(read_merged(spark, path), 4, url_col="k")
+    some_bucket = bucketed.select("bucket").first().bucket
+    doomed = [(r.k,) for r in bucketed.filter(
+        F.col("bucket") == some_bucket).select("k").collect()]
+
+    _crash_at_commit(monkeypatch)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        delete_keys(spark, path, spark.createDataFrame(doomed, "k bigint"),
+                    key="k", n_buckets=4)
+    monkeypatch.undo()
+
+    assert _files(spark, path) == entries
+    assert _rows(spark, path) == prev
+
+
+def test_merge_racing_a_commit_conflict_fails(spark, tmp_path_factory,
+                                              monkeypatch):
+    """Another commit landing between a merge's read and its commit makes
+    the merge fail instead of dropping that commit's rows."""
+    path = str(tmp_path_factory.mktemp("tbl_race")) + "/t"
+    merge_upsert(spark, path, _mk(spark, [(i, "old", i) for i in range(10)]),
+                 key="k", n_buckets=2)
+    orig = st._commit
+
+    def racing(*args):
+        monkeypatch.setattr(st, "_commit", orig)
+        merge_upsert(spark, path, _mk(spark, [(i, "rival", -i)
+                                              for i in range(10)]),
+                     key="k", n_buckets=2)
+        return orig(*args)
+
+    monkeypatch.setattr(st, "_commit", racing)
+    with pytest.raises(IOError, match="concurrent commit"):
+        merge_upsert(spark, path, _mk(spark, [(1, "mine", 1)]),
+                     key="k", n_buckets=2)
+    assert st.current_version(spark, path) == 2
+    assert {r.status for r in read_merged(spark, path).collect()} == {"rival"}
+
+
+def test_vacuum_after_merges_keeps_live_rows(spark, tmp_path_factory):
+    """Live leaf entries keep their data dirs through vacuum, even when
+    the other buckets of the same dir were replaced since."""
+    path = str(tmp_path_factory.mktemp("tbl_vac")) + "/t"
+    merge_upsert(spark, path, _mk(spark, [(i, "a", i) for i in range(60)]),
+                 key="k", n_buckets=4)
+    merge_upsert(spark, path, _mk(spark, [(1, "b", 1), (2, "b", 2)]),
+                 key="k", n_buckets=4)
+    merge_upsert(spark, path, _mk(spark, [(5, "c", 5), (99, "c", 99)]),
+                 key="k", n_buckets=4)
+    live = _rows(spark, path)
+    assert len(live) == 61
+    res = st.vacuum(spark, path, keep_versions=1)
+    assert res["retained_versions"] == [3]
+    assert _rows(spark, path) == live
+    referenced = {"/".join(e.split("/")[:2]) for e in _files(spark, path)}
+    assert {f"data/{d}" for d in _data_dirs(path)} == referenced
+
+
+def test_incremental_scan_rejects_merge_and_delete(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("tbl_inc")) + "/t"
+    merge_upsert(spark, path, _mk(spark, [(i, "a", i) for i in range(8)]),
+                 key="k", n_buckets=2)
+    merge_upsert(spark, path, _mk(spark, [(1, "b", 1)]), key="k", n_buckets=2)
+    delete_keys(spark, path, spark.createDataFrame([(2,)], "k bigint"),
+                key="k", n_buckets=2)
+    assert [s["operation"] for s in st.history(spark, path)] == [
+        "merge", "merge", "delete"]
+    for lo in (1, 2):
+        with pytest.raises(ValueError, match="incremental append scan"):
+            st.read_incremental(spark, path, lo)
+    assert st.read_incremental(spark, path, 0).count() == 7

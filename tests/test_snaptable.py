@@ -1,10 +1,13 @@
 """Snapshot-table format (sources/snaptable.py): atomic commits, snapshot
 isolation, time travel, crash invisibility, vacuum safety."""
 
+import ast
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from no_ocr_spark.sources import snaptable as st
-from no_ocr_spark.sources.merge import _Fs
+from no_ocr_spark.sources.snaptable import _Fs
 
 
 def _mk(spark, lo, hi, tag):
@@ -316,3 +319,52 @@ def test_compact_rewrites_files_preserves_rows(spark, tmp_path_factory):
     assert len(res["removed_data_dirs"]) == 4   # the four pre-compact dirs
     assert {(r.k, r.tag) for r in st.read(spark, path).collect()} \
         == before | {(50, "b"), (51, "b")}
+
+
+def test_snaptable_is_the_only_commit_protocol():
+    """Engine commits go through this module: no other module claims a
+    file atomically or keeps a journal or manifest of its own. The clean
+    job's resume pointer (clean_state.json) is the one other atomic
+    write."""
+    pkg = Path(__file__).resolve().parents[1] / "no_ocr_spark"
+    writers = {"create_exclusive": {"sources/snaptable.py"},
+               "write_atomic": {"sources/snaptable.py", "jobs/clean_job.py"}}
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in writers
+                    and rel not in writers[node.func.attr]):
+                hits.append(f"{rel}:{node.lineno} calls {node.func.attr}")
+            names = [getattr(node, a, None)
+                     for a in ("id", "attr", "name", "arg", "value")]
+            if any(isinstance(n, str) and ("_journal" in n or "MANIFEST" in n)
+                   for n in names):
+                hits.append(f"{rel}:{node.lineno} names a journal")
+    assert not hits, hits
+
+
+def test_write_atomic_crash_keeps_the_old_text(spark, tmp_path_factory,
+                                               monkeypatch):
+    """A local write_atomic that dies before its rename leaves the previous
+    text readable (clean_state.json and VERSION are never missing)."""
+    import os
+
+    import pytest
+
+    path = str(tmp_path_factory.mktemp("atomic")) + "/state.json"
+    fs = _Fs(spark, path)
+    fs.write_atomic(path, "old")
+
+    def crash(*_args):
+        raise OSError("simulated crash before rename")
+
+    monkeypatch.setattr(os, "replace", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        fs.write_atomic(path, "new")
+    monkeypatch.undo()
+    assert fs.read_text(path) == "old"
+    fs.write_atomic(path, "new")
+    assert fs.read_text(path) == "new"
