@@ -11,21 +11,25 @@ cleaned version, via the snapshot change feed:
 
     ... clean_job.py --snapshot-in /out/snap --out /out2
 
-Incremental design (run_incremental):
-  * `--out/clean_state.json` records `cleaned_through` (the snapshot
-    version this output has consumed). Each run cleans exactly
-    `read_incremental(cleaned_through, current)` — already-processed
-    versions are never rescanned.
-  * The cleaned delta lands in `out/clean/delta=v{from}_{to}/` (bucketed
-    inside) and is OVERWRITTEN on re-run, so a crash between the delta
-    write and the state update re-processes idempotently instead of
-    duplicating rows. The partition-syntax dir name makes
-    the combined dataset readable in one scan (basePath=out/clean, with
-    `delta` and `bucket` as partition columns).
+Incremental design (run_incremental): the output is one snapshot table
+at `--out/clean` (sources/snaptable.py), and each run is ONE append
+commit.
+  * The commit's props carry `cleaned_through` (the input snapshot
+    version this output has consumed), so resume and the no-op check read
+    only table metadata. Each run cleans exactly
+    `read_incremental(cleaned_through, current)`; consumed versions are
+    never rescanned.
+  * Rows and resume pointer land in that one atomic commit. A crash
+    before it leaves an unreferenced `data/<uuid>` no reader sees (and
+    `vacuum` removes once aged); the re-run starts again from the same
+    committed version, and cleans whatever the input holds by then.
+  * The commit is pinned to the version `cleaned_through` was read from:
+    if another run committed since, this one conflict-fails and appends
+    nothing, so two runs of one range never both land.
   * Cross-delta exact dedup: the in-delta cascade can't see earlier
-    deltas, so each run appends its kept 8-byte text hashes to
-    `out/hashes/delta=*` and the next delta anti-joins against them —
-    exact, and the join moves only 8-byte keys (the Bloom bitset in
+    deltas, so every committed row stores `th = xxhash64(text)` and the
+    next delta anti-joins against the table's `th` column alone — exact,
+    and the join moves only 8-byte keys (the Bloom bitset in
     operators/bloom.py is the probabilistic pre-filter swap when even
     the hash table must stay out of the join).
 
@@ -44,6 +48,7 @@ import json
 import os
 import sys
 import time
+import uuid
 
 
 def _write_clean(clean, n_buckets: int, path: str) -> None:
@@ -65,36 +70,24 @@ def run_incremental(spark, snapshot_in: str, out_dir: str,
                     ppl_max_bits: float | None = None) -> dict:
     """One incremental cleaning step; see module docstring. Returns the
     stats JSON (noop=True when the snapshot has no new versions)."""
-    from pyspark.errors import AnalysisException
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from no_ocr_spark.operators.cleanup import clean_corpus
+    from no_ocr_spark.plans.partitioning import with_bucket
     from no_ocr_spark.sources import snaptable
 
-    # out_dir may be any Hadoop URI (file://, hdfs://, s3a://): every
-    # file op below goes through its FileSystem, not the local disk
-    fs = snaptable._Fs(spark, out_dir)
-    state_path = os.path.join(out_dir, "clean_state.json")
-    from_v = 0
-    if fs.exists(state_path):
-        from_v = json.loads(fs.read_text(state_path))["cleaned_through"]
+    # out_dir may be any Hadoop URI (file://, hdfs://, s3a://)
+    table = out_dir.rstrip("/") + "/clean"
+    hist = snaptable.history(spark, table)
+    base_v = hist[-1]["id"] if hist else 0
+    from_v = hist[-1]["props"]["cleaned_through"] if hist else 0
     to_v = snaptable.current_version(spark, snapshot_in)
     out: dict = {"mode": "incremental", "from_version": from_v,
                  "to_version": to_v}
     if to_v <= from_v:
         out.update({"n_in": 0, "noop": True})
         return out
-
-    # A crashed run (state never advanced past from_v) may have left
-    # delta dirs STARTING at from_v under a different end version (the
-    # snapshot can advance between crash and re-run, changing the tag):
-    # those rows were never committed to the ledger, so remove them —
-    # leaving them would double every row they share with this run's
-    # wider range in the combined delta=* dataset (review finding).
-    for root in ("clean", "hashes"):
-        for name in fs.listdir(os.path.join(out_dir, root)):
-            if name.startswith(f"delta=v{from_v}_"):
-                fs.delete(os.path.join(out_dir, root, name))
 
     # pin the range END to the probed version: a commit landing between
     # the probe and this read must wait for the next run, or its rows
@@ -107,44 +100,21 @@ def run_incremental(spark, snapshot_in: str, out_dir: str,
     clean, stats = clean_corpus(delta, min_tokens=min_tokens,
                                 ppl_max_bits=ppl_max_bits)
     finalize = stats.pop("_finalize")
-    # hash-ledger dirs from version ranges already consumed (end <=
-    # from_v) — NOT any dir this very range wrote before a crash, which
-    # would anti-join the re-run against its own output and empty it
-    hashes = os.path.join(out_dir, "hashes")
-    prev_deltas = sorted(
-        os.path.join(hashes, d) for d in fs.listdir(hashes)
-        if d.startswith("delta=") and int(d.rsplit("_", 1)[1]) <= from_v
-    )
-    if prev_deltas:
-        prev = spark.read.parquet(*prev_deltas)
-        clean = clean.join(
-            prev, F.xxhash64(clean["text"]) == prev["th"], "left_anti"
-        )
-    tag = f"delta=v{from_v}_{to_v}"
-    _write_clean(clean, n_buckets, os.path.join(out_dir, "clean", tag))
+    clean = clean.withColumn("th", F.xxhash64("text"))
+    if base_v:
+        prev = snaptable.read(spark, table, version=base_v).select("th")
+        clean = clean.join(prev, clean["th"] == prev["th"], "left_anti")
+    obs_kept = Observation(f"kept_{uuid.uuid4().hex[:8]}")
+    clean = clean.observe(obs_kept, F.count(F.lit(1)).alias("n"))
+    # keyed on the bucket alone: each bucket's rows land in one task's file
+    snaptable.write(spark, table,
+                    with_bucket(clean, n_buckets).repartition("bucket"),
+                    props={"cleaned_through": to_v}, base_version=base_v)
     stats = finalize()
-    try:
-        kept = spark.read.parquet(os.path.join(out_dir, "clean", tag))
-        n_kept = kept.count()
-    except AnalysisException:
-        # an all-filtered delta (quality gates or the cross-delta
-        # anti-join dropped every row) writes no data files, so schema
-        # inference fails — that's a legitimate empty delta, and it must
-        # still advance the state below (review finding: raising here
-        # wedged the pipeline on the same delta forever)
-        n_kept = 0
-    if n_kept:
-        (
-            kept.select(F.xxhash64("text").alias("th")).distinct()
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, "hashes", tag))
-        )
-    # state update is LAST: a crash anywhere above re-runs into the same
-    # delta_* dirs (overwrite mode -> idempotent, no duplicated rows)
-    fs.write_atomic(state_path, json.dumps({"cleaned_through": to_v}))
+    n_kept = int(obs_kept.get["n"])
     out.update(stats)
-    # n_clean from the observation counts in-delta survivors; the written
-    # delta additionally excludes cross-delta dupes
+    # n_clean from the observation counts in-delta survivors; the commit
+    # additionally excludes cross-delta dupes
     out["n_cross_delta_dupes"] = stats["n_clean"] - n_kept
     out["n_clean"] = n_kept
     return out

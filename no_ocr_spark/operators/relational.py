@@ -1,6 +1,6 @@
 """Relational operator parity with the reference (SURVEY.md §2.3-2.9):
-projections/filters/point lookups (P1-P7), joins (J1-J3 + resume anti-join),
-aggregations (A1-A4), top-k (K1-K3), set ops (U1-U2), windows, sessionize.
+point lookups (P3), joins (J1-J2 + resume anti-join), aggregation, top-k,
+the fallback lookup (U2), windows, sessionize.
 
 Each query returns a DataFrame and has a DuckDB oracle string in ORACLES.
 FP discipline: money sums go through exact DECIMAL accumulation and are cast
@@ -100,40 +100,6 @@ def q_broadcast_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_union_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U1: union of two case partitions (reference: user cases + common_cases,
-    api.py:334-347) -> per-lang counts. Union is plan-level (no shuffle)."""
-    docs = load_table(spark, sf_dir, "documents")
-    en = docs.filter(F.col("lang") == "en")
-    de = docs.filter(F.col("lang") == "de")
-    return (
-        en.unionByName(de)
-        .groupBy("lang")
-        .agg(F.count("*").alias("n_docs"), F.sum("n_chars").alias("total_chars"))
-    )
-
-
-def q_collect_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3: collect-list per key (reference get_cases fold, api.py:320-332).
-    sort_array(collect_set(...)) = deterministic order; serialized with
-    array_join so the output is scalar-typed (driver-canonicalizable)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.groupBy("lang").agg(
-        F.array_join(F.array_sort(F.collect_set("source")), ",").alias("sources"),
-        F.count("*").alias("n_docs"),
-    )
-
-
-def q_count_per_case(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1: number_of_pdfs per case (api.py:291) -> docs/chars per source."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.min("doc_id").alias("first_doc"),
-    )
-
-
 def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window ranking (SURVEY §2.6: per-PDF page renumbering analogue).
     First 2 events per user. Scale: single shuffle on user_id; rank
@@ -156,17 +122,6 @@ def q_anti_join_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cust.join(events, cust.c_custkey == events.user_id, "left_anti")
         .select("c_custkey", "c_name")
-    )
-
-
-def q_semi_join_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P6 existence gate as left-semi join: parts that ship."""
-    part = load_table(spark, sf_dir, "part")
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        part.join(li, part.p_partkey == li.l_partkey, "left_semi")
-        .groupBy("p_brand")
-        .agg(F.count("*").alias("n_parts"))
     )
 
 
@@ -201,113 +156,15 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_rollup_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time rollup (warc_ts partitioning analogue): daily counts per type."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.date_trunc("day", F.col("ts")).alias("day"),
-            F.col("event_type"),
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast(_DEC)).cast("double").alias("sum_value"),
-        )
-    )
-
-
-def q_validate_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P5: identifier-validation predicate (reference `^[\\w\\-]+$` guard,
-    api.py:102-108) as an rlike filter; invalid rows are counted, not
-    dropped silently (quarantine discipline)."""
-    docs = load_table(spark, sf_dir, "documents")
-    cand = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("source"),
-            F.when(F.col("doc_id") % 7 == 0, F.lit("!bad")).otherwise(F.lit("")),
-        ).alias("ident"),
-    )
-    return (
-        cand.withColumn("is_valid", F.col("ident").rlike(r"^[\w\-]+$"))
-        .groupBy("is_valid")
-        .agg(F.count("*").alias("n"), F.min("doc_id").alias("first_doc"))
-    )
-
-
-def q_global_rownum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T2: the reference's global sequential index (data.py:43,54,60) —
-    realized as row_number over a total order. Scale note: this is an
-    INTENTIONAL total-order shuffle (single reducer for the final
-    numbering); at corpus scale prefer the natural key or
-    monotonically_increasing_id (SURVEY §2.2 T2)."""
-    docs = load_table(spark, sf_dir, "documents")
-    w = Window.orderBy(F.asc("doc_id"))
-    return (
-        docs.select("doc_id")
-        .withColumn("idx", F.row_number().over(w))
-        .filter(F.col("idx") <= 20)
-    )
-
-
-def q_base64_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T5: base64 encode/decode built-ins (reference JPEG->base64 transport,
-    api.py:223-226, search.py:168)."""
-    docs = load_table(spark, sf_dir, "documents")
-    # Spark's base64 MIME-chunks output >76 chars with \r\n (legacy Hive
-    # behavior); strip to RFC4648 so any consumer (and the oracle) agrees.
-    b64 = F.replace(
-        F.base64(F.encode("text", "utf-8")), F.lit("\r\n"), F.lit("")
-    )
-    return docs.select(
-        "doc_id",
-        F.substring(b64, 1, 32).alias("b64_prefix"),
-        F.length(b64).alias("b64_len"),
-    )
-
-
-def q_posexplode_zip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3/T1: positional explode (the page-explode primitive, data.py:50-60
-    zip join) — words of short docs with their 1-based position."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") < 60)
-    return docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos0", "word")
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "word")
-
-
-def q_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """warc_ts-style time partitioning (SURVEY §2.10 date note): events
-    bucketed by (year, month, weekday)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.year("ts").alias("y"),
-            F.month("ts").alias("m"),
-            F.dayofweek("ts").alias("dow"),
-        )
-        .agg(F.count("*").alias("n"))
-    )
-
-
 QUERIES = {
     "agg_pricing_summary": q_agg_pricing_summary,
     "topk_order_revenue": q_topk_order_revenue,
     "point_lookup": q_point_lookup,
     "broadcast_lookup_join": q_broadcast_lookup_join,
-    "collect_cases": q_collect_cases,
-    "count_per_case": q_count_per_case,
     "window_rank": q_window_rank,
     "anti_join_resume": q_anti_join_resume,
-    "semi_join_exists": q_semi_join_exists,
     "coalesce_fallback": q_coalesce_fallback,
     "sessionize": q_sessionize,
-    "rollup_daily": q_rollup_daily,
-    "validate_ids": q_validate_ids,
-    "global_rownum": q_global_rownum,
-    "posexplode_zip": q_posexplode_zip,
-    "union_cases": q_union_cases,
-    "base64_roundtrip": q_base64_roundtrip,
-    "date_parts": q_date_parts,
 }
 
 ORACLES = {
@@ -344,17 +201,6 @@ ORACLES = {
         FROM events e JOIN customer c ON e.user_id = c.c_custkey
         GROUP BY c.c_mktsegment
     """,
-    "collect_cases": """
-        SELECT lang,
-               array_to_string(list_sort(list(DISTINCT source)), ',') AS sources,
-               count(*) AS n_docs
-        FROM documents GROUP BY lang
-    """,
-    "count_per_case": """
-        SELECT source, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars,
-               min(doc_id) AS first_doc
-        FROM documents GROUP BY source
-    """,
     "window_rank": """
         SELECT user_id, event_id, event_type, rn FROM (
             SELECT user_id, event_id, event_type,
@@ -364,11 +210,6 @@ ORACLES = {
     "anti_join_resume": """
         SELECT c_custkey, c_name FROM customer c
         WHERE NOT EXISTS (SELECT 1 FROM events e WHERE e.user_id = c.c_custkey)
-    """,
-    "semi_join_exists": """
-        SELECT p_brand, count(*) AS n_parts FROM part p
-        WHERE EXISTS (SELECT 1 FROM lineitem l WHERE l.l_partkey = p.p_partkey)
-        GROUP BY p_brand
     """,
     "coalesce_fallback": """
         SELECT coalesce(c.c_mktsegment, 'COMMON') AS segment, count(*) AS n_events
@@ -388,48 +229,5 @@ ORACLES = {
             FROM g)
         SELECT user_id, max(session_id)::BIGINT AS n_sessions, count(*) AS n_events
         FROM s GROUP BY user_id
-    """,
-    "rollup_daily": """
-        SELECT date_trunc('day', ts) AS day, event_type, count(*) AS n,
-               CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        FROM events GROUP BY 1, 2
-    """,
-    "validate_ids": r"""
-        WITH cand AS (
-            SELECT doc_id,
-                   source || (CASE WHEN doc_id % 7 = 0 THEN '!bad' ELSE '' END) AS ident
-            FROM documents)
-        SELECT regexp_matches(ident, '^[\w\-]+$') AS is_valid,
-               count(*) AS n, min(doc_id) AS first_doc
-        FROM cand GROUP BY 1
-    """,
-    "global_rownum": """
-        SELECT doc_id, idx FROM (
-            SELECT doc_id, row_number() OVER (ORDER BY doc_id) AS idx
-            FROM documents) WHERE idx <= 20
-    """,
-    "posexplode_zip": """
-        SELECT doc_id, i AS pos, words[i] AS word
-        FROM (SELECT doc_id, string_split(text, ' ') AS words
-              FROM documents WHERE n_chars < 60),
-             unnest(generate_series(1, len(words))) AS t(i)
-    """,
-    "union_cases": """
-        SELECT lang, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars
-        FROM (SELECT * FROM documents WHERE lang = 'en'
-              UNION ALL
-              SELECT * FROM documents WHERE lang = 'de')
-        GROUP BY lang
-    """,
-    "base64_roundtrip": """
-        SELECT doc_id,
-               substring(to_base64(encode(text)), 1, 32) AS b64_prefix,
-               length(to_base64(encode(text)))::INT AS b64_len
-        FROM documents
-    """,
-    "date_parts": """
-        SELECT year(ts)::INT AS y, month(ts)::INT AS m,
-               (dayofweek(ts) + 1)::INT AS dow, count(*) AS n
-        FROM events GROUP BY 1, 2, 3
     """,
 }

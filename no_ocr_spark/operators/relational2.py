@@ -1,7 +1,7 @@
-"""Second relational batch: multi-dimensional aggregation (cube/rollup),
-pivot, as-of join, and a grouped-map pandas operator — capabilities beyond
-the reference's inventory that a training-data pipeline needs (and that
-show the engine's breadth at the same oracle-exact bar).
+"""Second relational batch: multi-dimensional aggregation (cube),
+percentiles, as-of join, and a grouped-map pandas operator — capabilities
+beyond the reference's inventory that a training-data pipeline needs (and
+that show the engine's breadth at the same oracle-exact bar).
 
 Scale notes inline; FP discipline identical to relational.py (exact
 DECIMAL/int math; no order-dependent double sums).
@@ -35,25 +35,6 @@ def q_cube_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("src4", F.lit("ALL")).alias("src4"),
             "n",
             "chars",
-        )
-    )
-
-
-def q_pivot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot event_type into columns per user (explicit value list so the
-    plan is a single pass — no distinct-values pre-query)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id")
-        .pivot("event_type", ["click", "view", "purchase", "error"])
-        .agg(F.count(F.lit(1)))
-        .na.fill(0)
-        .select(
-            "user_id",
-            F.col("click").alias("n_click"),
-            F.col("view").alias("n_view"),
-            F.col("purchase").alias("n_purchase"),
-            F.col("error").alias("n_error"),
         )
     )
 
@@ -152,71 +133,6 @@ def q_grouped_stats_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.groupBy("user_id").applyInPandas(_gstats, schema=_GSTATS_SCHEMA)
 
 
-def q_salted_group_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-stage SALTED aggregation (SURVEY §4 item 1, the skew pattern):
-    partial agg on (key, salt=pmod(xxhash64(id), 16)) fans a hot key over
-    16 reducers; final agg on key merges <=16 partials. Result is provably
-    identical to the naive groupBy — which is exactly what the oracle runs."""
-    docs = load_table(spark, sf_dir, "documents")
-    salted = docs.select(
-        "source",
-        F.pmod(F.xxhash64("doc_id"), F.lit(16)).alias("salt"),
-        "n_chars",
-    )
-    partial = salted.groupBy("source", "salt").agg(
-        F.count("*").alias("c"), F.sum("n_chars").alias("ch")
-    )
-    return partial.groupBy("source").agg(
-        F.sum("c").alias("n_docs"), F.sum("ch").alias("total_chars")
-    )
-
-
-_RANGE_W_US = 600_000_000  # 10-minute windows, in microseconds
-
-
-def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Generic RANGE JOIN (point-in-interval) with no equi key — the
-    operator Spark lacks natively. Each event opens a 10-minute interval
-    [ts, ts+10min); every other event whose ts falls inside it matches.
-
-    Scale realization: bucketize time at the interval width W — an
-    interval spans at most TWO buckets (its own and the next), so the
-    interval side explodes x2, the point side keys by its single bucket,
-    and the join is a plain EQUI join on bucket with the exact range
-    predicate as refinement. No pair can match through two buckets (the
-    point's bucket is unique), so no dedup pass. Candidate volume is
-    n * (density per window), never n^2 — this is the standard
-    interval-bucketing scheme (same blocking algebra as the length-band
-    dedup). All arithmetic in exact int64 microseconds; the oracle is the
-    naive theta join.
-    """
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-    )
-    a = ev.select(
-        F.col("event_id").alias("int_id"), F.col("us").alias("s")
-    ).withColumn(
-        "bucket",
-        F.explode(F.expr(
-            f"array(s div {_RANGE_W_US}, s div {_RANGE_W_US} + 1)"
-        )),
-    )
-    b = ev.select(
-        F.col("event_id").alias("pt_id"), F.col("us").alias("p")
-    ).withColumn("bucket", F.expr(f"p div {_RANGE_W_US}"))
-    return (
-        a.join(
-            b,
-            (a.bucket == b.bucket)
-            & (F.col("p") >= F.col("s"))
-            & (F.col("p") < F.col("s") + _RANGE_W_US)
-            & (F.col("int_id") != F.col("pt_id")),
-        )
-        .select("int_id", "pt_id", (F.col("p") - F.col("s")).alias("delta_us"))
-    )
-
-
 def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact percentiles per key (Spark `percentile` == SQL-standard
     percentile_cont linear interpolation; verified bit-equal vs DuckDB
@@ -234,10 +150,7 @@ def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES = {
     "percentiles": q_percentiles,
-    "range_join": q_range_join,
-    "salted_group_count": q_salted_group_count,
     "cube_stats": q_cube_stats,
-    "pivot_events": q_pivot_events,
     "asof_join": q_asof_join,
     "grouped_stats_pandas": q_grouped_stats_pandas,
 }
@@ -250,18 +163,6 @@ ORACLES = {
                round(percentile_cont(0.99) WITHIN GROUP (ORDER BY value), 6) AS p99
         FROM events GROUP BY event_type
     """,
-    "range_join": f"""
-        WITH e AS (SELECT event_id, epoch_us(ts) AS us FROM events)
-        SELECT a.event_id AS int_id, b.event_id AS pt_id,
-               (b.us - a.us) AS delta_us
-        FROM e a JOIN e b
-          ON b.us >= a.us AND b.us < a.us + {_RANGE_W_US}
-         AND a.event_id <> b.event_id
-    """,
-    "salted_group_count": """
-        SELECT source, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars
-        FROM documents GROUP BY source
-    """,
     "cube_stats": """
         SELECT coalesce(lang, 'ALL') AS lang,
                coalesce(src4, 'ALL') AS src4,
@@ -269,14 +170,6 @@ ORACLES = {
         FROM (SELECT lang, substring(source, 1, 4) AS src4, n_chars
               FROM documents)
         GROUP BY CUBE (lang, src4)
-    """,
-    "pivot_events": """
-        SELECT user_id,
-               (count(*) FILTER (event_type = 'click'))::BIGINT AS n_click,
-               (count(*) FILTER (event_type = 'view'))::BIGINT AS n_view,
-               (count(*) FILTER (event_type = 'purchase'))::BIGINT AS n_purchase,
-               (count(*) FILTER (event_type = 'error'))::BIGINT AS n_error
-        FROM events GROUP BY user_id
     """,
     "asof_join": """
         WITH o AS (

@@ -32,7 +32,8 @@ Guarantees (tested in tests/test_snaptable.py, tests/test_merge_upsert.py):
   * readers NEVER see a partial commit — data and metadata are invisible
     until the metadata file lands;
   * a crash between data write and commit leaves only orphan files that
-    `vacuum` removes (never referenced, never read);
+    `vacuum` removes (never referenced, never read) once they are older
+    than `_ORPHAN_MIN_AGE_S` — a younger one may be a commit in flight;
   * time travel: `read(version=K)` reproduces any retained version
     byte-identically (data files are immutable); a version with no
     entries (every row deleted) reads as 0 rows with its schema;
@@ -49,7 +50,14 @@ committers exactly one wins each version and the rest rebase and retry —
 every commit survives as a distinct version (tested:
 tests/test_snaptable.py two-writer race). `compact`, merge and delete
 conflict-fail instead of rebasing: they rewrite rows they read, and a
-rebase could drop a concurrent commit's rows.
+rebase could drop a concurrent commit's rows. `write(base_version=...)`
+conflict-fails the same way, for an append derived from what it read.
+
+Committers: `extract_job --snapshot` appends each run's buckets
+(plans/lineage.snapshot_extracted); the incremental clean job appends
+each cleaned delta with `cleaned_through` in its props and its base
+version pinned (jobs/clean_job.run_incremental); MERGE and DELETE swap
+bucket leaves (sources/merge.py via `commit_buckets`).
 """
 
 from __future__ import annotations
@@ -63,6 +71,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 _FORMAT = "no-ocr-snaptable/1"
+
+# A data dir that no committed snapshot has ever named may belong to a
+# write whose commit is still in flight; vacuum deletes it only once it is
+# older than this (Iceberg's remove_orphan_files default).
+_ORPHAN_MIN_AGE_S = 3 * 24 * 3600
 
 
 class _Fs:
@@ -92,6 +105,11 @@ class _Fs:
             return []
         return [s.getPath().getName() for s in self._fs.listStatus(p)]
 
+    def age_s(self, path: str) -> float:
+        """Seconds since `path` was last modified, by its FS's clock."""
+        mtime = self._fs.getFileStatus(self._Path(path)).getModificationTime()
+        return time.time() - mtime / 1000
+
     def _local(self, path: str) -> str | None:
         """The posix path behind `path` when its FS is file://, else None."""
         if self._fs.getScheme() != "file":
@@ -99,10 +117,12 @@ class _Fs:
         return self._fs.pathToFile(self._Path(path)).getPath()
 
     def write_atomic(self, path: str, text: str) -> None:
-        """Write via temp + rename. A local path is replaced by one posix
-        rename(2), so a reader or a crash sees the old or the new text.
-        Other FSs delete, then rename (HDFS rename never overwrites): a
-        crash in between leaves no file."""
+        """Write via temp + rename. Its one caller is the `VERSION` reader
+        cache in `_commit`. A local path is replaced by one posix rename(2),
+        so a reader or a crash sees the old or the new text. Other FSs
+        delete, then rename (HDFS rename never overwrites): a crash in
+        between leaves no `VERSION`, which `_version_of` survives by
+        probing the metadata files from version 0."""
         local = self._local(path)
         if local is not None:
             os.makedirs(os.path.dirname(local), exist_ok=True)
@@ -172,8 +192,8 @@ class _Fs:
         local = self._local(path)
         if local is not None:
             # control files are parsed on read; a hand edit (e.g. resetting
-            # clean_state.json to re-clean a range) would leave a `.crc`
-            # sidecar stale, which Hadoop's checksummed open rejects
+            # VERSION) would leave a `.crc` sidecar stale, which Hadoop's
+            # checksummed open rejects
             with open(local, encoding="utf-8") as f:
                 return f.read()
         inp = self._fs.open(self._Path(path))
@@ -257,7 +277,8 @@ def current_version(spark: SparkSession, path: str) -> int:
 
 
 def write(spark: SparkSession, path: str, df: DataFrame,
-          mode: str = "append", props: dict | None = None) -> int:
+          mode: str = "append", props: dict | None = None,
+          base_version: int | None = None) -> int:
     """Commit df as a new snapshot; returns the new version number.
 
     mode='append'    new snapshot = previous file set + this commit's files
@@ -268,6 +289,10 @@ def write(spark: SparkSession, path: str, df: DataFrame,
                      (Iceberg's snapshot summary) — e.g. the lineage
                      bucket list the extract pipeline uses to reconcile
                      snapshot contents against its ledger.
+    base_version     None: rebase onto whatever version is latest. An int:
+                     the version `df` was derived from (0 = no table
+                     yet); conflict-fail, like `compact`, if another
+                     commit landed after it.
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unknown mode {mode!r}")
@@ -276,6 +301,9 @@ def write(spark: SparkSession, path: str, df: DataFrame,
     df.write.parquet(f"{path.rstrip('/')}/{data_dir}")
 
     def make_snap(v: int, snapshots: list[dict]) -> dict:
+        if base_version is not None and v != base_version:
+            raise IOError(f"concurrent commit (v{base_version}->v{v}) during "
+                          f"{mode} of {path}; re-run the {mode}")
         prev = snapshots[-1]["files"] if (snapshots and mode == "append") \
             else []
         snap = {
@@ -458,28 +486,37 @@ def commit_buckets(spark: SparkSession, path: str, base_version: int,
     return _commit(fs, path, df.drop("bucket").schema.jsonValue(), make_snap)
 
 
+def _dirs(files: list[str]) -> set[str]:
+    """The `data/<uuid>` dirs of a file list: a `data/<uuid>/bucket=N`
+    leaf entry keeps its whole dir alive."""
+    return {"/".join(f.split("/")[:2]) for f in files}
+
+
 def vacuum(spark: SparkSession, path: str, keep_versions: int = 2) -> dict:
     """Delete data directories referenced by NO retained metadata version
     (the last `keep_versions`), plus orphans from crashed commits, plus
     expired metadata files. Readers of retained versions are unaffected —
-    their file sets stay intact."""
+    their file sets stay intact. A dir that no snapshot in the history
+    ever named is a crashed write or one still committing: it goes only
+    once older than `_ORPHAN_MIN_AGE_S`."""
     fs = _Fs(spark, path)
     v = _version_of(fs, path)
     base = path.rstrip("/")
     keep = range(max(1, v - keep_versions + 1), v + 1)
-    referenced: set[str] = set()
-    for k in keep:
-        # version k's file set is its metadata's LAST snapshot (id == k);
-        # a `data/<uuid>/bucket=N` leaf keeps its whole `data/<uuid>` alive
-        referenced.update(
-            "/".join(f.split("/")[:2])
-            for f in _load_meta(fs, path, k)["snapshots"][-1]["files"]
-        )
+    # the current metadata embeds the complete snapshot history, and
+    # version k's file set is snapshot k's
+    snaps = _load_meta(fs, path, v)["snapshots"] if v else []
+    referenced = set().union(*(_dirs(s["files"]) for s in snaps
+                               if s["id"] in keep))
+    named = set().union(*(_dirs(s["files"]) for s in snaps))
     removed_data = []
     for d in fs.listdir(f"{base}/data"):
-        if f"data/{d}" not in referenced:
-            fs.delete(f"{base}/data/{d}")
-            removed_data.append(f"data/{d}")
+        entry = f"data/{d}"
+        if entry not in referenced and (
+                entry in named
+                or fs.age_s(f"{base}/{entry}") > _ORPHAN_MIN_AGE_S):
+            fs.delete(f"{base}/{entry}")
+            removed_data.append(entry)
     removed_meta = []
     for name in fs.listdir(_meta_dir(path)):
         if name.startswith("v") and name.endswith(".metadata.json"):

@@ -35,7 +35,6 @@ CHECKS = {
     "broadcast_lookup_join": ["BroadcastHashJoin"],
     "cosine_topk": ["TakeOrderedAndProject", "BroadcastNestedLoopJoin|BroadcastExchange"],
     "anti_join_resume": ["BroadcastHashJoin.*LeftAnti|LeftAnti"],
-    "semi_join_exists": ["LeftSemi"],
     # AQE's formatted explain hides WholeStageCodegen spans pre-execution;
     # partial+final HashAggregate + pushed scan filter are the markers.
     "agg_pricing_summary": ["HashAggregate", r"PushedFilters: \[IsNotNull\(l_shipdate\)"],
@@ -52,11 +51,6 @@ CHECKS = {
         "!CartesianProduct", "!BroadcastNestedLoopJoin",
     ],
     "lsh_bucket_pairs": [
-        "SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin",
-        "!CartesianProduct", "!BroadcastNestedLoopJoin",
-    ],
-    # range join: bucketed-equi realization — never a cartesian
-    "range_join": [
         "SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin",
         "!CartesianProduct", "!BroadcastNestedLoopJoin",
     ],

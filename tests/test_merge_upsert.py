@@ -4,6 +4,7 @@ are not rewritten, and a failed or raced operation commits nothing."""
 
 import glob
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -189,6 +190,9 @@ def test_upsert_crash_before_commit_keeps_previous_version(
     (orphan,) = _data_dirs(path) - dirs  # the data write did land
     assert st.current_version(spark, path) == v
     assert _rows(spark, path) == prev
+    # age it past the bound that spares writes still committing
+    aged = time.time() - st._ORPHAN_MIN_AGE_S - 60
+    os.utime(os.path.join(path, "data", orphan), (aged, aged))
     res = st.vacuum(spark, path, keep_versions=1)
     assert res["removed_data_dirs"] == [f"data/{orphan}"]
     assert _rows(spark, path) == prev
@@ -239,6 +243,30 @@ def test_merge_racing_a_commit_conflict_fails(spark, tmp_path_factory,
                      key="k", n_buckets=2)
     assert st.current_version(spark, path) == 2
     assert {r.status for r in read_merged(spark, path).collect()} == {"rival"}
+
+
+def test_vacuum_spares_a_write_whose_commit_is_in_flight(
+        spark, tmp_path_factory, monkeypatch):
+    """A vacuum that runs between a merge's data write and its commit
+    keeps the fresh, not yet named dir, so the commit's entries resolve."""
+    path = str(tmp_path_factory.mktemp("tbl_inflight")) + "/t"
+    merge_upsert(spark, path, _mk(spark, [(i, "a", i) for i in range(40)]),
+                 key="k", n_buckets=4)
+    orig = st._commit
+    vacuumed = []
+
+    def vacuum_then_commit(*args):
+        vacuumed.append(st.vacuum(spark, path, keep_versions=1))
+        return orig(*args)
+
+    monkeypatch.setattr(st, "_commit", vacuum_then_commit)
+    merge_upsert(spark, path, _mk(spark, [(7, "b", 777), (300, "new", 1)]),
+                 key="k", n_buckets=4)
+    monkeypatch.undo()
+    got = {r.k: (r.status, r.v) for r in read_merged(spark, path).collect()}
+    assert len(got) == 41
+    assert got[7] == ("b", 777) and got[300] == ("new", 1)
+    assert vacuumed[0]["removed_data_dirs"] == []
 
 
 def test_vacuum_after_merges_keeps_live_rows(spark, tmp_path_factory):

@@ -244,7 +244,7 @@ def test_no_registered_query_repeats_a_lambda(spark, sf_dir):
     hits = {name: [op for op, _, _ in audit.repeated_lambdas(query(spark, sf_dir))]
             for name, query in _registry().items()}
     spark.catalog.clearCache()
-    assert len(hits) > 90
+    assert len(hits) == 85  # 50 gate queries + 35 extras
     assert {name: ops for name, ops in hits.items() if ops} == {}
 
 

@@ -2,6 +2,8 @@
 isolation, time travel, crash invisibility, vacuum safety."""
 
 import ast
+import os
+import time
 from pathlib import Path
 
 from pyspark.sql import functions as F
@@ -53,6 +55,9 @@ def test_crashed_commit_is_invisible_and_vacuumable(spark, tmp_path_factory):
     fs = _Fs(spark, path)
     _mk(spark, 50, 60, "x").write.parquet(f"{path}/data/deadbeef_orphan")
     fs.write_atomic(f"{path}/_meta/v{2:012d}.metadata.json", "{}")
+    # age it past the bound that spares writes still committing
+    aged = time.time() - st._ORPHAN_MIN_AGE_S - 60
+    os.utime(f"{path}/data/deadbeef_orphan", (aged, aged))
     assert st.current_version(spark, path) == 1
     assert st.read(spark, path).count() == 10  # reader never sees it
     res = st.vacuum(spark, path, keep_versions=2)
@@ -323,12 +328,11 @@ def test_compact_rewrites_files_preserves_rows(spark, tmp_path_factory):
 
 def test_snaptable_is_the_only_commit_protocol():
     """Engine commits go through this module: no other module claims a
-    file atomically or keeps a journal or manifest of its own. The clean
-    job's resume pointer (clean_state.json) is the one other atomic
-    write."""
+    file atomically, replaces one atomically, or keeps a journal or
+    manifest of its own."""
     pkg = Path(__file__).resolve().parents[1] / "no_ocr_spark"
     writers = {"create_exclusive": {"sources/snaptable.py"},
-               "write_atomic": {"sources/snaptable.py", "jobs/clean_job.py"}}
+               "write_atomic": {"sources/snaptable.py"}}
     hits = []
     for path in sorted(pkg.rglob("*.py")):
         rel = path.relative_to(pkg).as_posix()
@@ -349,9 +353,7 @@ def test_snaptable_is_the_only_commit_protocol():
 def test_write_atomic_crash_keeps_the_old_text(spark, tmp_path_factory,
                                                monkeypatch):
     """A local write_atomic that dies before its rename leaves the previous
-    text readable (clean_state.json and VERSION are never missing)."""
-    import os
-
+    text readable (VERSION is never missing)."""
     import pytest
 
     path = str(tmp_path_factory.mktemp("atomic")) + "/state.json"
