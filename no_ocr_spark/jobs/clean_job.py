@@ -107,9 +107,13 @@ def run_incremental(spark, snapshot_in: str, out_dir: str,
     obs_kept = Observation(f"kept_{uuid.uuid4().hex[:8]}")
     clean = clean.observe(obs_kept, F.count(F.lit(1)).alias("n"))
     # keyed on the bucket alone: each bucket's rows land in one task's file
-    snaptable.write(spark, table,
-                    with_bucket(clean, n_buckets).repartition("bucket"),
-                    props={"cleaned_through": to_v}, base_version=base_v)
+    try:
+        snaptable.write(spark, table,
+                        with_bucket(clean, n_buckets).repartition("bucket"),
+                        props={"cleaned_through": to_v}, base_version=base_v)
+    except BaseException:
+        finalize(failed=True)
+        raise
     stats = finalize()
     n_kept = int(obs_kept.get["n"])
     out.update(stats)
@@ -153,7 +157,11 @@ def main(argv: list[str]) -> int:
         clean, stats = clean_corpus(extracted, min_tokens=args.min_tokens,
                                     ppl_max_bits=args.ppl_max_bits)
         finalize = stats.pop("_finalize")
-        _write_clean(clean, args.n_buckets, os.path.join(args.out, "clean"))
+        try:
+            _write_clean(clean, args.n_buckets, os.path.join(args.out, "clean"))
+        except BaseException:
+            finalize(failed=True)
+            raise
         out.update(finalize())
 
     wall = time.time() - t0

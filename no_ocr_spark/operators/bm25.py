@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from no_ocr_spark.plans.partitioning import fan_out_for_cpu
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu, materialize
 from no_ocr_spark.sources.tables import load_table
 
 QUERY_TERMS = ["window", "merge", "key"]
@@ -54,23 +54,17 @@ def _len(dialect: str) -> str:
 
 def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-corpus (doc_id, score) BM25 frame — the map-side tf pass +
-    1-row broadcast stats; callers apply their own top-k.
-
-    r6 (guide §1.2 "don't compute things twice"): the tf/dl projection
-    feeds BOTH the stats aggregate and the scoring join, so the plan
-    evaluated the split+filter chain over the whole text column twice
-    (and on the single-row-group bench table, on one core).
-    Fanning the raw rows out first spreads the text pass, and a
-    localCheckpoint of the 40-byte-per-doc tf frame makes the corpus
-    text pass run ONCE — stats and scores both read the checkpoint."""
-    docs = fan_out_for_cpu(
+    1-row broadcast stats; callers apply their own top-k. The stats
+    aggregate and the scoring join both read the materialized
+    40-byte-per-doc tf frame."""
+    docs = materialize(fan_out_for_cpu(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"), spark
     ).select(
         "doc_id",
         F.expr(_len("spark")).alias("dl"),
         *[F.expr(_tf("spark", t)).alias(f"tf{i}")
           for i, t in enumerate(QUERY_TERMS)],
-    ).localCheckpoint()
+    ))
     stats = docs.agg(
         F.count("*").alias("n_docs"),
         F.avg("dl").alias("avgdl"),

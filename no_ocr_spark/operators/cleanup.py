@@ -175,14 +175,16 @@ def clean_corpus(extracted: DataFrame, min_tokens: int = MIN_TOKENS,
         **stats_ppl,
     }
 
-    def finalize() -> dict:
+    def finalize(failed: bool = False) -> dict:
         """Call AFTER the caller's action over `clean` (write/collect):
-        resolves the observed stage counts and unpersists the
-        repetition-stage cache (which would otherwise pin executor
-        memory for the session lifetime). Returns the completed stats."""
-        stats["n_after_exact_dedup"] = int(obs_exact.get["n"])
-        stats["n_clean"] = int(obs_clean.get["n"])
+        unpersists the repetition-stage cache (which would otherwise pin
+        executor memory for the session lifetime) and resolves the
+        observed stage counts, which a failed action (failed=True) never
+        fills. Returns the completed stats."""
         gated.unpersist()
+        if not failed:
+            stats["n_after_exact_dedup"] = int(obs_exact.get["n"])
+            stats["n_clean"] = int(obs_clean.get["n"])
         return stats
 
     stats["_finalize"] = finalize

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from no_ocr_spark.functions import textexpr as tx
 from no_ocr_spark.operators.repetition import with_word_hashes
-from no_ocr_spark.plans.partitioning import fan_out_for_cpu
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu, materialize
 from no_ocr_spark.sources.tables import load_table
 
 # 3-word shingles: the driver corpus's vocabulary is tiny, so the 2-word
@@ -136,14 +136,10 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     wh = tx.word_hashes("spark", tx.words("spark", "text"))
     shx = tx.shingle_hashes_from_word_hashes("spark", "word_hashes",
                                              k=_K_SHINGLE)
-    # r6: checkpoint the signature frame — it feeds the prefix pipeline
-    # AND both verify sides, so the (expensive) shingle fold ran three
-    # times through lineage
-    d = (
+    d = materialize(
         fan_out_for_cpu(_augmented(spark, sf_dir), spark)
         .withColumn("word_hashes", F.expr(wh))
         .select("doc_id", "lang", "n_chars", F.expr(shx).alias("sh"))
-        .localCheckpoint()
     )
 
     tok = d.select("doc_id", "lang", "n_chars", F.size("sh").alias("sz"),
@@ -330,11 +326,8 @@ def near_dup_edges_reduced(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrink quadratically) and CC's iteration input drops from the
     output-sized pair list (1.05M) to ~|docs| star edges + verified
     sig-pair edges (~90k)."""
-    d = _with_sig(spark, sf_dir).localCheckpoint()  # sig pass runs once
-    groups = (
-        d.groupBy("sig").agg(F.min("doc_id").alias("rep"))
-        .localCheckpoint()
-    )
+    d = materialize(_with_sig(spark, sf_dir))
+    groups = materialize(d.groupBy("sig").agg(F.min("doc_id").alias("rep")))
     stars = (
         d.join(groups, "sig")
         .filter(F.col("doc_id") != F.col("rep"))
@@ -430,12 +423,8 @@ def simhash_pairs(d: DataFrame, band_bits: int) -> DataFrame:
     # band (same pigeonhole, applied group-level) and bit_count <= 2,
     # same-group pairs have hamming 0 by construction, and the
     # first-agreeing-band filter keeps multi-band group matches single.
-    # one aggregation of docs into signature groups, checkpointed: the
-    # group table feeds FIVE subtrees (both join sides, both member
-    # attachments, the within-group expansion) — without the barrier the
-    # scan + simhash + groupBy replayed once per subtree
-    g = d.groupBy("simhash").agg(
-        F.collect_list("doc_id").alias("ms")).localCheckpoint()
+    g = materialize(d.groupBy("simhash").agg(
+        F.collect_list("doc_id").alias("ms")))
     band_arr = (
         "array(" + ", ".join(
             f"named_struct('band_id', {b}, 'bv', "

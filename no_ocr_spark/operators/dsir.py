@@ -78,15 +78,10 @@ def _feature_rows(docs: DataFrame) -> DataFrame:
 
 def dsir_weights(docs: DataFrame) -> DataFrame:
     """(doc_id, text) -> (doc_id, n_feats, logw, selected)."""
-    # r6 (guide §1.2): the feature rows feed THREE consumers (raw
-    # distribution, target distribution, the scoring join) — without the
-    # barrier each re-ran the word-hash + bigram-compose + explode pass
-    # over the text column. Checkpointed rows are 16 bytes each.
-    # (cache(), not localCheckpoint: composing a dsir plan must fire no
-    # Spark job — tests/test_dsir.py pins that — and under AQE even a
-    # lazy localCheckpoint finalizes the upstream exchange at compose.
-    # The blocks materialize with the first downstream action; the
-    # linkgraph edge table set the precedent for this lazy-cache shape.)
+    # The feature rows feed three consumers (raw distribution, target
+    # distribution, the scoring join). cache(), not materialize():
+    # composing a dsir plan must fire no Spark job, and under AQE even a
+    # lazy checkpoint runs the upstream exchange at compose.
     feats = _feature_rows(docs).cache()
 
     raw = feats.groupBy("b").agg(F.count("*").alias("cr"))

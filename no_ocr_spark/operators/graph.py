@@ -6,8 +6,9 @@ clusters).
 Spark realization: the classic iterative DataFrame pattern —
 label(v) <- min(label(v), min label of neighbors), repeated until a round
 changes nothing. Each round is one shuffle join + one min-aggregation;
-`localCheckpoint` truncates the growing lineage every round (without it,
-iteration i replays rounds 1..i-1 — THE standard iterative-Spark trap).
+`materialize` cuts the lineage every round (without it, iteration i
+replays rounds 1..i-1 — THE standard iterative-Spark trap), and the
+round's convergence `count()` is the one job that fills that barrier.
 Rounds needed = component diameter; near-dup clusters are shallow (a dup
 cluster's diameter is small by construction). For adversarial long-chain
 graphs at 10^12 edges the large-star/small-star variant (Kiveris et al.,
@@ -24,32 +25,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from no_ocr_spark.plans.partitioning import materialize
+
 
 def connected_components(edges: DataFrame, max_iters: int = 25) -> DataFrame:
     """edges(src, dst) undirected -> (v, label) with label = min vertex id
     reachable. Deterministic; converges in O(max component diameter)
     rounds, early-exits when a round changes nothing; raises RuntimeError
     if a round still changes labels after `max_iters` rounds."""
-    # r6 (guide §2.4): checkpoint the DIRECTED edges once and derive the
-    # symmetric view by a map-only union over the checkpoint — the old
-    # plan ran a corpus-pair-sized distinct() (one full extra shuffle)
-    # and materialized the doubled list a second time. Duplicate edges
-    # are HARMLESS to min-label propagation (min over a multiset equals
-    # min over its set), so the dedup bought nothing.
-    e = edges.select("src", "dst").localCheckpoint()
+    # the symmetric view is a map-only union over the DIRECTED edges, not
+    # a distinct(): duplicate edges are HARMLESS to min-label propagation
+    # (min over a multiset equals min over its set)
+    e = materialize(edges.select("src", "dst"))
     und = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     # initial labels = min(v, min neighbor id): exactly the state after
     # one propagation round from identity labels, computed in the same
     # aggregation that enumerates the vertices — saves one full
-    # join+aggregate+checkpoint round (r6; min-label propagation reaches
-    # the same fixpoint from any state on its trajectory)
-    labels = (
+    # join+aggregate round (min-label propagation reaches the same
+    # fixpoint from any state on its trajectory)
+    labels = materialize(
         und.groupBy("src").agg(F.min("dst").alias("mn"))
         .select(F.col("src").alias("v"),
                 F.least("src", "mn").alias("label"))
-        .localCheckpoint()
     )
     for _ in range(max_iters):
         nbr = (
@@ -58,17 +57,14 @@ def connected_components(edges: DataFrame, max_iters: int = 25) -> DataFrame:
         )
         # carry the pre-round label through the min-aggregation (the
         # labels branch tags it; min() ignores the nbr branch's NULLs)
-        # so convergence is a filter over the checkpointed result — the
-        # old formulation re-joined new vs old labels every round just
-        # to count changes (r6, guide §2.4: one fewer corpus-sized
-        # shuffle join per iteration, same count by construction)
-        new_labels = (
+        # so convergence is a filter over the materialized result, not a
+        # re-join of new vs old labels
+        new_labels = materialize(
             labels.withColumn("old", F.col("label"))
             .unionByName(nbr.withColumn(
                 "old", F.lit(None).cast(dict(labels.dtypes)["label"])))
             .groupBy("v")
             .agg(F.min("label").alias("label"), F.min("old").alias("old"))
-            .localCheckpoint()  # truncate lineage each round
         )
         changed = new_labels.filter(F.col("label") != F.col("old")).count()
         labels = new_labels.select("v", "label")

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.operators.bm25 import B, K1, QUERY_TERMS, TOP_K
-from no_ocr_spark.plans.partitioning import fan_out_for_cpu
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu, materialize
 from no_ocr_spark.sources.tables import load_table
 
 _Q = 1_000_000_000  # contribution quantum (nanos)
@@ -60,13 +60,9 @@ def q_bm25_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out_for_cpu(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"), spark)
     post = build_postings(docs)
-    # r6 (guide §1.2): the probed postings feed BOTH the df aggregation
-    # and the scoring leg — without the barrier each consumer re-ran the
-    # corpus token explode + (term, doc, dl) aggregation. The checkpoint
-    # is |q| terms' postings only (the filter pushes below the agg onto
-    # the generate — see plans/r06).
-    probe = post.filter(
-        F.col("term").isin(QUERY_TERMS)).localCheckpoint()
+    # the barrier holds |q| terms' postings only (the filter pushes below
+    # the agg onto the generate — see plans/r06)
+    probe = materialize(post.filter(F.col("term").isin(QUERY_TERMS)))
     dfs = probe.groupBy("term").agg(F.count("*").alias("df"))
     stats = docs.select(
         F.expr("size(split(text, ' '))").alias("dl")

@@ -28,10 +28,8 @@ Spark realization, scale-first:
     sizes — float PageRank is not (sum order), which is why the oracle
     can demand exact equality. K iterations are unrolled lazily (no
     convergence .count() per round -> composing the query fires no
-    Spark job); production at 1e7+ hosts passes checkpoint_every to
-    truncate lineage exactly like graph.py does, and computes the
-    teleport constant from a vertex count instead of the synthesis
-    constant.
+    Spark job); production at 1e7+ hosts computes the teleport
+    constant from a vertex count instead of the synthesis constant.
   * per-iteration contribution of u to v is (rank(u) div out_w(u)) * w —
     div-then-multiply, the exact form the oracle replays. Rank mass lost
     to integer truncation stays lost (dust < n_edges per round,
@@ -189,14 +187,12 @@ def pagerank_fixed_point(
     init_rank: int,
     iters: int = K_ITERS,
     teleport: int = TELEPORT,
-    checkpoint_every: int | None = None,
 ) -> DataFrame:
     """Weighted host PageRank in exact bigint arithmetic.
 
     (src_host, dst_host, w) -> (host, rank_s); rank_s is the fixed-point
-    rank (scale SCALE). Lazy when checkpoint_every is None: composing
-    builds one DAG with the K iterations unrolled. At 1e7+ vertices pass
-    checkpoint_every≈3 to truncate lineage (same trap graph.py documents).
+    rank (scale SCALE). Lazy: composing builds one DAG with the K
+    iterations unrolled.
 
     The edge table is cache()d here (lazily — no job at compose): every
     iteration references it, and without a materialization point AQE
@@ -231,7 +227,7 @@ def pagerank_fixed_point(
     )
     zero_seed = verts.select("v", F.lit(0).cast("long").alias("c"))
     rank = verts.select("v", F.lit(int(init_rank)).cast("long").alias("r"))
-    for i in range(iters):
+    for _ in range(iters):
         # seeding a zero-mass row per vertex folds the "no in-links ->
         # teleport floor" left join into the aggregation itself: one
         # stage fewer per round, identical values (sum with 0 == coalesce)
@@ -249,8 +245,6 @@ def pagerank_fixed_point(
                 + F.expr(f"({DAMP_NUM} * c) div {DAMP_DEN}")
             ).alias("r"),
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            rank = rank.localCheckpoint()
     return rank.select(F.col("v").alias("host"), F.col("r").alias("rank_s"))
 
 
@@ -312,12 +306,7 @@ def q_anchor_text_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_host_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pages = pages_with_links(spark, sf_dir)
-    # cache-mark the edge table here too: Spark's CacheManager keys on the
-    # canonical plan, so q_host_pagerank's identical edges subtree reuses
-    # this entry instead of re-running the extraction — the two queries
-    # share one materialization of the (tiny) graph
-    return host_edges(extract_host_links(pages)).cache()
+    return host_edges(extract_host_links(pages_with_links(spark, sf_dir)))
 
 
 def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -63,16 +63,6 @@ def mixture_repeats(docs: DataFrame) -> DataFrame:
     )
 
 
-def explode_epochs(repeats: DataFrame) -> DataFrame:
-    """(doc_id, n_repeats) -> one row per (doc_id, epoch) copy — the
-    materialized training stream. Codegen sequence+explode; docs with
-    n_repeats = 0 vanish (subsampled away)."""
-    return repeats.filter(F.col("n_repeats") > 0).select(
-        "doc_id",
-        F.explode(F.expr("sequence(1, n_repeats)")).alias("epoch"),
-    )
-
-
 def q_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     return mixture_repeats(docs)

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.functions import textexpr as tx
-from no_ocr_spark.plans.partitioning import fan_out_for_cpu
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu, materialize
 from no_ocr_spark.sources.tables import load_table
 
 REF_MOD = 10  # reference slice: doc_id % REF_MOD == 0
@@ -77,15 +77,12 @@ def score_perplexity(docs: DataFrame, id_col: str = "doc_id",
                 F.col("bg.cur").alias("cur"))
     )
 
-    # r6 (guide §1.2): cp and v are DERIVABLE from cb — cp(prev) is the
-    # sum of cb over that prev, and the model vocabulary is the distinct
-    # hash set of cb's keys (every ref bigram occurrence is in cb by
-    # construction) — so the reference slice is scanned once, not three
-    # times. cb is vocabulary-sized: checkpointed so its three consumers
-    # (cp, v, the scoring join) don't re-run the ref-slice token pass.
+    # cp and v are DERIVABLE from cb — cp(prev) is the sum of cb over
+    # that prev, and the model vocabulary is the distinct hash set of
+    # cb's keys (every ref bigram occurrence is in cb by construction) —
+    # so the reference slice is scanned once, not three times.
     ref = bigrams.filter(ref_cond)
-    cb = ref.groupBy("prev", "cur").agg(
-        F.count("*").alias("cb")).localCheckpoint()
+    cb = materialize(ref.groupBy("prev", "cur").agg(F.count("*").alias("cb")))
     cp = cb.groupBy("prev").agg(F.sum("cb").alias("cp"))
     v = cb.select(F.col("prev").alias("h")).union(
         cb.select(F.col("cur").alias("h"))

@@ -62,7 +62,7 @@ from no_ocr_spark.functions.textexpr import (
     dot_unrolled,
     quantize,
 )
-from no_ocr_spark.plans.partitioning import fan_out_for_cpu
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu, materialize
 from no_ocr_spark.sources.tables import load_table
 
 M = 8                  # subspaces
@@ -113,18 +113,17 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The codebook is M*K rows of exact int64: it is collected per training
     step and inlined as literals, so every per-(vector, subspace)
-    assignment is map-side codegen over a localCheckpoint'd slim frame.
+    assignment is map-side codegen over a materialized slim frame.
     The distance table and query norms are int64 arithmetic on the
     collected codebook, replayed in Python, where arbitrary-precision
     ints equal in-range int64 ops exactly."""
-    emb = (
+    emb = materialize(
         fan_out_for_cpu(
             load_table(spark, sf_dir, "embeddings")
             .select("vec_id", "embedding"),
             spark,
         )
         .select("vec_id", F.expr(quantize("spark", "embedding")).alias("qv"))
-        .localCheckpoint()
     )
     base = {
         int(r["vec_id"]): [int(v) for v in r["qv"]]

@@ -47,7 +47,7 @@ from no_ocr_spark.functions.textexpr import (
     sq8_dequant_expr,
 )
 from no_ocr_spark.operators.retrieval import ivf_probe_topk
-from no_ocr_spark.plans.partitioning import fan_out_for_cpu
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu, materialize
 from no_ocr_spark.sources.tables import load_table
 
 
@@ -144,19 +144,17 @@ def q_ann_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     than floats), probing rescores ~N_PROBE/N_LISTS of the corpus."""
     # The SQ8 range stats are 2*DIM exact ints and the coarse centroids
     # are N_LISTS dequantized vectors: both are collected and inlined as
-    # literals, and list assignment is one map-side argmax over a
-    # localCheckpoint'd (vec_id, label, dv) frame, so the stats subtree
-    # runs once.
+    # literals, and list assignment is one map-side argmax over the
+    # materialized (vec_id, label, dv) frame.
     emb = load_table(spark, sf_dir, "embeddings")
     # fused encode+dequant (sq8_dequant_direct_expr): the codes column
     # is never materialized, so the O(DIM^2) CollapseProject inline of
     # transform-inside-transform never forms
-    d = (
+    d = materialize(
         sq8_encode(emb)
         .select("vec_id", "label",
                 F.expr(sq8_dequant_direct_expr(
                     "qv", "minqs", "spans")).alias("dv"))
-        .localCheckpoint()
     )
     cents_rows = sorted(
         (int(r["vec_id"]), [float(v) for v in r["dv"]])

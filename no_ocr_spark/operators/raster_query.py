@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from no_ocr_spark.plans.partitioning import fan_out_for_cpu
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu, materialize
 from no_ocr_spark.sources.tables import load_table
 
 _SCHEMA = ("doc_id bigint, page int, width int, height int, "
@@ -73,7 +73,7 @@ def q_page_rasters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Per-doc output rows are unchanged. The distinct-line table grows
     # with the corpus (24-char prefixes over [a-z0-9 ]), so the join
     # strategy is left to the broadcast threshold, not forced.
-    docs = fan_out_for_cpu(
+    docs = materialize(fan_out_for_cpu(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"), spark
     ).select(
         "doc_id",
@@ -83,8 +83,7 @@ def q_page_rasters(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.lit(""),
         ).alias("line"),
-    ).localCheckpoint()  # the regexp clean is ~2/3 of the query; it
-    # feeds both the distinct-line branch and the join side — run once
+    ))
     rasters = fan_out_for_cpu(docs.select("line").distinct(), spark
                               ).mapInPandas(
         _raster_line_batches, schema=_LINE_SCHEMA)

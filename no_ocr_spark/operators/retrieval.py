@@ -34,7 +34,7 @@ from no_ocr_spark.functions.textexpr import (
     multivec,
     quantize,
 )
-from no_ocr_spark.plans.partitioning import fan_out_for_cpu
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu, materialize
 from no_ocr_spark.sources.tables import load_table
 
 
@@ -305,7 +305,7 @@ def ivf_probe_topk(data: DataFrame, query: DataFrame,
     smaller cid), q = `qvec` of the 1-row `query`. `cols` (with "cid")
     are kept next to the score; no query row yields an empty result.
 
-    The assigned lists are stored with their cid (localCheckpoint after
+    The assigned lists are stored with their cid (materialize after
     _with_cid): a cid filter over _with_cid's projections is pushed
     through them, and the optimized plan then derives the whole argmax
     twice, once in the Filter and once in the Project above it."""
@@ -328,7 +328,7 @@ def ivf_probe_topk(data: DataFrame, query: DataFrame,
             .limit(n_probe)
             .collect()
         ]
-        lists = lists.localCheckpoint()
+        lists = materialize(lists)
     return (
         lists.filter(F.col("cid").isin(pcids))
         .select(*cols, F.expr(csim_lit(vec, qv0)).alias("score"))
@@ -352,17 +352,13 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str,
     whose cardinality is n_centroids x dim — tiny. The oracle replays the
     identical iterations in DuckDB SQL; integer math makes them bit-equal.
     """
-    # Fan out the RAW scan (quant is CPU-heavy per row), then
-    # localCheckpoint the slim (vec_id, qv) frame: the k-means build reads
-    # it once per Lloyd round + once for the final assignment, and the
-    # checkpoint truncates lineage exactly like graph.py's iterative CC.
+    # Fan out the RAW scan (quant is CPU-heavy per row)
     raw = fan_out_for_cpu(
         load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
         spark,
     )
-    emb = raw.select(
-        "vec_id", F.expr(quantize("spark", "embedding")).alias("qv")
-    ).localCheckpoint()
+    emb = materialize(raw.select(
+        "vec_id", F.expr(quantize("spark", "embedding")).alias("qv")))
     # Each Lloyd round's centroid table is n_centroids rows of exact int64
     # (K x DIM ints, never corpus rows): collecting it per round inlines
     # it as literals for _with_cid and keeps round i's centroids out of

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.functions import textexpr as tx
-from no_ocr_spark.plans.partitioning import fan_out_for_cpu
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu, materialize
 from no_ocr_spark.sources.tables import load_table
 
 K_GRAM = 8  # words per gram (the paper's 50 BPE tokens, scaled to the
@@ -95,14 +95,9 @@ def remove_repeated_substrings(docs: DataFrame) -> DataFrame:
     with_grams = docs.select(
         "doc_id", "text", F.expr(spark_grams).alias("grams")
     )
-    # r6 (guide §1.2): the (doc_id, pos, hash) explode feeds BOTH the
-    # duplicate-hash aggregation and the join back — without the barrier
-    # each consumer re-ran the whole word-hash + shingle-compose pass
-    # over the text column. The checkpointed rows are 20 bytes each
-    # (ids + 8-byte hashes, never text).
-    positions = with_grams.select(
+    positions = materialize(with_grams.select(
         "doc_id", F.posexplode("grams").alias("p0", "h")
-    ).select("doc_id", (F.col("p0") + 1).alias("pos"), "h").localCheckpoint()
+    ).select("doc_id", (F.col("p0") + 1).alias("pos"), "h"))
     dup_hashes = (positions.groupBy("h").count()
                   .filter(F.col("count") > 1).select("h"))
     dup_pos = (

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.functions import textexpr as tx
-from no_ocr_spark.plans.partitioning import fan_out_for_cpu
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu, materialize
 from no_ocr_spark.sources.tables import load_table
 
 # marker words per language for the heuristic language-ID.
@@ -182,15 +182,11 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = docs.select(
         "doc_id", F.explode(F.expr("split(text, ' ')")).alias("term")
     ).filter(F.col("term") != "")
-    # r6 (guide §1.2/§2.4): tf already holds exactly one row per distinct
-    # (doc, term), so df — docs containing the term — is a row count over
-    # tf per term: the old second explode + corpus-wide distinct() on
-    # (doc_id, term) STRINGS recomputed the token pass and shuffled it
-    # again for a quantity the first aggregation already determines. The
-    # localCheckpoint pins tf so the two consumers (df build, scoring
-    # join) share one evaluation.
-    tf = terms.groupBy("doc_id", "term").agg(
-        F.count("*").alias("tf")).localCheckpoint()
+    # tf already holds exactly one row per distinct (doc, term), so df —
+    # docs containing the term — is a row count over tf per term, not a
+    # second explode + corpus-wide distinct() on (doc_id, term) strings.
+    tf = materialize(terms.groupBy("doc_id", "term").agg(
+        F.count("*").alias("tf")))
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
     w = Window.partitionBy("doc_id").orderBy(
         F.desc("tf"), F.asc("df"), F.asc("term")

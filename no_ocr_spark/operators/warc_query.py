@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.operators.extraction_queries import pages_from_documents
-from no_ocr_spark.plans.partitioning import fan_out_for_cpu
+from no_ocr_spark.plans.partitioning import fan_out_for_cpu, materialize
 from no_ocr_spark.session import scratch_dir
 from no_ocr_spark.sources.tables import load_table
 from no_ocr_spark.sources.warc import pages_from_warc, pages_to_warc
@@ -113,15 +113,12 @@ def q_wat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         wat_from_files,
     )
 
-    # r6 (guide §1.2): the DOM-bearing pages feed both the metadata
-    # pipeline and the src side of the verdict join — checkpoint so the
-    # page-synthesis mapInPandas runs once.
-    pages = pages_with_links(spark, sf_dir).withColumn(
+    pages = materialize(pages_with_links(spark, sf_dir).withColumn(
         "warc_ts",
         F.expr("timestamp'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0,"
                " 0, 0, cast(regexp_extract(url, 'doc(\\\\d+)$', 1) as"
                " bigint))"),
-    ).localCheckpoint()
+    ))
     out = scratch_dir(spark, "no_ocr_wat_gate",
                       os.path.basename(sf_dir.rstrip("/")))
     pages_to_wat(metadata_from_pages(pages), out)
@@ -222,13 +219,8 @@ def q_warc_revisit_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         pages_to_warc_dedup,
     )
 
-    # r6 (guide §1.2): the synthesized pages feed THREE subtrees — the
-    # mirror slice, the sink's digest pass, and the src side of the
-    # verdict join. Checkpoint so page synthesis (the expensive Python
-    # stage) runs once; everything downstream reads the materialized
-    # (url, ts, html) rows.
-    pages = pages_from_documents(spark, sf_dir).select(
-        "url", "warc_ts", "html").localCheckpoint()
+    pages = materialize(pages_from_documents(spark, sf_dir).select(
+        "url", "warc_ts", "html"))
     mirrors = pages.filter(
         F.regexp_extract("url", "doc-(\\d+)$", 1).cast("long") % 10 == 0
     ).select(

@@ -1,5 +1,5 @@
 """Explicit partitioning, skew salting and the fan-out rule (SURVEY.md §4,
-deliberate item 1).
+deliberate item 1); `materialize` is the engine's one plan barrier.
 
 Three distinct concerns at 100 TB:
 
@@ -156,6 +156,28 @@ def fan_out_for_cpu(df: DataFrame, spark) -> DataFrame:
     if _scan_tasks(df, par) >= par:
         return df
     return df.repartition(par)
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """The engine's one plan barrier: a lazy local checkpoint of `df`.
+
+    Pin a frame that feeds two or more consumers of one plan, or every
+    round of an iteration, when recomputing it is expensive. Without a
+    barrier the rows stay identical but each consumer reruns the subtree
+    (sf0.1, local[4]: `dedup_ngram_jaccard` 4.4 -> 78 s,
+    `dedup_simhash_pairs` 2.0 -> 7.9 s, `warc_revisit_roundtrip`
+    2.3 -> 4.4 s) and an iteration replays its lineage every round.
+
+    Lazy, so composing runs no job of its own: the first job that reads
+    the frame stores its blocks (e.g. a connected-components round's
+    convergence count). Composing the 85 registered queries fires 237
+    jobs with lazy barriers against 272 with eager ones; under AQE the
+    exchanges below a barrier still run at compose. Not `cache()`: it was slower
+    best-of-7 (`dedup_ngram_jaccard` 3.60 -> 4.51 s, `page_rasters`
+    1.68 -> 2.00 s) and its entries outlive the query, so composing the
+    same plan again reads the old blocks. The blocks die with their
+    executor."""
+    return df.localCheckpoint(eager=False)
 
 
 def _scan_tasks(df: DataFrame, target: int) -> int:

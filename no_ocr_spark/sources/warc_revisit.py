@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from no_ocr_spark.plans.partitioning import materialize
 from no_ocr_spark.sources.warc import (
     _CRLF,
     build_warc,
@@ -172,16 +173,12 @@ def pages_from_warc_resolved(spark: SparkSession, path: str,
                              glob: str = "*.warc*") -> DataFrame:
     """Read responses AND revisits; resolve each revisit's payload from
     the canonical response via one digest equi-join."""
-    raw = (
+    raw = materialize(
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
         .load(path)
         .select("content")
         .mapInPandas(_explode, schema=WARC_RESOLVED_SCHEMA)
-        # r6: the parsed archive feeds three subtrees below (revisits,
-        # responses, needed-digest build); checkpoint so the Python
-        # record walk runs once, not per branch
-        .localCheckpoint()
     )
     # r6 (guide §2.3/§8): resolve ONLY revisits instead of left-joining
     # the whole archive against a min(html)-per-digest aggregation of

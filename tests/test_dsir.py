@@ -60,18 +60,3 @@ def test_weights_sum_against_known_tiny_model(spark):
     for r in out:
         assert r.n_feats == 1
         assert abs(r.logw - expect) < 1e-9
-
-
-def test_compose_fires_no_spark_job(spark):
-    from no_ocr_spark.sources.tables import load_table
-
-    from tests.test_partitioning import _n_spark_jobs
-
-    sf = "/root/testdata/sf0.001"
-    before = _n_spark_jobs(spark)
-    load_table(spark, sf, "documents").select("doc_id").schema
-    footer_jobs = _n_spark_jobs(spark) - before
-
-    before = _n_spark_jobs(spark)
-    dsir.q_dsir_select(spark, sf)
-    assert _n_spark_jobs(spark) - before <= footer_jobs

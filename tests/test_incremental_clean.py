@@ -134,6 +134,20 @@ def test_crash_before_commit_reruns_into_one_commit(spark, tmp_path_factory,
     assert st.read(spark, out + "/clean").count() == 47
 
 
+def test_failed_commit_releases_the_cleanup_cache(spark, tmp_path_factory,
+                                                 monkeypatch):
+    """A run whose commit raises still unpersists clean_corpus's
+    repetition-stage cache, and the error reaches the caller."""
+    snap, out = _paths(tmp_path_factory, "inccache")
+    st.write(spark, snap, spark.createDataFrame(_docs(spark, "a", 10, 1),
+                                                _SCHEMA))          # v1
+    spark.catalog.clearCache()
+    _crash_once_at_commit(monkeypatch)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_incremental(spark, snap, out, n_buckets=4)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_snapshot_advancing_after_a_crash_is_cleaned_once(
         spark, tmp_path_factory, monkeypatch):
     """If the snapshot ADVANCES between a crash and the re-run, the re-run

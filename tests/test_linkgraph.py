@@ -108,33 +108,6 @@ def test_pagerank_bit_identical_across_parallelism(spark):
     assert a == b
 
 
-def test_compose_fires_no_spark_job(spark):
-    # lsh_bits_for rule: composing must not run jobs beyond the parquet
-    # footer-read inherent to its one load_table call
-    from no_ocr_spark.sources.tables import load_table
-
-    from tests.test_partitioning import _n_spark_jobs
-
-    sf = "/root/testdata/sf0.001"
-    before = _n_spark_jobs(spark)
-    load_table(spark, sf, "documents").select("doc_id").schema
-    footer_jobs = _n_spark_jobs(spark) - before
-
-    before = _n_spark_jobs(spark)
-    lg.q_host_pagerank(spark, sf)
-    assert _n_spark_jobs(spark) - before <= footer_jobs
-
-
-def test_checkpoint_every_matches_lazy_plan(spark):
-    e = _edges(spark, [("a", "b", 2), ("b", "a", 1), ("a", "c", 1)])
-    kw = dict(init_rank=lg.SCALE // 3, teleport=(15 * lg.SCALE) // 300)
-    lazy = sorted(map(tuple, lg.pagerank_fixed_point(e, **kw).collect()))
-    ck = sorted(
-        map(tuple, lg.pagerank_fixed_point(e, checkpoint_every=2, **kw).collect())
-    )
-    assert lazy == ck
-
-
 def test_anchor_text_extraction_normalizes_and_skips_empty(spark):
     html = (
         b"<html><body>"

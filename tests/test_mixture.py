@@ -1,7 +1,5 @@
 """Mixture resampling (operators/mixture.py)."""
 
-from pyspark.sql import functions as F
-
 from no_ocr_spark.operators import mixture
 
 
@@ -34,32 +32,3 @@ def test_deterministic_and_partitioning_invariant(spark):
         .repartition(13)
     b = sorted(map(tuple, mixture.mixture_repeats(docs).collect()))
     assert a == b
-
-
-def test_explode_epochs_materializes_stream(spark):
-    rows = [(1, "src4"), (2, "src4")]
-    rep = _docs(spark, rows).withColumn("n_repeats", F.lit(0) + F.col("doc_id"))
-    # doc 1 -> 1 copy, doc 2 -> 2 copies
-    got = sorted((r.doc_id, r.epoch)
-                 for r in mixture.explode_epochs(rep).collect())
-    assert got == [(1, 1), (2, 1), (2, 2)]
-
-
-def test_zero_repeat_docs_vanish_from_stream(spark):
-    rep = _docs(spark, [(1, "s")]).withColumn("n_repeats", F.lit(0))
-    assert mixture.explode_epochs(rep).count() == 0
-
-
-def test_compose_fires_no_spark_job(spark):
-    from no_ocr_spark.sources.tables import load_table
-
-    from tests.test_partitioning import _n_spark_jobs
-
-    sf = "/root/testdata/sf0.001"
-    before = _n_spark_jobs(spark)
-    load_table(spark, sf, "documents").select("doc_id").schema
-    footer_jobs = _n_spark_jobs(spark) - before
-
-    before = _n_spark_jobs(spark)
-    mixture.q_mixture_resample(spark, sf)
-    assert _n_spark_jobs(spark) - before <= footer_jobs
