@@ -4,38 +4,22 @@ carrying the (file, offset, length) needed to range-fetch exactly one
 gzip member out of a petabyte of .warc.gz (the cc-index / cdxj format;
 SURT and CDX are public IIPC/webarchive conventions).
 
-Two legs:
+`q_cdx_index` (extras query, exact DuckDB oracle): documents ->
+deterministically synthesized capture urls covering the SURT edge cases
+(www., ports, subdomains, query strings, root paths) -> (urlkey, ts,
+digest). Pure codegen string work via textexpr.surt_key (dual-dialect,
+empirically verified identical) — map-only, no shuffle, scales
+trivially.
 
-  * `q_cdx_index` — the RELATIONAL leg (extras query, exact DuckDB
-    oracle): documents -> deterministically synthesized capture urls
-    covering the SURT edge cases (www., ports, subdomains, query
-    strings, root paths) -> (urlkey, ts, digest). Pure codegen string
-    work via textexpr.surt_key (dual-dialect, empirically verified
-    identical) — map-only, no shuffle, scales trivially.
-  * `cdx_from_warc` — the ARCHIVE leg: binaryFile over the WARC sink's
-    part-*.warc.gz -> one Arrow-batched stage walking each file's
-    PER-RECORD gzip members (the sink's Common Crawl framing: each
-    record independently inflatable) -> (urlkey, ts, filename, offset,
-    length, digest) rows. Offset/length are byte-exact member
-    boundaries: seeking `offset` and reading `length` bytes yields one
-    valid .gz member — the range-request contract. Parallel unit = one
-    archive file = one task, matching the reader; member walking is a
-    single forward pass over the compressed bytes (zlib streams report
-    unused_data, no decompress-twice).
-
-The archive leg has no SQL oracle (offsets depend on gzip encoder
-output); it is round-trip tested instead: index -> range-read each
-(offset, length) slice -> inflate -> parse -> byte-compare against the
-rows that were written (tests/test_cdx.py).
+The range-request contract a cc-index row relies on — every record of a
+compressed WARC sink part is its own gzip member, so (offset, length)
+slices inflate independently — is a property of the sink
+(`sources/warc.py write_member_parts`) and is tested there
+(tests/test_sources_warc.py).
 """
 
 from __future__ import annotations
 
-import hashlib
-import zlib
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -124,82 +108,3 @@ ORACLES = {
         FROM caps
     """
 }
-
-
-# --- archive leg -----------------------------------------------------------
-
-def iter_gzip_members(data: bytes) -> Iterator[tuple[int, int, bytes]]:
-    """(offset, length, inflated) per gzip member of a multi-member .gz.
-
-    One forward pass: each zlib stream consumes exactly one member and
-    reports the remainder via unused_data — offsets are byte-exact
-    without re-scanning for magic bytes (which can occur inside
-    compressed payloads)."""
-    pos = 0
-    n = len(data)
-    while pos < n:
-        d = zlib.decompressobj(16 + zlib.MAX_WBITS)
-        inflated = d.decompress(data[pos:])
-        if not d.eof:
-            raise ValueError(f"truncated gzip member at offset {pos}")
-        consumed = (n - pos) - len(d.unused_data)
-        yield pos, consumed, inflated
-        pos += consumed
-
-
-def cdx_from_warc(spark: SparkSession, warc_dir: str) -> DataFrame:
-    """part-*.warc.gz -> (urlkey, ts, filename, offset, length, digest).
-
-    digest is md5 of the record's decoded HTML payload (post HTTP
-    envelope strip) — the dedup key CDX consumers use. urlkey is
-    computed JVM-side from the parsed url (codegen, not Python)."""
-    import posixpath
-
-    from no_ocr_spark.sources.warc import parse_warc
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(warc_dir)
-        .select("path", "content")
-    )
-
-    def index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out: dict[str, list] = {
-                "url": [], "ts": [], "filename": [],
-                "offset": [], "length": [], "digest": [],
-            }
-            for path, content in zip(b["path"], b["content"]):
-                fname = posixpath.basename(str(path))
-                data = bytes(content)
-                for off, ln, raw in iter_gzip_members(data):
-                    recs = parse_warc(raw)
-                    if len(recs) != 1:
-                        raise ValueError(
-                            f"{fname}@{off}: expected 1 record per member, "
-                            f"got {len(recs)}"
-                        )
-                    r = recs[0]
-                    ts = r["warc_ts"]
-                    out["url"].append(r["url"])
-                    out["ts"].append(
-                        ts.strftime("%Y%m%d%H%M%S") if ts else None
-                    )
-                    out["filename"].append(fname)
-                    out["offset"].append(off)
-                    out["length"].append(ln)
-                    out["digest"].append(
-                        hashlib.md5(r["payload"]).hexdigest()
-                    )
-            yield pd.DataFrame(out)
-
-    raw = files.mapInPandas(
-        index,
-        schema=("url string, ts string, filename string, offset long, "
-                "length long, digest string"),
-    )
-    return raw.select(
-        F.expr(tx.surt_key("spark", "url")).alias("urlkey"),
-        "ts", "url", "filename", "offset", "length", "digest",
-    )

@@ -109,13 +109,17 @@ def pages_with_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(to_pages, schema=PAGES_LINKS_SCHEMA)
 
 
-def _anchor_pairs(html: bytes) -> list[tuple[str, str]]:
-    """All (href, anchor text) pairs in document order, via the real DOM
-    parser; anchor text is the <a> subtree's concatenated strings,
-    whitespace-collapsed."""
+def _title_and_anchors(html: bytes) -> tuple[str, list[tuple[str, str]]]:
+    """One DOM parse and one walk -> (title, anchor pairs): the first
+    <title> node's own strings, and every (href, anchor text) pair in
+    document order, anchor text being the <a> subtree's concatenated
+    strings; both whitespace-collapsed."""
     import re
 
     from no_ocr_spark.extract.dom import parse
+
+    def collapse(parts) -> str:
+        return re.sub(r"\s+", " ", "".join(parts)).strip()
 
     def subtree_text(node) -> str:
         parts: list[str] = []
@@ -126,23 +130,26 @@ def _anchor_pairs(html: bytes) -> list[tuple[str, str]]:
                 parts.append(n)
                 continue
             stk.extend(reversed(n.children))
-        return re.sub(r"\s+", " ", "".join(parts)).strip()
+        return collapse(parts)
 
+    title = None
     out: list[tuple[str, str]] = []
     stack = [parse(html)]
     while stack:
         node = stack.pop()
         if isinstance(node, str):
             continue
-        if node.name == "a" and "href" in node.attrs:
+        if node.name == "title" and title is None:
+            title = collapse(c for c in node.children if isinstance(c, str))
+        elif node.name == "a" and "href" in node.attrs:
             out.append((node.attrs["href"], subtree_text(node)))
         stack.extend(reversed(node.children))
-    return out
+    return title or "", out
 
 
 def _hrefs(html: bytes) -> list[str]:
     """All <a href> values in document order."""
-    return [href for href, _ in _anchor_pairs(html)]
+    return [href for href, _ in _title_and_anchors(html)[1]]
 
 
 def extract_host_links(pages: DataFrame) -> DataFrame:
@@ -259,7 +266,7 @@ def extract_anchor_texts(pages: DataFrame) -> DataFrame:
             dsts, texts = [], []
             for html in b["html"]:
                 payload = bytes(html) if html is not None else b""
-                for href, t in _anchor_pairs(payload):
+                for href, t in _title_and_anchors(payload)[1]:
                     if not href.startswith(("http://", "https://")):
                         continue
                     host = href.split("/", 3)[2].split(":", 1)[0].lower()

@@ -26,6 +26,7 @@ metadata commit swaps their entries.
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,16 +53,13 @@ def q_merge_upsert_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dels = docs.filter(F.col("doc_id") % 10 == 0).select("doc_id")
 
-    # One table dir per session and sf (not a fresh mkdtemp per invocation —
-    # repeated composes would accumulate copies in /tmp). Re-running the
-    # op sequence on the previous final state CONVERGES to the same
-    # result: every key in the final set ((%2 or %3) minus %10) is
-    # re-touched by the base or update upsert, and %10 keys are
-    # re-deleted, so stale state cannot leak into the returned rows. The
-    # returned DataFrame reads the dir lazily, so it must outlive this
-    # function.
+    # A fresh table per compose, so every compose runs the same three
+    # commits. An earlier compose's table is left in place: the DataFrame
+    # it returned reads its dir lazily. session.scratch_dir removes them
+    # all when the process exits.
     path = scratch_dir(spark, "no_ocr_merge_gate",
-                       os.path.basename(sf_dir.rstrip("/")), "t")
+                       os.path.basename(sf_dir.rstrip("/")),
+                       uuid.uuid4().hex)
     merge_upsert(spark, path, base, key="doc_id", n_buckets=_N_BUCKETS)
     merge_upsert(spark, path, upd, key="doc_id", n_buckets=_N_BUCKETS)
     delete_keys(spark, path, dels, key="doc_id", n_buckets=_N_BUCKETS)

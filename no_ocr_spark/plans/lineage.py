@@ -195,24 +195,18 @@ def run_with_lineage(
 
 def snapshot_buckets(spark: SparkSession, snap_path: str) -> set[int]:
     """Buckets present in the CURRENT snapshot version, reconstructed from
-    the per-commit `props['buckets']` summaries snapshot_extracted writes
-    (metadata-only — no data scan). A non-compact commit written without
-    the summary (foreign writer) falls back to a column-pruned distinct
-    scan of the bucket column."""
+    the per-commit `props['buckets']` summaries (metadata-only — no data
+    scan). snapshot_extracted is the table's only writer, and every
+    commit it makes carries the summary."""
     if snaptable.current_version(spark, snap_path) < 1:
         return set()
     have: set[int] = set()
     for s in snaptable.history(spark, snap_path):
         op = s.get("operation")
-        b = (s.get("props") or {}).get("buckets")
         if op == "compact":
             continue  # row-preserving: bucket set unchanged
-        if b is None:
-            return {
-                r.bucket for r in snaptable.read(spark, snap_path)
-                .select("bucket").distinct().collect()
-            }
-        have = set(b) if op == "overwrite" else have | set(b)
+        b = set(s["props"]["buckets"])
+        have = b if op == "overwrite" else have | b
     return have
 
 

@@ -1,19 +1,30 @@
-"""WARC container source: Common-Crawl-style archives -> pages rows.
+"""WARC record codec: the one place the engine renders, frames and scans
+WARC/1.0 records (ISO 28500, public spec), and the WARC pages source and
+sink on top of it.
 
-The north rule's input is "Common-Crawl-style web pages"; the crawl's
-native container is WARC/1.0 (ISO 28500, public spec). This module gives
-the engine a real ingestion edge for it:
+Codec (shared by the WET, WAT and revisit record rules in sources/wet.py,
+sources/wat.py and sources/warc_revisit.py):
 
-  * `parse_warc` — from-scratch record reader: Content-Length-FRAMED (the
-    spec's framing; never scans for separators inside payloads, so binary
-    payloads with embedded "WARC/1.0" bytes parse correctly), response
-    records only, optional HTTP envelope stripping, whole-file gzip
-    transparently inflated.
-  * `build_warc` — deterministic writer for fixtures/tests.
-  * `pages_from_warc` — Spark operator: `binaryFile` scan (one row per
-    .warc file) -> Arrow-batched mapInPandas exploding each archive into
-    pages rows (url, warc_ts, html, text=NULL, lang=NULL; extraction
-    derives text downstream).
+  * `record(headers, block)` — one record: the version line, the given
+    `(name, value)` headers in order, Content-Length, the blank line, the
+    block and the CRLF CRLF separator. `warc_date(ts)` is the one
+    WARC-Date rendering (None is the epoch).
+  * `iter_warc_records` — Content-Length-FRAMED walk over every record
+    (the spec's framing; it never scans for separators inside payloads,
+    so binary payloads with embedded version-line bytes parse correctly),
+    whole-file and per-record-member gzip transparently inflated;
+    `_http_payload` strips a response block's HTTP envelope.
+  * `scan(spark, path, glob, rows_of, schema)` — the one archive reader:
+    `binaryFile` (one row per file = one task) -> Arrow-batched
+    mapInPandas; `rows_of(content) -> list[dict]` is a format's only
+    per-file code.
+  * `write_member_parts` — the one archive part writer (per-record gzip
+    members, atomic renames, pyarrow.fs seam).
+
+WARC rules: `build_warc` / `parse_warc` render and read response records
+(payload in a minimal HTTP envelope, or raw); `pages_from_warc` and
+`pages_to_warc` are the pages source and sink (url, warc_ts, html; text
+and lang NULL on read — extraction derives text downstream).
 
 Scale notes: Common Crawl ships ~1 GB .warc.gz segments; one file = one
 task is the natural parallel unit (binaryFile does exactly that), and a
@@ -25,46 +36,59 @@ from __future__ import annotations
 
 import datetime as dt
 import gzip
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 _CRLF = b"\r\n"
+_DATE_FMT = "%Y-%m-%dT%H:%M:%SZ"
+_EPOCH = dt.datetime(1970, 1, 1)
 
 WARC_PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
 
 
+def warc_date(ts: dt.datetime | None) -> str:
+    """WARC-Date value at second resolution; None (a NULL or malformed
+    capture time) is written as the epoch rather than failing the task."""
+    return (ts or _EPOCH).strftime(_DATE_FMT)
+
+
+def record(headers: list[tuple[str, str]], block: bytes) -> bytes:
+    """One WARC/1.0 record: `headers` in the given order, then
+    Content-Length, the blank line, `block` and the two-CRLF separator
+    (short one CRLF and the frame walker lands inside the next record)."""
+    head = "".join(f"{name}: {value}\r\n" for name, value in headers)
+    return (b"WARC/1.0\r\n" + head.encode()
+            + b"Content-Length: %d\r\n\r\n" % len(block)
+            + block + _CRLF * 2)
+
+
 def build_warc(records: list[dict], compress: bool = False) -> bytes:
-    """records: [{url, date (datetime), payload (bytes), http (bool)}] ->
-    WARC/1.0 bytes. With http=True the payload is wrapped in a minimal 200
-    response envelope (what real crawl 'response' records contain)."""
+    """records: [{url, date (datetime or None), payload (bytes), http
+    (bool, default True)}] ->
+    response-record bytes. With http=True the payload is wrapped in a
+    minimal 200 response envelope (what real crawl 'response' records
+    contain)."""
     out = bytearray()
     for i, rec in enumerate(records):
         payload = rec["payload"]
         if rec.get("http", True):
-            envelope = (
-                b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-                b"Content-Length: " + str(len(payload)).encode() + _CRLF * 2
-            )
-            block = envelope + payload
-            ctype = b"application/http; msgtype=response"
+            block = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
+                     b"Content-Length: %d\r\n\r\n" % len(payload)) + payload
+            ctype = "application/http; msgtype=response"
         else:
             block = payload
-            ctype = b"application/octet-stream"
-        date = rec["date"].strftime("%Y-%m-%dT%H:%M:%SZ").encode()
-        headers = (
-            b"WARC/1.0\r\n"
-            b"WARC-Type: response\r\n"
-            b"WARC-Record-ID: <urn:uuid:rec-" + str(i).encode() + b">\r\n"
-            b"WARC-Target-URI: " + rec["url"].encode() + _CRLF +
-            b"WARC-Date: " + date + _CRLF +
-            b"Content-Type: " + ctype + _CRLF +
-            b"Content-Length: " + str(len(block)).encode() + _CRLF
-        )
-        out += headers + _CRLF + block + _CRLF * 2
+            ctype = "application/octet-stream"
+        out += record([
+            ("WARC-Type", "response"),
+            ("WARC-Record-ID", f"<urn:uuid:rec-{i}>"),
+            ("WARC-Target-URI", rec["url"]),
+            ("WARC-Date", warc_date(rec["date"])),
+            ("Content-Type", ctype),
+        ], block)
     data = bytes(out)
     return gzip.compress(data, mtime=0) if compress else data
 
@@ -82,8 +106,8 @@ def _parse_headers(raw: bytes) -> dict[str, str]:
 
 def iter_warc_records(data: bytes) -> Iterator[tuple[dict, bytes]]:
     """Content-Length-framed walk over WARC bytes -> (headers, block)
-    pairs for EVERY record type (whole-file gzip inflated). Shared by the
-    response reader below and the WET conversion reader (sources/wet.py)."""
+    pairs for EVERY record type (gzip inflated); each format's reader
+    keeps the record types it wants."""
     if data[:2] == b"\x1f\x8b":
         # NOT gzip.decompress(): on a many-member stream (the per-record
         # member convention) CPython's decompress() re-copies the whole
@@ -120,60 +144,67 @@ def parse_warc_date(headers: dict) -> dt.datetime | None:
     if "warc-date" not in headers:
         return None
     try:
-        return dt.datetime.strptime(headers["warc-date"],
-                                    "%Y-%m-%dT%H:%M:%SZ")
+        return dt.datetime.strptime(headers["warc-date"], _DATE_FMT)
     except ValueError:
         return None
+
+
+def _http_payload(headers: dict, block: bytes) -> bytes:
+    """A response block's payload: the block minus its HTTP envelope
+    (status line + headers) when the record carries application/http."""
+    if not headers.get("content-type", "").startswith("application/http"):
+        return block
+    env_end = block.find(_CRLF * 2)
+    return block[env_end + 4:] if env_end != -1 else block
 
 
 def parse_warc(data: bytes) -> list[dict]:
     """WARC bytes -> [{url, warc_ts, payload}] for response records.
     Content-Length framing per the spec; HTTP envelopes stripped."""
-    out: list[dict] = []
-    for headers, block in iter_warc_records(data):
-        if headers.get("warc-type") != "response":
-            continue
-        payload = block
-        if headers.get("content-type", "").startswith("application/http"):
-            env_end = block.find(_CRLF * 2)
-            payload = block[env_end + 4:] if env_end != -1 else block
-        out.append({
-            "url": headers.get("warc-target-uri", ""),
-            "warc_ts": parse_warc_date(headers),
-            "payload": payload,
-        })
-    return out
+    return [
+        {"url": headers.get("warc-target-uri", ""),
+         "warc_ts": parse_warc_date(headers),
+         "payload": _http_payload(headers, block)}
+        for headers, block in iter_warc_records(data)
+        if headers.get("warc-type") == "response"
+    ]
 
 
-def _explode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        urls, tss, payloads = [], [], []
-        for content in pdf["content"]:
-            for rec in parse_warc(bytes(content)):
-                urls.append(rec["url"])
-                tss.append(rec["warc_ts"])
-                payloads.append(rec["payload"])
-        yield pd.DataFrame({
-            "url": urls,
-            "warc_ts": tss,
-            "html": payloads,
-            "text": pd.array([None] * len(urls), dtype="object"),
-            "lang": pd.array([None] * len(urls), dtype="object"),
-        })
+def scan(spark: SparkSession, path: str, glob: str,
+         rows_of: Callable[[bytes], list[dict]], schema: str) -> DataFrame:
+    """Directory of archive files -> `schema` rows. One binaryFile row per
+    file (one file = one task); each Arrow batch of files is exploded by
+    `rows_of(content) -> [row dict]`, zero row-Python outside it. A column
+    a row dict leaves out is NULL."""
+    from pyspark.sql.types import StructType
 
+    names = StructType.fromDDL(schema).names
 
-def pages_from_warc(spark: SparkSession, path: str,
-                    glob: str = "*.warc*") -> DataFrame:
-    """Directory of WARC files -> pages DataFrame (BASELINE input shape;
-    text/lang NULL — extraction computes text downstream). One binaryFile
-    row per archive; record explosion is Arrow-batched, zero row-Python."""
+    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [r for content in pdf["content"]
+                    for r in rows_of(bytes(content))]
+            yield pd.DataFrame({c: [r.get(c) for r in rows] for c in names})
+
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
         .load(path)
         .select("content")
     )
-    return files.mapInPandas(_explode_batches, schema=WARC_PAGES_SCHEMA)
+    return files.mapInPandas(explode, schema=schema)
+
+
+def _warc_rows(content: bytes) -> list[dict]:
+    return [{"url": r["url"], "warc_ts": r["warc_ts"], "html": r["payload"]}
+            for r in parse_warc(content)]
+
+
+def pages_from_warc(spark: SparkSession, path: str,
+                    glob: str = "*.warc*") -> DataFrame:
+    """Directory of WARC files -> pages DataFrame (BASELINE input shape;
+    text/lang NULL — extraction computes text downstream)."""
+    return scan(spark, path, glob, _warc_rows, WARC_PAGES_SCHEMA)
 
 
 def _warc_fs(path: str):
@@ -293,16 +324,12 @@ def pages_to_warc(df: DataFrame, out_dir: str,
     (stale-part cleanup, hidden attempt-unique temp names, atomic
     rename, pyarrow.fs chokepoint — full story in its docstring). Rows
     with NULL warc_ts (the reader emits them for malformed WARC-Date
-    headers) are written with the epoch date rather than failing the
-    task. Returns [{file, n_records, n_bytes}].
+    headers) are written with the epoch date (`warc_date`). Returns
+    [{file, n_records, n_bytes}].
     """
     def row_bytes(r) -> bytes:
-        return build_warc([{
-            "url": r["url"],
-            "date": r["warc_ts"] or dt.datetime(1970, 1, 1),
-            "payload": bytes(r["html"]),
-            "http": True,
-        }])
+        return build_warc([{"url": r["url"], "date": r["warc_ts"],
+                            "payload": bytes(r["html"])}])
 
     return write_member_parts(
         df.select("url", "warc_ts", "html"), out_dir, ".warc",

@@ -20,23 +20,27 @@ Spark shape:
 Digest format: `sha1:<hex>` (the spec fixes `algorithm:value`; hex is
 the engine's choice and is round-tripped verbatim, so resolution never
 re-derives it).
+
+This module keeps only the revisit record rules (which headers a revisit
+carries; which record types and fields the resolving reader keeps);
+rendering, framing, the scan and the part writer are the shared codec in
+`sources/warc.py`.
 """
 
 from __future__ import annotations
 
-import datetime as dt
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.plans.partitioning import materialize
 from no_ocr_spark.sources.warc import (
-    _CRLF,
+    _http_payload,
     build_warc,
     iter_warc_records,
     parse_warc_date,
+    record,
+    scan,
+    warc_date,
     write_member_parts,
 )
 
@@ -51,24 +55,16 @@ WARC_RESOLVED_SCHEMA = (
 
 
 def _revisit_bytes(rec: dict) -> bytes:
-    """One revisit record: headers only, zero-length block."""
-    date = rec["date"].strftime("%Y-%m-%dT%H:%M:%SZ").encode()
-    ref_date = rec["ref_date"].strftime("%Y-%m-%dT%H:%M:%SZ").encode()
-    return (
-        b"WARC/1.0\r\n"
-        b"WARC-Type: revisit\r\n"
-        b"WARC-Profile: " + REVISIT_PROFILE.encode() + _CRLF +
-        b"WARC-Target-URI: " + rec["url"].encode() + _CRLF +
-        b"WARC-Date: " + date + _CRLF +
-        b"WARC-Payload-Digest: " + rec["digest"].encode() + _CRLF +
-        b"WARC-Refers-To-Target-URI: " + rec["ref_url"].encode() + _CRLF +
-        b"WARC-Refers-To-Date: " + ref_date + _CRLF +
-        b"Content-Length: 0\r\n"
-        # blank line terminating the header block, empty block, then the
-        # two-CRLF record separator (ISO 28500 grammar: short one CRLF
-        # here and the frame walker lands INSIDE the next record)
-        + _CRLF + _CRLF * 2
-    )
+    """One revisit record: headers only (no Content-Type), empty block."""
+    return record([
+        ("WARC-Type", "revisit"),
+        ("WARC-Profile", REVISIT_PROFILE),
+        ("WARC-Target-URI", rec["url"]),
+        ("WARC-Date", warc_date(rec["date"])),
+        ("WARC-Payload-Digest", rec["digest"]),
+        ("WARC-Refers-To-Target-URI", rec["ref_url"]),
+        ("WARC-Refers-To-Date", warc_date(rec["ref_date"])),
+    ], b"")
 
 
 def pages_to_warc_dedup(df: DataFrame, out_dir: str,
@@ -76,8 +72,6 @@ def pages_to_warc_dedup(df: DataFrame, out_dir: str,
     """(url, warc_ts, html) -> WARC parts where repeated payloads become
     revisit records. Canonical capture per digest = min (warc_ts, url).
     Returns the part manifest [{file, n_records, n_bytes}]."""
-    from pyspark.sql import Window
-
     digested = df.select(
         "url", "warc_ts", "html",
         F.concat(F.lit("sha1:"), F.sha1("html")).alias("digest"),
@@ -120,53 +114,40 @@ def pages_to_warc_dedup(df: DataFrame, out_dir: str,
     )
 
     def row_bytes(r) -> bytes:
-        date = r["warc_ts"] or dt.datetime(1970, 1, 1)
         if r["is_revisit"]:
             return _revisit_bytes({
-                "url": r["url"], "date": date, "digest": r["digest"],
-                "ref_url": r["ref_url"],
-                "ref_date": r["ref_ts"] or dt.datetime(1970, 1, 1),
+                "url": r["url"], "date": r["warc_ts"], "digest": r["digest"],
+                "ref_url": r["ref_url"], "ref_date": r["ref_ts"],
             })
-        return build_warc([{
-            "url": r["url"], "date": date,
-            "payload": bytes(r["html"]), "http": True,
-        }])
+        return build_warc([{"url": r["url"], "date": r["warc_ts"],
+                            "payload": bytes(r["html"])}])
 
     return write_member_parts(marked, out_dir, ".warc", row_bytes,
                               compress=compress)
 
 
-def _explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _resolved_rows(content: bytes) -> list[dict]:
+    """Response and revisit records of one file; a response's digest is
+    derived from its payload, a revisit's read from its header."""
     import hashlib
 
-    for pdf in batches:
-        rows: dict[str, list] = {
-            "url": [], "warc_ts": [], "html": [],
-            "digest": [], "was_revisit": [],
-        }
-        for content in pdf["content"]:
-            for headers, block in iter_warc_records(bytes(content)):
-                wtype = headers.get("warc-type")
-                if wtype == "response":
-                    payload = block
-                    if headers.get("content-type", "").startswith(
-                            "application/http"):
-                        env_end = block.find(b"\r\n\r\n")
-                        payload = (block[env_end + 4:]
-                                   if env_end != -1 else block)
-                    digest = "sha1:" + hashlib.sha1(payload).hexdigest()
-                    rows["html"].append(payload)
-                    rows["was_revisit"].append(False)
-                elif wtype == "revisit":
-                    digest = headers.get("warc-payload-digest", "")
-                    rows["html"].append(None)
-                    rows["was_revisit"].append(True)
-                else:
-                    continue
-                rows["url"].append(headers.get("warc-target-uri", ""))
-                rows["warc_ts"].append(parse_warc_date(headers))
-                rows["digest"].append(digest)
-        yield pd.DataFrame(rows)
+    rows = []
+    for headers, block in iter_warc_records(content):
+        wtype = headers.get("warc-type")
+        if wtype == "response":
+            html = _http_payload(headers, block)
+            digest = "sha1:" + hashlib.sha1(html).hexdigest()
+        elif wtype == "revisit":
+            html, digest = None, headers.get("warc-payload-digest", "")
+        else:
+            continue
+        rows.append({
+            "url": headers.get("warc-target-uri", ""),
+            "warc_ts": parse_warc_date(headers),
+            "html": html, "digest": digest,
+            "was_revisit": wtype == "revisit",
+        })
+    return rows
 
 
 def pages_from_warc_resolved(spark: SparkSession, path: str,
@@ -174,12 +155,7 @@ def pages_from_warc_resolved(spark: SparkSession, path: str,
     """Read responses AND revisits; resolve each revisit's payload from
     the canonical response via one digest equi-join."""
     raw = materialize(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("content")
-        .mapInPandas(_explode, schema=WARC_RESOLVED_SCHEMA)
-    )
+        scan(spark, path, glob, _resolved_rows, WARC_RESOLVED_SCHEMA))
     # r6 (guide §2.3/§8): resolve ONLY revisits instead of left-joining
     # the whole archive against a min(html)-per-digest aggregation of
     # every response — that shuffled every payload byte by digest; the

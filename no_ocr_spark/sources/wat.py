@@ -9,19 +9,20 @@ headers and parsed HTML metadata (head title + outgoing links) — the
 artifact crawl consumers use when they need link/metadata analytics
 WITHOUT re-parsing terabytes of raw HTML. This engine computes exactly
 those fields already (the link-graph DOM stage); WAT is their
-interchange serialization:
+interchange serialization. This module keeps only the WAT record rules;
+rendering, framing, the scan and the part writer are the shared codec
+in `sources/warc.py`:
 
-  * `build_wat_record` — deterministic writer for one page's metadata
-    (json.dumps with sorted keys — byte-reproducible across runs and
-    cluster sizes).
-  * `parse_wat` — reader: metadata records -> [{url, warc_ts, title,
-    links}], shared framing walker with the WARC/WET readers.
+  * `build_wat_record` — one `metadata` record whose payload is the JSON
+    envelope (json.dumps with sorted keys — byte-reproducible across runs
+    and cluster sizes).
+  * `parse_wat` — metadata records -> [{url, warc_ts, title, links}].
   * `metadata_from_pages` — Spark stage: (url, html) -> (url, title,
     links) via ONE Arrow-batched pass over the same from-scratch DOM
-    stack the extractor and link graph use.
-  * `pages_to_wat` / `wat_from_files` — sink/source on the shared
-    `write_member_parts` discipline (per-record gzip members, atomic
-    renames, pyarrow.fs seam) and binaryFile one-file-one-task scans.
+    stack the extractor and link graph use: one parse and one walk per
+    page yield the title and the anchor pairs together.
+  * `pages_to_wat` / `wat_from_files` — Spark sink and source
+    (`part-N.warc.wat[.gz]` parts, read back one file per task).
 
 Scale: WAT payloads are title+links only — like WET, a small fraction
 of the WARC bytes; the sink writes whatever partitioning the metadata
@@ -38,9 +39,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from no_ocr_spark.sources.warc import (
-    _CRLF,
     iter_warc_records,
     parse_warc_date,
+    record,
+    scan,
+    warc_date,
     write_member_parts,
 )
 
@@ -48,8 +51,6 @@ WAT_META_SCHEMA = (
     "url string, warc_ts timestamp, title string, "
     "links array<struct<url:string,text:string>>"
 )
-
-_EPOCH = dt.datetime(1970, 1, 1)
 
 
 def _envelope(url: str, date: str, title: str,
@@ -79,17 +80,13 @@ def build_wat_record(url: str, date: dt.datetime | None, title: str,
                      links: list[dict]) -> bytes:
     """One WARC-Type: metadata record whose payload is the JSON envelope.
     links: [{"url": href, "text": anchor_text}] in document order."""
-    d = (date or _EPOCH).strftime("%Y-%m-%dT%H:%M:%SZ")
-    payload = _envelope(url, d, title, links)
-    return (
-        b"WARC/1.0\r\n"
-        b"WARC-Type: metadata\r\n"
-        b"WARC-Target-URI: " + url.encode() + _CRLF +
-        b"WARC-Date: " + d.encode() + _CRLF +
-        b"Content-Type: application/json\r\n"
-        b"Content-Length: " + str(len(payload)).encode() + _CRLF +
-        _CRLF + payload + _CRLF * 2
-    )
+    d = warc_date(date)
+    return record([
+        ("WARC-Type", "metadata"),
+        ("WARC-Target-URI", url),
+        ("WARC-Date", d),
+        ("Content-Type", "application/json"),
+    ], _envelope(url, d, title, links))
 
 
 def parse_wat(data: bytes) -> list[dict]:
@@ -110,28 +107,9 @@ def parse_wat(data: bytes) -> list[dict]:
     return out
 
 
-def _title_of(html: bytes) -> str:
-    """<title> text via the from-scratch DOM parser (first title node,
-    whitespace-collapsed)."""
-    import re
-
-    from no_ocr_spark.extract.dom import parse
-
-    stack = [parse(html)]
-    while stack:
-        node = stack.pop()
-        if isinstance(node, str):
-            continue
-        if node.name == "title":
-            parts = [c for c in node.children if isinstance(c, str)]
-            return re.sub(r"\s+", " ", "".join(parts)).strip()
-        stack.extend(reversed(node.children))
-    return ""
-
-
 def metadata_from_pages(pages: DataFrame) -> DataFrame:
     """(url, html [, warc_ts]) -> (url, warc_ts, title, links) in one
-    Arrow-batched DOM pass (title + anchor pairs together — the html
+    Arrow-batched DOM pass (title + anchor pairs from one walk — the html
     bytes are parsed exactly once).
 
     warc_ts crosses the Python boundary as INT64 MICROS, not a timestamp
@@ -142,7 +120,7 @@ def metadata_from_pages(pages: DataFrame) -> DataFrame:
     int64 exactly and ship 8 opaque bytes per row (guide §4.1)."""
     from pyspark.sql import functions as F
 
-    from no_ocr_spark.operators.linkgraph import _anchor_pairs
+    from no_ocr_spark.operators.linkgraph import _title_and_anchors
 
     has_ts = "warc_ts" in pages.columns
 
@@ -153,11 +131,9 @@ def metadata_from_pages(pages: DataFrame) -> DataFrame:
                 payload = bytes(html) if html is not None else b""
                 urls.append(url)
                 tss.append(b["ts_us"].iloc[i] if has_ts else None)
-                titles.append(_title_of(payload))
-                links.append([
-                    {"url": href, "text": t}
-                    for href, t in _anchor_pairs(payload)
-                ])
+                title, pairs = _title_and_anchors(payload)
+                titles.append(title)
+                links.append([{"url": href, "text": t} for href, t in pairs])
             yield pd.DataFrame({
                 "url": urls, "ts_us": tss,
                 "title": titles, "links": links,
@@ -196,25 +172,4 @@ def pages_to_wat(df: DataFrame, out_dir: str,
 def wat_from_files(spark: SparkSession, path: str,
                    glob: str = "*.wat*") -> DataFrame:
     """Directory of WAT files -> (url, warc_ts, title, links) DataFrame."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("content")
-    )
-
-    def rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            urls, tss, titles, links = [], [], [], []
-            for content in b["content"]:
-                for rec in parse_wat(bytes(content)):
-                    urls.append(rec["url"])
-                    tss.append(rec["warc_ts"])
-                    titles.append(rec["title"])
-                    links.append(rec["links"])
-            yield pd.DataFrame({
-                "url": urls, "warc_ts": tss,
-                "title": titles, "links": links,
-            })
-
-    return files.mapInPandas(rows, schema=WAT_META_SCHEMA)
+    return scan(spark, path, glob, parse_wat, WAT_META_SCHEMA)

@@ -7,24 +7,16 @@ public IIPC/Common-Crawl convention on top of ISO 28500 WARC framing).
 The reference materializes extracted text as rows in its store
 (`no-ocr-api/np_ocr/data.py` writes per-page text into LanceDB); at
 crawl scale the interchange artifact for the same content is WET.
-This module completes the engine's archive family — WARC in/out
-(`sources/warc.py`), CDX index (`operators/cdx.py`), WET out/in (here):
+This module keeps only the WET record rules; rendering, framing, the
+scan and the part writer are the shared codec in `sources/warc.py`:
 
-  * `build_wet` — deterministic writer: one leading `warcinfo` record
-    (what real WET files carry) + one `conversion` record per document,
-    UTF-8 payloads, Content-Length framed (binary-safe: text containing
-    CRLFs or even "WARC/1.0" bytes round-trips exactly).
-  * `parse_wet` — reader: conversion records -> [{url, warc_ts, text}],
-    warcinfo skipped, shared framing walker with the WARC reader
-    (`iter_warc_records` — one framing implementation in the repo).
-  * `texts_to_wet` — Spark sink, same discipline as `pages_to_warc`:
-    one `part-N.warc.wet[.gz]` per partition, PER-RECORD gzip members
-    (any record range-fetchable independently), hidden attempt-unique
-    temp names + atomic rename, stale-part cleanup, pyarrow.fs seam
-    (local/hdfs/s3), executor-collected manifest.
-  * `texts_from_wet` — Spark source: binaryFile (one file = one task,
-    the natural crawl-segment parallel unit) -> Arrow-batched record
-    explosion, zero row-Python.
+  * `build_wet` — one leading `warcinfo` record (what real WET files
+    carry) + one `conversion` record per document, UTF-8 payloads.
+  * `parse_wet` — conversion records -> [{url, warc_ts, text}];
+    warcinfo and other record types skipped.
+  * `texts_to_wet` / `texts_from_wet` — Spark sink and source:
+    `part-N.warc.wet[.gz]` parts with the warcinfo record as its own
+    leading gzip member, read back one file per task.
 
 Scale: WET payloads are ~5-10x smaller than their WARC html; a
 10^12-doc crawl's WET leg is ~10^5-10^6 files — the same
@@ -36,98 +28,71 @@ already has).
 from __future__ import annotations
 
 import datetime as dt
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from no_ocr_spark.sources.warc import (
-    _CRLF,
     iter_warc_records,
     parse_warc_date,
+    record,
+    scan,
+    warc_date,
     write_member_parts,
 )
 
 WET_TEXTS_SCHEMA = "url string, warc_ts timestamp, text string"
 
-_EPOCH = dt.datetime(1970, 1, 1)
+_WARCINFO_FIELDS = (
+    b"software: no-ocr-spark\r\n"
+    b"format: WARC File Format 1.0\r\n"
+    b"conformsTo: ISO 28500\r\n"
+)
 
 
 def _warcinfo(filename: str) -> bytes:
-    body = (
-        b"software: no-ocr-spark\r\n"
-        b"format: WARC File Format 1.0\r\n"
-        b"conformsTo: ISO 28500\r\n"
-    )
-    return (
-        b"WARC/1.0\r\n"
-        b"WARC-Type: warcinfo\r\n"
-        b"WARC-Filename: " + filename.encode() + _CRLF +
-        b"WARC-Date: 1970-01-01T00:00:00Z\r\n"
-        b"Content-Type: application/warc-fields\r\n"
-        b"Content-Length: " + str(len(body)).encode() + _CRLF +
-        _CRLF + body + _CRLF * 2
-    )
+    return record([
+        ("WARC-Type", "warcinfo"),
+        ("WARC-Filename", filename),
+        ("WARC-Date", warc_date(None)),
+        ("Content-Type", "application/warc-fields"),
+    ], _WARCINFO_FIELDS)
+
+
+def _conversion(url: str, date: dt.datetime | None,
+                text: str) -> bytes:
+    return record([
+        ("WARC-Type", "conversion"),
+        ("WARC-Target-URI", url),
+        ("WARC-Date", warc_date(date)),
+        ("Content-Type", "text/plain"),
+    ], text.encode("utf-8"))
 
 
 def build_wet(records: list[dict], filename: str = "part.warc.wet",
               warcinfo: bool = True) -> bytes:
-    """records: [{url, date (datetime), text (str)}] -> WET bytes
+    """records: [{url, date (datetime or None), text (str)}] -> WET bytes
     (uncompressed; the sink gzips per record member)."""
-    out = bytearray()
-    if warcinfo:
-        out += _warcinfo(filename)
-    for rec in records:
-        payload = rec["text"].encode("utf-8")
-        date = (rec["date"] or _EPOCH).strftime("%Y-%m-%dT%H:%M:%SZ")
-        out += (
-            b"WARC/1.0\r\n"
-            b"WARC-Type: conversion\r\n"
-            b"WARC-Target-URI: " + rec["url"].encode() + _CRLF +
-            b"WARC-Date: " + date.encode() + _CRLF +
-            b"Content-Type: text/plain\r\n"
-            b"Content-Length: " + str(len(payload)).encode() + _CRLF +
-            _CRLF + payload + _CRLF * 2
-        )
-    return bytes(out)
+    head = [_warcinfo(filename)] if warcinfo else []
+    return b"".join(head + [_conversion(r["url"], r["date"], r["text"])
+                            for r in records])
 
 
 def parse_wet(data: bytes) -> list[dict]:
     """WET bytes -> [{url, warc_ts, text}] for conversion records
     (warcinfo and any other record types skipped)."""
-    out: list[dict] = []
-    for headers, block in iter_warc_records(data):
-        if headers.get("warc-type") != "conversion":
-            continue
-        out.append({
-            "url": headers.get("warc-target-uri", ""),
-            "warc_ts": parse_warc_date(headers),
-            "text": block.decode("utf-8"),
-        })
-    return out
-
-
-def _explode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        urls, tss, texts = [], [], []
-        for content in pdf["content"]:
-            for rec in parse_wet(bytes(content)):
-                urls.append(rec["url"])
-                tss.append(rec["warc_ts"])
-                texts.append(rec["text"])
-        yield pd.DataFrame({"url": urls, "warc_ts": tss, "text": texts})
+    return [
+        {"url": headers.get("warc-target-uri", ""),
+         "warc_ts": parse_warc_date(headers),
+         "text": block.decode("utf-8")}
+        for headers, block in iter_warc_records(data)
+        if headers.get("warc-type") == "conversion"
+    ]
 
 
 def texts_from_wet(spark: SparkSession, path: str,
                    glob: str = "*.wet*") -> DataFrame:
     """Directory of WET files -> (url, warc_ts, text) DataFrame."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("content")
-    )
-    return files.mapInPandas(_explode_batches, schema=WET_TEXTS_SCHEMA)
+    return scan(spark, path, glob, parse_wet, WET_TEXTS_SCHEMA)
 
 
 def texts_to_wet(df: DataFrame, out_dir: str,
@@ -137,14 +102,10 @@ def texts_to_wet(df: DataFrame, out_dir: str,
     per-record gzip members with the warcinfo record as its own leading
     member (Common Crawl's convention), so the file is one valid
     .wet.gz AND every record inflates independently. Crash/retry/FS
-    discipline is the shared `write_member_parts` helper.
-    Returns [{file, n_records, n_bytes}]."""
+    discipline is the shared `write_member_parts` helper; a NULL text is
+    written as "". Returns [{file, n_records, n_bytes}]."""
     def row_bytes(r) -> bytes:
-        return build_wet([{
-            "url": r["url"],
-            "date": r["warc_ts"],
-            "text": r["text"] if r["text"] is not None else "",
-        }], warcinfo=False)
+        return _conversion(r["url"], r["warc_ts"], r["text"] or "")
 
     return write_member_parts(
         df.select("url", "warc_ts", "text"), out_dir, ".warc.wet",

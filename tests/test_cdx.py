@@ -1,75 +1,12 @@
-"""CDX index generation (operators/cdx.py): SURT keys, gzip-member
-offsets, and the range-request contract."""
-
-import gzip
-import hashlib
+"""CDX index generation (operators/cdx.py): SURT keys over every url
+shape. The range-request property of the WARC sink's parts is tested in
+tests/test_sources_warc.py."""
 
 from no_ocr_spark.operators import cdx
 
 
-def test_iter_gzip_members_offsets_are_byte_exact():
-    parts = [b"alpha " * 10, b"beta", b"x" * 1000]
-    blob = b"".join(gzip.compress(p, mtime=0) for p in parts)
-    members = list(cdx.iter_gzip_members(blob))
-    assert [m[2] for m in members] == parts
-    # offsets/lengths tile the file exactly
-    pos = 0
-    for off, ln, _ in members:
-        assert off == pos
-        pos += ln
-    assert pos == len(blob)
-    # each (offset, length) slice is independently inflatable
-    for off, ln, raw in members:
-        assert gzip.decompress(blob[off:off + ln]) == raw
-
-
-def test_iter_gzip_members_truncated_raises():
-    blob = gzip.compress(b"payload", mtime=0)
-    try:
-        list(cdx.iter_gzip_members(blob[:-3]))
-    except ValueError as e:
-        assert "truncated" in str(e)
-    else:
-        raise AssertionError("expected ValueError on truncated member")
-
-
-def test_cdx_from_warc_range_request_round_trip(spark, tmp_path_factory):
-    """index the WARC sink's output, then honor the range-request
-    contract: seek offset, read length, inflate ONE member, parse, and
-    byte-compare url + payload digest against what was written."""
-    from no_ocr_spark.sources.synth_spark import pages_df
-    from no_ocr_spark.sources.warc import pages_to_warc, parse_warc
-
-    out = str(tmp_path_factory.mktemp("warc_cdx"))
-    pages = pages_df(spark, 30).repartition(3)
-    pages_to_warc(pages, out, compress=True)
-
-    idx = cdx.cdx_from_warc(spark, out).collect()
-    assert len(idx) == 30
-    orig = {r["url"]: bytes(r["html"])
-            for r in pages.select("url", "html").collect()}
-
-    import os
-    blobs = {}
-    for r in idx:
-        if r.filename not in blobs:
-            with open(os.path.join(out, r.filename), "rb") as f:
-                blobs[r.filename] = f.read()
-        slice_ = blobs[r.filename][r.offset:r.offset + r.length]
-        recs = parse_warc(gzip.decompress(slice_))
-        assert len(recs) == 1
-        assert recs[0]["url"] == r.url
-        payload = recs[0]["payload"]
-        assert payload == orig[r.url]
-        assert hashlib.md5(payload).hexdigest() == r.digest
-        # urlkey is the SURT form: reversed host labels before one ')'
-        host = r.url.split("://", 1)[1].split("/", 1)[0].split(":")[0]
-        labels = host.lower().removeprefix("www.").split(".")
-        assert r.urlkey.split(")")[0].split(":")[0] == ",".join(reversed(labels))
-
-
-def test_cdx_index_covers_all_surt_shapes(spark):
-    rows = cdx.q_cdx_index(spark, "/root/testdata/sf0.001").collect()
+def test_cdx_index_covers_all_surt_shapes(spark, sf_dir):
+    rows = cdx.q_cdx_index(spark, sf_dir).collect()
     keys = [r.urlkey for r in rows]
     assert any(":8443)" in k for k in keys)          # port kept
     assert any(k.endswith(")/") for k in keys)       # root path

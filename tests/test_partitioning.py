@@ -247,9 +247,8 @@ COMPOSE_JOBS = {
     "warc_revisit_roundtrip": 5,
     "ann_ivf_kmeans": 9, "ann_ivf_sq8_topk": 9,
     "near_dup_clusters": 18, "dedup_keep_best": 19,
-    # its merges run at compose: 28 jobs into a fresh table, 31 over the
-    # table an earlier compose in the session left
-    "merge_upsert_read": 31,
+    # its three commits run at compose, into a fresh table each time
+    "merge_upsert_read": 28,
 }
 # queries held to the footer reads of their table loads and nothing else:
 # their lazy heavy-host detection (extract_host_stats) and cache() pins

@@ -137,3 +137,37 @@ def test_warc_sink_rerun_clears_stale_parts(spark, tmp_path_factory):
     back = pages_from_warc(spark, out)
     assert back.count() == 30
     assert back.select("url").distinct().count() == 30
+
+
+def test_warc_sink_members_are_range_fetchable(spark, tmp_path_factory):
+    """The range-request contract of a compressed sink part: walked with
+    zlib's unused_data, its gzip members tile the file byte-exactly, and
+    each (offset, length) slice inflates on its own to exactly one record
+    equal to its source url and payload."""
+    import gzip as _gzip
+    import os
+    import zlib as _zlib
+
+    from no_ocr_spark.sources.synth_spark import pages_df
+    from no_ocr_spark.sources.warc import pages_to_warc
+
+    out = str(tmp_path_factory.mktemp("warc_members"))
+    pages = pages_df(spark, 30).coalesce(1)
+    (part,) = pages_to_warc(pages, out, compress=True)
+    orig = {r["url"]: bytes(r["html"])
+            for r in pages.select("url", "html").collect()}
+    raw = open(os.path.join(out, part["file"]), "rb").read()
+
+    offset, seen = 0, []
+    while offset < len(raw):
+        d = _zlib.decompressobj(wbits=31)
+        d.decompress(raw[offset:])
+        assert d.eof
+        length = len(raw) - offset - len(d.unused_data)
+        recs = parse_warc(_gzip.decompress(raw[offset:offset + length]))
+        assert len(recs) == 1
+        assert recs[0]["payload"] == orig[recs[0]["url"]]
+        seen.append(recs[0]["url"])
+        offset += length
+    assert offset == len(raw)
+    assert sorted(seen) == sorted(orig)

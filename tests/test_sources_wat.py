@@ -9,8 +9,8 @@ from __future__ import annotations
 import datetime as dt
 import json
 
+from no_ocr_spark.operators.linkgraph import _title_and_anchors
 from no_ocr_spark.sources.wat import (
-    _title_of,
     build_wat_record,
     metadata_from_pages,
     pages_to_wat,
@@ -48,10 +48,43 @@ def test_envelope_is_deterministic_and_sorted():
 
 
 def test_title_extraction():
-    assert _title_of(b"<html><head><title>  A\n  B </title></head></html>") == "A B"
-    assert _title_of(b"<html><body><p>no title</p></body></html>") == ""
+    def title_of(html: bytes) -> str:
+        return _title_and_anchors(html)[0]
+
+    assert title_of(b"<html><head><title>  A\n  B </title></head></html>") == "A B"
+    assert title_of(b"<html><body><p>no title</p></body></html>") == ""
     # first title wins
-    assert _title_of(b"<title>one</title><title>two</title>") == "one"
+    assert title_of(b"<title>one</title><title>two</title>") == "one"
+
+
+def test_metadata_stage_parses_each_page_once(spark, monkeypatch):
+    """metadata_from_pages' per-batch function calls dom.parse once per
+    page: title and anchor pairs come from one parse and one walk."""
+    import pandas as pd
+
+    from no_ocr_spark.extract import dom
+
+    class Capture:  # stands in for the DataFrame; keeps the mapped fn
+        columns = ["url", "html"]
+
+        def select(self, *cols):
+            return self
+
+        def mapInPandas(self, fn, schema):
+            self.fn = fn
+            return self
+
+    calls = []
+    real_parse = dom.parse
+    monkeypatch.setattr(dom, "parse",
+                        lambda html: calls.append(html) or real_parse(html))
+    pages = Capture()
+    metadata_from_pages(pages)
+    htmls = [b'<title>T</title><a href="/x">x</a>', b"<p>no links</p>"]
+    (out,) = pages.fn(iter([pd.DataFrame({"url": ["u1", "u2"],
+                                          "html": htmls})]))
+    assert list(out["title"]) == ["T", ""]
+    assert calls == htmls
 
 
 def test_metadata_stage_and_sink_source_cycle(spark, tmp_path):
