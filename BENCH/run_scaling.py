@@ -100,7 +100,7 @@ def cpu_calibration(n_lo: int, n_hi: int, rounds: int = 2) -> dict:
 
 
 def run_once(zpath: str, pages: str, cores: int, out: str) -> dict:
-    from no_ocr_spark.session import LOCAL_FS_CLASS, LOCAL_FS_JAR  # path set by materialize()
+    from no_ocr_spark.session import JVM_JAR, LOCAL_FS_CLASS  # path set by materialize()
 
     # Outputs + shuffle dirs live on tmpfs: this box has ONE shared virtio
     # disk (~240 MB/s) whose bandwidth does not grow with cores — a sandbox
@@ -123,8 +123,10 @@ def run_once(zpath: str, pages: str, cores: int, out: str) -> dict:
         "--driver-memory", "16g",
         "--conf", f"spark.local.dir={local_dir}",
         "--conf", "spark.sql.parquet.compression.codec=snappy",
-        # the file:// FileSystem get_spark() installs: no chmod fork per file
-        "--driver-class-path", LOCAL_FS_JAR,
+        # the engine jar get_spark() puts on the class path: the file://
+        # FileSystem (no chmod fork per file) and the hash kernel
+        "--driver-class-path", JVM_JAR,
+        "--jars", JVM_JAR,
         "--conf", f"spark.hadoop.fs.file.impl={LOCAL_FS_CLASS}",
         "--py-files", zpath,
         os.path.join(REPO, "no_ocr_spark", "jobs", "extract_job.py"),

@@ -1,14 +1,16 @@
 """Dialect-paired expression builders (spark | duckdb).
 
 Each function returns SQL-expression *text* for the requested dialect; the
-Spark string goes through `F.expr(...)` (pure Catalyst, whole-stage codegen,
-zero Python dispatch) and the DuckDB string goes into the oracle SQL. Both
+Spark string goes through `F.expr(...)` (pure Catalyst, zero Python
+dispatch; higher-order functions such as `transform` and `aggregate` are
+`CodegenFallback` in Spark 4.1, so their lambdas are interpreted per
+element) and the DuckDB string goes into the oracle SQL. Both
 engines were empirically verified to agree on the primitives used here
 (char split, ascii, left-fold, sequence generation, set ops, bit ops).
 
 These power the training-data operator family: MinHash/SimHash/Jaccard
 dedup, fingerprinting, token counting, language-ID — all expressed over
-built-ins so they hold up at 100 TB (no UDF wall, full codegen). The
+built-ins so they hold up at 100 TB (no Python UDF wall). The
 vectors section at the end does the same for retrieval: dot products,
 cosine, MaxSim, quantization and nearest-centroid assignment.
 """

@@ -3,7 +3,7 @@
 // sidecar and directory it creates; Raw applies the same (post-umask) mode
 // with java.nio instead. The LocalFileSystem wrapper keeps the `.crc`
 // sidecars and checksum verification. Build (from the repo root):
-//   d=$(mktemp -d) && javac --release 17 -cp "$SPARK_HOME/jars/*" -d "$d" no_ocr_spark/jvm/PosixLocalFileSystem.java && jar --create --file no_ocr_spark/jvm/posix-localfs.jar -C "$d" .
+//   d=$(mktemp -d) && javac --release 17 -cp "$SPARK_HOME/jars/*" -d "$d" no_ocr_spark/jvm/*.java && jar --create --file no_ocr_spark/jvm/no-ocr-spark.jar -C "$d" .
 package no_ocr_spark.jvm;
 
 import java.io.IOException;

@@ -5,8 +5,9 @@ pipeline a 100 TB corpus actually runs after extraction:
 
 Composes the operator families (textstats quality signals, dedup MinHash
 machinery) into one job-shaped function. Every stage is JVM-side
-(codegen) DataFrame logic; stage-by-stage survivor counts come back as
-stats.
+DataFrame logic: built-in expressions, plus one compiled Java UDF for the
+per-document hashes (functions/docsig.py); no row reaches Python.
+Stage-by-stage survivor counts come back as stats.
 
 Scale shapes (the reason each stage looks the way it does):
   * exact dedup groups on xxhash64(text) — the shuffle key is 8 bytes, not
@@ -22,9 +23,10 @@ Scale shapes (the reason each stage looks the way it does):
     standard corpus-dedup choice and deterministic);
   * every per-row hash runs once per document, in the one persisted
     stage: the cached rows carry the repetition flag `is_repetitive` and
-    the MinHash `sig`, both derived from one word-hash array. The gate
-    filters the cached relation, and the LSH self-join reads `sig` from
-    it instead of re-hashing `text` in each of its branches;
+    the MinHash `sig`, both from one kernel call that hashes each word
+    once (functions/docsig.py). The gate filters the cached relation, and
+    the LSH self-join reads `sig` from it instead of re-hashing `text` in
+    each of its branches;
   * the PII scrub is a map transform on the rows entering the exact-dedup
     semi-join, before its shuffle (the dedup key is taken from the
     unscrubbed text), not a pass after the final anti-join, where AQE
@@ -38,11 +40,8 @@ import uuid
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from no_ocr_spark.operators.dedup import minhash_pairs, with_minhash_sig
-from no_ocr_spark.operators.repetition import (
-    with_repetition_flag_from_hashes,
-    with_word_hashes,
-)
+from no_ocr_spark.functions.docsig import with_doc_sig
+from no_ocr_spark.operators.dedup import minhash_pairs
 
 MIN_TOKENS = 10
 
@@ -55,8 +54,7 @@ def _sig_losers(sigs: DataFrame) -> DataFrame:
 
 def near_dup_losers(docs: DataFrame) -> DataFrame:
     """(url, text) -> urls to DROP, as _sig_losers."""
-    return _sig_losers(
-        with_minhash_sig(with_word_hashes(docs)).select("url", "sig"))
+    return _sig_losers(with_doc_sig(docs).select("url", "sig"))
 
 
 def _scrub_pii(docs: DataFrame) -> DataFrame:
@@ -118,19 +116,17 @@ def clean_corpus(extracted: DataFrame, min_tokens: int = MIN_TOKENS,
         F.count_if(q_ok).alias("n_quality"),
     ).filter(q_ok)
 
-    # The one persisted stage: every per-row expression of the cascade —
-    # the word hashes, the Gopher repetition flag and the MinHash
-    # signature, both derived from the SAME `_wh` array — runs here once
-    # per document. The cache keeps `is_repetitive` and `sig`, and the
-    # gate filters the CACHED relation: the cache is a plan barrier, so
-    # the filter cannot be pushed down into the gate's projections (which
-    # would re-inline the hash pipeline into the predicate). Downstream
-    # consumers (dedup keepers, the semi-join probe side, the near-dup
-    # self-join's two branches) read cached rows and never re-hash. At
-    # 100 TB the equivalent boundary is a staging-table write, exactly
-    # like run_with_lineage's extracted table.
-    gated = with_minhash_sig(with_repetition_flag_from_hashes(
-        with_word_hashes(quality))).drop("_w", "_wh").persist()
+    # The one persisted stage: the cascade's per-row hashes — the Gopher
+    # repetition flag and the MinHash signature, one kernel call per
+    # document — run here once. The cache keeps `is_repetitive` and
+    # `sig`, and the gate filters the CACHED relation: the cache is a plan
+    # barrier, so the filter cannot be pushed down below the kernel's
+    # projection (which would run the kernel again in the predicate).
+    # Downstream consumers (dedup keepers, the semi-join probe side, the
+    # near-dup self-join's two branches) read cached rows and never
+    # re-hash. At 100 TB the equivalent boundary is a staging-table
+    # write, exactly like run_with_lineage's extracted table.
+    gated = with_doc_sig(quality).persist()
     rep = gated.filter(~F.col("is_repetitive")).drop("is_repetitive")
     n_rep = rep.count()
     n_q = obs_quality.get

@@ -2,9 +2,11 @@
 exact, n-gram Jaccard, MinHash(+banded LSH pairs), SimHash(+Hamming pairs).
 
 All scoring math is built from the dialect-paired expression library
-(functions/textexpr.py) so the Spark plan stays 100% JVM-side (whole-stage
-codegen over higher-order functions — no Python) and the DuckDB oracle is
-provably the same formula.
+(functions/textexpr.py), so the Spark plan stays JVM-side (no Python) and
+the DuckDB oracle is the same formula. The MinHash signature is the one
+exception on the Spark side: it comes from the compiled per-document
+kernel (functions/docsig.py), which computes the textexpr formula without
+Spark's interpreted higher-order-function lambdas.
 
 To make the dedup queries demonstrate actual duplicate removal on the
 driver's duplicate-free `documents` table, each query runs over an
@@ -25,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.functions import textexpr as tx
-from no_ocr_spark.operators.repetition import with_word_hashes
+from no_ocr_spark.functions.docsig import with_doc_sig
 from no_ocr_spark.plans.partitioning import fan_out_for_cpu, materialize
 from no_ocr_spark.sources.tables import load_table
 
@@ -226,20 +228,6 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def with_minhash_sig(docs: DataFrame) -> DataFrame:
-    """Append the 8-slot MinHash `sig` from the `_wh` word-hash column
-    (repetition.with_word_hashes): distinct 3-word shingle hashes composed
-    from the word hashes (O(words), not O(chars x shingles)), then 8
-    min-slots over that array — all column-level, all codegen."""
-    sh = tx.shingle_hashes_from_word_hashes("spark", "_wh")
-    sig = tx.minhash_signature_from_hashes("spark", "_sh")
-    # `_sh` is a column because all 8 slots read it: inlined, the shingle
-    # pass would run once per slot
-    return docs.withColumn("_sh", F.expr(sh)).withColumn(
-        "sig", F.expr(sig)
-    ).drop("_sh")
-
-
 def minhash_pairs(sigs: DataFrame, key: str) -> DataFrame:
     """(key, sig) -> (a, b, slots_equal) with a < b: the banded MinHash-LSH
     near-dup pairs. 2 bands x 4 slots generate candidates (the self-join
@@ -259,14 +247,14 @@ def minhash_pairs(sigs: DataFrame, key: str) -> DataFrame:
     bands = sigs.select(
         key, "sig",
         F.explode(F.expr(
-            "transform(sequence(0, 1), j -> struct(j as band_id, "
-            "slice(sig, 4*j+1, 4) as bh))"
+            "array(named_struct('band_id', 0, 'bh', slice(sig, 1, 4)), "
+            "named_struct('band_id', 1, 'bh', slice(sig, 5, 4)))"
         )).alias("b"),
     ).select(key, "sig", "b.band_id", "b.bh")
     x, y = bands.alias("x"), bands.alias("y")
-    slots_eq = F.expr(
-        "size(filter(zip_with(x.sig, y.sig, (a, b) -> a = b), t -> t))"
-    )
+    # unrolled over the 8 slots: no lambda, so the verify stays in codegen
+    slots_eq = F.expr(" + ".join(
+        f"IF(x.sig[{i}] = y.sig[{i}], 1, 0)" for i in range(8)))
     return (
         x.join(
             y,
@@ -290,7 +278,7 @@ def minhash_pairs(sigs: DataFrame, key: str) -> DataFrame:
 def _with_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """doc_id + MinHash signature of the augmented corpus."""
     docs = fan_out_for_cpu(_augmented(spark, sf_dir), spark)
-    return with_minhash_sig(with_word_hashes(docs)).select("doc_id", "sig")
+    return with_doc_sig(docs).select("doc_id", "sig")
 
 
 def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

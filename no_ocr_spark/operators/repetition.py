@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.functions import textexpr as tx
+from no_ocr_spark.functions.docsig import with_doc_sig
 from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
 
@@ -47,10 +48,10 @@ _CHUNK = 10  # words per pseudo-line for line_dedup
 def _longest_run_fold(arr: str, elem_type: str) -> str:
     """Spark expr: length of the longest run of equal ADJACENT elements
     after sorting `arr` — i.e. the max frequency of any element, O(L log
-    L) and fully codegen. Shared by the graded stats query and the
-    cascade gate (the oracle deliberately keeps the naive per-distinct
-    formulation as an independent algorithm). Returns a struct; read
-    `.best`."""
+    L). The graded stats query runs it; the cascade gate's kernel
+    (functions/docsig.py) computes the same fold and is tested against it
+    (the oracle deliberately keeps the naive per-distinct formulation as
+    an independent algorithm). Returns a struct; read `.best`."""
     return (
         f"aggregate(array_sort({arr}), "
         f"named_struct('prev', cast(null as {elem_type}), "
@@ -100,7 +101,7 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell-exactly.
 
     Scale shape: every signal comes from ONE sort + single-pass fold over
-    the sorted array (O(L log L) per doc, all codegen) — equal elements
+    the sorted array (O(L log L) per doc, JVM-side) — equal elements
     are adjacent after array_sort, so max-frequency / duplicated-types /
     duplicated-chars are longest-run statistics. The DuckDB oracle keeps
     the naive per-distinct-element formulation (an independent algorithm
@@ -267,68 +268,23 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def with_word_hashes(docs: DataFrame) -> DataFrame:
-    """Append `_w` (the words of `text`) and `_wh` (their hashes, one
-    char-level hash lambda per word) — the input both the repetition gate
-    and the cleanup cascade's MinHash signature derive from."""
-    return docs.withColumn("_w", F.expr(tx.words("spark", "text"))).withColumn(
-        "_wh", F.expr(tx.word_hashes("spark", "_w"))
-    )
-
-
-def with_repetition_flag_from_hashes(docs: DataFrame) -> DataFrame:
-    """Append `is_repetitive` to the output of with_word_hashes (reads
-    `_w` and `_wh`, keeps both) — the gate with_repetition_flag applies."""
-    # 2-gram fingerprints as LONGS (adjacent word-hash pairs combined), not
-    # strings: no per-gram string allocation, and the sort+fold runs over
-    # 8-byte values. Word hashes range over [0, 1e9+6] (poly-mod-(1e9+7)),
-    # so the combiner multiplier must be >= that modulus for injectivity:
-    # h1*(1e9+7) + h2 <= ~1.0e18 < 2^63 — an exact pair fingerprint, not a
-    # wrapping one; collisions would need equal (h1, h2) pairs. (A smaller
-    # multiplier like 1000003 is NOT injective: (a, b) collides with
-    # (a+1, b-1000003).)
-    docs = docs.withColumn(
-        "_g",
-        F.expr("zip_with(slice(_wh, 1, greatest(size(_wh) - 1, 0)), "
-               "slice(_wh, 2, greatest(size(_wh) - 1, 0)), "
-               "(a, b) -> a * 1000000007L + b)"),
-    )
-    # materialized as a column: referenced twice below, which keeps
-    # CollapseProject from inlining (= re-evaluating) the fold
-    docs = docs.withColumn(
-        "_top2", F.expr(f"{_longest_run_fold('_g', 'bigint')}.best")
-    )
-    # the gate needs a run of AT LEAST 2: with one gram total, top2=1 and
-    # 1*5 > n_words would flag every 2-4-word doc as repetitive
-    return docs.withColumn(
-        "is_repetitive",
-        F.expr("CASE WHEN size(_w) >= 2 THEN "
-               "_top2 >= 2 AND _top2 * 5 > size(_w) "
-               "ELSE false END"),
-    ).drop("_g", "_top2")
-
-
 def with_repetition_flag(docs: DataFrame) -> DataFrame:
-    """Append `is_repetitive` (the Gopher top-2-gram gate: most frequent
-    word 2-gram accounts for >20% of words) to a DataFrame with a `text`
-    column — the composable form the cleanup cascade uses.
+    """Append `is_repetitive` (the Gopher top-2-gram gate: the most
+    frequent word 2-gram occurs at least twice and accounts for >20% of
+    words) to a DataFrame with a `text` column — the composable form the
+    cleanup cascade uses.
 
     Unlike q_repetition_stats' per-distinct-gram scan (O(L^2), fine on
     the short driver docs and oracle-mirrored), this runs on real
     extracted text (hundreds of words), so the top-gram count is
-    O(L log L): sort the gram array and fold the longest equal-adjacent
-    run — pure codegen, measured ~100x faster on the extraction corpus
-    (the O(L^2) form burned minutes at sf0.01).
+    O(L log L): sort the 2-gram fingerprints and take the longest
+    equal-adjacent run. It runs in the compiled per-document kernel
+    (functions/docsig.py), not in Spark lambdas, which are interpreted
+    per element.
 
-    Filter on the flag only ABOVE a materialization boundary (a persist,
-    a staging write): a filter placed directly on this output is pushed
-    down through the gate's projections, and Catalyst inlines the whole
-    hash pipeline into the predicate — the word-hash lambda 8 times and
-    the sort+fold twice per row (operators/cleanup.py filters its cached
-    relation for this reason)."""
-    return with_repetition_flag_from_hashes(with_word_hashes(docs)).drop(
-        "_w", "_wh"
-    )
+    Filter on the flag only above a materialization boundary, as
+    functions/docsig.with_doc_sig explains."""
+    return with_doc_sig(docs).drop("sig")
 
 
 QUERIES = {

@@ -8,10 +8,16 @@ Tuned for correctness-comparable, scale-ready plans:
   * shuffle partitions sized to cores for local mode (a 1000-executor
     deployment overrides via spark-submit --conf; nothing here assumes
     local mode except the default master),
-  * file:// served by `jvm/PosixLocalFileSystem.java` whenever this call
-    launches the JVM: without libhadoop, Hadoop's local FileSystem forks a
-    `chmod` for every file, `.crc` sidecar and directory it creates; this
-    one sets the same modes in-process and keeps the checksums.
+  * the engine's jar (`jvm/no-ocr-spark.jar`) on the driver class path
+    whenever this call launches the JVM: it holds the cleanup cascade's
+    hash kernel (`jvm/DocSig.java`, see functions/docsig.py) and the
+    file:// FileSystem this call installs (`jvm/PosixLocalFileSystem.java`:
+    without libhadoop, Hadoop's local FileSystem forks a `chmod` for every
+    file, `.crc` sidecar and directory it creates; this one sets the same
+    modes in-process and keeps the checksums),
+  * a fixed young generation (a quarter of the heap) whenever this call
+    launches the JVM, so the driver's resident memory is steady from one
+    job to the next instead of following G1's adaptive eden.
 """
 
 from __future__ import annotations
@@ -24,9 +30,10 @@ import tempfile
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
-LOCAL_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "jvm", "posix-localfs.jar")
+JVM_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                       "jvm", "no-ocr-spark.jar")
 LOCAL_FS_CLASS = "no_ocr_spark.jvm.PosixLocalFileSystem"
+DRIVER_JAVA_OPTIONS = "-XX:NewRatio=3"
 
 
 def get_spark(app: str = "no_ocr_spark", master: str | None = None,
@@ -43,11 +50,17 @@ def get_spark(app: str = "no_ocr_spark", master: str | None = None,
         builder = builder.master(master or f"local[{cpus}]")
     # The jar reaches the classpath only through the launch command, so the
     # FileSystem is named only when this call starts the JVM; a submitted
-    # job passes both itself (see README). A JVM started earlier by this
-    # process keeps both as system properties for its later sessions.
+    # job passes the jar and the FileSystem itself (see README). A JVM
+    # started earlier by this process keeps both as system properties for
+    # its later sessions. The young generation is fixed at a quarter of the
+    # heap: G1's adaptive young sizing grew eden from ~0.8 to ~1.5 GB of a
+    # 2 GB heap over a run of short jobs, so the driver's resident memory
+    # depended on how many GCs had run, not on what the jobs hold
+    # (defaultJavaOptions, so --driver-java-options still applies on top).
     if "PYSPARK_GATEWAY_PORT" not in os.environ and SparkContext._gateway is None:
-        builder = (builder.config("spark.driver.extraClassPath", LOCAL_FS_JAR)
-                   .config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS))
+        builder = (builder.config("spark.driver.extraClassPath", JVM_JAR)
+                   .config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
+                   .config("spark.driver.defaultJavaOptions", DRIVER_JAVA_OPTIONS))
     builder = (
         builder.appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))

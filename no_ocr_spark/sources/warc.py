@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import datetime as dt
 import gzip
+import re
 from typing import Callable, Iterator
 
 import pandas as pd
@@ -252,10 +253,12 @@ def write_member_parts(df: DataFrame, out_dir: str, name_ext: str,
 
     fs_d, root = _warc_fs(out_dir)
     fs_d.create_dir(root, recursive=True)
-    ext_mark = name_ext.split(".")[-1]
+    # this sink's own parts and temps only: a `.warc` sink sharing the dir
+    # with WET or WAT parts (`part-N.warc.wet.gz`) must leave them alone
+    part = rf"part-\d+{re.escape(name_ext)}(\.gz)?"
+    stale = re.compile(rf"{part}|\.{part}\.[^.]+\.inprogress")
     for info in fs_d.get_file_info(pafs.FileSelector(root)):
-        name = info.base_name
-        if name.startswith(("part-", ".part-")) and f".{ext_mark}" in name:
+        if stale.fullmatch(info.base_name):
             fs_d.delete_file(info.path)
 
     # r6 (guide §4.1): rows reach the writer as Arrow batches

@@ -11,7 +11,10 @@ It also lists, over every registered query, the operators whose
 expressions hold the same `lambdafunction` subtree (the higher-order call
 with its inputs) more than once: the shape Catalyst leaves when it
 inlines a multi-referenced higher-order column into a predicate or
-projection, where each copy is interpreted again per row
+projection, where each copy is interpreted again per row. A call of the
+per-document hash kernel (functions/docsig.py) is listed when an
+operator repeats one that it or an operator above it already makes: a
+predicate pushed below the kernel's projection runs it twice per row
 (repeated_lambdas).
 
 Usage: python scripts/explain_audit.py [sf_dir]   (writes BENCH/plans.md)
@@ -28,6 +31,8 @@ from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from no_ocr_spark.functions.docsig import DOC_SIG  # noqa: E402
 
 CHECKS = {
     "point_lookup": ["PushedFilters: \\[IsNotNull\\(p_partkey\\), EqualTo\\(p_partkey,100\\)"],
@@ -235,6 +240,7 @@ def plan_of(df) -> str:
 
 
 _LAMBDA = "lambdafunction("
+_KERNEL_CALL = re.compile(re.escape(DOC_SIG) + r"\([^()]*\)")
 
 
 def _lambda_calls(expr: str) -> list[str]:
@@ -268,24 +274,29 @@ def _lambda_calls(expr: str) -> list[str]:
 def repeated_lambdas(df) -> list[tuple[str, int, str]]:
     """(operator, copies, call) for every operator of `df`'s optimized plan
     (cached plans included) whose expressions hold the same higher-order
-    call more than once; a repeat nested inside a larger repeated call is
-    not listed on its own."""
+    call more than once, or a kernel call that the operator or one above
+    it already holds (copies counts them all); a repeat nested inside a
+    larger repeated call is not listed on its own."""
     hits = []
 
-    def walk(node) -> None:
-        counts = Counter(_lambda_calls(node.simpleString(1 << 20)))
+    def walk(node, kernel_above: Counter) -> None:
+        expr = node.simpleString(1 << 20)
+        counts = Counter(_lambda_calls(expr))
         repeated = [call for call, n in counts.items() if n > 1]
         hits.extend(
             (node.nodeName(), counts[call], call) for call in repeated
             if not any(call != other and call in other for other in repeated)
         )
+        kernel = kernel_above + Counter(_KERNEL_CALL.findall(expr))
+        hits.extend((node.nodeName(), n, call) for call, n in kernel.items()
+                    if n > 1 and call in expr)
         if node.nodeName() == "InMemoryRelation":
-            walk(node.cacheBuilder().cachedPlan())
+            walk(node.cacheBuilder().cachedPlan(), kernel)
         children = node.children()
         for i in range(children.size()):
-            walk(children.apply(i))
+            walk(children.apply(i), kernel)
 
-    walk(df._jdf.queryExecution().optimizedPlan())
+    walk(df._jdf.queryExecution().optimizedPlan(), Counter())
     return hits
 
 

@@ -3,6 +3,7 @@ near-dup removal — on a corpus with planted exact and near duplicates."""
 
 from pyspark.sql import functions as F
 
+from no_ocr_spark.functions.docsig import DOC_SIG
 from no_ocr_spark.operators.cleanup import clean_corpus
 
 
@@ -205,9 +206,8 @@ def _plan_nodes_above_cache(plan):
 
 def test_cached_stage_hashes_each_word_once(spark):
     """The repetition gate filters the CACHED relation, so the filter is
-    not pushed into the gate's projections: the persisted plan holds the
-    char-level word-hash lambda (`ascii(`) once, not once per inlined
-    reference."""
+    not pushed below the kernel's projection: the persisted plan calls the
+    per-document hash kernel once, and nothing above the cache calls it."""
     clean, stats = clean_corpus(_extracted(spark), min_tokens=10)
     try:
         nodes = _plan_nodes_above_cache(
@@ -215,7 +215,9 @@ def test_cached_stage_hashes_each_word_once(spark):
         cached = {n.cacheBuilder().cachedPlan().toString()
                   for cls, n in nodes if cls == "InMemoryRelation"}
         assert len(cached) == 1
-        assert cached.pop().count("ascii(") == 1
+        assert cached.pop().count(f"{DOC_SIG}(") == 1
+        assert not any(f"{DOC_SIG}(" in n.simpleString(100000)
+                       for cls, n in nodes if cls != "InMemoryRelation")
     finally:
         clean.collect()  # the action finalize's observed counts ride on
         stats.pop("_finalize")()
@@ -223,16 +225,17 @@ def test_cached_stage_hashes_each_word_once(spark):
 
 def test_clean_plan_reads_hashes_from_the_cache(spark):
     """Above the cached relation nothing re-hashes: the LSH self-join reads
-    `sig` from the cache instead of re-deriving word hashes (`ascii(`),
-    shingle sets (`array_distinct(`) and MinHash slots (`array_min(`)
-    from `text` in both of its branches."""
+    `sig` from the cache instead of calling the hash kernel on `text`, or
+    re-deriving word hashes (`ascii(`), shingle sets (`array_distinct(`)
+    and MinHash slots (`array_min(`) from it, in both of its branches."""
     clean, stats = clean_corpus(_extracted(spark), min_tokens=10)
     try:
         nodes = _plan_nodes_above_cache(
             clean._jdf.queryExecution().optimizedPlan())
         above = [n.simpleString(100000) for cls, n in nodes
                  if cls != "InMemoryRelation"]
-        for marker in ("ascii(", "array_distinct(", "array_min("):
+        for marker in (f"{DOC_SIG}(", "ascii(", "array_distinct(",
+                       "array_min("):
             assert not any(marker in s for s in above), marker
     finally:
         clean.collect()  # the action finalize's observed counts ride on
@@ -260,9 +263,10 @@ def test_pii_scrub_runs_after_the_dedup_key(spark):
 
 
 def test_explain_audit_flags_a_filter_on_the_gate(spark):
-    """scripts/explain_audit.py's repeated-lambda check catches the trap
-    the cascade avoids — a filter straight on with_repetition_flag's output
-    re-inlines the hash pipeline — and finds no repeat in clean_corpus."""
+    """scripts/explain_audit.py's repeated-call check catches the trap the
+    cascade avoids — a filter straight on with_repetition_flag's output is
+    pushed below the kernel's projection and calls the kernel again — and
+    finds no repeat in clean_corpus."""
     import importlib.util
     import os
 

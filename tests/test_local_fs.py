@@ -2,8 +2,10 @@
 per-application scratch dirs:
 
 * a session `get_spark` launches writes a lineage run without forking
-  `chmod`, with Hadoop's modes and one `.crc` per data file; a submitted
-  session (PYSPARK_GATEWAY_PORT set) is left with Hadoop's own FileSystem,
+  `chmod`, with Hadoop's modes and one `.crc` per data file, and runs with
+  a fixed young generation; a submitted session (PYSPARK_GATEWAY_PORT set)
+  is left with Hadoop's own FileSystem and the submitter's JVM options, and
+  gets the hash kernel by adding the jar to the running JVM,
 * the committed jar is the committed source, compiled,
 * compose-time scratch tables are private to their application, and only
   `session.scratch_dir` picks their root.
@@ -23,7 +25,8 @@ from types import SimpleNamespace
 
 import pytest
 
-from no_ocr_spark.session import LOCAL_FS_CLASS, LOCAL_FS_JAR, scratch_dir
+from no_ocr_spark.session import (DRIVER_JAVA_OPTIONS, JVM_JAR, LOCAL_FS_CLASS,
+                                  scratch_dir)
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 JVM_DIR = ROOT / "no_ocr_spark" / "jvm"
@@ -36,6 +39,8 @@ from no_ocr_spark.sources.synth_spark import pages_df
 
 spark = get_spark(app="local_fs_test", master="local[2]", shuffle_partitions=2)
 print("fs.file.impl=%s" % spark.sparkContext._jsc.hadoopConfiguration().get("fs.file.impl"))
+mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+print("jvm args=%s" % list(mx.getInputArguments()))
 run_with_lineage(spark, pages_df(spark, 12), sys.argv[1], n_buckets=2)
 spark.stop()
 """
@@ -48,6 +53,18 @@ assert "PYSPARK_GATEWAY_PORT" in os.environ
 spark = get_spark(app="local_fs_submitted")
 print("fs.file.impl=%s" % spark.sparkContext._jsc.hadoopConfiguration().get("fs.file.impl"))
 print("extraClassPath=%s" % spark.conf.get("spark.driver.extraClassPath", None))
+mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+print("jvm args=%s" % list(mx.getInputArguments()))
+from no_ocr_spark.functions import docsig
+docs = spark.createDataFrame([("a b a b a b",)], "text string")
+jar, docsig.JVM_JAR = docsig.JVM_JAR, "/nonexistent/no-ocr-spark.jar"
+try:
+    docsig.with_doc_sig(docs)
+except RuntimeError as e:
+    print("no jar: %s" % e)
+docsig.JVM_JAR = jar
+row = docsig.with_doc_sig(docs).first()
+print("kernel=%s/%d" % (row.is_repetitive, len(row.sig)))
 spark.stop()
 """
 
@@ -77,6 +94,7 @@ def test_writes_fork_no_chmod_and_keep_modes_and_checksums(tmp_path):
     stdout = _run([sys.executable, "-c", _LINEAGE_RUN, str(out)],
                   _env(PATH=f"{fake_bin}{os.pathsep}{os.environ['PATH']}"))
     assert f"fs.file.impl={LOCAL_FS_CLASS}" in stdout
+    assert f"'{DRIVER_JAVA_OPTIONS}'" in stdout  # fixed young generation
 
     dirs = [out] + [p for p in out.rglob("*") if p.is_dir()]
     files = [p for p in out.rglob("*") if p.is_file()]
@@ -98,6 +116,9 @@ def test_writes_fork_no_chmod_and_keep_modes_and_checksums(tmp_path):
                    "--master", "local[1]", str(script)], _env())
     assert "fs.file.impl=None" in stdout
     assert "extraClassPath=None" in stdout
+    assert DRIVER_JAVA_OPTIONS not in stdout  # the submitter's JVM options
+    assert "no jar: " in stdout and "no-ocr-spark.jar" in stdout
+    assert "kernel=True/8" in stdout  # the jar, added to the running JVM
 
 
 @pytest.mark.skipif(shutil.which("javac") is None, reason="javac is not installed")
@@ -111,7 +132,7 @@ def test_committed_jar_is_the_compiled_source(tmp_path):
                    + [str(s) for s in sources], check=True, timeout=300)
     built = {p.relative_to(tmp_path).as_posix(): p.read_bytes()
              for p in tmp_path.rglob("*.class")}
-    with zipfile.ZipFile(LOCAL_FS_JAR) as jar:
+    with zipfile.ZipFile(JVM_JAR) as jar:
         committed = {n: jar.read(n) for n in jar.namelist() if n.endswith(".class")}
     assert sorted(committed) == sorted(built)
     stale = [n for n in built if built[n] != committed[n]]

@@ -139,6 +139,24 @@ def test_warc_sink_rerun_clears_stale_parts(spark, tmp_path_factory):
     assert back.select("url").distinct().count() == 30
 
 
+def test_warc_sink_keeps_other_sinks_parts(spark, tmp_path_factory):
+    """The stale-part sweep matches this sink's own part names: a WARC
+    sink written into a dir that holds a WET part leaves that part."""
+    import os
+
+    from no_ocr_spark.sources.synth_spark import pages_df
+    from no_ocr_spark.sources.warc import pages_to_warc
+    from no_ocr_spark.sources.wet import texts_to_wet
+
+    out = str(tmp_path_factory.mktemp("warc_shared"))
+    texts = spark.createDataFrame(
+        [("https://a.example.org/1", None, "some text")],
+        "url string, warc_ts timestamp, text string")
+    wet = [m["file"] for m in texts_to_wet(texts.coalesce(1), out)]
+    warc = [m["file"] for m in pages_to_warc(pages_df(spark, 3).coalesce(1), out)]
+    assert sorted(os.listdir(out)) == sorted(wet + warc)
+
+
 def test_warc_sink_members_are_range_fetchable(spark, tmp_path_factory):
     """The range-request contract of a compressed sink part: walked with
     zlib's unused_data, its gzip members tile the file byte-exactly, and
