@@ -373,18 +373,6 @@ def dot(dialect: str, a: str, b: str, typ: str = "double") -> str:
             f"i -> {ai} * {bi})), (acc, x) -> acc + x)")
 
 
-def dot_unrolled(a: str, b: str | list[int], n: int = 0) -> str:
-    """Spark-only exact int64 <a, b> as an UNROLLED add-chain, `b` an
-    array column of `n` elements or a list of int literals. A short
-    chain stays in whole-stage codegen where the fold's lambdas are
-    interpreted per element; integer addition is associative, so the
-    value equals the fold's."""
-    rhs = ([f"element_at({b}, {i + 1})" for i in range(n)]
-           if isinstance(b, str) else [f"{v}L" for v in b])
-    return " + ".join(f"element_at({a}, {i + 1}) * {r}"
-                      for i, r in enumerate(rhs))
-
-
 def cosine_from(dialect: str, ab: str, aa: str, bb: str) -> str:
     """Cosine from <a, b>, <a, a> and <b, b>; NULL on a zero norm."""
     _check(dialect)

@@ -54,14 +54,13 @@ from pyspark.sql import functions as F
 
 from no_ocr_spark.functions.textexpr import (
     DIM,
-    argmax_cid,
     array_lit,
     cosine,
     cosine_from,
     dot,
-    dot_unrolled,
     quantize,
 )
+from no_ocr_spark.operators.retrieval import with_nearest_centroid
 from no_ocr_spark.plans.partitioning import fan_out_for_cpu, materialize
 from no_ocr_spark.sources.tables import load_table
 
@@ -77,22 +76,6 @@ def _imean(s: str, n: str) -> str:
     is engine-shared — `div` is spelled by the caller)."""
     return (f"CASE WHEN {s} >= 0 THEN (2 * {s} + {n}) {{div}} (2 * {n}) "
             f"ELSE -((-2 * {s} + {n}) {{div}} (2 * {n})) END")
-
-
-def _code_expr(sv_col: str, n_col: str,
-               cents_m: list[tuple[int, list[int]]]) -> str:
-    """Assigned centroid id for one subspace slice: argmax_cid over
-    csim = coalesce(round(cosine, 6), -2.0), the dot an unrolled int64
-    chain (SUB is 8, so it stays whole-stage codegen where the fold's
-    lambdas are interpreted per element), the slice norm staged ONCE per
-    row in `n_col` and the centroid norm a Python int literal."""
-    def csim(cv: list[int]) -> str:
-        cos = cosine_from("spark", dot_unrolled(sv_col, cv),
-                          f"cast({n_col} as double)",
-                          f"cast({_idot_py(cv, cv)}L as double)")
-        return f"coalesce(round({cos}, 6), -2.0)"
-
-    return argmax_cid([(cid, csim(cv)) for cid, cv in cents_m])
 
 
 def _imean_py(s: int, n: int) -> int:
@@ -113,7 +96,8 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The codebook is M*K rows of exact int64: it is collected per training
     step and inlined as literals, so every per-(vector, subspace)
-    assignment is map-side codegen over a materialized slim frame.
+    assignment is one map-side retrieval.with_nearest_centroid over a
+    materialized slim frame (its dots are interpreted folds).
     The distance table and query norms are int64 arithmetic on the
     collected codebook, replayed in Python, where arbitrary-precision
     ints equal in-range int64 ops exactly."""
@@ -137,24 +121,23 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             for cid in sorted(base) if 1 <= cid <= K]
         for m in range(1, M + 1)
     }
-    slices = [
-        F.expr(f"slice(qv, {(m - 1) * SUB + 1}, {SUB})").alias(f"_s{m}")
-        for m in range(1, M + 1)
-    ]
-    norms = [
-        F.expr(dot_unrolled(f"_s{m}", f"_s{m}", SUB)).alias(f"_n{m}")
-        for m in range(1, M + 1)
-    ]
-    enc0 = emb.select(
-        "vec_id", *slices
-    ).select(
-        "vec_id", *[F.col(f"_s{m}") for m in range(1, M + 1)], *norms
-    ).select(
-        "vec_id",
-        *[F.col(f"_s{m}") for m in range(1, M + 1)],
-        *[F.expr(_code_expr(f"_s{m}", f"_n{m}", cents0[m])).alias(f"_c{m}")
-          for m in range(1, M + 1)],
-    )
+
+    def encode(frame: DataFrame,
+               cents: dict[int, list[tuple[int, list[int]]]]) -> DataFrame:
+        """frame + the slices `_s{m}` of qv and their codes `_c{m}`: each
+        slice's nearest centroid of `cents[m]`. A SUB-element dot of
+        1e7-scaled ints is exact in a double while |components| <= 3
+        (embeddings are unit vectors), so the assignment's double fold
+        ranks the oracle's round(cosine, 6) bit for bit."""
+        frame = frame.select(*frame.columns, *[
+            F.expr(f"slice(qv, {(m - 1) * SUB + 1}, {SUB})").alias(f"_s{m}")
+            for m in range(1, M + 1)])
+        for m in range(1, M + 1):
+            frame = with_nearest_centroid(frame, cents[m], vec=f"_s{m}") \
+                .withColumnRenamed("cid", f"_c{m}")
+        return frame
+
+    enc0 = encode(emb.select("vec_id", "qv"), cents0)
     # one Lloyd refit: per (m, cid) integer sums of member slices +
     # count, as SUB codegen sum() aggregates after a single explode of
     # already-computed attribute columns (128-group shuffle)
@@ -196,15 +179,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         vals = [table.get(cid, 0) for cid in range(1, mx + 1)]
         return array_lit(vals)
 
-    enc1 = emb.filter(F.col("vec_id") != 0).select(
-        "vec_id", *slices
-    ).select(
-        "vec_id", *[F.col(f"_s{m}") for m in range(1, M + 1)], *norms
-    ).select(
-        "vec_id",
-        *[F.expr(_code_expr(f"_s{m}", f"_n{m}", cents1[m])).alias(f"_c{m}")
-          for m in range(1, M + 1)],
-    )
+    enc1 = encode(emb.filter(F.col("vec_id") != 0), cents1)
     sp = " + ".join(
         f"element_at({lut(pdot[m])}, cast(_c{m} as int))"
         for m in range(1, M + 1))

@@ -6,11 +6,12 @@ Qdrant twin's MAX_SIM comparator, `tests/lance_vs_qdrant.py:95`), then a
 lookup join back to page content (`api.py:215-221`).
 
 Spark realization: exact brute-force scoring via built-in higher-order
-functions (zip_with/aggregate — JVM-side, codegen, NO Python in the score
-loop), then ORDER BY score LIMIT k which Catalyst executes as
-TakeOrderedAndProject (no global sort). The query vector rides a broadcast
-(1-row crossJoin). ANN variants (IVF pre-clustering, LSH bucketing) are the
-scale path: they cut the scored candidate set; semantics stay comparable.
+functions (zip_with/aggregate — JVM-side, NO Python in the score loop;
+their lambdas are interpreted per element), then ORDER BY score LIMIT k,
+which Catalyst executes as TakeOrderedAndProject (no global sort). The
+query vector rides a broadcast (1-row crossJoin). ANN variants (IVF
+pre-clustering, LSH bucketing) are the scale path: they cut the scored
+candidate set; semantics stay comparable.
 
 All scores come from the vector builders of `functions/textexpr.py`, whose
 Spark and DuckDB texts produce bit-identical doubles; round(6) is a
@@ -42,7 +43,7 @@ from no_ocr_spark.sources.tables import load_table
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-10 for query = embedding(vec_id=0).
 
-    Plan: scan -> broadcast 1-row query -> codegen'd score ->
+    Plan: scan -> broadcast 1-row query -> JVM fold score ->
     TakeOrderedAndProject(10). At 100 TB the scan is the cost; scoring is
     a tight JVM loop per row; no shuffle at all.
     """
@@ -152,7 +153,8 @@ def _lsh_sig(dialect: str, e: str, n_bits: int = 8) -> str:
     139k with per-bit constants (the true-Gaussian ceiling is 135k;
     tests/test_retrieval_scaling.py::test_lsh_wide_bits_parity). Per-bit
     terms are also exactly as many fold passes as the old nested form —
-    O(n_bits * DIM) multiplies per row either way, all codegen."""
+    O(n_bits * DIM) multiplies per row either way, all in interpreted
+    JVM folds."""
     consts = _lsh_consts()[:n_bits]
     bit_terms = []
     for b, (a, c) in enumerate(consts):
@@ -184,7 +186,7 @@ def q_lsh_bucket_pairs(spark: SparkSession, sf_dir: str,
     """Embedding near-dup candidates via LSH bucketing: vectors sharing a
     hyperplane signature, with their exact cosine attached.
 
-    Scale: signature = map-side codegen; the self-join shuffles on the
+    Scale: signature = map-side JVM folds; the self-join shuffles on the
     signature, NOT all-pairs — this is the whole point vs the O(n^2) brute
     force. Signature WIDTH is a caller decision via `lsh_bits_for(n)` with
     n from a table statistic (catalog rowCount / lineage ledger), NOT a
@@ -239,7 +241,7 @@ def nested_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_maxsim_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MaxSim top-5 over the nested-typed multi-vector column (K1 in the
     reference's own storage shape). Same plan skeleton as q_maxsim_topk —
-    broadcast 1-row query, codegen'd score, TakeOrderedAndProject — but the
+    broadcast 1-row query, JVM fold score, TakeOrderedAndProject — but the
     scorer consumes array<array<double>> directly; round-trip through a
     stored parquet table with this schema is covered in
     tests/test_retrieval_scaling.py."""
@@ -268,9 +270,12 @@ def q_maxsim_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pick, bit for bit.
 
 
-def _with_cid(df: DataFrame, cents_rows: list[tuple[int, list]],
-              vec: str = "qv") -> DataFrame:
-    """df + `cid` = cid of the max-(round(cosine,6), min-cid) centroid.
+def with_nearest_centroid(df: DataFrame, cents_rows: list[tuple[int, list]],
+                          vec: str = "qv") -> DataFrame:
+    """df + `cid` = cid of the max-(round(cosine,6), min-cid) centroid of
+    `vec`, a NULL cosine (zero norm) last: the engine's one
+    nearest-centroid assignment (IVF lists, k-means rounds, PQ subspace
+    codes). The dots are the double left folds the oracles run.
 
     Staged as intermediate columns (_nq, _d<cid>) rather than one
     expression: the vector norm is referenced by every centroid's cosine,
@@ -279,7 +284,7 @@ def _with_cid(df: DataFrame, cents_rows: list[tuple[int, list]],
     expression whose generated method would blow the JVM's 64KB method
     limit and silently fall back to interpreted eval (measured: the
     single-expression form ran ~50x slower per row). The dots are folds,
-    not unrolled add-chains: DIM-long chains per centroid blew Janino's
+    not unrolled add-chains: unrolled chains per centroid blew Janino's
     64KB limit too, a multi-second failed compile per stage."""
     dcols = [f"_d{cid}" for cid, _ in cents_rows]
     proj = df.select(
@@ -306,11 +311,11 @@ def ivf_probe_topk(data: DataFrame, query: DataFrame,
     are kept next to the score; no query row yields an empty result.
 
     The assigned lists are stored with their cid (materialize after
-    _with_cid): a cid filter over _with_cid's projections is pushed
+    with_nearest_centroid): a cid filter over its projections is pushed
     through them, and the optimized plan then derives the whole argmax
     twice, once in the Filter and once in the Project above it."""
     q_rows = query.select(qvec).collect()
-    lists = _with_cid(data, cents_rows, vec=vec)
+    lists = with_nearest_centroid(data, cents_rows, vec=vec)
     if not q_rows:
         qv0, pcids, lists = [0.0] * DIM, [], lists.filter(F.lit(False))
     else:
@@ -361,8 +366,8 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str,
         "vec_id", F.expr(quantize("spark", "embedding")).alias("qv")))
     # Each Lloyd round's centroid table is n_centroids rows of exact int64
     # (K x DIM ints, never corpus rows): collecting it per round inlines
-    # it as literals for _with_cid and keeps round i's centroids out of
-    # round i+1's plan.
+    # it as literals for with_nearest_centroid and keeps round i's
+    # centroids out of round i+1's plan.
     cents_rows = [
         (r["cid"], [int(v) for v in r["cv"]])
         for r in emb.filter(F.col("vec_id").between(1, n_centroids))
@@ -375,7 +380,7 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str,
         # over element_at — NOT posexplode (a generator re-evaluates the
         # assignment expression once per exploded element, measured 10x)
         sums_row = (
-            _with_cid(emb.select("qv"), cents_rows)
+            with_nearest_centroid(emb.select("qv"), cents_rows)
             .groupBy("cid")
             .agg(*[F.sum(F.element_at("qv", i + 1)).alias(f"s{i}")
                    for i in range(DIM)])

@@ -36,6 +36,12 @@ LOCAL_FS_CLASS = "no_ocr_spark.jvm.PosixLocalFileSystem"
 DRIVER_JAVA_OPTIONS = "-XX:NewRatio=3"
 
 
+def _default_driver_mem() -> str:
+    """Half of physical memory, capped at 16g, in MiB."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 << 10, phys // 2 >> 20)}m"
+
+
 def get_spark(app: str = "no_ocr_spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -83,7 +89,10 @@ def get_spark(app: str = "no_ocr_spark", master: str | None = None,
         # allocation-heavy (nested span structs), and oversized heaps turn
         # frequent cheap GCs into rare 10s+ full pauses that serialize the
         # whole local job. 16g measured faster AND more stable than 48g.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # Half of the host's memory below that, so two sessions on one
+        # host cannot claim all of it.
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # InferFiltersFromGenerate turns explode(expensive_expr) into an

@@ -3,9 +3,11 @@ per-application scratch dirs:
 
 * a session `get_spark` launches writes a lineage run without forking
   `chmod`, with Hadoop's modes and one `.crc` per data file, and runs with
-  a fixed young generation; a submitted session (PYSPARK_GATEWAY_PORT set)
-  is left with Hadoop's own FileSystem and the submitter's JVM options, and
-  gets the hash kernel by adding the jar to the running JVM,
+  a fixed young generation and, unless SPARK_GRAFT_DRIVER_MEM is set, a
+  heap of half the host's memory (at most 16g); a submitted session
+  (PYSPARK_GATEWAY_PORT set) is left with Hadoop's own FileSystem and the
+  submitter's JVM options, and gets the hash kernel by adding the jar to
+  the running JVM,
 * the committed jar is the committed source, compiled,
 * compose-time scratch tables are private to their application, and only
   `session.scratch_dir` picks their root.
@@ -91,10 +93,16 @@ def test_writes_fork_no_chmod_and_keep_modes_and_checksums(tmp_path):
     chmod.write_text('#!/bin/sh\necho "chmod forked: $*" >&2\nexit 1\n')
     chmod.chmod(0o755)
     out = tmp_path / "job"
-    stdout = _run([sys.executable, "-c", _LINEAGE_RUN, str(out)],
-                  _env(PATH=f"{fake_bin}{os.pathsep}{os.environ['PATH']}"))
+    env = _env(PATH=f"{fake_bin}{os.pathsep}{os.environ['PATH']}")
+    derived_heap = "SPARK_GRAFT_DRIVER_MEM" not in os.environ
+    if derived_heap:
+        del env["SPARK_GRAFT_DRIVER_MEM"]
+    stdout = _run([sys.executable, "-c", _LINEAGE_RUN, str(out)], env)
     assert f"fs.file.impl={LOCAL_FS_CLASS}" in stdout
     assert f"'{DRIVER_JAVA_OPTIONS}'" in stdout  # fixed young generation
+    if derived_heap:  # half of physical memory, capped at 16g
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        assert f"'-Xmx{min(16 * 1024, phys // 2 // 2**20)}m'" in stdout
 
     dirs = [out] + [p for p in out.rglob("*") if p.is_dir()]
     files = [p for p in out.rglob("*") if p.is_file()]

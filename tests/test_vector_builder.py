@@ -92,7 +92,7 @@ def test_vector_builders_are_not_redefined():
     quantize/multi-vector/argmax builder next to textexpr's."""
     from no_ocr_spark.functions import textexpr
 
-    builders = {"dot", "dot_unrolled", "cosine", "csim_lit", "array_lit",
+    builders = {"dot", "cosine", "csim_lit", "array_lit",
                 "quantize", "multivec", "maxsim", "argmax_cid",
                 "sq8_codes_expr", "sq8_dequant_expr",
                 "sq8_dequant_direct_expr"}
