@@ -100,7 +100,8 @@ def cpu_calibration(n_lo: int, n_hi: int, rounds: int = 2) -> dict:
 
 
 def run_once(zpath: str, pages: str, cores: int, out: str) -> dict:
-    from no_ocr_spark.session import JVM_JAR, LOCAL_FS_CLASS  # path set by materialize()
+    # path set by materialize()
+    from no_ocr_spark.session import JVM_JAR, LOCAL_FS_CLASS, driver_memory
 
     # Outputs + shuffle dirs live on tmpfs: this box has ONE shared virtio
     # disk (~240 MB/s) whose bandwidth does not grow with cores — a sandbox
@@ -120,7 +121,7 @@ def run_once(zpath: str, pages: str, cores: int, out: str) -> dict:
         "taskset", "-c", f"0-{cores - 1}",
         "spark-submit",
         "--master", f"local[{cores}]",
-        "--driver-memory", "16g",
+        "--driver-memory", driver_memory(),
         "--conf", f"spark.local.dir={local_dir}",
         "--conf", "spark.sql.parquet.compression.codec=snappy",
         # the engine jar get_spark() puts on the class path: the file://

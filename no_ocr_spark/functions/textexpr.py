@@ -8,11 +8,14 @@ element) and the DuckDB string goes into the oracle SQL. Both
 engines were empirically verified to agree on the primitives used here
 (char split, ascii, left-fold, sequence generation, set ops, bit ops).
 
-These power the training-data operator family: MinHash/SimHash/Jaccard
-dedup, fingerprinting, token counting, language-ID — all expressed over
-built-ins so they hold up at 100 TB (no Python UDF wall). The
-vectors section at the end does the same for retrieval: dot products,
-cosine, MaxSim, quantization and nearest-centroid assignment.
+The text hashes of the training-data operators (fingerprint, hash
+sampling, MinHash/SimHash/Jaccard/substring dedup, DSIR, perplexity,
+frontier sharding) are rendered here for DuckDB only: that rendering is
+the oracles' formula and the reference the Spark side is tested against.
+The Spark side runs the same formula in compiled kernels
+(functions/docsig.py), one walk over each document's code points. The
+vectors section at the end covers retrieval in both dialects: dot
+products, cosine, MaxSim, quantization and nearest-centroid assignment.
 """
 
 from __future__ import annotations
@@ -28,30 +31,6 @@ MINHASH_B = [1, 2, 4, 8, 16, 32, 64, 128]
 def _check(dialect: str) -> None:
     if dialect not in ("spark", "duckdb"):
         raise ValueError(f"unknown dialect {dialect!r}")
-
-
-def fold(dialect: str, arr: str, init: str, lam: str) -> str:
-    """Left fold. `lam` uses (acc, x). Spark: aggregate(); DuckDB has no
-    init arg, so the init is prepended to the list."""
-    _check(dialect)
-    if dialect == "spark":
-        return f"aggregate({arr}, {init}, (acc, x) -> {lam})"
-    return f"list_reduce(list_prepend(({init}), {arr}), (acc, x) -> {lam})"
-
-
-def char_codes(dialect: str, s: str) -> str:
-    """string expr -> array of int64 character codes."""
-    _check(dialect)
-    if dialect == "spark":
-        return f"transform(split({s}, ''), c -> cast(ascii(c) as bigint))"
-    return f"list_transform(string_split({s}, ''), c -> ascii(c)::BIGINT)"
-
-
-def poly_hash(dialect: str, s: str, p: int = P64, mult: int = MULT) -> str:
-    """Deterministic polynomial string hash, identical in both engines."""
-    init = "cast(0 as bigint)" if dialect == "spark" else "0::BIGINT"
-    return fold(dialect, char_codes(dialect, s), init,
-                f"(acc * {mult} + x) % {p}")
 
 
 def words(dialect: str, s: str) -> str:
@@ -92,185 +71,79 @@ def union_size(dialect: str, a: str, b: str) -> str:
     return f"len(list_distinct(list_concat({a}, {b})))"
 
 
-def array_min(dialect: str, arr: str) -> str:
-    _check(dialect)
-    return f"array_min({arr})" if dialect == "spark" else f"list_min({arr})"
+# --------------------------------------------------------- hashes (DuckDB)
+#
+# DuckDB splits a string into code points (string_split(s, '')) and ascii()
+# returns each one's code point, so a poly hash folds over code points,
+# astral ones included; jvm/DocSig.java walks the same code points.
 
 
-def transform_arr(dialect: str, arr: str, var: str, body: str) -> str:
-    _check(dialect)
-    fn = "transform" if dialect == "spark" else "list_transform"
-    return f"{fn}({arr}, {var} -> {body})"
+def _fold(arr: str, init: str, lam: str) -> str:
+    """Left fold. `lam` uses (acc, x); DuckDB's list_reduce has no init
+    arg, so the init is prepended to the list."""
+    return f"list_reduce(list_prepend(({init}), {arr}), (acc, x) -> {lam})"
 
 
-def word_hashes(dialect: str, words_expr: str, p: int = P64,
-                mult: int = MULT) -> str:
-    """Hash every word once (array<bigint>). A non-default `mult` yields an
+def poly_hash(s: str, p: int = P64, mult: int = MULT) -> str:
+    """Deterministic polynomial string hash over code points."""
+    codes = f"list_transform(string_split({s}, ''), c -> ascii(c)::BIGINT)"
+    return _fold(codes, "0::BIGINT", f"(acc * {mult} + x) % {p}")
+
+
+def word_hashes(words_expr: str, p: int = P64, mult: int = MULT) -> str:
+    """Hash every word once (list<bigint>). A non-default `mult` yields an
     independent hash family — wide simhash signatures (> 30 bits) draw
     their high bits from a second family this way."""
-    return transform_arr(dialect, words_expr, "w",
-                         poly_hash(dialect, "w", p, mult))
+    return f"list_transform({words_expr}, w -> {poly_hash('w', p, mult)})"
 
 
-def shingle_hashes_from_word_hashes(dialect: str, wh_col: str, k: int = 3,
-                                    p: int = P64, mult: int = 131) -> str:
-    """Distinct k-shingle hashes COMPOSED from precomputed word hashes:
-    H(w_i..w_{i+k-1}) = fold(h*mult + wh_j) mod p. O(words x k) total
-    instead of O(chars x shingles) char-level hashing, identical in both
-    dialects. k=3 by default: with small vocabularies (like the driver's
-    synthetic docs) 2-word shingle universes are tiny and MinHash slots
-    degenerate (everyone shares the globally-minimal shingle); cubing the
-    universe restores discrimination."""
-    if dialect == "spark":
-        comb_body = f"element_at({wh_col}, i)"
-        for j in range(1, k):
-            comb_body = f"(({comb_body}) * {mult} + element_at({wh_col}, i + {j})) % {p}"
-        comb = (f"transform(sequence(1, size({wh_col}) - {k - 1}), "
-                f"i -> {comb_body})")
-        return (f"case when size({wh_col}) >= {k} then array_distinct({comb}) "
-                f"else array() end")
-    comb_body = f"{wh_col}[i]"
+def positional_shingle_hashes(wh_col: str, k: int, p: int = P64,
+                              mult: int = 131) -> str:
+    """Element i (1-based) is the hash of words i..i+k-1,
+    fold(h * mult + wh_j) mod p COMPOSED from precomputed word hashes
+    (O(words x k)) — the layout the repeated-substring remover needs to
+    map duplicated grams back to word spans. Docs shorter than k words
+    yield an empty list."""
+    gram = f"{wh_col}[i]"
     for j in range(1, k):
-        comb_body = f"(({comb_body}) * {mult} + {wh_col}[i + {j}]) % {p}"
-    comb = (f"list_transform(generate_series(1, greatest(len({wh_col}) - {k - 1}, 0)), "
-            f"i -> {comb_body})")
-    return f"list_distinct({comb})"
-
-
-def positional_shingle_hashes(dialect: str, wh_col: str, k: int,
-                              p: int = P64, mult: int = 131) -> str:
-    """Like shingle_hashes_from_word_hashes but POSITIONAL: no distinct,
-    element i (1-based) is the hash of words i..i+k-1 — the layout the
-    repeated-substring remover needs to map duplicated grams back to
-    word spans. Docs shorter than k words yield an empty array."""
-    if dialect == "spark":
-        comb = f"element_at({wh_col}, i)"
-        for j in range(1, k):
-            comb = f"(({comb}) * {mult} + element_at({wh_col}, i + {j})) % {p}"
-        return (f"case when size({wh_col}) >= {k} then "
-                f"transform(sequence(1, size({wh_col}) - {k - 1}), "
-                f"i -> {comb}) else array() end")
-    comb = f"{wh_col}[i]"
-    for j in range(1, k):
-        comb = f"(({comb}) * {mult} + {wh_col}[i + {j}]) % {p}"
+        gram = f"(({gram}) * {mult} + {wh_col}[i + {j}]) % {p}"
     return (f"list_transform(generate_series(1, "
-            f"greatest(len({wh_col}) - {k - 1}, 0)), i -> {comb})")
+            f"greatest(len({wh_col}) - {k - 1}, 0)), i -> {gram})")
 
 
-def positional_shingle_hashes_single_pass_spark(wh_expr: str, k: int,
-                                                p: int = P64,
-                                                mult: int = 131) -> str:
-    """Spark-only single-pass positional k-gram hashes, with the (possibly
-    expensive) word-hash array as the FOLD'S INPUT — evaluated once per
-    row. The naive formulation (positional_shingle_hashes over an inlined
-    word-hash expression) references that expression k times inside a
-    lambda; CollapseProject counts lambda references as one and inlines,
-    and HOF lambdas have no hoisting, so the whole word-hash transform
-    re-ran PER GRAM PER REFERENCE (measured: a single straggler task at
-    sf=1 that never finished). Same trap and same cure as
-    simhash_single_pass_spark. State = (last k-1 hashes, grams so far);
-    output element i is the hash of words i..i+k-1, identical to
-    positional_shingle_hashes (the DuckDB oracle keeps that form)."""
-    g = "element_at(acc.buf, 1)"
-    for j in range(2, k):
-        g = f"(({g}) * {mult} + element_at(acc.buf, {j})) % {p}"
-    g = f"(({g}) * {mult} + x) % {p}"
-    empty = "cast(array() as array<bigint>)"
-    buf_next = (f"case when size(acc.buf) < {k - 1} "
-                f"then concat(acc.buf, array(x)) "
-                f"else concat(slice(acc.buf, 2, {k - 2}), array(x)) end")
-    out_next = (f"case when size(acc.buf) = {k - 1} "
-                f"then concat(acc.out, array({g})) else acc.out end")
-    return (f"aggregate({wh_expr}, "
-            f"named_struct('buf', {empty}, 'out', {empty}), "
-            f"(acc, x) -> named_struct('buf', {buf_next}, "
-            f"'out', {out_next}), acc -> acc.out)")
+def shingle_hashes_from_word_hashes(wh_col: str, k: int = 3, p: int = P64,
+                                    mult: int = 131) -> str:
+    """The distinct positional k-shingle hashes. k=3 by default: with
+    small vocabularies (like the driver's synthetic docs) 2-word shingle
+    universes are tiny and MinHash slots degenerate (everyone shares the
+    globally-minimal shingle); cubing the universe restores
+    discrimination."""
+    return f"list_distinct({positional_shingle_hashes(wh_col, k, p, mult)})"
 
 
-def minhash_signature_from_hashes(dialect: str, hashes_col: str, k: int = 8,
+def minhash_signature_from_hashes(hashes_col: str, k: int = 8,
                                   p: int = P64) -> str:
-    """MinHash signature over a precomputed shingle-hash array column."""
+    """MinHash signature over a precomputed shingle-hash list column."""
     terms = []
     for j in range(k):
         a, b = MINHASH_A[j], MINHASH_B[j]
-        hashed = transform_arr(dialect, hashes_col, "h", f"({a} * h + {b}) % {p}")
-        terms.append(f"coalesce({array_min(dialect, hashed)}, {p})")
-    fn = "array" if dialect == "spark" else "list_value"
-    return f"{fn}({', '.join(terms)})"
+        terms.append(f"coalesce(list_min(list_transform({hashes_col}, "
+                     f"h -> ({a} * h + {b}) % {p})), {p})")
+    return f"list_value({', '.join(terms)})"
 
 
-def shift_right(dialect: str, v: str, b: str) -> str:
-    _check(dialect)
-    if dialect == "spark":
-        return f"shiftright({v}, cast({b} as int))"
-    return f"(({v}) >> ({b}))"
-
-
-def shift_left(dialect: str, v: str, b: str) -> str:
-    _check(dialect)
-    if dialect == "spark":
-        return f"shiftleft({v}, cast({b} as int))"
-    return f"(({v}) << ({b}))"
-
-
-def iff(dialect: str, cond: str, then: str, els: str) -> str:
-    return f"(case when {cond} then {then} else {els} end)"
-
-
-def simhash_from_word_hashes(dialect: str, wh_col: str, n_bits: int = 16) -> str:
-    """SimHash over a PRECOMPUTED word-hash array column: bit b is set iff
+def simhash_from_word_hashes(wh_col: str, n_bits: int = 16) -> str:
+    """SimHash over a PRECOMPUTED word-hash list column: bit b is set iff
     the sum over words of (+1 if bit b of the word's hash else -1) is
-    positive. O(words) hashing once + O(bits x words) integer ops, vs a
-    re-hash of every word per bit (measured 5x on the bench corpus). The
-    Spark side runs simhash_single_pass_spark, the same math. NOTE: poly
-    hashes are mod P64 (~2^30), so only bits 0..29 carry signal — n_bits
-    must be <= 30."""
+    positive. NOTE: poly hashes are mod P64 (~2^30), so only bits 0..29
+    carry signal — n_bits must be <= 30."""
     if n_bits > 30:
         raise ValueError("poly_hash provides 30 useful bits")
-    bit_sum = fold(
-        dialect,
-        transform_arr(dialect, wh_col, "h",
-                      f"({shift_right(dialect, 'h', 'b')} & 1) * 2 - 1"),
-        "cast(0 as bigint)" if dialect == "spark" else "0::BIGINT",
-        "acc + x",
-    )
-    one = "cast(1 as bigint)" if dialect == "spark" else "1::BIGINT"
-    seq = (f"sequence(0, {n_bits - 1})" if dialect == "spark"
-           else f"generate_series(0, {n_bits - 1})")
-    body = iff(dialect, f"({bit_sum}) > 0",
-               shift_left(dialect, one, "b"), "0")
-    if dialect == "spark":
-        return f"aggregate({seq}, cast(0 as bigint), (acc, b) -> acc + {body})"
-    return (f"list_reduce(list_prepend(0::BIGINT, {seq}), "
-            f"(acc, b) -> acc + {body})")
-
-
-def simhash_single_pass_spark(wh_expr: str, n_bits: int = 16) -> str:
-    """Spark-only single-pass SimHash DIRECTLY over a word-hash expression.
-
-    Why this exists: referencing a word_hashes COLUMN from inside the
-    per-bit lambda looks like one reference to Catalyst, so CollapseProject
-    inlines the full hash expression into the lambda body — and HOF lambdas
-    have no loop-invariant hoisting, so every word gets re-hashed once PER
-    BIT (measured: the 'precomputed' column variant was no faster than the
-    naive one). Here the expensive expression is the fold's INPUT ARRAY
-    argument, which Spark evaluates exactly once per row; the fold then
-    accumulates all n_bits bit-sums in one pass (O(words*bits) int ops).
-    Output is integer-identical to simhash_from_word_hashes, which remains
-    the DuckDB-oracle formulation."""
-    if n_bits > 30:
-        raise ValueError("poly_hash provides 30 useful bits")
-    bitsums = (
-        f"aggregate({wh_expr}, array_repeat(cast(0 as bigint), {n_bits}), "
-        f"(acc, h) -> zip_with(acc, sequence(0, {n_bits - 1}), "
-        f"(a, b) -> a + (shiftright(h, b) & 1) * 2 - 1))"
-    )
-    return (
-        f"aggregate(zip_with({bitsums}, sequence(0, {n_bits - 1}), "
-        f"(s, b) -> case when s > 0 then shiftleft(cast(1 as bigint), b) "
-        f"else cast(0 as bigint) end), "
-        f"cast(0 as bigint), (acc, x) -> acc + x)"
-    )
+    signs = f"list_transform({wh_col}, h -> (((h) >> (b)) & 1) * 2 - 1)"
+    bit_sum = _fold(signs, "0::BIGINT", "acc + x")
+    body = f"(case when ({bit_sum}) > 0 then ((1::BIGINT) << (b)) else 0 end)"
+    return (f"list_reduce(list_prepend(0::BIGINT, "
+            f"generate_series(0, {n_bits - 1})), (acc, b) -> acc + {body})")
 
 
 def count_substr(dialect: str, s: str, needle: str) -> str:

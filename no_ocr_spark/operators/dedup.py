@@ -3,10 +3,11 @@ exact, n-gram Jaccard, MinHash(+banded LSH pairs), SimHash(+Hamming pairs).
 
 All scoring math is built from the dialect-paired expression library
 (functions/textexpr.py), so the Spark plan stays JVM-side (no Python) and
-the DuckDB oracle is the same formula. The MinHash signature is the one
-exception on the Spark side: it comes from the compiled per-document
-kernel (functions/docsig.py), which computes the textexpr formula without
-Spark's interpreted higher-order-function lambdas.
+the DuckDB oracle is the same formula. The text hashes are the exception
+on the Spark side: the MinHash signature, the SimHash and the Jaccard
+shingle hashes come from the compiled per-document kernels
+(functions/docsig.py), which compute the textexpr formula without Spark's
+interpreted higher-order-function lambdas.
 
 To make the dedup queries demonstrate actual duplicate removal on the
 driver's duplicate-free `documents` table, each query runs over an
@@ -27,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from no_ocr_spark.functions import textexpr as tx
-from no_ocr_spark.functions.docsig import with_doc_sig
+from no_ocr_spark.functions import docsig
 from no_ocr_spark.plans.partitioning import fan_out_for_cpu, materialize
 from no_ocr_spark.sources.tables import load_table
 
@@ -135,12 +136,11 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass the oracle's 0 >= 0 threshold while the Spark side stays silent.
     """
 
-    wh = tx.word_hashes("spark", tx.words("spark", "text"))
-    shx = tx.shingle_hashes_from_word_hashes("spark", "word_hashes",
-                                             k=_K_SHINGLE)
+    # a null text has no shingles, as a doc of fewer than 3 words
+    shx = (f"coalesce(array_distinct("
+           f"{docsig.word_grams(spark, 'text', _K_SHINGLE)}), array())")
     d = materialize(
         fan_out_for_cpu(_augmented(spark, sf_dir), spark)
-        .withColumn("word_hashes", F.expr(wh))
         .select("doc_id", "lang", "n_chars", F.expr(shx).alias("sh"))
     )
 
@@ -278,7 +278,7 @@ def minhash_pairs(sigs: DataFrame, key: str) -> DataFrame:
 def _with_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """doc_id + MinHash signature of the augmented corpus."""
     docs = fan_out_for_cpu(_augmented(spark, sf_dir), spark)
-    return with_doc_sig(docs).select("doc_id", "sig")
+    return docsig.with_doc_sig(docs).select("doc_id", "sig")
 
 
 def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -327,31 +327,15 @@ def near_dup_edges_reduced(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stars.unionByName(rep_pairs)
 
 
-_SIM_MULT2 = 131  # second hash family for simhash bits 30+ (vs MULT=31)
-
-
-def _simhash_expr(n_bits: int) -> str:
-    """Spark expression for an n_bits simhash (n_bits <= 60). Bits 0..29
-    come from the default word-hash family; bits 30+ from an independent
-    family (multiplier 131) — poly hashes are mod P64 (~2^30), so one
-    family carries only 30 signal bits. Both folds use the single-pass
-    formulation (words hashed once per family; see
-    textexpr.simhash_single_pass_spark for the CollapseProject trap)."""
-    if n_bits > 60:
-        raise ValueError("two poly-hash families provide 60 useful bits")
-    w = tx.words("spark", "text")
-    lo = tx.simhash_single_pass_spark(
-        tx.word_hashes("spark", w), min(n_bits, 30))
-    if n_bits <= 30:
-        return lo
-    hi = tx.simhash_single_pass_spark(
-        tx.word_hashes("spark", w, mult=_SIM_MULT2), n_bits - 30)
-    return f"({lo}) + shiftleft(({hi}), 30)"
+# second hash family for simhash bits 30+ (vs MULT=31): the kernel's
+# (docsig.simhash), mirrored by the oracle's word_hashes2
+_SIM_MULT2 = 131
 
 
 def _with_simhash(spark: SparkSession, sf_dir: str, n_bits: int) -> DataFrame:
     return fan_out_for_cpu(_augmented(spark, sf_dir), spark).select(
-        "doc_id", F.expr(_simhash_expr(n_bits)).alias("simhash")
+        "doc_id",
+        F.expr(docsig.simhash(spark, "text", n_bits)).alias("simhash"),
     )
 
 
@@ -525,17 +509,16 @@ QUERIES = {
     "dedup_simhash_pairs": q_dedup_simhash_pairs,
 }
 
-_D_WH = tx.word_hashes("duckdb", tx.words("duckdb", "text"))
-_D_SHH = tx.shingle_hashes_from_word_hashes("duckdb", "word_hashes")
-_D_SH2 = tx.shingle_hashes_from_word_hashes("duckdb", "word_hashes",
-                                            k=_K_SHINGLE)
-_D_SIG = tx.minhash_signature_from_hashes("duckdb", "shingle_hashes")
+_D_WH = tx.word_hashes(tx.words("duckdb", "text"))
+_D_SHH = tx.shingle_hashes_from_word_hashes("word_hashes")
+_D_SH2 = tx.shingle_hashes_from_word_hashes("word_hashes", k=_K_SHINGLE)
+_D_SIG = tx.minhash_signature_from_hashes("shingle_hashes")
 _D_SIG_CTE = f"""
         wh AS (SELECT doc_id, {_D_WH} AS word_hashes FROM aug),
         h AS (SELECT doc_id, {_D_SHH} AS shingle_hashes FROM wh),
         s AS (SELECT doc_id, {_D_SIG} AS sig FROM h)
 """
-_D_SIM = tx.simhash_from_word_hashes("duckdb", "word_hashes", 16)
+_D_SIM = tx.simhash_from_word_hashes("word_hashes", 16)
 
 
 def _gate_simpair_bits() -> int:
@@ -555,19 +538,16 @@ def _gate_simpair_bits() -> int:
 
 
 _GATE_SIMPAIR_BITS = 3 * _gate_simpair_bits()
-_D_WH2 = tx.word_hashes("duckdb", tx.words("duckdb", "text"),
-                        mult=_SIM_MULT2)
+_D_WH2 = tx.word_hashes(tx.words("duckdb", "text"), mult=_SIM_MULT2)
 
 
 def _d_simhash_wide(n_bits: int) -> str:
-    """DuckDB mirror of _simhash_expr: low 30 bits from word_hashes,
+    """DuckDB mirror of docsig.simhash: low 30 bits from word_hashes,
     bits 30+ from the second family column word_hashes2."""
-    lo = tx.simhash_from_word_hashes("duckdb", "word_hashes",
-                                     min(n_bits, 30))
+    lo = tx.simhash_from_word_hashes("word_hashes", min(n_bits, 30))
     if n_bits <= 30:
         return lo
-    hi = tx.simhash_from_word_hashes("duckdb", "word_hashes2",
-                                     n_bits - 30)
+    hi = tx.simhash_from_word_hashes("word_hashes2", n_bits - 30)
     return f"(({lo}) + (({hi}) * {1 << 30}))"
 
 

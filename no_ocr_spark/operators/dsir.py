@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from no_ocr_spark.functions import docsig
 from no_ocr_spark.functions import textexpr as tx
 from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
@@ -60,7 +61,7 @@ def _feature_rows(docs: DataFrame) -> DataFrame:
     i, i+1) in the same map-side pass as the unigrams — the old lead()
     window shuffled and sorted every token row per doc just to look one
     element ahead. Same hashes, same multiset of (doc_id, b) rows."""
-    wh = tx.word_hashes("spark", tx.words("spark", "text"))
+    wh = docsig.word_hashes(docs.sparkSession, "text")
     # CASE guard: sequence(1, 0) would count DOWN ([1, 0]) for docs with
     # fewer than two words, so short docs get an explicit empty array
     feats = (
@@ -148,7 +149,7 @@ QUERIES = {"dsir_select": q_dsir_select}
 
 
 def _oracle() -> str:
-    ph = tx.poly_hash("duckdb", "w")
+    ph = tx.poly_hash("w")
     words = tx.words("duckdb", "text")
     return f"""
         WITH toks AS (

@@ -36,7 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from no_ocr_spark.functions.textexpr import poly_hash
+from no_ocr_spark.functions import docsig
+from no_ocr_spark.functions import textexpr as tx
 from no_ocr_spark.sources.tables import load_table
 
 HOSTS = 23
@@ -61,7 +62,8 @@ def schedule_frontier(cands: DataFrame) -> DataFrame:
     return cands.select(
         "url", "host",
         (F.row_number().over(w) - F.lit(1)).alias("slot"),
-        F.expr(f"pmod({poly_hash('spark', 'host')}, {N_FETCHERS})")
+        F.expr(f"pmod({docsig.poly_hash(cands.sparkSession, 'host')},"
+               f" {N_FETCHERS})")
         .alias("fetcher"),
         "crawl_delay_s",
     ).select(
@@ -76,7 +78,7 @@ def q_frontier_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle() -> str:
-    h = poly_hash("duckdb", "host")
+    h = tx.poly_hash("host")
     return f"""
         WITH cands AS (
           SELECT 'http://host' || (doc_id % {HOSTS})::VARCHAR

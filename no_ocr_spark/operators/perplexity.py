@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from no_ocr_spark.functions import docsig
 from no_ocr_spark.functions import textexpr as tx
 from no_ocr_spark.plans.partitioning import fan_out_for_cpu, materialize
 from no_ocr_spark.sources.tables import load_table
@@ -63,7 +64,7 @@ def score_perplexity(docs: DataFrame, id_col: str = "doc_id",
     # that hashes the words — the old plan exploded every token to a row
     # and ran a lead() window (a corpus-wide shuffle + per-doc sort) just
     # to look one element ahead. Same (id, prev, cur) multiset.
-    wh = tx.word_hashes("spark", tx.words("spark", "text"))
+    wh = docsig.word_hashes(docs.sparkSession, "text")
     pairs = (
         f"CASE WHEN size(wh) < 2 THEN "
         f"CAST(array() AS ARRAY<STRUCT<prev: BIGINT, cur: BIGINT>>) ELSE "
@@ -130,7 +131,7 @@ QUERIES = {"perplexity_score": q_perplexity_score}
 
 
 def _oracle() -> str:
-    ph = tx.poly_hash("duckdb", "w")
+    ph = tx.poly_hash("w")
     words = tx.words("duckdb", "text")
     return f"""
         WITH toks AS (

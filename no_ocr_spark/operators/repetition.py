@@ -49,9 +49,9 @@ def _longest_run_fold(arr: str, elem_type: str) -> str:
     """Spark expr: length of the longest run of equal ADJACENT elements
     after sorting `arr` — i.e. the max frequency of any element, O(L log
     L). The graded stats query runs it; the cascade gate's kernel
-    (functions/docsig.py) computes the same fold and is tested against it
-    (the oracle deliberately keeps the naive per-distinct formulation as
-    an independent algorithm). Returns a struct; read `.best`."""
+    (functions/docsig.py) computes the same count (the oracle deliberately
+    keeps the naive per-distinct formulation as an independent
+    algorithm). Returns a struct; read `.best`."""
     return (
         f"aggregate(array_sort({arr}), "
         f"named_struct('prev', cast(null as {elem_type}), "
@@ -257,8 +257,9 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             # map-side re-chunk of the doc's own text, filtered to kept
             # ordinals. The chunk array is the TRANSFORM INPUT (evaluated
             # once per row); putting it inside the lambda via element_at
-            # would re-evaluate it per kept ordinal (the CollapseProject
-            # lambda-inline cliff, see textexpr.simhash_single_pass_spark).
+            # would re-evaluate it per kept ordinal: CollapseProject
+            # inlines a column the lambda references once, and a lambda
+            # body hoists nothing.
             F.expr(
                 f"array_join(filter(transform({_chunks_expr()}, "
                 f"(c, i) -> IF(array_contains(coalesce(keep, array()), "

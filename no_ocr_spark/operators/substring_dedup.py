@@ -12,9 +12,9 @@ distributed equivalent — every word covered by a duplicated k-gram is
 removed, i.e. exactly the maximal duplicated substrings of >= K_GRAM
 words, with up-to-(K_GRAM-1)-word fragments at their boundaries kept):
 
-  1. positional rolling k-gram hashes per doc (pure codegen; words
-     hashed once, grams composed from word hashes — textexpr
-     positional_shingle_hashes);
+  1. positional k-gram hashes per doc (the compiled kernel
+     docsig.word_grams; words hashed once, grams composed from word
+     hashes — textexpr.positional_shingle_hashes for the oracle);
   2. ONE shuffle: groupBy(gram_hash) count — rows are (8-byte hash,
      doc_id, pos), never text;
   3. hashes with count > 1 join back (hash-keyed) and collapse to a
@@ -46,26 +46,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from no_ocr_spark.functions import docsig
 from no_ocr_spark.functions import textexpr as tx
 from no_ocr_spark.plans.partitioning import fan_out_for_cpu, materialize
 from no_ocr_spark.sources.tables import load_table
 
 K_GRAM = 8  # words per gram (the paper's 50 BPE tokens, scaled to the
 #             test corpus's short docs; a production run sets ~30-50)
-
-
-def _words(dialect: str) -> str:
-    return tx.words(dialect, "text")
-
-
-def _grams(dialect: str) -> str:
-    wh = tx.word_hashes(dialect, _words(dialect))
-    if dialect == "spark":
-        # single-pass fold: the word-hash array is the aggregate's input,
-        # evaluated once per row (the CollapseProject trap — see
-        # textexpr.positional_shingle_hashes_single_pass_spark)
-        return tx.positional_shingle_hashes_single_pass_spark(wh, K_GRAM)
-    return tx.positional_shingle_hashes(dialect, wh, K_GRAM)
 
 
 def _clean_expr(dialect: str, words: str, dup: str) -> str:
@@ -91,10 +78,8 @@ def _clean_expr(dialect: str, words: str, dup: str) -> str:
 
 def remove_repeated_substrings(docs: DataFrame) -> DataFrame:
     """(doc_id, text) -> (doc_id, n_words, n_removed, clean_text)."""
-    spark_grams = _grams("spark")
-    with_grams = docs.select(
-        "doc_id", "text", F.expr(spark_grams).alias("grams")
-    )
+    grams = docsig.word_grams(docs.sparkSession, "text", K_GRAM)
+    with_grams = docs.select("doc_id", "text", F.expr(grams).alias("grams"))
     positions = materialize(with_grams.select(
         "doc_id", F.posexplode("grams").alias("p0", "h")
     ).select("doc_id", (F.col("p0") + 1).alias("pos"), "h"))
@@ -143,8 +128,8 @@ QUERIES = {"substring_dedup": q_substring_dedup}
 
 
 def _oracle() -> str:
-    grams = _grams("duckdb")
     words = tx.words("duckdb", "text")
+    grams = tx.positional_shingle_hashes(tx.word_hashes(words), K_GRAM)
     clean = _clean_expr("duckdb", "w", "dup")
     return f"""
         WITH g AS (

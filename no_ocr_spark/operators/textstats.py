@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from no_ocr_spark.functions import docsig
 from no_ocr_spark.functions import textexpr as tx
 from no_ocr_spark.plans.partitioning import fan_out_for_cpu, materialize
 from no_ocr_spark.sources.tables import load_table
@@ -106,8 +107,9 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out_for_cpu(docs, spark)
     return docs.select(
         "doc_id",
-        F.expr(tx.poly_hash("spark", "text")).alias("fp"),
-        F.expr(tx.poly_hash("spark", "substring(text, 1, 64)")).alias("fp_prefix"),
+        F.expr(docsig.poly_hash(spark, "text")).alias("fp"),
+        F.expr(docsig.poly_hash(spark, "substring(text, 1, 64)"))
+        .alias("fp_prefix"),
     )
 
 
@@ -262,8 +264,8 @@ ORACLES = {
     """,
     "fingerprint": f"""
         SELECT doc_id,
-               {tx.poly_hash("duckdb", "text")} AS fp,
-               {tx.poly_hash("duckdb", "substring(text, 1, 64)")} AS fp_prefix
+               {tx.poly_hash("text")} AS fp,
+               {tx.poly_hash("substring(text, 1, 64)")} AS fp_prefix
         FROM documents
     """,
     "corpus_filter": f"""

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from no_ocr_spark.functions import docsig
 from no_ocr_spark.functions import textexpr as tx
 from no_ocr_spark.plans.partitioning import fan_out_for_cpu
 from no_ocr_spark.sources.tables import load_table
@@ -59,7 +60,7 @@ def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out_for_cpu(
         load_table(spark, sf_dir, "documents").select("lang", "text"), spark)
     in_sample = F.expr(
-        f"pmod({tx.poly_hash('spark', 'text')}, 100) < {_RATE}"
+        f"pmod({docsig.poly_hash(spark, 'text')}, 100) < {_RATE}"
     )
     return (
         docs.withColumn("s", in_sample.cast("long"))
@@ -216,7 +217,7 @@ ORACLES = {
     "hash_sample": f"""
         SELECT lang,
                count(*)::BIGINT AS n_total,
-               sum(CASE WHEN ({tx.poly_hash('duckdb', 'text')}) % 100 < {_RATE}
+               sum(CASE WHEN ({tx.poly_hash('text')}) % 100 < {_RATE}
                         THEN 1 ELSE 0 END)::BIGINT AS n_sampled
         FROM documents
         GROUP BY lang

@@ -9,8 +9,8 @@ Tuned for correctness-comparable, scale-ready plans:
     deployment overrides via spark-submit --conf; nothing here assumes
     local mode except the default master),
   * the engine's jar (`jvm/no-ocr-spark.jar`) on the driver class path
-    whenever this call launches the JVM: it holds the cleanup cascade's
-    hash kernel (`jvm/DocSig.java`, see functions/docsig.py) and the
+    whenever this call launches the JVM: it holds the per-document text
+    hash kernels (`jvm/DocSig.java`, see functions/docsig.py) and the
     file:// FileSystem this call installs (`jvm/PosixLocalFileSystem.java`:
     without libhadoop, Hadoop's local FileSystem forks a `chmod` for every
     file, `.crc` sidecar and directory it creates; this one sets the same
@@ -36,10 +36,12 @@ LOCAL_FS_CLASS = "no_ocr_spark.jvm.PosixLocalFileSystem"
 DRIVER_JAVA_OPTIONS = "-XX:NewRatio=3"
 
 
-def _default_driver_mem() -> str:
-    """Half of physical memory, capped at 16g, in MiB."""
+def driver_memory() -> str:
+    """The driver heap: SPARK_GRAFT_DRIVER_MEM if set, else half of
+    physical memory capped at 16g, in MiB."""
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    return f"{min(16 << 10, phys // 2 >> 20)}m"
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                          f"{min(16 << 10, phys // 2 >> 20)}m")
 
 
 def get_spark(app: str = "no_ocr_spark", master: str | None = None,
@@ -91,8 +93,7 @@ def get_spark(app: str = "no_ocr_spark", master: str | None = None,
         # whole local job. 16g measured faster AND more stable than 48g.
         # Half of the host's memory below that, so two sessions on one
         # host cannot claim all of it.
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # InferFiltersFromGenerate turns explode(expensive_expr) into an

@@ -11,11 +11,12 @@ It also lists, over every registered query, the operators whose
 expressions hold the same `lambdafunction` subtree (the higher-order call
 with its inputs) more than once: the shape Catalyst leaves when it
 inlines a multi-referenced higher-order column into a predicate or
-projection, where each copy is interpreted again per row. A call of the
-per-document hash kernel (functions/docsig.py) is listed when an
+projection, where each copy is interpreted again per row. A call of one
+of the per-document hash kernels (functions/docsig.py) is listed when an
 operator repeats one that it or an operator above it already makes: a
 predicate pushed below the kernel's projection runs it twice per row
-(repeated_lambdas).
+(repeated_lambdas). Text hashes belong in those kernels, so it also lists
+the operators that hash per character in a lambda (per_char_lambdas).
 
 Usage: python scripts/explain_audit.py [sf_dir]   (writes BENCH/plans.md)
 """
@@ -32,7 +33,7 @@ from contextlib import redirect_stdout
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from no_ocr_spark.functions.docsig import DOC_SIG  # noqa: E402
+from no_ocr_spark.functions.docsig import KERNELS  # noqa: E402
 
 CHECKS = {
     "point_lookup": ["PushedFilters: \\[IsNotNull\\(p_partkey\\), EqualTo\\(p_partkey,100\\)"],
@@ -240,7 +241,26 @@ def plan_of(df) -> str:
 
 
 _LAMBDA = "lambdafunction("
-_KERNEL_CALL = re.compile(re.escape(DOC_SIG) + r"\([^()]*\)")
+_KERNEL = re.compile(r"\b(?:%s)\(" % "|".join(map(re.escape, KERNELS)))
+# split(x, '') prints its empty pattern as nothing between the commas
+_PER_CHAR = re.compile(r"\bsplit\([^()]*, , -1\)|\bascii\(")
+
+
+def _close(expr: str, i: int) -> int:
+    """The index past the ")" that closes the "(" at expr[i]."""
+    depth = 0
+    while i < len(expr):
+        depth += (expr[i] == "(") - (expr[i] == ")")
+        i += 1
+        if depth == 0:
+            break
+    return i
+
+
+def _kernel_calls(expr: str) -> list[str]:
+    """Each hash kernel call in a plan node's string, with its arguments."""
+    return [expr[m.start():_close(expr, m.end() - 1)]
+            for m in _KERNEL.finditer(expr)]
 
 
 def _lambda_calls(expr: str) -> list[str]:
@@ -257,18 +277,24 @@ def _lambda_calls(expr: str) -> list[str]:
             if depth < 0:
                 break
             i -= 1
-        j, k = i, i
+        j = i
         while j > 0 and (expr[j - 1].isalnum() or expr[j - 1] == "_"):
             j -= 1
-        depth = 0
-        while k < len(expr):  # forward to the ")" that closes it
-            depth += (expr[k] == "(") - (expr[k] == ")")
-            k += 1
-            if depth == 0:
-                break
-        spans.add((j, k))
+        spans.add((j, _close(expr, i)))
         start = expr.find(_LAMBDA, start + 1)
     return [expr[a:b] for a, b in spans]
+
+
+def _subplans(node) -> list:
+    """A plan node's children, and the plan a cached relation or an
+    adaptive plan holds outside them."""
+    children = node.children()
+    out = [children.apply(i) for i in range(children.size())]
+    if node.nodeName() == "InMemoryRelation":
+        out.append(node.cacheBuilder().cachedPlan())
+    elif node.nodeName() == "AdaptiveSparkPlan":
+        out.append(node.inputPlan())
+    return out
 
 
 def repeated_lambdas(df) -> list[tuple[str, int, str]]:
@@ -287,17 +313,56 @@ def repeated_lambdas(df) -> list[tuple[str, int, str]]:
             (node.nodeName(), counts[call], call) for call in repeated
             if not any(call != other and call in other for other in repeated)
         )
-        kernel = kernel_above + Counter(_KERNEL_CALL.findall(expr))
+        kernel = kernel_above + Counter(_kernel_calls(expr))
         hits.extend((node.nodeName(), n, call) for call, n in kernel.items()
                     if n > 1 and call in expr)
-        if node.nodeName() == "InMemoryRelation":
-            walk(node.cacheBuilder().cachedPlan(), kernel)
-        children = node.children()
-        for i in range(children.size()):
-            walk(children.apply(i), kernel)
+        for sub in _subplans(node):
+            walk(sub, kernel)
 
     walk(df._jdf.queryExecution().optimizedPlan(), Counter())
     return hits
+
+
+def per_char_lambdas(df) -> list[str]:
+    """The operators of `df`'s optimized plan (cached plans included)
+    whose higher-order calls split a string into characters or take a
+    character's code (`split(x, '')`, `ascii(`): a text hash interpreted
+    per character instead of running in a kernel."""
+    hits = []
+
+    def walk(node) -> None:
+        if any(_PER_CHAR.search(call)
+               for call in _lambda_calls(node.simpleString(1 << 20))):
+            hits.append(node.nodeName())
+        for sub in _subplans(node):
+            walk(sub)
+
+    walk(df._jdf.queryExecution().optimizedPlan())
+    return hits
+
+
+def composed_frames(query, spark, sf_dir: str) -> list:
+    """`query`'s frame, then every frame it passed to
+    partitioning.materialize while composing: below a lazy local
+    checkpoint the optimized plan holds only an RDD."""
+    from no_ocr_spark.plans import partitioning
+
+    real, frames = partitioning.materialize, []
+
+    def recording(df):
+        frames.append(df)
+        return real(df)
+
+    users = [m for n, m in list(sys.modules.items())
+             if n.startswith("no_ocr_spark")
+             and getattr(m, "materialize", None) is real]
+    for m in users:
+        m.materialize = recording
+    try:
+        return [query(spark, sf_dir)] + frames
+    finally:
+        for m in users:
+            m.materialize = real
 
 
 def lambda_report(rows: list[tuple], n_queries: int) -> list[str]:
@@ -338,13 +403,21 @@ def main() -> int:
             if not ok:
                 failures.append((name, pat))
         out.append("\n```\n" + plan[:4000] + "\n```\n")
-    lambda_hits = [(name, *hit) for name in sorted(qmap)
-                   for hit in repeated_lambdas(qmap[name](spark, sf_dir))]
+    lambda_hits, per_char = [], []
+    for name in sorted(qmap):
+        frames = composed_frames(qmap[name], spark, sf_dir)
+        lambda_hits += [(name, *hit) for df in frames
+                        for hit in repeated_lambdas(df)]
+        per_char += [f"{name} ({op})" for df in frames
+                     for op in per_char_lambdas(df)]
     out += lambda_report(lambda_hits, len(qmap))
+    out.append(f"\nOperators hashing per character in a lambda: "
+               f"{', '.join(per_char) or 'none'}.\n")
     with open(os.path.join(REPO, "BENCH", "plans.md"), "w") as f:
         f.writelines(out)
     print(f"audited {len(CHECKS)} plans; {len(failures)} missing markers; "
-          f"{len(lambda_hits)} repeated lambda subtrees")
+          f"{len(lambda_hits)} repeated lambda subtrees; "
+          f"{len(per_char)} per-character hashes")
     for name, pat in failures:
         print(f"  MISSING {name}: {pat}")
     spark.stop()

@@ -3,6 +3,7 @@ near-dup removal — on a corpus with planted exact and near duplicates."""
 
 from pyspark.sql import functions as F
 
+from no_ocr_spark.functions import docsig
 from no_ocr_spark.functions.docsig import DOC_SIG
 from no_ocr_spark.operators.cleanup import clean_corpus
 
@@ -265,8 +266,9 @@ def test_pii_scrub_runs_after_the_dedup_key(spark):
 def test_explain_audit_flags_a_filter_on_the_gate(spark):
     """scripts/explain_audit.py's repeated-call check catches the trap the
     cascade avoids — a filter straight on with_repetition_flag's output is
-    pushed below the kernel's projection and calls the kernel again — and
-    finds no repeat in clean_corpus."""
+    pushed below the kernel's projection and calls the kernel again — for
+    every hash kernel (a filter on a projected poly hash of a nested
+    argument), and finds no repeat in clean_corpus."""
     import importlib.util
     import os
 
@@ -280,6 +282,10 @@ def test_explain_audit_flags_a_filter_on_the_gate(spark):
 
     ext = _extracted(spark)
     trap = with_repetition_flag(ext).filter(~F.col("is_repetitive"))
+    assert [op for op, _, _ in audit.repeated_lambdas(trap)] == ["Filter"]
+    fp = ext.select("url", F.expr(docsig.poly_hash(
+        spark, "substring(text, 1, 64)")).alias("fp"))
+    trap = fp.filter(F.col("fp") % 2 == 0)
     assert [op for op, _, _ in audit.repeated_lambdas(trap)] == ["Filter"]
     clean, stats = clean_corpus(ext, min_tokens=10)
     try:

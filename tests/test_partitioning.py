@@ -206,10 +206,11 @@ def test_fan_out_for_cpu_adds_no_job_to_any_registered_query(spark, sf_dir,
     assert {n: j for n, j in jobs.items() if j} == {}
 
 
-def test_no_registered_query_repeats_a_lambda(spark, sf_dir):
-    """scripts/explain_audit.repeated_lambdas is empty for every registered
-    query: no operator of an optimized plan evaluates the same
-    higher-order call twice per row."""
+@pytest.fixture(scope="module")
+def plan_audit(spark, sf_dir) -> dict:
+    """scripts/explain_audit's (repeated_lambdas operators,
+    per_char_lambdas operators) for every registered query, over its
+    frame and the frames it put behind partitioning.materialize."""
     import importlib.util
     import os
 
@@ -219,11 +220,28 @@ def test_no_registered_query_repeats_a_lambda(spark, sf_dir):
     audit = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(audit)
 
-    hits = {name: [op for op, _, _ in audit.repeated_lambdas(query(spark, sf_dir))]
-            for name, query in _registry().items()}
+    hits = {}
+    for name, query in _registry().items():
+        frames = audit.composed_frames(query, spark, sf_dir)
+        hits[name] = ([op for df in frames
+                       for op, _, _ in audit.repeated_lambdas(df)],
+                      [op for df in frames for op in audit.per_char_lambdas(df)])
     spark.catalog.clearCache()
     assert len(hits) == 85  # 50 gate queries + 35 extras
-    assert {name: ops for name, ops in hits.items() if ops} == {}
+    return hits
+
+
+def test_no_registered_query_repeats_a_lambda(plan_audit):
+    """No operator of an optimized plan evaluates the same higher-order
+    call, or the same hash kernel call, twice per row."""
+    assert {name: ops for name, (ops, _) in plan_audit.items() if ops} == {}
+
+
+def test_no_registered_query_hashes_per_character(plan_audit):
+    """Every text hash runs in a compiled kernel (functions/docsig.py): no
+    optimized plan splits text into characters or takes a character's
+    code inside an interpreted lambda."""
+    assert {name: ops for name, (_, ops) in plan_audit.items() if ops} == {}
 
 
 # Spark jobs that composing each registered query may fire, measured at

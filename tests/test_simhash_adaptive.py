@@ -7,11 +7,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
-from no_ocr_spark.operators.dedup import (
-    _simhash_expr,
-    simhash_band_bits_for,
-    simhash_pairs,
-)
+from no_ocr_spark.functions import docsig
+from no_ocr_spark.operators.dedup import simhash_band_bits_for, simhash_pairs
 
 
 def test_band_width_rule_thresholds():
@@ -38,8 +35,8 @@ def test_wide_signature_nests_the_narrow_one(spark):
         "text": [" ".join(f"w{i}x{j}" for j in range(12)) for i in range(8)]
     }))
     rows = docs.select(
-        F.expr(_simhash_expr(30)).alias("lo"),
-        F.expr(_simhash_expr(45)).alias("wide"),
+        F.expr(docsig.simhash(spark, "text", 30)).alias("lo"),
+        F.expr(docsig.simhash(spark, "text", 45)).alias("wide"),
     ).collect()
     assert all(r.wide & ((1 << 30) - 1) == r.lo for r in rows)
     highs = {r.wide >> 30 for r in rows}

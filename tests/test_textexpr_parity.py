@@ -1,10 +1,12 @@
 """Property tests for the dialect-paired expression library: the Spark and
 DuckDB renderings of each template must agree on edge cases (empty strings,
-single words, unicode, long texts)."""
+single words, unicode, long texts). The text hashes are rendered for DuckDB
+only; their Spark side is the compiled kernel (functions/docsig.py)."""
 
 import duckdb
 import pytest
 
+from no_ocr_spark.functions import docsig
 from no_ocr_spark.functions import textexpr as tx
 
 CASES = [
@@ -37,8 +39,8 @@ def _duck_eval(duck, expr: str, text: str):
 
 @pytest.mark.parametrize("text", CASES)
 def test_poly_hash_parity(spark, duck, text):
-    s = _spark_eval(spark, tx.poly_hash("spark", "text"), text)
-    d = _duck_eval(duck, tx.poly_hash("duckdb", "text"), text)
+    s = _spark_eval(spark, docsig.poly_hash(spark, "text"), text)
+    d = _duck_eval(duck, tx.poly_hash("text"), text)
     assert s == d
 
 
@@ -49,18 +51,14 @@ def test_token_count_parity(spark, duck, text):
     assert int(s) == int(d)
 
 
-def _word_hashes(dialect: str) -> str:
-    return tx.word_hashes(dialect, tx.words(dialect, "text"))
+_D_WH = tx.word_hashes(tx.words("duckdb", "text"))
 
 
 @pytest.mark.parametrize("text", CASES)
 def test_simhash_parity(spark, duck, text):
-    """The engine's Spark SimHash (single-pass fold) against the oracle's."""
-    s = _spark_eval(spark, tx.simhash_single_pass_spark(_word_hashes("spark")),
-                    text)
-    d = _duck_eval(duck, tx.simhash_from_word_hashes("duckdb",
-                                                     _word_hashes("duckdb")),
-                   text)
+    """The engine's Spark SimHash (the kernel) against the oracle's."""
+    s = _spark_eval(spark, docsig.simhash(spark, "text", 16), text)
+    d = _duck_eval(duck, tx.simhash_from_word_hashes(_D_WH), text)
     assert s == d
 
 
@@ -68,12 +66,10 @@ def test_simhash_parity(spark, duck, text):
 def test_minhash_parity(spark, duck, text):
     """The MinHash signature the engine and the oracles compute: 8 slots
     over the distinct 3-word shingle hashes composed from word hashes."""
-    def sig(dialect):
-        sh = tx.shingle_hashes_from_word_hashes(dialect, _word_hashes(dialect))
-        return tx.minhash_signature_from_hashes(dialect, sh)
-
-    s = _spark_eval(spark, sig("spark"), text)
-    d = _duck_eval(duck, sig("duckdb"), text)
+    df = spark.createDataFrame([(text,)], "text string")
+    s = docsig.with_doc_sig(df).select("sig").collect()[0].sig
+    d = _duck_eval(duck, tx.minhash_signature_from_hashes(
+        tx.shingle_hashes_from_word_hashes(_D_WH)), text)
     assert list(s) == list(d)
 
 
